@@ -14,22 +14,32 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F, Window as W
 
 
-# Schema-by-path memo for the driver-generated (read-only) gate tables:
-# spark.read.parquet re-lists and re-reads the footer to infer the schema on
-# EVERY call (~60-80 ms of driver latency each, guide §7.3); supplying the
-# previously inferred StructType skips that. Metadata only — no rows, plans
-# or results are memoized, and every action still computes from the parquet.
-_T_SCHEMAS: dict[str, object] = {}
+# Schema memo for the gate tables: spark.read.parquet re-lists and re-reads
+# the footer to infer the schema on EVERY call (~60-80 ms of driver latency
+# each); supplying the previously inferred StructType skips that. Each entry
+# is stamped with the path's (st_mtime_ns, st_size), so a table rewritten
+# at the same path is re-inferred rather than read under a stale schema; a
+# path that cannot be stat'ed locally is never memoized. Metadata only — no
+# rows, plans or results are memoized, and every action still computes
+# from the parquet.
+_T_SCHEMAS: dict[str, tuple] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    import os
+
     path = f"{sf_dir}/{name}.parquet"
-    sch = _T_SCHEMAS.get(path)
-    if sch is None:
-        df = spark.read.parquet(path)
-        _T_SCHEMAS[path] = df.schema
-        return df
-    return spark.read.schema(sch).parquet(path)
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    stamp = (st.st_mtime_ns, st.st_size)
+    hit = _T_SCHEMAS.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _T_SCHEMAS[path] = (stamp, df.schema)
+    return df
 
 
 def _encdec(spark: SparkSession, sf_dir: str, table: str, order_cols, bucket):

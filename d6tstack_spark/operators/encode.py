@@ -1010,24 +1010,26 @@ def decode_parquet_blocks(
 
     ``block_filter=(col, lo, hi)`` — or a LIST of such tuples (ANDed),
     or a LIST OF LISTS (DNF: OR of ANDs, see :func:`zone_dnf_from_where`)
-    — prunes whole blocks via the zone map
-    (see :func:`decode_table`) with NO driver-held id set: the driver only
-    decides which FILES contain at least one qualifying block (a stats-only
-    scan — payload column never read thanks to parquet column pruning;
-    state bounded by file count, not block count), and each task
-    re-evaluates the zone condition on its own file's stats rows to pick
-    the qualifying blocks locally. Task closures therefore stay O(1)
-    regardless of how many of the ~10⁶-10⁷ blocks of a 100 TB table
-    qualify.
+    — prunes whole blocks via the zone map (see :func:`decode_table`) at
+    ONE level, inside the decode task: each task reads its own file's
+    stats rows (parquet column pruning — no payload bytes), derives the
+    file's qualifying block ids with :func:`_zone_keep_ids_local`, and
+    reads payload only for those blocks; a file with none reads no
+    payload at all. The driver runs no planning job and holds no block-id
+    set: the task closure carries the path list (O(files)) and the DNF,
+    however many of the ~10⁶-10⁷ blocks of a 100 TB table qualify. Whether a file carries zone stats
+    at all is decided per file: a file written before zone maps decodes
+    whole (the caller's exact row filter still applies).
 
     :func:`decode_table` must repartition by block_id so each task owns
     complete blocks — a full shuffle of the PAYLOAD bytes. But the blocks
     sink (sinks.write_blocks / checkpoint state) writes whole blocks into
     single files, so a per-FILE task already owns complete blocks: the
-    driver plans one task per blocks file, each task reads it with pyarrow
-    directly and decodes — zero shuffle, no JVM↔Python payload transfer,
-    the 100 TB decode path. ``columns`` prunes at the parquet row level
-    (only the selected columns' payload rows are materialized).
+    plan is one task per blocks file (a ``spark.range`` source whose ids
+    index the path list — no exchange), each task reads its file with
+    pyarrow directly and decodes — zero shuffle, no JVM↔Python payload
+    transfer, the 100 TB decode path. ``columns`` prunes at the parquet
+    row level (only the selected columns' payload rows are materialized).
 
     Listing goes through the Hadoop FileSystem API (scheme-agnostic:
     file://, hdfs://, s3a://, ... — whatever the cluster's Hadoop conf can
@@ -1061,127 +1063,33 @@ def decode_parquet_blocks(
         paths = sorted(paths)
     if not paths:
         raise ValueError(f"no blocks parquet files under {blocks_dir}")
-    # zone-map pruning, two levels, zero driver-held block-id state:
-    #   1. driver keeps only FILES with ≥1 qualifying block (stats-only
-    #      scan; result bounded by file count, not block count);
-    #   2. each task re-derives its own file's qualifying block ids from
-    #      that file's stats rows (the per-file complete-block invariant
-    #      means a block's stats and payload always share a file).
-    # DNF of per-predicate (col, kind, lo_phys, hi_phys, is_str) tuples
-    # for tasks — O(#branches × #preds), independent of block count
-    zf: list[list[tuple]] | None = None
-    dnf = _strip_evolved_unprunable(
-        _normalize_block_filters(block_filter), full_manifest
-    )
-    if dnf is not None:
-        stats = spark.read.parquet(*paths)
-        if "vmin_num" in stats.columns:  # pre-zone-map dirs: no pruning
-            zf = []
-            qual_df = None  # union over branches
-            for branch in dnf:
-                branch_zf = []
-                branch_df = None  # intersection within the branch
-                for bf in branch:
-                    col, keep = _zone_keep_condition(full_manifest, bf)
-                    m = full_manifest[col]
-                    if len(bf) == 2:
-                        branch_zf.append((col, bf[1], None, None, False))
-                    else:
-                        branch_zf.append(
-                            (
-                                col,
-                                "range",
-                                _normalize_zone_bound(
-                                    bf[1], m["ptype"], m["logical"]
-                                ),
-                                _normalize_zone_bound(
-                                    bf[2], m["ptype"], m["logical"]
-                                ),
-                                m["ptype"] in ("str", "bin"),
-                            )
-                        )
-                    # a file qualifies iff SOME block in it passes SOME
-                    # branch's EVERY predicate — intersect per-predicate
-                    # (file, block) pairs in-plan within a branch, union
-                    # the branches; only the distinct file list reaches
-                    # the driver
-                    s = (
-                        stats.filter(F.col("column") == col)
-                        .filter(keep)
-                        .select(F.input_file_name().alias("f"), "block_id")
-                        .distinct()
-                    )
-                    branch_df = (
-                        s
-                        if branch_df is None
-                        else branch_df.join(s, ["f", "block_id"], "inner")
-                    )
-                zf.append(branch_zf)
-                qual_df = (
-                    branch_df
-                    if qual_df is None
-                    else qual_df.unionByName(branch_df)
-                )
-            qual = {
-                _norm_file_uri(r[0])
-                for r in qual_df.select("f").distinct().collect()
-            }
-            paths = [p for p in paths if _norm_file_uri(p) in qual]
-            if not paths:
-                # no block qualifies anywhere: empty frame, right schema
-                phys_schema0 = _phys_struct(manifest)
-                empty = _restore_logical(
-                    spark.createDataFrame([], phys_schema0), manifest
-                )
-                if final_columns is not None:
-                    empty = empty.select(*final_columns)
-                return empty
-    sdf = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        len(paths)
+    # DNF of task atoms — O(#branches × #preds), independent of block
+    # count; validated here so a bad predicate fails before any job
+    zf = _zone_task_dnf(
+        full_manifest,
+        _strip_evolved_unprunable(
+            _normalize_block_filters(block_filter), full_manifest
+        ),
     )
     col_filter = list(manifest) if columns is not None else None
     decoder = _make_decoder(manifest)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         pa.set_cpu_count(1)
         pa.set_io_thread_count(1)
         for b in batches:
-            for p in b.column("path").to_pylist():
+            for i in b.column("id").to_pylist():
+                p = paths[i]
                 try:
                     keep_ids = None
                     if zf is not None:
-                        zcols = sorted(
-                            {z[0] for br in zf for z in br}
+                        keep_ids = _zone_keep_ids_file(
+                            _read_file_stats(p, zf), zf
                         )
-                        st = pq.read_table(
-                            p,
-                            columns=[
-                                "column", "block_id", "n_rows",
-                                "null_count", "vmin_num", "vmax_num",
-                                "vmin_str", "vmax_str",
-                            ],
-                            filters=[("column", "in", zcols)],
-                            use_threads=False,
-                        )
-                        keep_ids = set()
-                        for branch in zf:
-                            bids = None
-                            for zcol, kind, lo, hi, is_str in branch:
-                                sub = st.filter(
-                                    pc.equal(st.column("column"), zcol)
-                                )
-                                ids = _zone_keep_ids_local(
-                                    sub, kind, lo, hi, is_str
-                                )
-                                bids = (
-                                    ids if bids is None else bids & ids
-                                )
-                            keep_ids |= bids
-                        if not keep_ids:
-                            continue  # planner raced a rewrite; nothing here
+                        if keep_ids is not None and not keep_ids:
+                            continue  # no qualifying block in this file
                     # the keep-ids ride the parquet read as a filter: row
                     # groups whose block_id stats miss the set never load
                     # their PAYLOAD bytes (blocks are written contiguously,
@@ -1207,7 +1115,8 @@ def decode_parquet_blocks(
                 yield from decoder(t.to_batches())
 
     phys_schema = _phys_struct(manifest)
-    out = _restore_logical(sdf.mapInArrow(run, phys_schema), manifest)
+    src = spark.range(0, len(paths), 1, len(paths))
+    out = _restore_logical(src.mapInArrow(run, phys_schema), manifest)
     if final_columns is not None:
         out = out.select(*final_columns)  # drop the anchor column
     return out
@@ -1239,21 +1148,95 @@ def _norm_file_uri(p: str) -> str:
     return p
 
 
+_ZONE_STATS_COLS = ("vmin_num", "vmax_num", "vmin_str", "vmax_str")
+
+
+def _zone_task_dnf(
+    manifest: dict, dnf: list[list[tuple]] | None
+) -> list[list[tuple]] | None:
+    """Normalized block-filter DNF → task atoms ``(col, kind, lo_phys,
+    hi_phys, is_str)`` for :func:`_zone_keep_ids_file`. Runs on the
+    driver with no Spark job, so an unknown column raises here, before
+    anything is scheduled."""
+    if dnf is None:
+        return None
+    out = []
+    for branch in dnf:
+        atoms = []
+        for bf in branch:
+            col = bf[0]
+            if col not in manifest:
+                raise ValueError(
+                    f"block_filter column {col!r} not in manifest"
+                )
+            m = manifest[col]
+            if len(bf) == 2:
+                atoms.append((col, bf[1], None, None, False))
+                continue
+            lo, hi = (
+                _normalize_zone_bound(v, m["ptype"], m["logical"])
+                for v in bf[1:]
+            )
+            atoms.append(
+                (col, "range", lo, hi, m["ptype"] in ("str", "bin"))
+            )
+        out.append(atoms)
+    return out
+
+
+def _read_file_stats(path: str, zf: list[list[tuple]] | None = None):
+    """One blocks file's stats rows (no payload column), restricted to
+    the zone columns of ``zf`` when given. A file written before zone
+    maps simply lacks the ``vmin_*``/``vmax_*`` columns."""
+    import pyarrow.parquet as pq
+
+    have = set(pq.read_schema(path).names)
+    cols = ["column", "block_id", "n_rows", "null_count"] + [
+        c for c in _ZONE_STATS_COLS if c in have
+    ]
+    flt = None
+    if zf is not None:
+        flt = [("column", "in", sorted({a[0] for br in zf for a in br}))]
+    return pq.read_table(path, columns=cols, filters=flt, use_threads=False)
+
+
+def _zone_keep_ids_file(stats: "pa.Table", zf: list[list[tuple]]):
+    """Block ids of one file that may satisfy the task DNF ``zf``: a
+    block qualifies iff it passes SOME branch's EVERY atom. None when the
+    file predates zone maps (no stats columns — every block qualifies)."""
+    import pyarrow.compute as pc
+
+    if "vmin_num" not in stats.column_names:
+        return None
+    keep: set[int] = set()
+    for branch in zf:
+        bids = None
+        for zcol, kind, lo, hi, is_str in branch:
+            sub = stats.filter(pc.equal(stats.column("column"), zcol))
+            ids = _zone_keep_ids_local(sub, kind, lo, hi, is_str)
+            bids = ids if bids is None else bids & ids
+        keep |= bids
+    return keep
+
+
 def _zone_keep_ids_local(
     stats: "pa.Table", kind: str, lo, hi, is_str: bool
 ) -> set[int]:
     """Task-side twin of :func:`_zone_keep_condition`: evaluate the
     conservative zone predicate on ONE file's stats rows (already
     filtered to the zone column) and return its qualifying block ids.
-    Semantics must match the Column version exactly — blocks without stats
+    Semantics match the Column version exactly — blocks without stats
     always qualify; a null vmax_str with vmin_str set means unbounded
-    above (0xFF truncation cut)."""
+    above (0xFF truncation cut); numeric bounds compare as float64."""
     ids: set[int] = set()
     rows = stats.to_pylist()
     if kind == "is_null":
         return {r["block_id"] for r in rows if r["null_count"] > 0}
     if kind == "not_null":
         return {r["block_id"] for r in rows if r["null_count"] < r["n_rows"]}
+    if not is_str:
+        lo = None if lo is None else float(lo)
+        hi = None if hi is None else float(hi)
     for r in rows:
         vmin = r["vmin_str"] if is_str else r["vmin_num"]
         vmax = r["vmax_str"] if is_str else r["vmax_num"]
@@ -1268,7 +1251,7 @@ def _zone_keep_ids_local(
                 # null upper bound = unbounded above
                 ok = vmax is None or vmax >= lo
             else:
-                ok = vmax is not None and vmax >= float(lo)
+                ok = vmax is not None and vmax >= lo
         if ok:
             ids.add(r["block_id"])
     return ids

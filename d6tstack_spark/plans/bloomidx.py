@@ -49,6 +49,12 @@ DEFAULT_M_BITS = 1 << 21  # 256 KiB per (file, column); fpp<1% @ ~150k NDV
 
 _INDEXABLE_PTYPES = ("str", "bin", "i8", "i16", "i32", "i64")
 
+# one row per (blocks file, column); readers pass it so no scan of the
+# sidecar pays a schema-inference job
+_INDEX_SCHEMA = (
+    "file string, column string, n_distinct long, bloom array<long>"
+)
+
 
 def _bloom_dir(state_dir: str) -> str:
     return os.path.join(state_dir, "bloomidx")
@@ -60,6 +66,10 @@ def _bloom_meta_path(state_dir: str) -> str:
 
 def _bloom_data_dir(state_dir: str) -> str:
     return os.path.join(_bloom_dir(state_dir), "data")
+
+
+def _read_index(spark: SparkSession, dd: str):
+    return spark.read.schema(_INDEX_SCHEMA).parquet(dd)
 
 
 def _positions(data: bytes, m_bits: int) -> list[int]:
@@ -183,7 +193,7 @@ def build_bloom_index(
     with open(mp + ".tmp", "w") as f:
         json.dump(meta, f, indent=1)
     os.replace(mp + ".tmp", mp)
-    n_files = spark.read.parquet(dd).select("file").distinct().count()
+    n_files = _read_index(spark, dd).select("file").distinct().count()
     return {"files_indexed": int(n_files), "columns": sorted(columns)}
 
 
@@ -220,7 +230,7 @@ def refresh_bloom_index(spark: SparkSession, state_dir: str) -> dict:
     dd = _bloom_data_dir(state_dir)
     covered = {
         (r[0], r[1])
-        for r in spark.read.parquet(dd).select("file", "column").collect()
+        for r in _read_index(spark, dd).select("file", "column").collect()
     }
     new_paths = [
         p
@@ -264,7 +274,7 @@ def _fill_gaps(
     holds no value of the column, so no equality probe can match it."""
     covered = {
         (r[0], r[1])
-        for r in spark.read.parquet(dd).select("file", "column").collect()
+        for r in _read_index(spark, dd).select("file", "column").collect()
     }
     gaps = [
         (os.path.basename(p), c)
@@ -276,8 +286,7 @@ def _fill_gaps(
         zero = [0] * (mb // 64)
         spark.createDataFrame(
             [(f, c, 0, zero) for f, c in gaps],
-            schema="file string, column string, n_distinct long, "
-            "bloom array<long>",
+            schema=_INDEX_SCHEMA,
         ).coalesce(1).write.mode("append").parquet(dd)
 
 
@@ -363,9 +372,7 @@ def _index_df(
         )
     )
     return rows.groupBy("f", "column").applyInPandas(
-        _build,
-        schema="file string, column string, n_distinct long, "
-        "bloom array<long>",
+        _build, schema=_INDEX_SCHEMA
     )
 
 
@@ -491,7 +498,7 @@ def bloom_value_keep(
         probes.append(b)
     dd = _bloom_data_dir(state_dir)
     try:
-        idx = spark.read.parquet(dd)
+        idx = _read_index(spark, dd)
     except Exception:
         return basenames
     idx = idx.filter(F.expr(f"size(bloom) = {mb // 64}"))
@@ -571,7 +578,7 @@ def bloom_prune_basenames(
 
     dd = _bloom_data_dir(state_dir)
     try:
-        idx = spark.read.parquet(dd)
+        idx = _read_index(spark, dd)
     except Exception:
         return basenames
     # a row whose bitmap was written under a different m_bits (a crashed
@@ -581,13 +588,11 @@ def bloom_prune_basenames(
 
     universe = set(basenames)
 
-    # ---- batched probing (round 6): the round-5 shape ran one tiny
-    # Spark job per (column, probe) per DNF branch plus one per IN
-    # conjunct — a 20-value IN-list scheduled ~dozens of serial jobs.
-    # All probes now evaluate in ONE aggregation over the sidecar: per
-    # file, a miss flag per distinct (column, probe bytes); one collect
-    # of (file, flags); the DNF/IN set algebra runs on the driver over
-    # those flags. Miss semantics are unchanged — a file misses a probe
+    # ---- batched probing: all probes evaluate in ONE scan of the
+    # sidecar, read under its known schema (no inference job). Each
+    # index row — one (file, column) bitmap — yields a miss flag per
+    # distinct (column, probe bytes); only rows with some miss reach the
+    # driver, where the DNF/IN set algebra runs. A file misses a probe
     # iff it HAS a (size-gated) index row for that column whose bitmap
     # rules the value out; files without a row always pass.
     probe_ix: dict[tuple, int] = {}
@@ -600,27 +605,28 @@ def bloom_prune_basenames(
     if not probe_ix:
         return basenames
     flags = []
+    any_miss = None
     for (col, b), i in probe_ix.items():
         hit = None
         for pos in _positions(b, mb):
             c = _bit_hit(pos)
             hit = c if hit is None else (hit & c)
-        flags.append(
-            F.max(
-                F.when((F.col("column") == col) & (~hit), 1).otherwise(0)
-            ).alias(f"m{i}")
-        )
+        # NULL (malformed bitmap) is not a miss: the row is dropped or
+        # its flag reads falsy below
+        m = (F.col("column") == col) & (~hit)
+        flags.append(m.alias(f"m{i}"))
+        any_miss = m if any_miss is None else (any_miss | m)
     cols_needed = sorted({col for col, _ in probe_ix})
     rows = (
         idx.filter(F.col("column").isin(cols_needed))
-        .groupBy("file")
-        .agg(*flags)
+        .filter(any_miss)
+        .select("file", *flags)
         .collect()
     )
     miss: list[set] = [set() for _ in probe_ix]
     for r in rows:
         for i in range(len(probe_ix)):
-            if r[f"m{i}"] == 1:
+            if r[f"m{i}"]:
                 miss[i].add(r["file"])
 
     # top-level IN conjuncts constrain every row: a file where ALL the

@@ -99,8 +99,11 @@ def explain_decode(
           "files_total":        files the read starts from (snapshot- or
                                 live-resolved),
           "files_after_bloom":  after Bloom point-lookup pruning,
-          "files_after_zone":   after the zone-map stats scan (the final
-                                file count the bulk decode plans),
+          "files_after_zone":   files with at least one qualifying block
+                                — the files whose payload the decode
+                                reads (every Bloom survivor still gets a
+                                decode task, which finds no qualifying
+                                block in the others and skips them),
           "zone_dnf":           the compiled OR-of-ANDs, or None when the
                                 predicate is unprunable,
           "bloom_columns":      indexed columns consulted (None = no
@@ -162,7 +165,8 @@ def explain_decode(
         )
     report["files_after_bloom"] = len(basenames)
 
-    # layer 3: zone-map DNF (the driver half of the bulk decode's pruning)
+    # layer 3: zone-map DNF — the decode tasks evaluate it on each file's
+    # own stats; here the same qualification runs as one stats-only scan
     dnf = None
     if where is not None:
         dnf = zone_dnf_from_where(where, manifest) or None

@@ -41,37 +41,76 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from d6tstack_spark.plans.explain import resolve_read_state
 
 
-def _qualifying_pairs(
-    stats: DataFrame, manifest: dict, dnf: list[list[tuple]]
-) -> DataFrame:
-    """Distinct ``(f, block_id)`` pairs that MAY contain a row matching
-    the DNF — the driver half of decode's zone pruning, kept in-plan so
-    block classification never collects per-block state to the driver.
-    ``stats`` must carry an ``f`` (file) column alongside the stats
-    rows. Must stay in lockstep with decode_parquet_blocks' task-side
-    keep-id derivation (same stats rows, same
-    :func:`_zone_keep_condition`), or hybrid counts double- or
-    under-count."""
-    from d6tstack_spark.operators.encode import _zone_keep_condition
+def _classify_files(
+    spark: SparkSession,
+    paths: list[str],
+    manifest: dict,
+    may_dnf: list[list[tuple]] | None,
+    neg_dnf: list[list[tuple]] | None,
+) -> list:
+    """One ``mapInArrow`` task per blocks file: classify the file's
+    blocks as pruned (fail the may-match DNF), undecided (also pass the
+    may-fail DNF ``neg_dnf``) or all-match (the rest), and return one
+    tally row per non-empty file — ``i`` (index into ``paths``),
+    ``nblocks``, ``rows``, ``kept``, ``undec`` and ``meta_rows`` (rows
+    of the all-match blocks). A missing DNF keeps every block, and so
+    does a file written before zone maps: such blocks stay kept and
+    undecided, decoded exactly."""
+    from d6tstack_spark.operators.encode import (
+        _read_file_stats,
+        _zone_keep_ids_file,
+        _zone_task_dnf,
+    )
 
-    qual = None
-    for branch in dnf:
-        branch_df = None
-        for bf in branch:
-            col, keep = _zone_keep_condition(manifest, bf)
-            s = (
-                stats.filter(F.col("column") == col)
-                .filter(keep)
-                .select("f", "block_id")
-                .distinct()
-            )
-            branch_df = (
-                s
-                if branch_df is None
-                else branch_df.join(s, ["f", "block_id"], "inner")
-            )
-        qual = branch_df if qual is None else qual.unionByName(branch_df)
-    return qual.distinct()
+    may_zf = _zone_task_dnf(manifest, may_dnf)
+    neg_zf = _zone_task_dnf(manifest, neg_dnf)
+
+    def run(batches):
+        import pyarrow as pa
+
+        pa.set_cpu_count(1)
+        pa.set_io_thread_count(1)
+        out = {
+            k: [] for k in ("i", "nblocks", "rows", "kept", "undec", "meta_rows")
+        }
+        for b in batches:
+            for i in b.column("id").to_pylist():
+                st = _read_file_stats(paths[i])
+                if st.num_rows == 0:
+                    continue  # empty part file: no blocks to classify
+                g = st.group_by("block_id").aggregate([("n_rows", "max")])
+                rows = dict(
+                    zip(
+                        g.column("block_id").to_pylist(),
+                        g.column("n_rows_max").to_pylist(),
+                    )
+                )
+
+                def keep(zf):  # every block without a DNF or zone stats
+                    ids = None if zf is None else _zone_keep_ids_file(st, zf)
+                    return set(rows) if ids is None else ids
+
+                may = keep(may_zf)
+                undec = may & keep(neg_zf)
+                out["i"].append(i)
+                out["nblocks"].append(len(rows))
+                out["rows"].append(sum(rows.values()))
+                out["kept"].append(len(may))
+                out["undec"].append(len(undec))
+                out["meta_rows"].append(sum(rows[k] for k in may - undec))
+        yield pa.RecordBatch.from_pydict(
+            out, schema=pa.schema([(k, pa.int64()) for k in out])
+        )
+
+    return (
+        spark.range(0, len(paths), 1, len(paths))
+        .mapInArrow(
+            run,
+            "i long, nblocks long, rows long, kept long, undec long, "
+            "meta_rows long",
+        )
+        .collect()
+    )
 
 
 def _compile_dnf(where: str, manifest: dict):
@@ -145,95 +184,41 @@ def fast_count(
         return {"count": dec.count(), "mode": "fallback", **report}
 
     paths = _resolve_block_paths(state_dir, basenames)
-    raw = spark.read.parquet(*paths)
-    if "n_rows" not in raw.columns:
-        dec = decode_state(spark, state_dir, where=where, snapshot=snapshot)
-        report["files_decoded"] = len(basenames)
-        return {"count": dec.count(), "mode": "fallback", **report}
-    has_zone = "vmin_num" in raw.columns
-    stats = raw.select(
-        F.input_file_name().alias("f"),
-        *[
+    may_dnf = neg_dnf = combined = ref_cols = None
+    if where is not None:
+        may_dnf = _compile_dnf(where, manifest)
+
+        # all-match proof: no row can satisfy (NOT where) OR any-ref-col-NULL
+        ref_cols = [
             c
-            for c in (
-                "block_id", "column", "n_rows", "null_count",
-                "vmin_num", "vmax_num", "vmin_str", "vmax_str",
-            )
-            if c in raw.columns
-        ],
-    )
-    rows_per_file = stats.groupBy("f", "block_id").agg(
-        F.max("n_rows").alias("r")
-    )
+            for c in manifest
+            if re.search(rf"\b{re.escape(c)}\b", where, re.IGNORECASE)
+        ]
+        negated = f"(NOT ({where}))" + "".join(
+            f" OR ({c} IS NULL)" for c in ref_cols
+        )
+        neg_dnf = _compile_dnf(negated, manifest)
 
+        # the undecided blocks decode under may AND may-fail — expressible
+        # as a DNF only via branch products, so cap the blowup (past the
+        # cap the proof is skipped, never wrong)
+        if may_dnf and neg_dnf and len(may_dnf) * len(neg_dnf) <= 64:
+            combined = [mb + nb for mb in may_dnf for nb in neg_dnf]
+        else:
+            neg_dnf = neg_dnf if may_dnf is None else None
+            combined = may_dnf or neg_dnf
+
+    # one job: per-file kept/undecided/all-match block tallies and the
+    # metadata-counted rows, classified in the task from the file's own
+    # stats by the same _zone_keep_ids_file the decode task runs — so the
+    # undecided blocks counted here are exactly the ones decoded below
+    tallies = _classify_files(spark, paths, manifest, may_dnf, neg_dnf)
     if where is None:
-        total = rows_per_file.agg(F.sum("r").alias("n")).collect()[0]["n"]
         report["files_metadata_only"] = len(basenames)
-        return {"count": int(total or 0), "mode": "metadata", **report}
-
-    may_dnf = _compile_dnf(where, manifest) if has_zone else None
-
-    # all-match proof: no row can satisfy (NOT where) OR any-ref-col-NULL
-    ref_cols = [
-        c
-        for c in manifest
-        if re.search(rf"\b{re.escape(c)}\b", where, re.IGNORECASE)
-    ]
-    negated = f"(NOT ({where}))" + "".join(
-        f" OR ({c} IS NULL)" for c in ref_cols
-    )
-    neg_dnf = _compile_dnf(negated, manifest) if has_zone else None
-
-    # the undecided blocks decode under may AND may-fail — expressible
-    # as a DNF only via branch products, so cap the blowup (past the cap
-    # the proof is skipped, never wrong)
-    combined = None
-    if may_dnf and neg_dnf and len(may_dnf) * len(neg_dnf) <= 64:
-        combined = [mb + nb for mb in may_dnf for nb in neg_dnf]
-    else:
-        neg_dnf = neg_dnf if may_dnf is None else None
-        combined = may_dnf or neg_dnf
-
-    pairs_all = rows_per_file.select("f", "block_id")
-    may_pairs = (
-        _qualifying_pairs(stats, manifest, may_dnf) if may_dnf else pairs_all
-    )
-    undec_pairs = (
-        may_pairs.join(
-            _qualifying_pairs(stats, manifest, neg_dnf),
-            ["f", "block_id"],
-            "inner",
-        )
-        if neg_dnf
-        else may_pairs
-    )
-    # one job: per-file kept/undecided/allmatch block tallies + the
-    # metadata-counted rows
-    tallies = (
-        rows_per_file.join(
-            may_pairs.withColumn("_kept", F.lit(1)), ["f", "block_id"], "left"
-        )
-        .join(
-            undec_pairs.withColumn("_undec", F.lit(1)),
-            ["f", "block_id"],
-            "left",
-        )
-        .groupBy("f")
-        .agg(
-            F.count(F.lit(1)).alias("nblocks"),
-            F.sum("_kept").alias("kept"),
-            F.sum("_undec").alias("undec"),
-            F.sum(
-                F.when(
-                    F.col("_kept").isNotNull() & F.col("_undec").isNull(),
-                    F.col("r"),
-                )
-            ).alias("meta_rows"),
-        )
-        .collect()
-    )
-    count = sum(int(t["meta_rows"] or 0) for t in tallies)
-    undec_files = sorted(t["f"] for t in tallies if t["undec"])
+        count = sum(t["rows"] for t in tallies)
+        return {"count": count, "mode": "metadata", **report}
+    count = sum(t["meta_rows"] for t in tallies)
+    undec_files = [paths[t["i"]] for t in tallies if t["undec"]]
     report["files_pruned"] = sum(1 for t in tallies if not t["kept"])
     report["files_metadata_only"] = sum(
         1 for t in tallies if t["kept"] and not t["undec"]
@@ -241,24 +226,20 @@ def fast_count(
     report["files_decoded"] = len(undec_files)
     # block-granular tallies: classification is per BLOCK, so even a
     # single-file state dir decodes only its undecided blocks
-    report["blocks_total"] = sum(int(t["nblocks"]) for t in tallies)
-    report["blocks_kept"] = sum(int(t["kept"] or 0) for t in tallies)
-    report["blocks_decoded"] = sum(int(t["undec"] or 0) for t in tallies)
+    report["blocks_total"] = sum(t["nblocks"] for t in tallies)
+    report["blocks_kept"] = sum(t["kept"] for t in tallies)
+    report["blocks_decoded"] = sum(t["undec"] for t in tallies)
 
     if undec_files:
         from d6tstack_spark.operators.encode import decode_parquet_blocks
 
-        base_of = {p.split("/")[-1]: p for p in paths}
-        # input_file_name URIs vs resolved paths: match on basename
-        # (unique within a blocks dir by construction)
-        dec_paths = [base_of[f.split("/")[-1]] for f in undec_files]
         dec = decode_parquet_blocks(
             spark,
             _blocks_dir(state_dir),
             manifest,
             columns=ref_cols or None,
             block_filter=combined,
-            paths=dec_paths,
+            paths=undec_files,
         )
         count += dec.filter(F.expr(where)).count()
     mode = "metadata" if not undec_files else "hybrid"

@@ -70,3 +70,20 @@ def test_rows_only_queries_run(name, spark, sf_dir):
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
+
+
+def test_table_schema_memo_sees_rewrites(spark, tmp_path):
+    """A gate table rewritten at the same path with an extra column is
+    re-inferred instead of read under the memoized schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path)
+    path = f"{d}/gate.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert entry_mod._t(spark, d, "gate").columns == ["a"]
+    assert entry_mod._t(spark, d, "gate").columns == ["a"]  # memo hit
+    pq.write_table(pa.table({"a": [3, 4], "b": ["x", "y"]}), path)
+    df = entry_mod._t(spark, d, "gate")
+    assert df.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in df.collect()) == [(3, "x"), (4, "y")]

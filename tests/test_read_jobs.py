@@ -1,0 +1,307 @@
+"""Read-path planning cost and its per-file classification.
+
+State-dir reads plan zone pruning and fast_count classification inside the
+decode tasks, from each file's own stats rows, so a read costs a fixed
+number of Spark jobs whatever the predicate. These tests pin those job
+counts, check that per-file zone detection handles a blocks dir mixing
+pre-zone-map and zone-map files, and check that the two zone classifiers
+(the Spark Column one used by ``decode_table`` and the task-side one used
+by the bulk decode and fast_count) keep identical block ids."""
+
+from __future__ import annotations
+
+import itertools
+import os
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
+from hypothesis import given, settings, strategies as st
+
+from d6tstack_spark.plans.bloomidx import build_bloom_index
+from d6tstack_spark.plans.checkpoint import decode_state, encode_resume
+from d6tstack_spark.plans.fastcount import fast_count
+
+_N = 1200  # rows per source file
+_GROUPS = itertools.count()
+
+
+def _source(i: int) -> pa.Table:
+    """File ``i``: its own conv_id prefix (Bloom-prunable) and a
+    file-disjoint ``seq`` range (zone-prunable)."""
+    return pa.table(
+        {
+            "conv_id": pa.array([f"{'abcd'[i]}{j // 6:04d}" for j in range(_N)]),
+            "turn_idx": pa.array([j % 6 for j in range(_N)], pa.int32()),
+            "seq": pa.array([i * _N + j for j in range(_N)], pa.int64()),
+            "val": pa.array(
+                [None if j % 7 == 0 else float(j % 100) for j in range(_N)],
+                pa.float64(),
+            ),
+        }
+    )
+
+
+def _build_state(spark, tmp_path, n_files: int):
+    paths = []
+    for i in range(n_files):
+        p = str(tmp_path / f"src_{i}.parquet")
+        pq.write_table(_source(i), p, row_group_size=400)
+        paths.append(p)
+        # one resume per file keeps each file's seq range in its own
+        # blocks file
+        encode_resume(spark, paths, str(tmp_path / "state"),
+                      order_cols=("conv_id", "turn_idx"))
+    src = pa.concat_tables(_source(i) for i in range(n_files))
+    return str(tmp_path / "state"), src
+
+
+def _jobs(spark, fn):
+    """(result of ``fn()``, number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"read-jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _sorted_rows(tbl: pa.Table, cols) -> list[tuple]:
+    cols = list(cols)
+    return sorted(zip(*(tbl.column(c).to_pylist() for c in cols)))
+
+
+@pytest.fixture()
+def indexed_state(spark, tmp_path):
+    sd, src = _build_state(spark, tmp_path, 4)
+    build_bloom_index(spark, sd, ["conv_id"])
+    return sd, src
+
+
+def test_read_job_counts(spark, indexed_state):
+    sd, src = indexed_state
+    cols = src.column_names
+    assert len(os.listdir(os.path.join(sd, "blocks"))) >= 4
+
+    # zone-prunable range read: one job, the decode itself
+    where = "seq >= 1300 AND seq < 1350"
+    got, jobs = _jobs(
+        spark, lambda: decode_state(spark, sd, where=where).toArrow()
+    )
+    want = src.filter(
+        pc.and_(pc.greater_equal(src["seq"], 1300), pc.less(src["seq"], 1350))
+    )
+    assert _sorted_rows(got, cols) == _sorted_rows(want, cols)
+    assert jobs == 1, jobs
+
+    # Bloom equality read: the sidecar probe plus the decode
+    got, jobs = _jobs(
+        spark,
+        lambda: decode_state(spark, sd, where="conv_id = 'c0007'").toArrow(),
+    )
+    want = src.filter(pc.equal(src["conv_id"], "c0007"))
+    assert want.num_rows == 6
+    assert _sorted_rows(got, cols) == _sorted_rows(want, cols)
+    assert jobs == 2, jobs
+
+    # full decode
+    got, jobs = _jobs(spark, lambda: decode_state(spark, sd).toArrow())
+    assert _sorted_rows(got, cols) == _sorted_rows(src, cols)
+    assert jobs == 1, jobs
+
+    # fast_count: one classification job plus the undecided-block decode
+    where = "seq >= 600 AND seq < 2000"
+    rep, jobs = _jobs(spark, lambda: fast_count(spark, sd, where=where))
+    want = src.filter(
+        pc.and_(pc.greater_equal(src["seq"], 600), pc.less(src["seq"], 2000))
+    )
+    assert rep["count"] == want.num_rows
+    assert rep["mode"] == "hybrid"
+    assert jobs <= 3, jobs
+
+
+def test_mixed_legacy_and_zone_files(spark, tmp_path):
+    """A blocks dir where one file predates zone maps (its vmin/vmax
+    columns dropped) and the others carry them: zone detection is per
+    file, so the legacy file decodes whole and the rest still prune."""
+    from d6tstack_spark.operators.encode import decode_parquet_blocks
+    from d6tstack_spark.plans.checkpoint import load_manifest
+
+    sd, src = _build_state(spark, tmp_path, 3)
+    bdir = os.path.join(sd, "blocks")
+    files = sorted(
+        os.path.join(bdir, f) for f in os.listdir(bdir) if f.endswith(".parquet")
+    )
+    legacy = None
+    for f in files:
+        t = pq.read_table(f)
+        seq = t.filter(pc.equal(t["column"], "seq"))
+        if seq.num_rows and pc.min(seq["vmin_num"]).as_py() <= 1500 <= pc.max(
+            seq["vmax_num"]
+        ).as_py():
+            legacy = f
+            pq.write_table(
+                t.drop(["vmin_num", "vmax_num", "vmin_str", "vmax_str"]), f
+            )
+            # the Hadoop checksum sidecar would no longer match
+            crc = os.path.join(bdir, f".{os.path.basename(f)}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
+    assert legacy is not None
+    assert "vmin_num" not in pq.read_schema(legacy).names
+    assert any("vmin_num" in pq.read_schema(f).names for f in files)
+
+    cols = src.column_names
+    for where, lo, hi in [
+        ("seq >= 1100 AND seq < 2500", 1100, 2500),  # spans all three files
+        ("seq < 100", 0, 100),  # the legacy file holds no match
+        ("seq >= 1500 AND seq < 1510", 1500, 1510),  # only the legacy file
+    ]:
+        want = src.filter(
+            pc.and_(pc.greater_equal(src["seq"], lo), pc.less(src["seq"], hi))
+        )
+        got = decode_state(spark, sd, where=where).toArrow()
+        assert _sorted_rows(got, cols) == _sorted_rows(want, cols), where
+        rep = fast_count(spark, sd, where=where)
+        assert rep["count"] == want.num_rows, (where, rep)
+
+    # an unknown block_filter column fails at construction, before any job
+    man = load_manifest(sd)
+    for build in (
+        lambda: decode_state(spark, sd, block_filter=("nope", 0, 1)),
+        lambda: decode_parquet_blocks(spark, bdir, man,
+                                      block_filter=[("nope", "is_null")]),
+    ):
+        def call():
+            with pytest.raises(ValueError, match="nope"):
+                build()
+
+        _, jobs = _jobs(spark, call)
+        assert jobs == 0
+
+
+# ---------------------------------------------------------------------------
+# the two zone classifiers agree
+# ---------------------------------------------------------------------------
+
+_MANIFEST = {
+    "x": {"ptype": "i64", "logical": None},
+    "s": {"ptype": "str", "logical": None},
+}
+_STATS_SCHEMA = pa.schema(
+    [
+        ("column", pa.string()),
+        ("block_id", pa.int64()),
+        ("n_rows", pa.int64()),
+        ("null_count", pa.int64()),
+        ("vmin_num", pa.float64()),
+        ("vmax_num", pa.float64()),
+        ("vmin_str", pa.binary()),
+        ("vmax_str", pa.binary()),
+    ]
+)
+_BIG = 2**53
+_nums = st.sampled_from(
+    [-3, -1, 0, 1, 2, 5, _BIG - 1, _BIG, _BIG + 1, _BIG + 3, _BIG + 4]
+)
+_strs = st.lists(st.sampled_from([0x61, 0x62, 0x63, 0xFF]), max_size=3).map(
+    bytes
+)
+
+
+@st.composite
+def _stats_row(draw, block_id):
+    n = draw(st.integers(1, 4))
+    num_lo = draw(st.one_of(st.none(), _nums))
+    str_lo = draw(st.one_of(st.none(), _strs))
+    return [
+        {
+            "column": "x", "block_id": block_id, "n_rows": n,
+            "null_count": draw(st.integers(0, n)),
+            "vmin_num": None if num_lo is None else float(num_lo),
+            "vmax_num": draw(st.one_of(st.none(), _nums.map(float))),
+            "vmin_str": None, "vmax_str": None,
+        },
+        {
+            "column": "s", "block_id": block_id, "n_rows": n,
+            "null_count": draw(st.integers(0, n)),
+            "vmin_num": None, "vmax_num": None,
+            "vmin_str": str_lo,
+            # a null vmax_str with vmin_str set is the 0xFF truncation cut
+            "vmax_str": draw(st.one_of(st.none(), _strs)),
+        },
+    ]
+
+
+@st.composite
+def _stats_and_pred(draw):
+    rows = []
+    for b in range(draw(st.integers(1, 6))):
+        # some blocks carry no row for a column (evolved column)
+        rows += [r for r in draw(_stats_row(b)) if draw(st.booleans())]
+    col = draw(st.sampled_from(["x", "s"]))
+    kind = draw(st.sampled_from(["range", "is_null", "not_null"]))
+    if kind != "range":
+        pred = (col, kind)
+    else:
+        vals = _nums if col == "x" else _strs
+        pred = (
+            col,
+            draw(st.one_of(st.none(), vals)),
+            draw(st.one_of(st.none(), vals)),
+        )
+    return rows, pred, draw(st.booleans())
+
+
+@settings(max_examples=60, deadline=None)
+@given(_stats_and_pred())
+def test_zone_classifier_twins_agree(spark, case):
+    """``_zone_keep_condition`` (Spark Column) and ``_zone_keep_ids_local``
+    (task-side, reached through ``_zone_keep_ids_file``) keep identical
+    block ids, including stats-less rows, the open-above string bound,
+    float64 rounding of large integer bounds, null atoms and files whose
+    stats predate zone maps (``absent``: no pruning on either side)."""
+    from pyspark.sql import functions as F
+
+    from d6tstack_spark.operators.encode import (
+        _zone_keep_condition,
+        _zone_keep_ids_file,
+        _zone_task_dnf,
+    )
+
+    rows, pred, absent = case
+    tbl = pa.Table.from_pylist(rows, schema=_STATS_SCHEMA)
+    every = set(tbl.column("block_id").to_pylist())
+    if absent:
+        tbl = tbl.drop(["vmin_num", "vmax_num", "vmin_str", "vmax_str"])
+
+    local = _zone_keep_ids_file(tbl, _zone_task_dnf(_MANIFEST, [[pred]]))
+    local = every if local is None else local
+
+    df = spark.createDataFrame(
+        [tuple(r.values()) for r in tbl.to_pylist()], _spark_schema(absent)
+    )
+    if "vmin_num" not in df.columns:  # decode_table skips pruning
+        column = every
+    else:
+        col, keep = _zone_keep_condition(_MANIFEST, pred)
+        column = {
+            r[0]
+            for r in df.filter(F.col("column") == col)
+            .filter(keep)
+            .select("block_id")
+            .collect()
+        }
+    assert local == column, (pred, rows)
+
+
+def _spark_schema(absent: bool) -> str:
+    s = "column string, block_id long, n_rows long, null_count long"
+    if not absent:
+        s += (", vmin_num double, vmax_num double, vmin_str binary, "
+              "vmax_str binary")
+    return s
