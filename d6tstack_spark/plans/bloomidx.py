@@ -131,12 +131,12 @@ def build_bloom_index(
     columns: list[str] | tuple[str, ...],
     m_bits: int = DEFAULT_M_BITS,
 ) -> dict:
-    """Build (or rebuild) the Bloom sidecar for ``columns`` — a
-    distributed pass over the blocks files: each (file, column) group
-    decodes only that column's payloads, hashes the DISTINCT values
-    (cardinality-bounded work), and ORs the per-block bitmaps. One
-    output row per (file, column); the whole sidecar is rewritten, so a
-    rebuild also forgets files a rewrite retired.
+    """Build (or rebuild) the Bloom sidecar for ``columns`` — one task
+    pass over the blocks files (:func:`_index_files`): each task decodes
+    only the indexed columns' payloads of its files, hashes the DISTINCT
+    values (cardinality-bounded work), and ORs the per-block bitmaps. One
+    output row per listed (file, column); the whole sidecar is rewritten,
+    so a rebuild also forgets files a rewrite retired.
 
     Indexable column types: strings, binary, integers (including
     timestamp/date/bool columns, which physicalize to ints). Float and
@@ -177,12 +177,10 @@ def build_bloom_index(
     if not paths:
         raise ValueError(f"no blocks parquet files under {bd}")
 
-    pmeta = {c: dict(manifest[c]) for c in columns}
     mb = int(m_bits)
-    idx = _index_df(spark, paths, columns, pmeta, mb)
     dd = _bloom_data_dir(state_dir)
-    idx.write.mode("overwrite").parquet(dd)
-    _fill_gaps(spark, dd, paths, columns, mb)
+    work = [(p, list(columns)) for p in paths]
+    _index_files(spark, work, manifest, mb).write.mode("overwrite").parquet(dd)
     meta = {
         "m_bits": mb,
         "k": BLOOM_K,
@@ -193,8 +191,8 @@ def build_bloom_index(
     with open(mp + ".tmp", "w") as f:
         json.dump(meta, f, indent=1)
     os.replace(mp + ".tmp", mp)
-    n_files = _read_index(spark, dd).select("file").distinct().count()
-    return {"files_indexed": int(n_files), "columns": sorted(columns)}
+    # the build writes a row for every listed (file, column)
+    return {"files_indexed": len(paths), "columns": sorted(columns)}
 
 
 def refresh_bloom_index(spark: SparkSession, state_dir: str) -> dict:
@@ -223,8 +221,6 @@ def refresh_bloom_index(spark: SparkSession, state_dir: str) -> dict:
         )
     columns = list(meta["columns"])
     mb = int(meta["m_bits"])
-    manifest = load_manifest(state_dir)
-    pmeta = {c: dict(manifest[c]) for c in columns}
     bd = _blocks_dir(state_dir)
     paths = sorted(_hadoop_list_files(spark, bd, ".parquet"))
     dd = _bloom_data_dir(state_dir)
@@ -232,148 +228,135 @@ def refresh_bloom_index(spark: SparkSession, state_dir: str) -> dict:
         (r[0], r[1])
         for r in _read_index(spark, dd).select("file", "column").collect()
     }
-    new_paths = [
-        p
-        for p in paths
-        if any((os.path.basename(p), c) not in covered for c in columns)
-    ]
-    if not new_paths:
+    # a partially-covered file indexes only its missing columns, so the
+    # sidecar stays duplicate-free
+    work = []
+    for p in paths:
+        b = os.path.basename(p)
+        todo = [c for c in columns if (b, c) not in covered]
+        if todo:
+            work.append((p, todo))
+    if not work:
         return {"files_refreshed": 0, "columns": sorted(columns)}
-    idx = _index_df(spark, new_paths, columns, pmeta, mb)
-    if covered:
-        # a partially-covered file re-indexes all its columns; drop the
-        # rows that already exist so the sidecar stays duplicate-free.
-        # left_anti against a small DataFrame, NOT isin() — an In
-        # expression with one literal per covered pair grows to the full
-        # sidecar size (10^5+ literals) and blows up plan construction
-        # on exactly the incremental cadence this function exists for
-        cov_df = spark.createDataFrame(
-            sorted(covered), "file string, column string"
-        )
-        idx = idx.join(
-            F.broadcast(cov_df), ["file", "column"], "left_anti"
-        )
-    idx.write.mode("append").parquet(dd)
-    _fill_gaps(spark, dd, new_paths, columns, mb)
+    _index_files(spark, work, load_manifest(state_dir), mb).write.mode(
+        "append"
+    ).parquet(dd)
     meta["built_ts"] = time.time()
     mp = _bloom_meta_path(state_dir)
     with open(mp + ".tmp", "w") as f:
         json.dump(meta, f, indent=1)
     os.replace(mp + ".tmp", mp)
-    return {"files_refreshed": len(new_paths), "columns": sorted(columns)}
+    return {"files_refreshed": len(work), "columns": sorted(columns)}
 
 
-def _fill_gaps(
-    spark: SparkSession, dd: str, paths: list[str], columns: list[str],
-    mb: int,
-) -> None:
-    """Cover EVERY listed file: zero-row part files (empty commit
-    partitions) and files lacking a column entirely (pre-evolution)
-    produce no build group, but leaving them index-less would make them
-    permanently unprunable. A zero bitmap is the sound record: the file
-    holds no value of the column, so no equality probe can match it."""
-    covered = {
-        (r[0], r[1])
-        for r in _read_index(spark, dd).select("file", "column").collect()
-    }
-    gaps = [
-        (os.path.basename(p), c)
-        for p in paths
-        for c in columns
-        if (os.path.basename(p), c) not in covered
-    ]
-    if gaps:
-        zero = [0] * (mb // 64)
-        spark.createDataFrame(
-            [(f, c, 0, zero) for f, c in gaps],
-            schema=_INDEX_SCHEMA,
-        ).coalesce(1).write.mode("append").parquet(dd)
-
-
-def _index_df(
+def _index_files(
     spark: SparkSession,
-    paths: list[str],
-    columns: list[str],
-    pmeta: dict,
+    work: list[tuple[str, list[str]]],
+    manifest: dict,
     mb: int,
 ):
-    """The distributed index build: one applyInPandas group per
-    (blocks file, column), each decoding only that column's payloads and
-    hashing the DISTINCT values (cardinality-bounded work), ORing the
-    per-block bitmaps."""
+    """The distributed index build: one task pass over the blocks files
+    of ``work`` (``(path, columns)`` pairs), at most one task per core and
+    no exchange. Each task streams its files' column rows for ``columns``
+    with pyarrow, decodes the payloads, hashes the DISTINCT values
+    (cardinality-bounded work) and ORs them into one bitmap per (file,
+    column). EVERY listed pair gets a row: an empty part file or a file
+    written before a column existed yields a zero bitmap — the sound
+    record, since no equality probe can match a file holding no value of
+    the column, and a missing row would leave it permanently
+    unprunable."""
+    pmeta = {c: dict(manifest[c]) for _, cols in work for c in cols}
 
-    def _build(key, pdf):
+    def build(batches):
         import numpy as np
-        import pandas as pd
         import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
 
         pa.set_cpu_count(1)
+        pa.set_io_thread_count(1)
         from d6tstack_spark.codecs.blocks import (
             decode_block,
             decode_block_arrow,
         )
         from d6tstack_spark.operators.encode import _decode_arrow_fallback
 
-        fpath, col = key
-        m = pmeta[col]
-        ptype = m["ptype"]
-        words = np.zeros(mb // 64, dtype=np.uint64)
-        seen: set = set()
-        for r in pdf.itertuples(index=False):
-            n = int(r.n_rows)
-            nc = int(r.null_count)
-            if nc >= n:
-                continue
-            if ptype == "any" or r.codec == "arrow":
-                arr = _decode_arrow_fallback(r.payload)
-                vals = arr.drop_null().unique().to_pylist()
-            elif ptype in ("str", "bin"):
+        def values(r, ptype):
+            n, nc = r["n_rows"], r["null_count"]
+            if ptype == "any" or r["codec"] == "arrow":
+                arr = _decode_arrow_fallback(r["payload"])
+                return arr.drop_null().unique().to_pylist()
+            if ptype in ("str", "bin"):
                 arr = decode_block_arrow(
-                    r.payload, r.params, r.codec, n, nc, ptype
+                    r["payload"], r["params"], r["codec"], n, nc, ptype
                 )
                 vals = arr.drop_null().unique().to_pylist()
                 if ptype == "str":
                     vals = [
-                        v if isinstance(v, str) else v.decode()
-                        for v in vals
+                        v if isinstance(v, str) else v.decode() for v in vals
                     ]
-            else:
-                values, valid = decode_block(
-                    r.payload, r.params, r.codec, n, nc, ptype
-                )
-                vals = np.unique(values[valid]).tolist()
-            for v in vals:
-                b = _canonical_bytes(v, m)
-                if b is None or b in seen:
-                    continue
-                seen.add(b)
-                for pos in _positions(b, mb):
-                    words[pos >> 6] |= np.uint64(1 << (pos & 63))
-        return pd.DataFrame(
-            {
-                "file": [os.path.basename(fpath)],
-                "column": [col],
-                "n_distinct": [len(seen)],
-                "bloom": [words.view(np.int64).tolist()],
-            }
-        )
+                return vals
+            vals, valid = decode_block(
+                r["payload"], r["params"], r["codec"], n, nc, ptype
+            )
+            return np.unique(vals[valid]).tolist()
 
-    rows = (
-        spark.read.parquet(*paths)
-        .filter(F.col("column").isin(columns))
-        .select(
-            F.input_file_name().alias("f"),
-            "column",
-            "codec",
-            "params",
-            "payload",
-            "n_rows",
-            "null_count",
-        )
-    )
-    return rows.groupBy("f", "column").applyInPandas(
-        _build, schema=_INDEX_SCHEMA
-    )
+        for b in batches:
+            for path, cols in zip(
+                b.column("path").to_pylist(), b.column("cols").to_pylist()
+            ):
+                words = {c: np.zeros(mb // 64, dtype=np.uint64) for c in cols}
+                seen: dict[str, set] = {c: set() for c in cols}
+                want = pa.array(cols, pa.string())
+                # small batches: payloads are multi-MB, so peak memory is
+                # one batch of them, not the whole file
+                for rb in pq.ParquetFile(path).iter_batches(
+                    batch_size=16,
+                    columns=[
+                        "column", "codec", "params", "payload", "n_rows",
+                        "null_count",
+                    ],
+                    use_threads=False,
+                ):
+                    rb = rb.filter(
+                        pc.is_in(rb.column("column"), value_set=want)
+                    )
+                    for r in rb.to_pylist():
+                        if r["null_count"] >= r["n_rows"]:
+                            continue
+                        col = r["column"]
+                        m = pmeta[col]
+                        w, s = words[col], seen[col]
+                        for v in values(r, m["ptype"]):
+                            h = _canonical_bytes(v, m)
+                            if h is None or h in s:
+                                continue
+                            s.add(h)
+                            for pos in _positions(h, mb):
+                                w[pos >> 6] |= np.uint64(1 << (pos & 63))
+                bits = np.concatenate([words[c] for c in cols])
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array([os.path.basename(path)] * len(cols)),
+                        want,
+                        pa.array([len(seen[c]) for c in cols], pa.int64()),
+                        pa.ListArray.from_arrays(
+                            pa.array(
+                                np.arange(len(cols) + 1, dtype=np.int32)
+                                * (mb // 64)
+                            ),
+                            pa.array(bits.view(np.int64)),
+                        ),
+                    ],
+                    names=["file", "column", "n_distinct", "bloom"],
+                )
+
+    from d6tstack_spark.plans.checkpoint import _sliced_source
+
+    n_tasks = min(len(work), spark.sparkContext.defaultParallelism)
+    return _sliced_source(
+        spark, work, n_tasks, "path string, cols array<string>"
+    ).mapInArrow(build, _INDEX_SCHEMA)
 
 
 def load_bloom_meta(state_dir: str) -> dict | None:
@@ -552,9 +535,10 @@ def bloom_prune_basenames(
     mb = int(meta["m_bits"])
 
     # per branch: (col, probe bytes) for its usable equality atoms.
-    # Schema evolution needs no special case here: pre-evolution files
-    # have no blocks row for an evolved column, hence no index row, and
-    # uncovered (file, column) pairs always pass.
+    # Schema evolution needs no special case here: a pre-evolution file
+    # carries a zero bitmap for an evolved column (it decodes the column
+    # as all-null, so no equality atom can match it), and uncovered
+    # (file, column) pairs always pass.
     branches: list[list[tuple]] = []
     for branch in dnf:
         probes: list[tuple] = []

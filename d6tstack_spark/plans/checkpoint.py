@@ -6,14 +6,20 @@ skip``) and its pluggable logger (utils.py:7-12) into Spark-native state:
 
 - state lives IN the output itself: the blocks parquet under
   ``<state_dir>/blocks`` (block_id is deterministic) plus a lineage table
-  under ``<state_dir>/lineage`` (one row per completed split: rows, bytes,
-  per-column codecs, duration, attempt);
-- resume = ``left_anti`` join of planned splits against completed block ids
-  (SURVEY.md §2.3 "checkpoint/resume join") — only missing splits re-encode;
-- writes are append-mode per run; block ids are deterministic
-  (file_idx<<32 | row_group), so a crashed run resumes without duplicates
-  and a retried task overwrites nothing (parquet append of the same block id
-  is prevented by the anti-join running per attempt batch).
+  under ``<state_dir>/lineage`` (one row per completed block: rows, bytes,
+  per-column codecs, run duration);
+- resume is a driver-side set difference (SURVEY.md §2.3
+  "checkpoint/resume join"): one known-schema census of the blocks dir
+  (``block_id, column`` grouped by ``block_id``) yields the completed base
+  ids and detects duplicate publications in the same pass; the planned
+  splits minus those ids (and minus the purge-rewritten bases) are the
+  todo list — only missing splits re-encode;
+- writes are append-mode commit batches over a ``parallelize`` source (no
+  exchange): one task per core, or more once a file would exceed
+  ``_MAX_SPLITS_PER_FILE`` splits; every task encodes a contiguous slice
+  of splits and writes one file of whole blocks.
+  Block ids are deterministic (file_idx<<32 | row_group), so a crashed run
+  resumes without duplicates and a retried task overwrites nothing.
 """
 
 from __future__ import annotations
@@ -1179,13 +1185,71 @@ def _assign_file_indices(state_dir: str, paths: list[str]) -> dict[str, int]:
     return fmap
 
 
-def completed_block_ids(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """Distinct block ids already present in the state dir (None if fresh)."""
+def _completed_bases(spark: SparkSession, state_dir: str) -> set[int]:
+    """Base ids (``block_id >> SUB_BLOCK_BITS``) of every split the state
+    dir already holds, from one known-schema census of the blocks dir: a
+    ``groupBy("block_id")`` of the column rows, whose row count exceeding
+    its distinct-column count marks a duplicate publication (a pre-fix
+    crash published a block twice). Duplicates are healed here, before
+    anything appends. Purge-rewritten bases count as complete too: their
+    surviving rows live on under rewritten ids, and re-encoding the source
+    split would resurrect the deleted rows."""
+    from d6tstack_spark.operators.encode import SUB_BLOCK_BITS
+
     bd = _blocks_dir(state_dir)
-    try:
-        return spark.read.parquet(bd).select("block_id").distinct()
-    except Exception:
-        return None
+    done: set[int] = set()
+    if os.path.isdir(bd):
+        census = (
+            spark.read.schema("block_id long, column string")
+            .parquet(bd)
+            .groupBy("block_id")
+            # collect_set, not countDistinct: the distinct-aggregate
+            # rewrite would add a second exchange (and job)
+            .agg(
+                (F.count("*") > F.size(F.collect_set("column"))).alias("dup")
+            )
+            .collect()
+        )
+        done = {r[0] >> SUB_BLOCK_BITS for r in census}
+        if any(r[1] for r in census):
+            # encode is bitwise-deterministic, so the copies are identical
+            # and healing leaves the done set as it is
+            repair_duplicate_blocks(spark, state_dir)
+    rw = _rewritten_dir(state_dir)
+    if os.path.isdir(rw):
+        done |= {
+            r[0] for r in spark.read.schema("block_id long").parquet(rw)
+            .collect()
+        }
+    return done
+
+
+def _write_lineage(
+    spark: SparkSession, state_dir: str, duration: float
+) -> None:
+    """Rewrite the lineage table from the blocks themselves (no side
+    channel to drift out of sync): one row per block with its rows, raw
+    and encoded bytes and per-column codecs. The read carries its schema,
+    so no inference job scans the blocks dir first."""
+    (
+        spark.read.schema(
+            "block_id long, column string, codec string, n_rows long, "
+            "raw_bytes long, enc_bytes long"
+        )
+        .parquet(_blocks_dir(state_dir))
+        .groupBy("block_id")
+        .agg(
+            F.max("n_rows").alias("rows"),
+            F.sum("raw_bytes").alias("raw_bytes"),
+            F.sum("enc_bytes").alias("enc_bytes"),
+            F.map_from_entries(
+                F.array_distinct(F.collect_list(F.struct("column", "codec")))
+            ).alias("codecs"),
+        )
+        .withColumn("run_duration_sec", F.lit(round(duration, 3)))
+        .write.mode("overwrite")
+        .parquet(_lineage_dir(state_dir))
+    )
 
 
 def _clean_stale_temporary(spark: SparkSession, state_dir: str) -> None:
@@ -1252,9 +1316,13 @@ def encode_resume(
     checkpoint_every: int | None = None,
 ) -> dict:
     """Encode parquet files into ``state_dir``, resuming past completed
-    blocks. Returns a summary dict (splits planned/skipped/encoded, bytes).
+    blocks. Returns a summary dict (splits planned/skipped/encoded,
+    ``already_complete``, and the run duration and snapshot id when
+    something was written).
 
-    Call again after a crash/kill: only missing blocks are encoded.
+    Call again after a crash/kill: only missing blocks are encoded (the
+    planned splits minus the base ids one blocks-dir census finds).
+
     ``checkpoint_every`` bounds the blast radius of a crash: splits commit
     in independent append jobs of at most that many splits, so a kill
     mid-run loses at most one in-flight batch — the committed batches
@@ -1267,9 +1335,8 @@ def encode_resume(
     submissions stays flat as the input grows with the cluster, while a
     crash still only loses minutes of work. A fixed small value on a
     large cluster would serialize thousands of tiny jobs through the
-    driver's commit barrier."""
-    import pyarrow.parquet as pq
-
+    driver's commit barrier. Each batch writes one file per core, or per
+    ``_MAX_SPLITS_PER_FILE`` splits when that is more."""
     if isinstance(paths, str):
         paths = [paths]
     # single-writer lease guards every state mutation below (files.json,
@@ -1360,6 +1427,28 @@ def _evolve_manifest(prior: dict, new: dict) -> dict:
     return merged
 
 
+def _sliced_source(
+    spark: SparkSession, rows: list, n_tasks: int, schema: str
+) -> DataFrame:
+    """``rows`` in ``n_tasks`` contiguous, near-equal partitions, with no
+    exchange (``parallelize(rows, n)`` alone can make one twice another)."""
+    cut = [len(rows) * k // n_tasks for k in range(n_tasks + 1)]
+    slices = [rows[a:b] for a, b in zip(cut, cut[1:])]
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(slices, n_tasks).flatMap(lambda s: s),
+        schema,
+    )
+
+
+# Splits one encode task (hence one blocks file) may hold. Measured on one
+# 128-split batch (6000-turn splits, local[4], Bloom index on a
+# non-clustered key), caps 1/2/4/8/32: point-lookup p50 1.31/0.97/0.70/
+# 0.80/1.50 s, purge p50 7.0/7.3/7.5/7.6/14.1 s, full decode 11.1/6.2/2.8/
+# 2.7/1.7 s: split-sized files pay per-file overhead on every read, and
+# one file per core makes each Bloom-kept or purged file a core's share.
+_MAX_SPLITS_PER_FILE = 4
+
+
 def _encode_resume_locked(
     spark: SparkSession,
     paths: list[str],
@@ -1370,8 +1459,6 @@ def _encode_resume_locked(
     checkpoint_every: int | None,
     hb: _LeaseHeartbeat | None = None,
 ) -> dict:
-    import pyarrow.parquet as pq
-
     _replay_purge_journal(spark, state_dir)
     manifest = _union_input_manifest(paths)
     if os.path.exists(_manifest_path(state_dir)):
@@ -1380,63 +1467,21 @@ def _encode_resume_locked(
     with open(_manifest_path(state_dir), "w") as f:
         json.dump(manifest, f, indent=1)
     splits = plan_parquet_splits(paths, row_groups_per_split, file_indices=fmap)
-    sdf = spark.createDataFrame(
-        [(fi, p, rg, n) for fi, p, rg, n in splits],
-        "file_idx int, path string, rg int, nrg int",
-    ).withColumn(
-        "block_id",
-        (F.col("file_idx").cast("long") * F.lit(1 << 32)) + F.col("rg"),
-    )
 
+    n_cores = spark.sparkContext.defaultParallelism
     if checkpoint_every is None:
-        checkpoint_every = max(256, 32 * spark.sparkContext.defaultParallelism)
+        checkpoint_every = max(256, 32 * n_cores)
     _check_or_stamp_format(
         state_dir, has_blocks=os.path.isdir(_blocks_dir(state_dir))
     )
     _clean_stale_temporary(spark, state_dir)
-    done = completed_block_ids(spark, state_dir)
-    if done is not None:
-        # heal pre-existing duplicate publications (crash mid-job-commit
-        # before the _temporary cleanup existed); cheap metadata counts
-        repaired = repair_duplicate_blocks(spark, state_dir)
-        if repaired:
-            done = completed_block_ids(spark, state_dir)
-    n_done = 0
-    todo = sdf
-    from d6tstack_spark.operators.encode import SUB_BLOCK_BITS
-
-    base_parts = []
-    if done is not None:
-        # the resume join: planned splits ⟕̸ completed blocks. Stored ids
-        # carry SUB_BLOCK_BITS low bits (oversized-block sub-index); a split
-        # is complete iff its BASE id appears — sub-blocks of one base block
-        # are written by one task, hence atomically together.
-        base_parts.append(
-            done.select(
-                F.shiftright("block_id", SUB_BLOCK_BITS).alias("block_id")
-            ).distinct()
-        )
-        n_done = done.count()
-    try:
-        # base ids whose blocks a purge physically rewrote under new ids
-        # (maintenance.purge_deletes): those splits are complete too — their
-        # surviving rows live on under rewritten ids, and re-encoding the
-        # source split would resurrect the deleted rows
-        base_parts.append(
-            spark.read.parquet(_rewritten_dir(state_dir))
-            .select("block_id")
-            .distinct()
-        )
-    except Exception:
-        pass
-    if base_parts:
-        done_base = base_parts[0]
-        for extra in base_parts[1:]:
-            done_base = done_base.unionByName(extra).distinct()
-        todo = sdf.join(F.broadcast(done_base), "block_id", "left_anti")
-    todo_rows = todo.select("file_idx", "path", "rg", "nrg")
-    n_todo = todo_rows.count()
-    if n_todo:
+    # the resume plan: planned splits minus completed bases. Stored ids
+    # carry SUB_BLOCK_BITS low bits (oversized-block sub-index); a split is
+    # complete iff its BASE id appears — sub-blocks of one base block are
+    # written by one task, hence atomically together.
+    done = _completed_bases(spark, state_dir)
+    todo = [s for s in splits if (s[0] << 32 | s[2]) not in done]
+    if todo:
         pend = load_deletes(state_dir)
         if pend:
             # appends while tombstones pend are SAFE when every tombstone
@@ -1465,11 +1510,11 @@ def _encode_resume_locked(
 
     summary = {
         "planned": len(splits),
-        "skipped": len(splits) - n_todo,
-        "encoded": n_todo,
-        "already_complete": n_todo == 0,
+        "skipped": len(splits) - len(todo),
+        "encoded": len(todo),
+        "already_complete": not todo,
     }
-    if n_todo == 0:
+    if not todo:
         # still sweep: a crashed prior run may have published files the
         # snapshot log has not recorded yet
         sid = _sweep_snapshot_appends(spark, state_dir)
@@ -1484,50 +1529,31 @@ def _encode_resume_locked(
     )
     from d6tstack_spark.operators.sinks import write_blocks
 
-    if checkpoint_every and n_todo > checkpoint_every:
-        # split metadata is tiny (path + 3 ints per split) — safe to hold
-        # driver-side and re-batch into independently-committed jobs.
-        # write_blocks (append mode) keeps the state dir on the same sink
-        # contract as every other blocks write: uncompressed (payloads are
-        # already entropy-coded), parquet dictionary off, and the
-        # maxRecordsPerFile guard that protects the per-file complete-block
-        # invariant the shuffle-free decode depends on.
-        todo_list = todo_rows.collect()
-        for i in range(0, len(todo_list), checkpoint_every):
-            if hb is not None:
-                hb.check()  # stop publishing the moment the lease is lost
-            chunk = todo_list[i : i + checkpoint_every]
-            cdf = spark.createDataFrame(
-                chunk, "file_idx int, path string, rg int, nrg int"
-            ).repartition(len(chunk))
-            write_blocks(
-                cdf.mapInArrow(enc, BLOCKS_SCHEMA),
-                _blocks_dir(state_dir),
-                mode="append",
-            )
-    else:
-        blocks = todo_rows.repartition(max(n_todo, 1)).mapInArrow(
-            enc, BLOCKS_SCHEMA
+    # one independently-committed append job per batch. write_blocks keeps
+    # the state dir on the same sink contract as every other blocks write:
+    # uncompressed (payloads are already entropy-coded), parquet dictionary
+    # off, and the maxRecordsPerFile guard that protects the per-file
+    # complete-block invariant the shuffle-free decode depends on.
+    step = checkpoint_every or len(todo)
+    for i in range(0, len(todo), step):
+        if hb is not None:
+            hb.check()  # stop publishing the moment the lease is lost
+        batch = todo[i : i + step]
+        # each task encodes one contiguous slice and writes one file
+        n_tasks = min(
+            len(batch),
+            max(n_cores, -(-len(batch) // _MAX_SPLITS_PER_FILE)),
         )
-        write_blocks(blocks, _blocks_dir(state_dir), mode="append")
+        src = _sliced_source(
+            spark, batch, n_tasks, "file_idx int, path string, rg int, nrg int"
+        )
+        write_blocks(
+            src.mapInArrow(enc, BLOCKS_SCHEMA),
+            _blocks_dir(state_dir),
+            mode="append",
+        )
     duration = time.time() - t0
-
-    # lineage: one row per (block, column) with codec + byte accounting,
-    # derived from the state itself (no side channel to drift out of sync)
-    lineage = (
-        spark.read.parquet(_blocks_dir(state_dir))
-        .groupBy("block_id")
-        .agg(
-            F.max("n_rows").alias("rows"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("enc_bytes").alias("enc_bytes"),
-            F.map_from_entries(
-                F.array_distinct(F.collect_list(F.struct("column", "codec")))
-            ).alias("codecs"),
-        )
-        .withColumn("run_duration_sec", F.lit(round(duration, 3)))
-    )
-    lineage.write.mode("overwrite").parquet(_lineage_dir(state_dir))
+    _write_lineage(spark, state_dir, duration)
     summary["duration_sec"] = round(duration, 3)
     sid = _sweep_snapshot_appends(spark, state_dir)
     if sid is not None:

@@ -1055,10 +1055,10 @@ def _commit_rewritten_blocks(
     from d6tstack_spark.plans.checkpoint import (
         _blocks_dir,
         _clear_tombstones,
-        _lineage_dir,
         _purge_journal_path,
         _purge_seq_path,
         _rewritten_dir,
+        _write_lineage,
     )
 
     bd = _blocks_dir(state_dir)
@@ -1154,26 +1154,10 @@ def _commit_rewritten_blocks(
     os.unlink(jp)
     _clear_tombstones(state_dir, tomb_ids)
 
-    # refresh lineage from the post-rewrite state (same derivation as
-    # encode_resume; a crash between journal clear and here leaves
-    # lineage stale until the next resume rebuilds it — metadata only)
-    (
-        spark.read.parquet(bd)
-        .groupBy("block_id")
-        .agg(
-            F.max("n_rows").alias("rows"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("enc_bytes").alias("enc_bytes"),
-            F.map_from_entries(
-                F.array_distinct(
-                    F.collect_list(F.struct("column", "codec"))
-                )
-            ).alias("codecs"),
-        )
-        .withColumn("run_duration_sec", F.lit(0.0))
-        .write.mode("overwrite")
-        .parquet(_lineage_dir(state_dir))
-    )
+    # refresh lineage from the post-rewrite state (a crash between journal
+    # clear and here leaves lineage stale until the next resume rebuilds
+    # it — metadata only)
+    _write_lineage(spark, state_dir, 0.0)
     # snapshot barrier: a rewrite REMOVES files, so time travel resets
     # here. A crash in the tiny window before this line is caught at
     # snapshot-resolve time (resolved files are existence-checked).

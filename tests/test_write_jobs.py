@@ -1,0 +1,246 @@
+"""Write-path planning cost and block layout.
+
+``encode_resume`` plans a resume on the driver from one census of the
+blocks dir, and encodes each commit batch with one task per core (more
+when a file would exceed a few splits), each writing one file of whole
+blocks. The Bloom build and refresh are one task
+pass over the listed files. These tests pin the Spark job counts of those
+calls, the file layout of the commit batches, and the sidecar rows the
+Bloom pass writes for files that hold no value of an indexed column."""
+
+from __future__ import annotations
+
+import itertools
+import os
+import re
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from d6tstack_spark.operators.encode import SUB_BLOCK_BITS
+from d6tstack_spark.plans.bloomidx import (
+    _canonical_bytes,
+    _positions,
+    build_bloom_index,
+    refresh_bloom_index,
+)
+from d6tstack_spark.plans.checkpoint import (
+    _MAX_SPLITS_PER_FILE,
+    decode_state,
+    encode_resume,
+    load_manifest,
+)
+
+_N = 1200  # rows per source file
+_GROUPS = itertools.count()
+
+
+def _source(i: int, extra: bool = False) -> pa.Table:
+    cols = {
+        "conv_id": pa.array([f"{'abcdefgh'[i]}{j // 6:04d}" for j in range(_N)]),
+        "turn_idx": pa.array([j % 6 for j in range(_N)], pa.int32()),
+        "seq": pa.array([i * _N + j for j in range(_N)], pa.int64()),
+        "val": pa.array(
+            [None if j % 7 == 0 else float(j % 100) / 3 for j in range(_N)],
+            pa.float64(),
+        ),
+    }
+    if extra:  # a column the earlier files do not have
+        cols["tag"] = pa.array([f"t{(i * 7 + j) % 13}" for j in range(_N)])
+    return pa.table(cols)
+
+
+def _write_source(tmp_path, i: int, row_group_size: int = 400, **kw) -> str:
+    p = str(tmp_path / f"src_{i}.parquet")
+    pq.write_table(_source(i, **kw), p, row_group_size=row_group_size)
+    return p
+
+
+def _jobs(spark, fn):
+    """(result of ``fn()``, number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"write-jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _sorted_rows(tbl: pa.Table, cols) -> list[tuple]:
+    cols = list(cols)
+    return sorted(zip(*(tbl.column(c).to_pylist() for c in cols)))
+
+
+def _block_files(sd: str) -> list[str]:
+    bd = os.path.join(sd, "blocks")
+    return sorted(
+        os.path.join(bd, f) for f in os.listdir(bd) if f.endswith(".parquet")
+    )
+
+
+def test_write_job_counts(spark, tmp_path):
+    paths = [_write_source(tmp_path, i) for i in range(2)]
+    sd = str(tmp_path / "state")
+
+    s, jobs = _jobs(spark, lambda: encode_resume(spark, paths, sd))
+    assert s["encoded"] == s["planned"] == 4
+    assert jobs <= 3, jobs  # the encode write plus the lineage write
+
+    _, jobs = _jobs(spark, lambda: build_bloom_index(spark, sd, ["conv_id"]))
+    assert jobs <= 2, jobs
+
+    indexed = set(_block_files(sd))
+    paths.append(_write_source(tmp_path, 2))
+    s, jobs = _jobs(spark, lambda: encode_resume(spark, paths, sd))
+    assert (s["skipped"], s["encoded"]) == (4, 2)
+    assert jobs <= 6, jobs  # census, encode write, lineage write
+
+    s, jobs = _jobs(spark, lambda: encode_resume(spark, paths, sd))
+    assert s["already_complete"]
+    assert jobs <= 2, jobs  # the census alone
+
+    r, jobs = _jobs(spark, lambda: refresh_bloom_index(spark, sd))
+    assert r["files_refreshed"] == len(set(_block_files(sd)) - indexed) > 0
+    assert jobs <= 2, jobs
+
+    src = pq.read_table(paths)
+    got = decode_state(spark, sd).toArrow()
+    assert _sorted_rows(got, src.column_names) == _sorted_rows(
+        src, src.column_names
+    )
+    lineage = spark.read.parquet(os.path.join(sd, "lineage"))
+    assert lineage.count() == 6
+    assert lineage.agg({"rows": "sum"}).first()[0] == 3 * _N
+
+
+def test_commit_batch_file_layout(spark, tmp_path):
+    """More splits than cores can take at the per-file cap: each commit
+    batch (one write job, so one job uuid in the part-file names) writes
+    one file per core, or more once a file would exceed
+    ``_MAX_SPLITS_PER_FILE`` splits; every file holds whole blocks of at
+    most that many splits, and the decode is bit-identical to the
+    source."""
+    cores = spark.sparkContext.defaultParallelism
+    cap = _MAX_SPLITS_PER_FILE
+    n_splits = 2 * cap * cores + 3
+    p = str(tmp_path / "src.parquet")
+    src = pa.concat_tables(_source(i % 8) for i in range(-(-n_splits // 3)))
+    src = src.slice(0, n_splits * 400)
+    pq.write_table(src, p, row_group_size=400)
+    assert pq.ParquetFile(p).metadata.num_row_groups == n_splits
+    ncols = len(src.column_names)
+
+    for every in (0, 2):
+        sd = str(tmp_path / f"state{every}")
+        s = encode_resume(
+            spark, [p], sd, row_groups_per_split=1, checkpoint_every=every
+        )
+        assert s["encoded"] == n_splits
+        step = every or n_splits
+        sizes = [min(step, n_splits - i) for i in range(0, n_splits, step)]
+        want = [min(b, max(cores, -(-b // cap))) for b in sizes]
+        assert every or want[0] > cores  # the cap binds in one batch
+        by_job: dict[str, int] = {}
+        owner: dict[int, str] = {}
+        for f in _block_files(sd):
+            job = re.match(r"part-\d+-([0-9a-f-]{36})", os.path.basename(f))
+            by_job[job.group(1)] = by_job.get(job.group(1), 0) + 1
+            t = pq.read_table(f, columns=["block_id", "column"])
+            cols_of: dict[int, set] = {}
+            for bid, col in zip(*(t.column(c).to_pylist() for c in t.column_names)):
+                assert owner.setdefault(bid, f) == f, f"block {bid} split"
+                cols_of.setdefault(bid, set()).add(col)
+            assert all(len(c) == ncols for c in cols_of.values())
+            bases = {bid >> SUB_BLOCK_BITS for bid in cols_of}
+            assert len(bases) <= cap, (f, bases)
+        assert sorted(by_job.values()) == sorted(want), (by_job, want)
+        assert len(owner) == n_splits
+
+        got = decode_state(spark, sd).toArrow()
+        assert got.column_names == src.column_names
+        rows = _sorted_rows(got, src.column_names)
+        assert rows == _sorted_rows(src, src.column_names)
+
+
+def _sidecar(sd: str) -> dict[tuple[str, str], list]:
+    t = pq.read_table(os.path.join(sd, "bloomidx", "data"))
+    out: dict[tuple[str, str], list] = {}
+    for r in t.to_pylist():
+        out.setdefault((r["file"], r["column"]), []).append(r)
+    return out
+
+
+def _expected_bitmap(spark, sd: str, f: str, col: str, mb: int):
+    """(n_distinct, words) recomputed from the file's decoded values."""
+    from d6tstack_spark.operators.encode import decode_parquet_blocks
+
+    manifest = load_manifest(sd)
+    vals = decode_parquet_blocks(
+        spark, os.path.join(sd, "blocks"), manifest, columns=[col], paths=[f]
+    ).toArrow().column(col).to_pylist()
+    hashed = {_canonical_bytes(v, manifest[col]) for v in vals if v is not None}
+    words = np.zeros(mb // 64, dtype=np.uint64)
+    for b in hashed:
+        for pos in _positions(b, mb):
+            words[pos >> 6] |= np.uint64(1 << (pos & 63))
+    return len(hashed), words.view(np.int64).tolist()
+
+
+def _check_sidecar(spark, sd: str, columns: list[str], zero: set, mb: int):
+    rows = _sidecar(sd)
+    files = [os.path.basename(f) for f in _block_files(sd)]
+    assert set(rows) == {(f, c) for f in files for c in columns}
+    for (f, c), rs in rows.items():
+        assert len(rs) == 1, (f, c, len(rs))
+        n, words = _expected_bitmap(spark, sd, os.path.join(sd, "blocks", f), c, mb)
+        assert (rs[0]["n_distinct"], rs[0]["bloom"]) == (n, words), (f, c)
+        if (f, c) in zero:
+            assert n == 0 and not any(words), (f, c)
+        else:
+            assert n > 0, (f, c)
+
+
+def test_bloom_rows_cover_empty_and_columnless_files(spark, tmp_path):
+    """Every listed (file, column) gets exactly one sidecar row, after a
+    build and after a refresh: the pre-evolution files (no ``tag`` rows)
+    and an empty part file carry zero bitmaps, and every bitmap equals
+    one recomputed from the file's decoded values."""
+    from d6tstack_spark.operators.encode import BLOCKS_SCHEMA
+    from d6tstack_spark.operators.sinks import write_blocks
+
+    mb = 1 << 12
+    sd = str(tmp_path / "state")
+    paths = [_write_source(tmp_path, 0)]
+    encode_resume(spark, paths, sd)
+    pre = set(_block_files(sd))
+    # an empty commit partition leaves a zero-row part file behind
+    write_blocks(
+        spark.createDataFrame([], BLOCKS_SCHEMA),
+        os.path.join(sd, "blocks"),
+        mode="append",
+    )
+    empty = set(_block_files(sd)) - pre
+    assert len(empty) == 1 and pq.read_metadata(next(iter(empty))).num_rows == 0
+    paths.append(_write_source(tmp_path, 1, extra=True))  # evolution append
+    encode_resume(spark, paths, sd)
+    assert load_manifest(sd)["tag"].get("evolved")
+
+    cols = ["conv_id", "tag"]
+    rep = build_bloom_index(spark, sd, cols, m_bits=mb)
+    assert rep["files_indexed"] == len(_block_files(sd))
+    base = {os.path.basename(f) for f in pre | empty}
+    zero = {(f, "tag") for f in base}
+    zero |= {(os.path.basename(f), "conv_id") for f in empty}
+    _check_sidecar(spark, sd, cols, zero, mb)
+
+    before = set(_block_files(sd))
+    paths.append(_write_source(tmp_path, 2, extra=True))
+    encode_resume(spark, paths, sd)
+    r = refresh_bloom_index(spark, sd)
+    assert r["files_refreshed"] == len(set(_block_files(sd)) - before) > 0
+    _check_sidecar(spark, sd, cols, zero, mb)
+    assert refresh_bloom_index(spark, sd)["files_refreshed"] == 0
