@@ -9,8 +9,8 @@ drift: a column appears in newer files, disappears from older ones, or
 files arrive with columns reordered. This module
 
 - sniffs per-file schemas from parquet FOOTERS only (no data read;
-  driver-side for small file lists, a Spark job above a threshold so a
-  10^6-file listing never serializes through one loop),
+  driver-side for small file lists, a ``map_slices`` Spark job above a
+  threshold so a 10^6-file listing never serializes through one loop),
 - reports drift per file against the consensus (the reference's
   sniff_columns_perfile shape: added / missing columns),
 - and routes: uniform inputs → the scan-fused fast path unchanged;
@@ -24,7 +24,11 @@ and null runs RLE-compress to almost nothing.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame
+
+from d6tstack_spark.operators.encode import map_slices
 
 # above this many files the footer sniff runs as a Spark job instead of a
 # driver loop — footers are ~KB, but 10^6 sequential opens is a driver stall
@@ -45,8 +49,21 @@ def sniff_parquet_schemas(spark, paths: list[str]) -> dict[str, tuple]:
 
     if len(paths) <= _SNIFF_DRIVER_MAX_FILES:
         return {p: _one(p) for p in paths}
-    rdd = spark.sparkContext.parallelize(paths, min(len(paths), 512))
-    return dict(rdd.map(lambda p: (p, _one(p))).collect())
+
+    def sniff(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            ps = b.column("path").to_pylist()
+            yield pa.RecordBatch.from_pydict(
+                {"path": ps, "fields": [json.dumps(_one(p)) for p in ps]}
+            )
+
+    rows = map_slices(
+        spark, [(p,) for p in paths], min(len(paths), 512), sniff,
+        "path string, fields string", "path string",
+    ).collect()
+    return {r["path"]: tuple(map(tuple, json.loads(r["fields"]))) for r in rows}
 
 
 def parquet_drift_report(spark, paths: list[str]) -> dict:

@@ -47,6 +47,7 @@ from d6tstack_spark.operators.encode import (
     _make_decoder,
     _restore_logical,
     build_manifest_arrow,
+    map_slices,
 )
 
 # block id layout: ((file_idx << 24 | row_group) << 10 | slice) << 8 (sub
@@ -240,7 +241,10 @@ def roundtrip_parquet_files_sliced(
     encoder's block rows are handed straight to the block decoder
     in-process, so the blocks never cross the Python↔JVM boundary and the
     whole pipeline is a single stage with two fewer serialization hops
-    than encode+decode as separate maps. Every byte still runs the full
+    than encode+decode as separate maps. The tasks come from
+    :func:`operators.encode.map_slices` (a ``spark.range`` source, one
+    slice per task), so the stage starts no Python-RDD worker and its
+    only Python hop is the fused map itself. Every byte still runs the full
     encode and decode kernels — this is operator pipelining, not a
     shortcut. ``shared_fsst`` defaults off here: on the gate tables the
     shared-table attempt always falls back (drifting content; measured
@@ -279,12 +283,10 @@ def roundtrip_parquet_files_sliced(
                 for b in tbl.cast(out_schema).to_batches(max_chunksize=65536):
                     yield b
 
-    # exact 1-slice-per-partition without a repartition stage
-    sdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(slices, max(len(slices), 1)),
+    dec = map_slices(
+        spark, slices, len(slices), fused, phys_spark_schema(manifest),
         "file_idx int, path string, rg int, start long, nrows long, slice int",
     )
-    dec = sdf.mapInArrow(fused, phys_spark_schema(manifest))
     return _restore_logical(dec, manifest)
 
 

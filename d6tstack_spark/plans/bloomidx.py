@@ -351,12 +351,13 @@ def _index_files(
                     names=["file", "column", "n_distinct", "bloom"],
                 )
 
-    from d6tstack_spark.plans.checkpoint import _sliced_source
+    from d6tstack_spark.operators.encode import map_slices
 
     n_tasks = min(len(work), spark.sparkContext.defaultParallelism)
-    return _sliced_source(
-        spark, work, n_tasks, "path string, cols array<string>"
-    ).mapInArrow(build, _INDEX_SCHEMA)
+    return map_slices(
+        spark, work, n_tasks, build, _INDEX_SCHEMA,
+        "path string, cols array<string>",
+    )
 
 
 def load_bloom_meta(state_dir: str) -> dict | None:

@@ -14,7 +14,7 @@ skip``) and its pluggable logger (utils.py:7-12) into Spark-native state:
   ids and detects duplicate publications in the same pass; the planned
   splits minus those ids (and minus the purge-rewritten bases) are the
   todo list — only missing splits re-encode;
-- writes are append-mode commit batches over a ``parallelize`` source (no
+- writes are append-mode commit batches over a ``map_slices`` source (no
   exchange): one task per core, or more once a file would exceed
   ``_MAX_SPLITS_PER_FILE`` splits; every task encodes a contiguous slice
   of splits and writes one file of whole blocks.
@@ -38,6 +38,7 @@ from d6tstack_spark.operators.encode import (
     _make_fused_encoder,
     build_manifest_arrow,
     build_shared_fsst_tables,
+    map_slices,
     plan_parquet_splits,
 )
 
@@ -1427,19 +1428,6 @@ def _evolve_manifest(prior: dict, new: dict) -> dict:
     return merged
 
 
-def _sliced_source(
-    spark: SparkSession, rows: list, n_tasks: int, schema: str
-) -> DataFrame:
-    """``rows`` in ``n_tasks`` contiguous, near-equal partitions, with no
-    exchange (``parallelize(rows, n)`` alone can make one twice another)."""
-    cut = [len(rows) * k // n_tasks for k in range(n_tasks + 1)]
-    slices = [rows[a:b] for a, b in zip(cut, cut[1:])]
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(slices, n_tasks).flatMap(lambda s: s),
-        schema,
-    )
-
-
 # Splits one encode task (hence one blocks file) may hold. Measured on one
 # 128-split batch (6000-turn splits, local[4], Bloom index on a
 # non-clustered key), caps 1/2/4/8/32: point-lookup p50 1.31/0.97/0.70/
@@ -1544,11 +1532,11 @@ def _encode_resume_locked(
             len(batch),
             max(n_cores, -(-len(batch) // _MAX_SPLITS_PER_FILE)),
         )
-        src = _sliced_source(
-            spark, batch, n_tasks, "file_idx int, path string, rg int, nrg int"
-        )
         write_blocks(
-            src.mapInArrow(enc, BLOCKS_SCHEMA),
+            map_slices(
+                spark, batch, n_tasks, enc, BLOCKS_SCHEMA,
+                "file_idx int, path string, rg int, nrg int",
+            ),
             _blocks_dir(state_dir),
             mode="append",
         )

@@ -60,6 +60,7 @@ def _classify_files(
         _read_file_stats,
         _zone_keep_ids_file,
         _zone_task_dnf,
+        map_slices,
     )
 
     may_zf = _zone_task_dnf(manifest, may_dnf)
@@ -74,8 +75,8 @@ def _classify_files(
             k: [] for k in ("i", "nblocks", "rows", "kept", "undec", "meta_rows")
         }
         for b in batches:
-            for i in b.column("id").to_pylist():
-                st = _read_file_stats(paths[i])
+            for i, p in zip(*(b.column(c).to_pylist() for c in ("i", "path"))):
+                st = _read_file_stats(p)
                 if st.num_rows == 0:
                     continue  # empty part file: no blocks to classify
                 g = st.group_by("block_id").aggregate([("n_rows", "max")])
@@ -102,15 +103,14 @@ def _classify_files(
             out, schema=pa.schema([(k, pa.int64()) for k in out])
         )
 
-    return (
-        spark.range(0, len(paths), 1, len(paths))
-        .mapInArrow(
-            run,
-            "i long, nblocks long, rows long, kept long, undec long, "
-            "meta_rows long",
-        )
-        .collect()
-    )
+    return map_slices(
+        spark,
+        list(enumerate(paths)),
+        len(paths),
+        run,
+        "i long, nblocks long, rows long, kept long, undec long, meta_rows long",
+        "i long, path string",
+    ).collect()
 
 
 def _compile_dnf(where: str, manifest: dict):

@@ -52,6 +52,30 @@ def drifted(tmp_path_factory):
     return f1, f2, f3
 
 
+def test_sniff_spark_side_matches_driver(spark, drifted, monkeypatch):
+    """Above the driver-loop threshold the footer sniff runs as a Spark
+    job over a ``spark.range`` source (no Python-RDD source, no
+    exchange) and returns what the driver loop returns."""
+    import d6tstack_spark.operators.drift as drift
+
+    paths = list(drifted)
+    want = sniff_parquet_schemas(spark, paths)
+    plans = []
+
+    def spy(*a, **kw):
+        df = drift_map_slices(*a, **kw)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return df
+
+    drift_map_slices = drift.map_slices
+    monkeypatch.setattr(drift, "map_slices", spy)
+    monkeypatch.setattr(drift, "_SNIFF_DRIVER_MAX_FILES", 0)
+    assert sniff_parquet_schemas(spark, paths) == want
+    (plan,) = plans
+    assert "Range (" in plan and "ExistingRDD" not in plan, plan
+    assert "Exchange" not in plan, plan
+
+
 def test_sniff_and_report(spark, drifted):
     f1, f2, f3 = drifted
     schemas = sniff_parquet_schemas(spark, [f1, f2])

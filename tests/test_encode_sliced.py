@@ -66,8 +66,46 @@ def test_fused_roundtrip_equals_classic(spark, events_path):
     assert new.schema == old.schema
     assert new.exceptAll(old).isEmpty()
     assert old.exceptAll(new).isEmpty()
-    plan = new._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan
+    _assert_range_sourced(new)
+
+
+def _assert_range_sourced(df):
+    """The plan reads its tasks from ``spark.range``: no Python-RDD
+    source (``ExistingRDD``) and no exchange of any kind."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Range (" in plan, plan
+    assert "ExistingRDD" not in plan, plan
+    assert "Exchange" not in plan, plan
+
+
+@pytest.mark.parametrize("n_rows, n_tasks", [(10, 3), (4, 4), (3, 7), (0, 2)])
+def test_map_slices_contiguous_slices(spark, n_rows, n_tasks):
+    """Task ``k`` calls ``fn`` once, with exactly ``rows[cut[k]:cut[k+1]]``
+    under the row schema — an empty slice when tasks outnumber rows."""
+    import pyarrow as pa
+
+    from pyspark import TaskContext
+
+    from d6tstack_spark.operators.encode import map_slices
+
+    rows = [(i, f"r{i}", [f"c{i}"] * (i % 3)) for i in range(n_rows)]
+
+    def fn(batches):
+        (b,) = list(batches)
+        assert b.schema.names == ["i", "name", "cols"]
+        got = [tuple(r.values()) for r in b.to_pylist()]
+        yield pa.RecordBatch.from_pydict(
+            {"task": [TaskContext.get().partitionId()], "rows": [repr(got)]}
+        )
+
+    df = map_slices(
+        spark, rows, n_tasks, fn, "task long, rows string",
+        "i int, name string, cols array<string>",
+    )
+    _assert_range_sourced(df)
+    got = sorted((r["task"], r["rows"]) for r in df.collect())
+    cut = [n_rows * k // n_tasks for k in range(n_tasks + 1)]
+    assert got == [(k, repr(rows[cut[k] : cut[k + 1]])) for k in range(n_tasks)]
 
 
 def test_sliced_parallelism_and_block_count(spark, events_path):

@@ -117,6 +117,42 @@ def test_write_job_counts(spark, tmp_path):
     assert lineage.agg({"rows": "sum"}).first()[0] == 3 * _N
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_write_plans_are_range_sourced(spark, tmp_path, monkeypatch):
+    """The commit-batch encode and the Bloom build take their tasks from
+    ``spark.range``: no Python-RDD source (``ExistingRDD``), no
+    exchange."""
+    from d6tstack_spark.operators import sinks
+    from d6tstack_spark.plans.bloomidx import _index_files
+
+    plans = []
+    write = sinks.write_blocks
+
+    def spy(df, *a, **kw):
+        plans.append(_plan(df))
+        return write(df, *a, **kw)
+
+    monkeypatch.setattr(sinks, "write_blocks", spy)
+    sd = str(tmp_path / "state")
+    encode_resume(
+        spark, [_write_source(tmp_path, 0)], sd, row_groups_per_split=1,
+        checkpoint_every=2,
+    )
+    files = _block_files(sd)
+    plans.append(
+        _plan(_index_files(spark, [(f, ["conv_id"]) for f in files],
+                           load_manifest(sd), 1 << 12))
+    )
+    assert len(plans) == 3  # two commit batches and the Bloom build
+    for plan in plans:
+        assert "Range (" in plan, plan
+        assert "ExistingRDD" not in plan, plan
+        assert "Exchange" not in plan, plan
+
+
 def test_commit_batch_file_layout(spark, tmp_path):
     """More splits than cores can take at the per-file cap: each commit
     batch (one write job, so one job uuid in the part-file names) writes
