@@ -25,12 +25,13 @@ batches out — no per-row Python (input_hint).
 
 from __future__ import annotations
 
-import re
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pyarrow as pa
+from py4j.protocol import Py4JJavaError
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from d6tstack_spark.codecs.blocks import Block, decode_block, encode_block
@@ -1043,7 +1044,7 @@ def decode_parquet_blocks(
     :func:`encode_parquet_files`.
 
     ``block_filter=(col, lo, hi)`` — or a LIST of such tuples (ANDed),
-    or a LIST OF LISTS (DNF: OR of ANDs, see :func:`zone_dnf_from_where`)
+    or a LIST OF LISTS (DNF: OR of ANDs, see :func:`compile_where`)
     — prunes whole blocks via the zone map (see :func:`decode_table`) at
     ONE level, inside the decode task: each task reads its own file's
     stats rows (parquet column pruning — no payload bytes), derives the
@@ -1323,7 +1324,7 @@ def _normalize_block_filters(block_filter) -> list[list[tuple]] | None:
     - a list of predicates — ONE branch (ANDed; what a conjunctive
       WHERE clause prunes with — backwards compatible);
     - a list of lists of predicates — full DNF (what
-      :func:`zone_dnf_from_where` emits for OR expressions).
+      :func:`compile_where` emits for OR expressions).
 
     Predicate forms:
 
@@ -1449,6 +1450,41 @@ def _zone_keep_condition(manifest: dict, block_filter: tuple):
     return col, keep | inside
 
 
+def _zone_qualifying_blocks(stats: DataFrame, manifest: dict, dnf) -> DataFrame:
+    """``(f, block_id)`` of the blocks in ``stats`` (a scan of blocks
+    files) that may satisfy the zone DNF: per-predicate pairs intersect
+    within a branch, branches union. Stats columns only — the payload
+    column is never read."""
+    qual = None
+    for branch in dnf:
+        pairs = None
+        for bf in branch:
+            col, keep = _zone_keep_condition(manifest, bf)
+            s = (
+                stats.filter(F.col("column") == col)
+                .filter(keep)
+                .select(F.input_file_name().alias("f"), "block_id")
+                .distinct()
+            )
+            pairs = s if pairs is None else pairs.join(s, ["f", "block_id"])
+        qual = pairs if qual is None else qual.unionByName(pairs)
+    return qual
+
+
+def _zone_qualifying_paths(spark, paths: list[str], manifest: dict, dnf):
+    """The blocks files of ``paths`` holding at least one block that may
+    satisfy the zone DNF (every file, when written before zone maps)."""
+    stats = spark.read.parquet(*paths)
+    if "vmin_num" not in stats.columns:
+        return list(paths)
+    qual = {
+        _norm_file_uri(r[0])
+        for r in _zone_qualifying_blocks(stats, manifest, dnf)
+        .select("f").distinct().collect()
+    }
+    return [p for p in paths if _norm_file_uri(p) in qual]
+
+
 def decode_table(
     blocks: DataFrame,
     manifest: dict,
@@ -1468,7 +1504,7 @@ def decode_table(
     open end). A LIST of such tuples is a conjunction — the block must
     overlap every range (multi-column WHERE pruning); a LIST OF LISTS is
     a disjunction of conjunctions (OR pruning — see
-    :func:`zone_dnf_from_where`). Within a branch the per-predicate
+    :func:`compile_where`). Within a branch the per-predicate
     qualifying-id sets are intersected in-plan (inner joins on block_id,
     each side a distinct over the tiny stats projection — no payload
     touched until the final semi join); branches are unioned. Pruning is
@@ -1544,421 +1580,324 @@ def decode_table(
 # decode_where: SQL predicate → zone pruning + exact row filter
 # --------------------------------------------------------------------------
 
-_LIT_RE = (  # self-contained (non-capturing) so it embeds next to | and *
-    r"(?:(?:DATE|TIMESTAMP)?\s*'(?:[^']|'')*'"
-    r"|-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)"
-)
-_IDENT_RE = r"[A-Za-z_][A-Za-z0-9_]*"
 
+class CompiledWhere(NamedTuple):
+    """A WHERE string compiled once by :func:`compile_where`; every
+    pruning layer of a read (zone maps, Bloom probes, the decode
+    projection) reads from this one result."""
 
-def _split_toplevel(where: str, kw: str) -> list[str]:
-    """Split a boolean expression on a top-level connective (``AND`` or
-    ``OR``) outside parens and string literals; for ``AND``, the AND
-    inside ``BETWEEN .. AND ..`` stays attached."""
-    kw = kw.upper()
-    heads = "AaBb" if kw == "AND" else "Oo"
-    word_re = r"(?i)\b(AND|BETWEEN)\b" if kw == "AND" else r"(?i)\b(OR)\b"
-    out, buf, depth, i, n = [], [], 0, 0, len(where)
-    pending_between = 0
-    while i < n:
-        ch = where[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if where[j] == "'":
-                    if j + 1 < n and where[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            buf.append(where[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if depth == 0 and ch in heads:
-            word = re.match(word_re, where[i:])
-            prev_ok = i == 0 or not (where[i - 1].isalnum() or where[i - 1] == "_")
-            if word and prev_ok:
-                w = word.group(1).upper()
-                if w == "BETWEEN":
-                    pending_between += 1
-                elif pending_between:
-                    pending_between -= 1
-                else:
-                    out.append("".join(buf))
-                    buf = []
-                    i += len(w)
-                    continue
-        buf.append(ch)
-        i += 1
-    out.append("".join(buf))
-    return [c.strip() for c in out if c.strip()]
-
-
-def _split_conjuncts(where: str) -> list[str]:
-    """Split a boolean expression on top-level ANDs (outside parens and
-    string literals; the AND inside BETWEEN .. AND .. stays attached)."""
-    return _split_toplevel(where, "AND")
-
-
-def _strip_outer_parens(expr: str) -> str:
-    """Remove parens that enclose the WHOLE expression (repeatedly);
-    ``(a) AND (b)`` is untouched — its opening paren closes early."""
-    expr = expr.strip()
-    while expr.startswith("(") and expr.endswith(")"):
-        depth = 0
-        match_at = -1
-        for k, c in enumerate(expr):
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    match_at = k
-                    break
-        if match_at != len(expr) - 1:
-            break
-        expr = expr[1:-1].strip()
-    return expr
-
-
-def _parse_zone_literal(text: str, m: dict):
-    """SQL literal text → python bound compatible with the column's
-    manifest entry, or None when the literal cannot express a zone bound
-    for this column type (conservative skip)."""
-    import datetime as _dt
-
-    text = text.strip()
-    logical = m.get("logical")
-    is_str_col = m["ptype"] in ("str", "bin")
-    kw = re.match(r"(?i)^(DATE|TIMESTAMP)\s*'(.*)'$", text, re.S)
-    quoted = re.match(r"^'(.*)'$", text, re.S)
-    if kw or quoted:
-        raw = (kw.group(2) if kw else quoted.group(1)).replace("''", "'")
-        if logical in ("ts", "ts_ntz"):
-            try:
-                return _dt.datetime.fromisoformat(raw)
-            except ValueError:
-                return None
-        if logical == "date":
-            try:
-                return _dt.date.fromisoformat(raw)
-            except ValueError:
-                return None
-        return raw if is_str_col else None
-    if is_str_col or logical in ("ts", "ts_ntz", "date"):
-        return None  # numeric literal on a non-numeric column
-    try:
-        return int(text)
-    except ValueError:
-        try:
-            return float(text)
-        except ValueError:
-            return None
-
-
-def zone_predicates_from_where(where: str, manifest: dict) -> list[tuple]:
-    """Extract zone-prunable ``(col, lo, hi)`` predicates from a SQL
-    boolean expression. Strictly conservative: only simple top-level
-    conjuncts of the forms ``col <op> literal``, ``literal <op> col``,
-    ``col BETWEEN a AND b``, ``col IN (lit, ...)`` (the literals' [min,
-    max] envelope) and ``col IS [NOT] NULL`` (null-count predicates)
-    contribute (op: =, ==, <, <=, >, >=); strict inequalities prune with
-    inclusive bounds (a boundary block may survive — the exact row filter
-    removes its rows); everything else (ORs, functions, unknown columns)
-    contributes nothing and is left to the row filter. Never wrong,
-    sometimes less pruning. For OR-aware pruning see
-    :func:`zone_dnf_from_where` (what :func:`decode_where` uses)."""
-    if "\\" in where:
-        # Spark's parser unescapes backslash sequences inside string
-        # literals ('a\tb' compares against a TAB) while this compiler
-        # reads the raw bytes, and the literal scanner's quote handling
-        # differs between escapedStringLiterals modes — a mis-read bound
-        # could exclude the block holding the real value. Prune nothing.
-        return []
-    preds: list[tuple] = []
-    for conj in _split_conjuncts(where):
-        conj = _strip_outer_parens(conj)
-        sub = _split_conjuncts(conj)
-        if len(sub) > 1:  # parenthesized conjunction: recurse
-            for s in sub:
-                preds.extend(zone_predicates_from_where(s, manifest))
-            continue
-        preds.extend(_compile_atom(conj, manifest))
-    return preds
-
-
-def _compile_atom(conj: str, manifest: dict) -> list[tuple]:
-    """One comparison atom (no top-level AND/OR/parens) → zero or one
-    zone predicates. Unrecognized forms → [] (prune nothing)."""
-    mnull = re.match(rf"(?i)^({_IDENT_RE})\s+IS\s+(NOT\s+)?NULL$", conj)
-    if mnull:
-        col = mnull.group(1)
-        if col in manifest:
-            return [(col, "not_null" if mnull.group(2) else "is_null")]
-        return []
-    min_list = re.match(
-        rf"(?i)^({_IDENT_RE})\s+IN\s*\(\s*"
-        rf"({_LIT_RE}(?:\s*,\s*(?:{_LIT_RE}))*)\s*\)$",
-        conj,
-    )
-    if min_list:
-        # IN-list → conservative [min, max] envelope of its literals
-        col = min_list.group(1)
-        if col in manifest:
-            lits = [
-                _parse_zone_literal(t, manifest[col])
-                for t in re.findall(_LIT_RE, min_list.group(2))
-            ]
-            if lits and all(v is not None for v in lits):
-                return [(col, min(lits), max(lits))]
-        return []
-    mbet = re.match(
-        rf"(?i)^({_IDENT_RE})\s+BETWEEN\s+({_LIT_RE})\s+AND\s+({_LIT_RE})$",
-        conj,
-    )
-    if mbet:
-        col = mbet.group(1)
-        if col in manifest:
-            lo = _parse_zone_literal(mbet.group(2), manifest[col])
-            hi = _parse_zone_literal(mbet.group(3), manifest[col])
-            if lo is not None and hi is not None:
-                return [(col, lo, hi)]
-        return []
-    mlike = re.match(
-        rf"(?i)^({_IDENT_RE})\s+LIKE\s+'((?:[^']|'')*)'$", conj
-    )
-    if mlike:
-        col = mlike.group(1)
-        if col in manifest and manifest[col]["ptype"] in ("str", "bin"):
-            pat = mlike.group(2).replace("''", "'")
-            if pat.endswith("%") and not re.search(r"[%_\\]", pat[:-1]):
-                # prefix match: [prefix, strict-upper-bound(prefix)] — any
-                # string starting with the prefix sorts inside this range
-                pref = pat[:-1]
-                if not pref:
-                    return []  # LIKE '%' matches everything
-                return [(col, pref, _prefix_upper_bytes(pref.encode()))]
-            if not re.search(r"[%_\\]", pat):
-                return [(col, pat, pat)]  # no wildcard at all: equality
-        return []
-    mcmp = re.match(
-        rf"^({_IDENT_RE})\s*(>=|<=|==|=|<|>)\s*({_LIT_RE})$", conj
-    )
-    rev = False
-    if not mcmp:
-        mcmp = re.match(
-            rf"^({_LIT_RE})\s*(>=|<=|==|=|<|>)\s*({_IDENT_RE})$", conj
-        )
-        rev = True
-    if not mcmp:
-        return []
-    col, lit = (
-        (mcmp.group(1), mcmp.group(3))
-        if not rev
-        else (mcmp.group(3), mcmp.group(1))
-    )
-    if col not in manifest:
-        return []
-    v = _parse_zone_literal(lit, manifest[col])
-    if v is None:
-        return []
-    op = mcmp.group(2)
-    if rev:  # literal OP col  ≡  col FLIP(OP) literal
-        op = {">": "<", "<": ">", ">=": "<=", "<=": ">="}.get(op, op)
-    if op in ("=", "=="):
-        return [(col, v, v)]
-    if op in (">", ">="):
-        return [(col, v, None)]
-    return [(col, None, v)]
+    where: str
+    dnf: list  # may-match zone DNF (``block_filter`` form); [] = no pruning
+    not_dnf: list  # blocks that may hold a NON-matching row; [] = all may
+    in_sets: list  # top-level ``col IN (...)`` conjuncts: (col, values)
+    columns: list  # manifest columns the expression references
 
 
 _MAX_DNF_BRANCHES = 64
+_JVM_ERRORS = (PySparkException, Py4JJavaError)
+_CMP_OPS = {
+    "EqualTo": "=",
+    "LessThan": "<",
+    "LessThanOrEqual": "<=",
+    "GreaterThan": ">",
+    "GreaterThanOrEqual": ">=",
+}
+_FLIP_OP = {"<": ">", "<=": ">=", ">": "<", ">=": "<=", "=": "="}
+_ZONE_PTYPES = ("i8", "i16", "i32", "i64", "f32", "f64", "str", "bin")
+_LOGICAL_SPARK_TYPE = {
+    "ts": T.TimestampType(),
+    "ts_ntz": T.TimestampNTZType(),
+    "date": T.DateType(),
+    "bool": T.BooleanType(),
+}
 
 
-def zone_dnf_from_where(where: str, manifest: dict) -> list[list[tuple]]:
-    """OR-aware zone compiler: SQL boolean expression → disjunction of
-    conjunctions of zone predicates (the ``block_filter`` DNF form). A
-    block is decoded iff it can satisfy SOME branch's EVERY predicate.
+def compile_where(spark, where: str, manifest: dict) -> CompiledWhere:
+    """SQL boolean expression → zone-map DNF, its negation, the top-level
+    IN value sets and the referenced columns, compiled by Catalyst.
 
-    Strictly conservative, like :func:`zone_predicates_from_where`:
-    an unrecognized atom is a TRUE factor inside a conjunction (its
-    branch prunes on the other factors) but poisons a disjunction
-    (``x OR unknown()`` can match rows anywhere → no pruning). ``NOT``
-    is compiled through De Morgan with atom-level negation (flipped
-    comparisons, BETWEEN → two outer ranges, IS [NOT] NULL swapped;
-    ``NOT col = v`` and ``NOT col IN (...)`` are unprunable). DNF
-    distribution is capped at ``_MAX_DNF_BRANCHES`` branches — beyond
-    that the expression is left entirely to the row filter. Returns []
-    when nothing is prunable. Any backslash in the expression disables
-    pruning entirely (see :func:`zone_predicates_from_where`: Spark
-    unescapes literals, this compiler reads raw bytes)."""
-    if "\\" in where:
-        return []
-    dnf = _compile_dnf(where, manifest)
-    return dnf if dnf else []
+    The expression filters an empty JVM-side relation carrying the
+    manifest's logical schema (no Python RDD, no Spark job); the
+    optimized plan's Filter condition is then already normalized —
+    NOT pushed down (De Morgan, flipped comparisons), BETWEEN expanded,
+    ``LIKE 'ab%'`` rewritten to StartsWith, literals typed, unescaped
+    and cast to the column type, timestamps resolved in the session
+    time zone. And/Or and atoms of the form column-vs-literal
+    (comparisons, IN, StartsWith, IS [NOT] NULL) map onto ``(col, lo,
+    hi)`` / ``(col, "is_null"|"not_null")`` predicates with inclusive
+    bounds. An untranslatable atom is a TRUE factor inside a conjunction
+    but poisons a disjunction; past ``_MAX_DNF_BRANCHES`` branches the
+    expression is left entirely to the row filter. Any parse, analysis
+    or optimization error prunes nothing (the exact row filter raises
+    it), and a parse or analysis error references every column."""
+    import json
+
+    jss = spark._jsparkSession
+    rel = jss.createDataFrame(
+        spark._jsc.emptyRDD(),
+        jss.parseDataType(_logical_struct(manifest).json()),
+    )
+    try:
+        qe = rel.filter(where).queryExecution()
+    except _JVM_ERRORS:
+        return CompiledWhere(where, [], [], [], list(manifest))
+    by_lower = {c.lower(): c for c in manifest}
+
+    def col_of(name: str):  # Catalyst keeps the user's spelling
+        return name if name in manifest else by_lower.get(name.lower())
+
+    refs = qe.analyzed().references().toSeq()
+    used = {col_of(refs.apply(i).name()) for i in range(refs.size())}
+    columns = [c for c in manifest if c in used]
+    try:
+        plan, conds = qe.optimizedPlan(), []
+        while plan.children().size() == 1:
+            if plan.nodeName() == "Filter":
+                conds.append(plan.condition())
+            plan = plan.children().head()
+        if plan.children().size() > 1:  # subquery join: prune nothing
+            conds = []
+        trees = [
+            _where_tree(c, json.loads(c.toJSON()), manifest, col_of)
+            for c in conds
+        ]
+    except _JVM_ERRORS:  # e.g. an ANSI cast error while constant folding
+        trees = []
+    if not trees:
+        return CompiledWhere(where, [], [], [], columns)
+    # top-level conjuncts of every Filter (a Python UDF splits the Filter)
+    tops = [c for t in trees for c in (t[1] if t[0] == "and" else [t])]
+    tree = ("and", tops)
+    # a row fails the predicate where its negation holds or where it
+    # evaluates NULL — which column-vs-literal atoms do only on a NULL
+    # column, so the negation widens with IS NULL on every column
+    neg = _dnf(tree, True)
+    if neg:
+        neg = neg + [[(c, "is_null")] for c in columns]
+    return CompiledWhere(
+        where,
+        _dnf(tree, False) or [],
+        neg if neg and len(neg) <= _MAX_DNF_BRANCHES else [],
+        [c[3] for c in tops if c[0] == "atom" and c[3]],
+        columns,
+    )
 
 
-def _compile_dnf(expr: str, manifest: dict) -> list[list[tuple]] | None:
-    """Recursive DNF compiler; ``None`` means TRUE (prunes nothing)."""
-    expr = _strip_outer_parens(expr)
-    ors = _split_toplevel(expr, "OR")
-    if len(ors) > 1:
-        branches: list[list[tuple]] = []
-        for b in ors:
-            sub = _compile_dnf(b, manifest)
-            if not sub:  # one unprunable branch → rows can hide anywhere
-                return None
-            branches.extend(sub)
-        return branches if len(branches) <= _MAX_DNF_BRANCHES else None
-    conjs = _split_toplevel(expr, "AND")
-    if len(conjs) > 1:
+def _logical_struct(manifest: dict) -> T.StructType:
+    """The decoded (logical) schema a manifest describes."""
+    return T.StructType(
+        [
+            T.StructField(
+                f.name,
+                _LOGICAL_SPARK_TYPE.get(manifest[f.name]["logical"], f.dataType),
+                True,
+            )
+            for f in _phys_struct(manifest).fields
+        ]
+    )
+
+
+def _where_tree(jcond, nodes: list, manifest: dict, col_of):
+    """Catalyst condition (its ``toJSON`` pre-order node list) → tree of
+    ``("and"|"or", kids)``, ``("not", kid)`` and ``("atom", dnf,
+    not_dnf, in_set)``; an atom's DNFs are None when untranslatable.
+    Literal values the JSON renders as text (timestamps, dates) or not
+    at all (binary, InSet) are read from the JVM node itself."""
+    import datetime as _dt
+
+    it = iter(nodes)
+
+    def build(path):
+        n = next(it)
+        n["cls"] = n["class"].rsplit(".", 1)[-1]
+        n["path"] = path
+        n["kids"] = [build(path + (i,)) for i in range(n["num-children"])]
+        return n
+
+    def jvm(n):
+        obj = jcond
+        for i in n["path"]:
+            obj = obj.children().apply(i)
+        return obj
+
+    def scalar(dtype: str, text: str, jv):
+        if dtype in ("byte", "short", "integer", "long"):
+            return int(text)
+        if dtype in ("float", "double"):
+            v = float(np.float32(text)) if dtype == "float" else float(text)
+            return None if np.isnan(v) else v
+        if dtype == "string":
+            return text
+        if dtype == "boolean":
+            return text == "true"
+        if dtype in ("timestamp", "timestamp_ntz"):
+            return _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=jv())
+        if dtype == "date":
+            return _dt.date(1970, 1, 1) + _dt.timedelta(days=jv())
+        if dtype == "binary":
+            return bytes(jv())
+        return None  # decimal / complex: no zone bound
+
+    def literal(n):
+        if n["cls"] != "Literal" or n.get("value") is None:
+            return None
+        return scalar(n["dataType"], n["value"], lambda: jvm(n).value())
+
+    def column(n):
+        return col_of(n["name"]) if n["cls"] == "AttributeReference" else None
+
+    def atom(dnf=None, not_dnf=None, in_set=None):
+        return ("atom", dnf, not_dnf, in_set)
+
+    def envelope(col, vals):
+        if not vals or any(v is None for v in vals):
+            return atom()
+        return atom([[(col, min(vals), max(vals))]], None, (col, vals))
+
+    def leaf_atom(n):
+        cls, kids = n["cls"], n["kids"]
+        op = _CMP_OPS.get(cls)
+        if op and column(kids[0]) is None:
+            kids, op = kids[::-1], _FLIP_OP[op]  # lit OP col ≡ col FLIP(OP) lit
+        col = column(kids[0]) if kids else None
+        if col is None:
+            return atom()
+        if cls in ("IsNull", "IsNotNull"):
+            null, not_null = [[(col, "is_null")]], [[(col, "not_null")]]
+            return atom(null, not_null) if cls == "IsNull" else atom(not_null, null)
+        if manifest[col]["ptype"] not in _ZONE_PTYPES:
+            return atom()
+        if cls == "In":
+            return envelope(col, [literal(k) for k in kids[1:]])
+        if cls == "InSet" and kids[0]["dataType"] != "binary":
+            # hset holds Catalyst's internal values (µs, days, UTF8String)
+            hset = jvm(n).hset()
+            parts = hset.mkString("\0").split("\0")
+            if len(parts) != hset.size():
+                return atom()
+            dtype = kids[0]["dataType"]
+            return envelope(
+                col, [scalar(dtype, p, lambda p=p: int(p)) for p in parts]
+            )
+        if cls == "StartsWith" and manifest[col]["ptype"] == "str":
+            pref = literal(kids[1])
+            if not pref:
+                return atom()
+            return atom([[(col, pref, _prefix_upper_bytes(pref.encode()))]])
+        v = literal(kids[1]) if op else None
+        if v is None:
+            return atom()
+        if op == "=":
+            return atom([[(col, v, v)]])
+        # a strict bound on an integer is the next integer, inclusive;
+        # other strict bounds stay inclusive-conservative (a boundary
+        # block survives for the row filter)
+        exact = isinstance(v, int) and not isinstance(v, bool)
+
+        def above(strict):
+            return [[(col, v + 1 if strict and exact else v, None)]]
+
+        def below(strict):
+            return [[(col, None, v - 1 if strict and exact else v)]]
+
+        if op in (">", ">="):
+            return atom(above(op == ">"), below(op == ">="))
+        return atom(below(op == "<"), above(op == "<="))
+
+    def refs(n) -> set:
+        own = {column(n)} if n["cls"] == "AttributeReference" else set()
+        return own.union(*(refs(k) for k in n["kids"]))
+
+    def conjuncts(n) -> list:
+        if n["cls"] != "And":
+            return [n]
+        return [c for k in n["kids"] for c in conjuncts(k)]
+
+    def tr(n):
+        if n["cls"] == "And":
+            # Catalyst infers IS NOT NULL next to each null-intolerant
+            # conjunct: drop one whose column another conjunct of the
+            # same AND references (widening an AND is always sound), so
+            # branches keep the form the predicate was written in
+            cs = conjuncts(n)
+            implied = {
+                id(c) for c in cs if c["cls"] == "IsNotNull" and any(
+                    column(c["kids"][0]) in refs(o) for o in cs if o is not c
+                )
+            }
+            return ("and", [tr(c) for c in cs if id(c) not in implied])
+        if n["cls"] == "Or":
+            return ("or", [tr(k) for k in n["kids"]])
+        if n["cls"] == "Not":
+            return ("not", tr(n["kids"][0]))
+        try:
+            return leaf_atom(n)
+        except (ValueError, *_JVM_ERRORS):  # unexpected literal form
+            return atom()
+
+    return tr(build(()))
+
+
+def _dnf(t, neg: bool):
+    """DNF of tree ``t`` (of its negation when ``neg``), None = TRUE."""
+    kind = t[0]
+    if kind == "not":
+        return _dnf(t[1], not neg)
+    if kind == "atom":
+        return t[2] if neg else t[1]
+    subs = [_dnf(k, neg) for k in t[1]]
+    if (kind == "and") != neg:  # conjunction: distribute, skip TRUE factors
         acc: list[list[tuple]] = [[]]
-        for c in conjs:
-            sub = _compile_dnf(c, manifest)
-            if not sub:
-                continue  # TRUE factor: branch prunes on the others
-            acc = [a + list(b) for a in acc for b in sub]
-            if len(acc) > _MAX_DNF_BRANCHES:
-                return None
+        for s in subs:
+            if s:
+                acc = [a + b for a in acc for b in s]
+                if len(acc) > _MAX_DNF_BRANCHES:
+                    return None
         return acc if acc != [[]] else None
-    mnot = re.match(r"(?i)^NOT\b(.*)$", expr, re.S)
-    if mnot:
-        return _compile_neg(mnot.group(1).strip(), manifest)
-    preds = _compile_atom(expr, manifest)
-    return [preds] if preds else None
-
-
-def _compile_neg(expr: str, manifest: dict) -> list[list[tuple]] | None:
-    """DNF of the NEGATION of ``expr`` (De Morgan), or None = unprunable.
-    Bounds stay inclusive-conservative: ``NOT k <= 5`` prunes with
-    ``[5, ∞)`` — the k=5 boundary block survives for the row filter."""
-    expr = _strip_outer_parens(expr)
-    ors = _split_toplevel(expr, "OR")
-    if len(ors) > 1:  # ¬(a OR b) = ¬a AND ¬b — distribute
-        acc: list[list[tuple]] = [[]]
-        for b in ors:
-            sub = _compile_neg(b, manifest)
-            if not sub:
-                continue  # unprunable ¬arm is a TRUE factor
-            acc = [a + list(s) for a in acc for s in sub]
-            if len(acc) > _MAX_DNF_BRANCHES:
-                return None
-        return acc if acc != [[]] else None
-    conjs = _split_toplevel(expr, "AND")
-    if len(conjs) > 1:  # ¬(a AND b) = ¬a OR ¬b — any unprunable arm poisons
-        branches: list[list[tuple]] = []
-        for c in conjs:
-            sub = _compile_neg(c, manifest)
-            if not sub:
-                return None
-            branches.extend(sub)
-        return branches if len(branches) <= _MAX_DNF_BRANCHES else None
-    mnot = re.match(r"(?i)^NOT\b(.*)$", expr, re.S)
-    if mnot:  # ¬¬x = x
-        return _compile_dnf(mnot.group(1).strip(), manifest)
-    return _compile_atom_neg(expr, manifest)
-
-
-def _compile_atom_neg(conj: str, manifest: dict) -> list[list[tuple]] | None:
-    """DNF of the negation of one atom, or None when the complement is
-    not range-expressible (``NOT col = v``, IN-lists, unknown forms)."""
-    mnull = re.match(rf"(?i)^({_IDENT_RE})\s+IS\s+(NOT\s+)?NULL$", conj)
-    if mnull:
-        col = mnull.group(1)
-        if col in manifest:
-            return [[(col, "is_null" if mnull.group(2) else "not_null")]]
+    if any(not s for s in subs):  # one unprunable arm: rows hide anywhere
         return None
-    mbet = re.match(
-        rf"(?i)^({_IDENT_RE})\s+BETWEEN\s+({_LIT_RE})\s+AND\s+({_LIT_RE})$",
-        conj,
-    )
-    if mbet:
-        col = mbet.group(1)
-        if col in manifest:
-            lo = _parse_zone_literal(mbet.group(2), manifest[col])
-            hi = _parse_zone_literal(mbet.group(3), manifest[col])
-            if lo is not None and hi is not None:
-                # ¬(lo ≤ col ≤ hi) = col < lo OR col > hi
-                return [[(col, None, lo)], [(col, hi, None)]]
-        return None
-    mcmp = re.match(
-        rf"^({_IDENT_RE})\s*(>=|<=|==|=|<|>)\s*({_LIT_RE})$", conj
-    )
-    rev = False
-    if not mcmp:
-        mcmp = re.match(
-            rf"^({_LIT_RE})\s*(>=|<=|==|=|<|>)\s*({_IDENT_RE})$", conj
-        )
-        rev = True
-    if not mcmp:
-        return None
-    col, lit = (
-        (mcmp.group(1), mcmp.group(3))
-        if not rev
-        else (mcmp.group(3), mcmp.group(1))
-    )
-    if col not in manifest:
-        return None
-    v = _parse_zone_literal(lit, manifest[col])
-    if v is None:
-        return None
-    op = mcmp.group(2)
-    if rev:
-        op = {">": "<", "<": ">", ">=": "<=", "<=": ">="}.get(op, op)
-    if op in ("=", "=="):
-        return None  # complement of a point keeps every block anyway
-    neg = {"<": ">=", "<=": ">", ">": "<=", ">=": "<"}[op]
-    if neg in (">", ">="):
-        return [[(col, v, None)]]
-    return [[(col, None, v)]]
+    out = [b for s in subs for b in s]
+    return out if len(out) <= _MAX_DNF_BRANCHES else None
 
 
 def decode_where(
     spark,
     blocks,
     manifest: dict,
-    where: str,
+    where: "str | CompiledWhere",
     columns: list[str] | None = None,
     paths: list[str] | None = None,
 ) -> DataFrame:
     """The 100 TB slice API: decode only the rows matching a SQL boolean
-    expression. Range-expressible predicates become zone-map block filters
-    (whole blocks whose min/max cannot overlap are never read) — including
-    OR expressions, compiled to a disjunction of conjunctions by
-    :func:`zone_dnf_from_where` (each OR branch prunes independently; the
-    qualifying block sets are unioned). The FULL expression is then
-    applied exactly on the decoded rows, and ``columns`` projects the
-    result (the predicate may reference columns outside the projection —
-    they are decoded for the filter and dropped after).
+    expression. :func:`compile_where` turns it into zone-map block
+    filters (whole blocks whose min/max cannot overlap are never read) —
+    including OR expressions, as a disjunction of conjunctions (each OR
+    branch prunes independently; the qualifying block sets are unioned).
+    The FULL expression is then applied exactly on the decoded rows, and
+    ``columns`` projects the result (the columns the predicate references
+    are decoded for the filter and dropped after). ``where`` may be a
+    :class:`CompiledWhere` a caller already holds for this manifest.
 
     ``blocks`` is a blocks directory (shuffle-free per-file bulk decode)
     or a blocks DataFrame (shuffled :func:`decode_table` path)."""
-    preds = zone_dnf_from_where(where, manifest)
+    cw = (
+        where
+        if isinstance(where, CompiledWhere)
+        else compile_where(spark, where, manifest)
+    )
     need = columns
     if columns is not None:
-        referenced = [
-            c
-            for c in manifest
-            if c not in columns
-            # IGNORECASE: Spark resolves columns case-insensitively, so
-            # "CONV_ID > 5" must pull conv_id into the decode projection
-            and re.search(rf"\b{re.escape(c)}\b", where, re.IGNORECASE)
-        ]
-        need = list(columns) + referenced
+        need = list(columns) + [c for c in cw.columns if c not in columns]
     if isinstance(blocks, str):
         dec = decode_parquet_blocks(
             spark, blocks, manifest, columns=need,
-            block_filter=preds or None, paths=paths,
+            block_filter=cw.dnf or None, paths=paths,
         )
     else:
         dec = decode_table(
-            blocks, manifest, columns=need, block_filter=preds or None
+            blocks, manifest, columns=need, block_filter=cw.dnf or None
         )
-    out = dec.filter(F.expr(where))
+    out = dec.filter(F.expr(cw.where))
     if columns is not None:
         out = out.select(*columns)
     return out

@@ -101,7 +101,8 @@ def _canonical_bytes(value, m: dict) -> bytes | None:
 
 
 def _to_physical(value, m: dict):
-    """Logical query literal (what ``_parse_zone_literal`` yields) →
+    """Logical query literal (what ``compile_where`` yields: naive UTC
+    datetimes from Catalyst's resolved µs, dates from its days) →
     physical stored value, mirroring ``operators.encode._physicalize``:
     ts/ts_ntz → µs since epoch, date → days since epoch, bool → int."""
     import datetime as _dt
@@ -123,6 +124,13 @@ def _to_physical(value, m: dict):
     if logical == "bool":
         return int(value) if isinstance(value, (bool, int)) else None
     return value
+
+
+def _probe_bytes(value, m: dict) -> bytes | None:
+    """Logical value → the bytes its Bloom probe hashes, or None when
+    the Bloom cannot speak for it (NULL, unconvertible)."""
+    phys = None if value is None else _to_physical(value, m)
+    return None if phys is None else _canonical_bytes(phys, m)
 
 
 def build_bloom_index(
@@ -384,66 +392,6 @@ def _bit_hit(pos: int):
 _MAX_IN_PROBES = 64
 
 
-def _in_list_constraints(
-    where: str, manifest: dict, indexed: set
-) -> list[tuple]:
-    """Top-level ``col IN (lit, ...)`` conjuncts on indexed columns —
-    the zone compiler collapses IN to a [min, max] envelope, losing the
-    value set the Bloom needs, so the prober re-scans the conjuncts
-    itself with the SAME splitter/literal parser the zone compiler uses
-    (no second grammar to drift). A top-level conjunct constrains every
-    matching row, so a file where ALL the listed values miss is
-    eliminable outright, whatever the rest of the predicate does.
-    Conservative throughout: parse failure, unparseable literal, lists
-    longer than ``_MAX_IN_PROBES`` → no constraint."""
-    import re as _re
-
-    from d6tstack_spark.operators.encode import (
-        _IDENT_RE,
-        _LIT_RE,
-        _parse_zone_literal,
-        _split_conjuncts,
-        _strip_outer_parens,
-    )
-
-    if "\\" in where:  # same literal-escape hazard as the zone compiler
-        return []
-    out: list[tuple] = []
-    for conj in _split_conjuncts(where):
-        conj = _strip_outer_parens(conj)
-        m = _re.match(
-            rf"(?i)^({_IDENT_RE})\s+IN\s*\(\s*"
-            rf"({_LIT_RE}(?:\s*,\s*(?:{_LIT_RE}))*)\s*\)$",
-            conj,
-        )
-        if not m:
-            continue
-        col = m.group(1)
-        if col not in indexed or col not in manifest:
-            continue
-        lits = [
-            _parse_zone_literal(t, manifest[col])
-            for t in _re.findall(_LIT_RE, m.group(2))
-        ]
-        if not lits or len(lits) > _MAX_IN_PROBES:
-            continue
-        probes = []
-        for v in lits:
-            phys = None if v is None else _to_physical(v, manifest[col])
-            b = (
-                None
-                if phys is None
-                else _canonical_bytes(phys, manifest[col])
-            )
-            if b is None:
-                probes = None
-                break
-            probes.append(b)
-        if probes:
-            out.append((col, probes))
-    return out
-
-
 def bloom_value_keep(
     spark: SparkSession,
     state_dir: str,
@@ -474,8 +422,7 @@ def bloom_value_keep(
     mb = int(meta["m_bits"])
     probes = []
     for v in values:
-        phys = None if v is None else _to_physical(v, m)
-        b = None if phys is None else _canonical_bytes(phys, m)
+        b = _probe_bytes(v, m)
         if b is None:
             # NULL or unconvertible value — the Bloom cannot speak for it
             return basenames
@@ -508,30 +455,43 @@ def bloom_prune_basenames(
     spark: SparkSession,
     state_dir: str,
     manifest: dict,
-    where: str,
+    where,
     basenames: list[str],
 ) -> list[str]:
-    """Advisory file pruning for a WHERE clause: drop basenames the Bloom
-    sidecar proves cannot contain a matching row. Sound under the DNF
-    reading of the predicate — a file survives iff SOME branch remains
-    possible; a branch is ruled out for a file only when one of its
-    equality atoms on an indexed column Bloom-misses in that file's
-    bitmap; top-level ``IN`` conjuncts additionally rule a file out when
-    every listed value misses. Everything un-indexed, un-parsed,
-    uncovered or non-equality passes through untouched. Returns a subset
-    of ``basenames`` (order preserved); with no index or no usable atom,
-    returns it unchanged."""
+    """Advisory file pruning for a WHERE clause (a SQL string or the
+    :class:`~d6tstack_spark.operators.encode.CompiledWhere` the caller
+    already holds): drop basenames the Bloom sidecar proves cannot
+    contain a matching row. Sound under the DNF reading of the
+    predicate — a file survives iff SOME branch remains possible; a
+    branch is ruled out for a file only when one of its equality atoms
+    on an indexed column Bloom-misses in that file's bitmap; top-level
+    ``IN`` conjuncts (a conjunct constrains every matching row)
+    additionally rule a file out when every listed value misses.
+    Everything un-indexed, untranslatable, uncovered or non-equality
+    passes through untouched, and so do IN lists longer than
+    ``_MAX_IN_PROBES``. Returns a subset of ``basenames`` (order
+    preserved); with no index or no usable atom, returns it unchanged."""
     meta = load_bloom_meta(state_dir)
     if meta is None or not basenames:
         return basenames
     if meta.get("k") != BLOOM_K:
         return basenames  # built by a different construction — ignore
-    from d6tstack_spark.operators.encode import zone_dnf_from_where
+    from d6tstack_spark.operators.encode import CompiledWhere, compile_where
 
+    cw = (
+        where
+        if isinstance(where, CompiledWhere)
+        else compile_where(spark, where, manifest)
+    )
     indexed = set(meta["columns"])
-    dnf = zone_dnf_from_where(where, manifest) or []
-    ins = _in_list_constraints(where, manifest, indexed)
-    if not dnf and not ins:
+    ins: list[tuple] = []
+    for col, vals in cw.in_sets:
+        if col not in indexed or len(vals) > _MAX_IN_PROBES:
+            continue
+        probes = [_probe_bytes(v, manifest[col]) for v in vals]
+        if all(b is not None for b in probes):
+            ins.append((col, probes))
+    if not cw.dnf and not ins:
         return basenames
     mb = int(meta["m_bits"])
 
@@ -541,7 +501,7 @@ def bloom_prune_basenames(
     # as all-null, so no equality atom can match it), and uncovered
     # (file, column) pairs always pass.
     branches: list[list[tuple]] = []
-    for branch in dnf:
+    for branch in cw.dnf:
         probes: list[tuple] = []
         for atom in branch:
             if len(atom) != 3 or atom[0] not in indexed:
@@ -549,14 +509,9 @@ def bloom_prune_basenames(
             col, lo, hi = atom
             if lo is None or lo != hi:
                 continue  # range atom — zone maps handle those
-            m = manifest[col]
-            phys = _to_physical(lo, m)
-            if phys is None:
-                continue
-            b = _canonical_bytes(phys, m)
-            if b is None:
-                continue
-            probes.append((col, b))
+            b = _probe_bytes(lo, manifest[col])
+            if b is not None:
+                probes.append((col, b))
         branches.append(probes)
     if all(not p for p in branches) and not ins:
         return basenames

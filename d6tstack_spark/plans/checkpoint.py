@@ -25,8 +25,8 @@ skip``) and its pluggable logger (utils.py:7-12) into Spark-native state:
 from __future__ import annotations
 
 import json
+import math
 import os
-import re
 import socket
 import threading
 import time
@@ -587,8 +587,7 @@ def decode_state_diff(
     in the window — are decoded, and rows a rewrite merely moved cancel
     in the multiset difference (``exceptAll``)."""
     from d6tstack_spark.operators.encode import (
-        _phys_struct,
-        _restore_logical,
+        _logical_struct,
         decode_parquet_blocks,
         decode_where,
     )
@@ -612,9 +611,7 @@ def decode_state_diff(
         )
     added = resolve_snapshot_diff(state_dir, since, until)
     if not added:
-        empty = _restore_logical(
-            spark.createDataFrame([], _phys_struct(manifest)), manifest
-        )
+        empty = spark.createDataFrame([], _logical_struct(manifest))
         if where is not None:
             empty = empty.filter(F.expr(where))
         if columns is not None:
@@ -636,6 +633,39 @@ def decode_state_diff(
     )
 
 
+def _tombstone_zone_dnf(
+    spark: SparkSession, state_dir: str, manifest: dict, tombs: list[dict]
+):
+    """``(dnf, cw)`` for the rows any of ``tombs`` can delete: ``cw`` is
+    the compiled OR of the predicate tombstones (None without any), and
+    ``dnf`` its zone DNF plus one per-column [min, max] envelope branch
+    per key set — None when some part is unprunable. Schema evolution:
+    pre-evolution blocks have no stats row for an evolved column, so a
+    stats scan would silently exclude them — yet an IS NULL tombstone on
+    that column MATCHES their (all-null) rows; like the decode paths,
+    is_null atoms on evolved columns are dropped, and a branch left
+    empty makes the DNF None (a full rewrite, never a missed file)."""
+    from d6tstack_spark.operators.encode import (
+        _strip_evolved_unprunable,
+        compile_where,
+    )
+
+    preds = [t for t in tombs if t.get("kind") != "keys"]
+    cw, dnf = None, []
+    if preds:
+        cw = compile_where(
+            spark, " OR ".join(f"({t['where']})" for t in preds), manifest
+        )
+        dnf = _strip_evolved_unprunable(cw.dnf or None, manifest)
+    for t in tombs:
+        if dnf is not None and t.get("kind") == "keys":
+            env = key_envelope_filter(
+                spark, _resolve_keys_path(state_dir, t), tuple(t["cols"])
+            )
+            dnf = None if env is None else dnf + env
+    return dnf, cw
+
+
 def _tombstone_affected_basenames(
     spark: SparkSession,
     state_dir: str,
@@ -644,64 +674,23 @@ def _tombstone_affected_basenames(
     basenames: list[str],
 ) -> list[str]:
     """Zone targeting for the changelog scan: the subset of ``basenames``
-    whose stats say some row COULD match one of ``tombs`` (predicate zone
-    DNF + key-set envelopes, exactly the purge planner's rules incl. the
-    evolved-column strip); unprunable → all of them (conservative)."""
+    whose stats say some row COULD match one of ``tombs`` (exactly the
+    purge planner's rules, :func:`_tombstone_zone_dnf`); unprunable →
+    all of them (conservative)."""
     from d6tstack_spark.operators.encode import (
         _norm_file_uri,
-        _strip_evolved_unprunable,
-        _zone_keep_condition,
-        zone_dnf_from_where,
+        _zone_qualifying_paths,
     )
 
     if not tombs or not basenames:
         return []
-    preds = [t for t in tombs if t.get("kind") != "keys"]
-    ksets = [t for t in tombs if t.get("kind") == "keys"]
-    dnf: list | None = []
-    if preds:
-        pd = zone_dnf_from_where(
-            " OR ".join(f"({t['where']})" for t in preds), manifest
-        )
-        pd = _strip_evolved_unprunable(pd if pd else None, manifest)
-        dnf = pd if pd else None
-    if dnf is not None:
-        for t in ksets:
-            env = key_envelope_filter(
-                spark, _resolve_keys_path(state_dir, t), tuple(t["cols"])
-            )
-            if env is None:
-                dnf = None
-                break
-            dnf += env
-    paths = _resolve_block_paths(state_dir, basenames)
+    dnf, _ = _tombstone_zone_dnf(spark, state_dir, manifest, tombs)
     if not dnf:
         return list(basenames)
-    stats = spark.read.parquet(*paths)
-    if "vmin_num" not in stats.columns:
-        return list(basenames)
-    qual_df = None
-    for branch in dnf:
-        branch_df = None
-        for bf in branch:
-            col, keep = _zone_keep_condition(manifest, bf)
-            s = (
-                stats.filter(F.col("column") == col)
-                .filter(keep)
-                .select(F.input_file_name().alias("f"), "block_id")
-                .distinct()
-            )
-            branch_df = (
-                s
-                if branch_df is None
-                else branch_df.join(s, ["f", "block_id"], "inner")
-            )
-        qual_df = (
-            branch_df if qual_df is None else qual_df.unionByName(branch_df)
-        )
+    paths = _resolve_block_paths(state_dir, basenames)
     qual = {
-        os.path.basename(_norm_file_uri(r[0]))
-        for r in qual_df.select("f").distinct().collect()
+        os.path.basename(_norm_file_uri(p))
+        for p in _zone_qualifying_paths(spark, paths, manifest, dnf)
     }
     return [b for b in basenames if b in qual]
 
@@ -716,8 +705,7 @@ def _changelog_diff(
     where: str | None,
 ) -> DataFrame:
     from d6tstack_spark.operators.encode import (
-        _phys_struct,
-        _restore_logical,
+        _logical_struct,
         decode_parquet_blocks,
     )
 
@@ -761,9 +749,7 @@ def _changelog_diff(
     def _side(basenames: set, vis: list[dict], at: int) -> DataFrame:
         files = sorted(basenames)
         if not files:
-            return _restore_logical(
-                spark.createDataFrame([], _phys_struct(manifest)), manifest
-            )
+            return spark.createDataFrame([], _logical_struct(manifest))
         # sequence-scoped like decode_state: a tombstone applies only to
         # files first seen before its delete record
         return _decode_scoped(
@@ -943,17 +929,12 @@ def delete_where(
         # already hold would escape the tombstone's scope
         _sweep_snapshot_appends(spark, state_dir)
         manifest = load_manifest(state_dir)
-        from d6tstack_spark.operators.encode import (
-            _phys_struct,
-            _restore_logical,
-        )
+        from d6tstack_spark.operators.encode import _logical_struct
 
         # eager predicate validation: Spark analyzes filter() immediately
         # against the decoded (logical) schema — typos and unknown columns
         # fail here, not at the next decode
-        empty = _restore_logical(
-            spark.createDataFrame([], _phys_struct(manifest)), manifest
-        )
+        empty = spark.createDataFrame([], _logical_struct(manifest))
         empty.filter(F.expr(where))
         report: dict = {"where": where, "recorded": True}
         if count_matches:
@@ -1618,8 +1599,8 @@ def decode_state(
     pre-evolution blocks do."""
     from d6tstack_spark.operators.encode import (
         _hadoop_list_files,
-        _phys_struct,
-        _restore_logical,
+        _logical_struct,
+        compile_where,
     )
 
     if os.path.exists(_purge_journal_path(state_dir)):
@@ -1669,17 +1650,19 @@ def decode_state(
         )
         vis, seen = _live_visibility(recs, deletes)
 
-    if where is not None and basenames:
+    # one compile serves the Bloom probe, the zone DNF and the projection
+    cw = compile_where(spark, where, manifest) if where is not None else None
+    if cw is not None and basenames:
         # advisory point-lookup pruning: if a Bloom sidecar exists
         # (plans.bloomidx.build_bloom_index), equality atoms in the WHERE
         # drop files that provably cannot contain the value — the pruning
         # zone maps cannot do on non-clustered keys. Uncovered files and
-        # unparseable predicates pass through; correctness never depends
-        # on the index.
+        # untranslatable predicates pass through; correctness never
+        # depends on the index.
         from d6tstack_spark.plans.bloomidx import bloom_prune_basenames
 
         basenames = bloom_prune_basenames(
-            spark, state_dir, manifest, where, basenames
+            spark, state_dir, manifest, cw, basenames
         )
 
     if not basenames:
@@ -1691,11 +1674,11 @@ def decode_state(
             if missing:
                 raise ValueError(f"columns not in manifest: {missing}")
             m = {k: v for k, v in manifest.items() if k in columns}
-        return _restore_logical(spark.createDataFrame([], _phys_struct(m)), m)
+        return spark.createDataFrame([], _logical_struct(m))
 
     dec = _decode_scoped(
         spark, state_dir, manifest, basenames, vis, seen,
-        columns=columns, block_filter=block_filter, where=where,
+        columns=columns, block_filter=block_filter, where=cw,
         # live reads just listed the blocks dir — skip the per-file
         # exists() fallback probe (10^5 stats on big dirs); snapshot
         # reads keep the live-then-retired resolution
@@ -1713,21 +1696,15 @@ def _decode_scoped(
     seen: dict[str, int],
     columns: list[str] | None = None,
     block_filter: tuple | list | None = None,
-    where: str | None = None,
+    where=None,
     live_basenames: set | None = None,
 ) -> DataFrame:
     """Decode ``basenames`` (resolved live-first-then-retired) applying
     each visible tombstone only to the files it is sequence-scoped to:
-    files group by their applicable-tombstone set (at most
-    #tombstones + 1 generations — files between consecutive delete
-    records share a group), each group decodes with exactly its
-    keep-filter and key anti-joins, and the groups union. A file the
-    snapshot log has not recorded yet (published by a writer that
-    crashed before its sweep) counts as NEWEST — the same id the next
-    sweep will assign it — so no tombstone recorded earlier touches
-    it."""
-    import math
-
+    files group by their applicable-tombstone set
+    (:func:`_tombstone_generations`), each group decodes with exactly
+    its keep-filter and key anti-joins, and the groups union. ``where``
+    is the caller's predicate as a ``CompiledWhere`` (or None)."""
     from d6tstack_spark.operators.encode import (
         decode_parquet_blocks,
         decode_where,
@@ -1735,46 +1712,14 @@ def _decode_scoped(
 
     bd = _blocks_dir(state_dir)
     tmap = {t["id"]: t for t in vis}
-    groups: dict[frozenset, list[str]] = {}
-    for b in basenames:
-        s = frozenset(
-            t["id"]
-            for t in vis
-            if t.get("_rec") is None
-            or seen.get(b, math.inf) < t["_rec"]
-        )
-        groups.setdefault(s, []).append(b)
-
-    # columns any tombstone (or the caller's where) needs beyond the
-    # projection: decoded for the filter/anti-join, dropped at the end
-    need = columns
-    if columns is not None:
-        all_keep = _tombstone_keep_expr(
-            [t for t in vis if t.get("kind") != "keys"]
-        )
-        ref_src = " ".join(x for x in (all_keep, where) if x)
-        extra: list[str] = []
-        if ref_src:
-            extra += [
-                c
-                for c in manifest
-                if c not in columns
-                and re.search(rf"\b{re.escape(c)}\b", ref_src, re.IGNORECASE)
-            ]
-        for t in vis:
-            if t.get("kind") == "keys":
-                extra += [
-                    c
-                    for c in t["cols"]
-                    if c not in columns and c not in extra
-                ]
-        need = list(columns) + extra
+    groups = _tombstone_generations(basenames, vis, seen)
+    compiled = _compile_generations(spark, manifest, where, vis, groups)
+    need = _decode_columns(manifest, columns, compiled.values(), vis)
 
     parts: list[DataFrame] = []
     for s, bs in groups.items():
-        gpreds = [tmap[i] for i in s if tmap[i].get("kind") != "keys"]
         gksets = [tmap[i] for i in s if tmap[i].get("kind") == "keys"]
-        gkeep = _tombstone_keep_expr(gpreds)
+        gcw = compiled[s]
         if live_basenames is not None:
             # caller vouches these basenames came from a live listing:
             # join paths directly instead of stat()ing every file
@@ -1785,22 +1730,17 @@ def _decode_scoped(
                 paths += _resolve_block_paths(state_dir, rest)
         else:
             paths = _resolve_block_paths(state_dir, bs)
-        if where is not None:
-            eff = f"({where}) AND ({gkeep})" if gkeep else where
+        if gcw is not None and block_filter is None:
             dec = decode_where(
-                spark, bd, manifest, eff, columns=need, paths=paths
-            )
-        elif gkeep is not None and block_filter is None:
-            dec = decode_where(
-                spark, bd, manifest, gkeep, columns=need, paths=paths
+                spark, bd, manifest, gcw, columns=need, paths=paths
             )
         else:
             dec = decode_parquet_blocks(
                 spark, bd, manifest, columns=need,
                 block_filter=block_filter, paths=paths,
             )
-            if gkeep is not None:
-                dec = dec.filter(F.expr(gkeep))
+            if gcw is not None:  # tombstone keep-filter
+                dec = dec.filter(F.expr(gcw.where))
         for t in gksets:  # equality deletes: exact left_anti on the keys
             dec = dec.join(
                 spark.read.parquet(_resolve_keys_path(state_dir, t)),
@@ -1814,3 +1754,62 @@ def _decode_scoped(
     if columns is not None:
         out = out.select(*columns)
     return out
+
+
+def _tombstone_generations(
+    basenames: list[str], vis: list[dict], seen: dict[str, int]
+) -> dict[frozenset, list[str]]:
+    """Group files by their applicable-tombstone set — at most
+    #tombstones + 1 generations (files between consecutive delete
+    records share a group). A file the snapshot log has not recorded
+    yet (published by a writer that crashed before its sweep) counts as
+    NEWEST — the same id the next sweep will assign it — so no
+    tombstone recorded earlier touches it."""
+    groups: dict[frozenset, list[str]] = {}
+    for b in basenames:
+        s = frozenset(
+            t["id"]
+            for t in vis
+            if t.get("_rec") is None or seen.get(b, math.inf) < t["_rec"]
+        )
+        groups.setdefault(s, []).append(b)
+    return groups
+
+
+def _compile_generations(
+    spark: SparkSession, manifest: dict, where, vis: list[dict], groups
+) -> dict:
+    """Per tombstone generation, the compiled predicate its files decode
+    under: the caller's ``where`` (a ``CompiledWhere`` or None) AND the
+    generation's predicate-tombstone keep-filter. A generation with no
+    predicate tombstone reuses ``where`` as compiled — with no pending
+    deletes a read compiles its predicate exactly once."""
+    from d6tstack_spark.operators.encode import compile_where
+
+    tmap = {t["id"]: t for t in vis}
+    out = {}
+    for s in groups:
+        keep = _tombstone_keep_expr(
+            [tmap[i] for i in s if tmap[i].get("kind") != "keys"]
+        )
+        if keep is None:
+            out[s] = where
+        else:
+            eff = keep if where is None else f"({where.where}) AND ({keep})"
+            out[s] = compile_where(spark, eff, manifest)
+    return out
+
+
+def _decode_columns(
+    manifest: dict, columns: list[str] | None, compiled, vis: list[dict]
+) -> list[str] | None:
+    """Projection a scoped decode reads: ``columns`` plus every column a
+    compiled predicate or a key-set tombstone references (decoded for
+    the filter / anti-join, dropped after); None = all columns."""
+    if columns is None:
+        return None
+    extra = {c for cw in compiled if cw is not None for c in cw.columns}
+    extra |= {c for t in vis if t.get("kind") == "keys" for c in t["cols"]}
+    return list(columns) + [
+        c for c in manifest if c in extra and c not in columns
+    ]

@@ -122,18 +122,21 @@ def explain_decode(
     Planning only — the numbers come from the metadata/stats scans the
     real read performs, so they are exact for the plan, not estimates of
     the result (the exact row filter still runs on decode)."""
-    import math
-
     from d6tstack_spark.operators.encode import (
         _strip_evolved_unprunable,
-        _zone_keep_condition,
-        zone_dnf_from_where,
+        _zone_qualifying_blocks,
+        compile_where,
     )
     from d6tstack_spark.plans.bloomidx import (
         bloom_prune_basenames,
         load_bloom_meta,
     )
-    from d6tstack_spark.plans.checkpoint import _resolve_block_paths
+    from d6tstack_spark.plans.checkpoint import (
+        _compile_generations,
+        _decode_columns,
+        _resolve_block_paths,
+        _tombstone_generations,
+    )
 
     manifest, basenames, vis, seen = resolve_read_state(
         spark, state_dir, snapshot
@@ -144,61 +147,33 @@ def explain_decode(
     }
 
     # tombstone generations: same grouping the scoped decode performs
-    gens = set()
-    for b in basenames:
-        add = seen.get(b, math.inf)
-        gens.add(
-            frozenset(
-                t["id"]
-                for t in vis
-                if t.get("_rec") is None or add < t["_rec"]
-            )
-        )
-    report["tombstone_generations"] = len(gens) if basenames else 0
+    gens = _tombstone_generations(basenames, vis, seen)
+    report["tombstone_generations"] = len(gens)
+
+    # one compile serves both pruning layers and the projection
+    cw = compile_where(spark, where, manifest) if where is not None else None
 
     # layer 2: Bloom sidecar
     meta = load_bloom_meta(state_dir)
     report["bloom_columns"] = meta["columns"] if meta else None
-    if where is not None and basenames:
+    if cw is not None and basenames:
         basenames = bloom_prune_basenames(
-            spark, state_dir, manifest, where, basenames
+            spark, state_dir, manifest, cw, basenames
         )
     report["files_after_bloom"] = len(basenames)
 
     # layer 3: zone-map DNF — the decode tasks evaluate it on each file's
     # own stats; here the same qualification runs as one stats-only scan
     dnf = None
-    if where is not None:
-        dnf = zone_dnf_from_where(where, manifest) or None
-        dnf = _strip_evolved_unprunable(dnf, manifest)
+    if cw is not None:
+        dnf = _strip_evolved_unprunable(cw.dnf or None, manifest)
     report["zone_dnf"] = dnf
     paths = _resolve_block_paths(state_dir, basenames)
     est_rows = 0
     if paths:
         stats = spark.read.parquet(*paths)
         if dnf and "vmin_num" in stats.columns:
-            qual = None
-            for branch in dnf:
-                branch_df = None
-                for bf in branch:
-                    col, keep = _zone_keep_condition(manifest, bf)
-                    s = (
-                        stats.filter(F.col("column") == col)
-                        .filter(keep)
-                        .select(F.input_file_name().alias("f"), "block_id")
-                        .distinct()
-                    )
-                    branch_df = (
-                        s
-                        if branch_df is None
-                        else branch_df.join(s, ["f", "block_id"], "inner")
-                    )
-                qual = (
-                    branch_df
-                    if qual is None
-                    else qual.unionByName(branch_df)
-                )
-            kept = qual.join(
+            kept = _zone_qualifying_blocks(stats, manifest, dnf).join(
                 stats.groupBy(
                     F.input_file_name().alias("f"), "block_id"
                 ).agg(F.max("n_rows").alias("r")),
@@ -225,23 +200,7 @@ def explain_decode(
     report["est_rows_scanned"] = est_rows
 
     # projection incl. decode-then-drop columns (predicate + tombstones)
-    if columns is None:
-        report["columns_decoded"] = list(manifest)
-    else:
-        import re
-
-        need = list(columns)
-        texts = [where or ""] + [
-            t.get("where", "") for t in vis if t.get("kind") != "keys"
-        ]
-        for t in vis:
-            if t.get("kind") == "keys":
-                texts.append(" ".join(t.get("cols", [])))
-        blob = " ".join(texts)
-        for c in manifest:
-            if c not in need and re.search(
-                rf"\b{re.escape(c)}\b", blob, re.IGNORECASE
-            ):
-                need.append(c)
-        report["columns_decoded"] = need
+    compiled = _compile_generations(spark, manifest, cw, vis, gens)
+    need = _decode_columns(manifest, columns, compiled.values(), vis)
+    report["columns_decoded"] = list(manifest) if need is None else need
     return report

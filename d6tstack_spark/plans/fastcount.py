@@ -13,19 +13,20 @@ Iceberg/Snowflake "metadata-only scan" analog for the block format:
 - With a predicate, files are classified three ways:
     * **no-match** — the existing may-match zone DNF prunes them (no
       block can contain a matching row): contribute 0;
-    * **all-match** — compiling the predicate's NEGATION through the
-      same conservative may-match compiler proves NO row can fail the
-      predicate: contribute their stats row count, payload untouched;
-    * **undecided** — decoded through :func:`decode_where` (zone-pruned
-      + exact row filter), the only payload actually read.
+    * **all-match** — the DNF of the predicate's NEGATION, taken from
+      the same Catalyst compile (``compile_where``'s ``not_dnf``),
+      proves NO row can fail the predicate: contribute their stats row
+      count, payload untouched;
+    * **undecided** — decoded through the zone-pruned bulk decode plus
+      the exact row filter, the only payload actually read.
   The all-match proof must respect SQL three-valued logic: a row where
   the predicate evaluates NULL matches neither the predicate nor its
-  negation, and for the compiler's grammar (comparisons, IN, LIKE,
-  AND/OR/NOT) a NULL result requires a NULL input column — so the
-  negation is widened with ``<col> IS NULL`` disjuncts for every
-  referenced column before compiling. Any construct outside the
-  grammar poisons the compile ([]), which simply disables the proof
-  and falls back to exact decoding — sound by construction.
+  negation, and a translated atom (column vs literal) evaluates NULL
+  only on a NULL column — so the negation is widened with ``<col> IS
+  NULL`` branches for every referenced column. Any untranslatable
+  construct the negation cannot drop poisons it ([]), which simply
+  disables the proof and falls back to exact decoding — sound by
+  construction.
 
 Reference analog: d6tstack answers "how many rows will this combine
 produce" by counting during the scan (combine_csv.py preview/row
@@ -33,8 +34,6 @@ counts); this answers it without the scan.
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -113,21 +112,6 @@ def _classify_files(
     ).collect()
 
 
-def _compile_dnf(where: str, manifest: dict):
-    """May-match DNF or None when the predicate is unprunable (compile
-    poison, backslash guard, or evolved-column strip disabling it)."""
-    from d6tstack_spark.operators.encode import (
-        _strip_evolved_unprunable,
-        zone_dnf_from_where,
-    )
-
-    try:
-        dnf = zone_dnf_from_where(where, manifest)
-    except Exception:
-        return None
-    return _strip_evolved_unprunable(dnf or None, manifest)
-
-
 def fast_count(
     spark: SparkSession,
     state_dir: str,
@@ -186,18 +170,16 @@ def fast_count(
     paths = _resolve_block_paths(state_dir, basenames)
     may_dnf = neg_dnf = combined = ref_cols = None
     if where is not None:
-        may_dnf = _compile_dnf(where, manifest)
-
-        # all-match proof: no row can satisfy (NOT where) OR any-ref-col-NULL
-        ref_cols = [
-            c
-            for c in manifest
-            if re.search(rf"\b{re.escape(c)}\b", where, re.IGNORECASE)
-        ]
-        negated = f"(NOT ({where}))" + "".join(
-            f" OR ({c} IS NULL)" for c in ref_cols
+        from d6tstack_spark.operators.encode import (
+            _strip_evolved_unprunable,
+            compile_where,
         )
-        neg_dnf = _compile_dnf(negated, manifest)
+
+        cw = compile_where(spark, where, manifest)
+        may_dnf = _strip_evolved_unprunable(cw.dnf or None, manifest)
+        ref_cols = cw.columns
+        # all-match proof: no row of a block may fail the predicate
+        neg_dnf = _strip_evolved_unprunable(cw.not_dnf or None, manifest)
 
         # the undecided blocks decode under may AND may-fail — expressible
         # as a DNF only via branch products, so cap the blowup (past the

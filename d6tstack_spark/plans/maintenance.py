@@ -453,7 +453,7 @@ def purge_deletes(
     rewriting ONLY the block files that can contain matching rows.
 
     Targeting: the union-of-tombstones predicate compiles to zone-filter
-    DNF (``zone_dnf_from_where``); a stats-only scan keeps just the files
+    DNF (``compile_where``); a stats-only scan keeps just the files
     with ≥1 overlapping block (the same two-level pruning the bulk decode
     plans with). Every other file is untouched — never read, never
     rewritten — so I/O scales with the delete's footprint, not the table:
@@ -482,11 +482,9 @@ def purge_deletes(
         SUB_BLOCK_BITS,
         _hadoop_list_files,
         _norm_file_uri,
-        _strip_evolved_unprunable,
-        _zone_keep_condition,
+        _zone_qualifying_paths,
         decode_table,
         encode_table,
-        zone_dnf_from_where,
     )
     from d6tstack_spark.plans.checkpoint import (
         _LeaseHeartbeat,
@@ -495,7 +493,7 @@ def purge_deletes(
         _check_or_stamp_format,
         _clear_tombstones,
         _replay_purge_journal,
-        key_envelope_filter,
+        _tombstone_zone_dnf,
         load_deletes,
         load_manifest,
     )
@@ -534,72 +532,19 @@ def purge_deletes(
             _record_tombstone_clear(state_dir, tomb_ids, [])
             return report
         report["files_scanned"] = len(paths)
-        preds = [d for d in deletes if d.get("kind") != "keys"]
         ksets = [d for d in deletes if d.get("kind") == "keys"]
 
         # ---- plan: which files can contain a matching row — zone DNF of
         # the OR of all predicate tombstones, plus each key set's
-        # per-column [min, max] envelope branch (mirrors
-        # decode_parquet_blocks' driver pruning: intersect per-predicate
-        # (file, block) pairs within a branch, union branches, collect
-        # only the distinct file list). Any unprunable part degrades to a
-        # full rewrite, reported honestly.
+        # per-column [min, max] envelope branch, qualified by a
+        # stats-only scan (intersect per-predicate (file, block) pairs
+        # within a branch, union branches, collect only the distinct file
+        # list). Any unprunable part degrades to a full rewrite, reported
+        # honestly.
         affected = paths
-        dnf: list[list[tuple]] | None = []
-        if preds:
-            pd = zone_dnf_from_where(
-                " OR ".join(f"({d['where']})" for d in preds), manifest
-            )
-            # schema evolution: pre-evolution blocks have no stats row
-            # for an evolved column, so the intersection scan below would
-            # silently exclude them — yet an IS NULL tombstone on that
-            # column MATCHES their (all-null) rows. Mirror the decode
-            # paths: drop is_null atoms on evolved columns; a branch left
-            # empty → full rewrite (None), never a missed file.
-            pd = _strip_evolved_unprunable(pd if pd else None, manifest)
-            dnf = pd if pd else None
-        if dnf is not None:
-            for d in ksets:
-                env = key_envelope_filter(
-                    spark,
-                    os.path.join(state_dir, d["path"]),
-                    tuple(d["cols"]),
-                )
-                if env is None:
-                    dnf = None
-                    break
-                dnf += env
+        dnf, pred_cw = _tombstone_zone_dnf(spark, state_dir, manifest, deletes)
         if dnf:
-            stats = spark.read.parquet(*paths)
-            if "vmin_num" in stats.columns:
-                qual_df = None
-                for branch in dnf:
-                    branch_df = None
-                    for bf in branch:
-                        col, keep = _zone_keep_condition(manifest, bf)
-                        s = (
-                            stats.filter(F.col("column") == col)
-                            .filter(keep)
-                            .select(
-                                F.input_file_name().alias("f"), "block_id"
-                            )
-                            .distinct()
-                        )
-                        branch_df = (
-                            s
-                            if branch_df is None
-                            else branch_df.join(s, ["f", "block_id"], "inner")
-                        )
-                    qual_df = (
-                        branch_df
-                        if qual_df is None
-                        else qual_df.unionByName(branch_df)
-                    )
-                qual = {
-                    _norm_file_uri(r[0])
-                    for r in qual_df.select("f").distinct().collect()
-                }
-                affected = [p for p in paths if _norm_file_uri(p) in qual]
+            affected = _zone_qualifying_paths(spark, paths, manifest, dnf)
         if affected:
             # Bloom sidecar: equality atoms in predicate tombstones and
             # SMALL single-column key sets (the GDPR "forget this
@@ -618,14 +563,10 @@ def purge_deletes(
             }
             names = sorted(base_of)
             keep: set = set()
-            if preds:
+            if pred_cw is not None:
                 keep |= set(
                     bloom_prune_basenames(
-                        spark,
-                        state_dir,
-                        manifest,
-                        " OR ".join(f"({d['where']})" for d in preds),
-                        names,
+                        spark, state_dir, manifest, pred_cw, names
                     )
                 )
             for d in ksets:
@@ -818,14 +759,13 @@ def update_where(
     from d6tstack_spark.operators.encode import (
         SUB_BLOCK_BITS,
         _hadoop_list_files,
+        _logical_struct,
         _norm_file_uri,
-        _phys_struct,
-        _restore_logical,
         _strip_evolved_unprunable,
-        _zone_keep_condition,
+        _zone_qualifying_paths,
+        compile_where,
         decode_table,
         encode_table,
-        zone_dnf_from_where,
     )
     from d6tstack_spark.plans.checkpoint import (
         _LeaseHeartbeat,
@@ -869,9 +809,7 @@ def update_where(
             )
         # eager validation: analyze the predicate AND every SET expression
         # against the decoded schema now — typos fail here, not mid-rewrite
-        empty = _restore_logical(
-            spark.createDataFrame([], _phys_struct(manifest)), manifest
-        )
+        empty = spark.createDataFrame([], _logical_struct(manifest))
         empty.filter(F.expr(where))
         for c, e in set_exprs.items():
             empty.select(F.expr(e).cast(empty.schema[c].dataType))
@@ -892,39 +830,10 @@ def update_where(
         # degradation: stats-less pre-evolution blocks must not be
         # silently excluded when the predicate can match their null rows)
         affected = paths
-        dnf = zone_dnf_from_where(where, manifest)
-        dnf = _strip_evolved_unprunable(dnf if dnf else None, manifest)
+        cw = compile_where(spark, where, manifest)
+        dnf = _strip_evolved_unprunable(cw.dnf or None, manifest)
         if dnf:
-            stats = spark.read.parquet(*paths)
-            if "vmin_num" in stats.columns:
-                qual_df = None
-                for branch in dnf:
-                    branch_df = None
-                    for bf in branch:
-                        col, keep = _zone_keep_condition(manifest, bf)
-                        s = (
-                            stats.filter(F.col("column") == col)
-                            .filter(keep)
-                            .select(
-                                F.input_file_name().alias("f"), "block_id"
-                            )
-                            .distinct()
-                        )
-                        branch_df = (
-                            s
-                            if branch_df is None
-                            else branch_df.join(s, ["f", "block_id"], "inner")
-                        )
-                    qual_df = (
-                        branch_df
-                        if qual_df is None
-                        else qual_df.unionByName(branch_df)
-                    )
-                qual = {
-                    _norm_file_uri(r[0])
-                    for r in qual_df.select("f").distinct().collect()
-                }
-                affected = [p for p in paths if _norm_file_uri(p) in qual]
+            affected = _zone_qualifying_paths(spark, paths, manifest, dnf)
         if affected:
             # same advisory Bloom-sidecar narrowing as purge targeting
             from d6tstack_spark.plans.bloomidx import bloom_prune_basenames
@@ -933,7 +842,7 @@ def update_where(
                 os.path.basename(_norm_file_uri(p)): p for p in affected
             }
             kept_names = bloom_prune_basenames(
-                spark, state_dir, manifest, where, sorted(base_of)
+                spark, state_dir, manifest, cw, sorted(base_of)
             )
             affected = [base_of[b] for b in kept_names]
         if not affected:

@@ -23,13 +23,19 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 def sniff_jsonl(spark: SparkSession, path: str, sample_lines: int = 1000) -> T.StructType:
     """Schema of one JSONL file from a bounded head sample (metadata-sized
     work: ``sample_lines`` lines, not the file)."""
-    sample = [r[0] for r in spark.read.text(path).limit(sample_lines).collect()]
-    sample = [s for s in sample if s.strip()]
-    if not sample:
-        return T.StructType([])
-    return spark.read.json(
-        spark.sparkContext.parallelize(sample, numSlices=1)
-    ).schema
+    lines = (
+        spark.read.text(path)
+        .limit(sample_lines)
+        .filter(F.length(F.trim("value")) > 0)
+    )
+    # the JVM JSON reader infers straight from the Dataset[String]: no
+    # driver round trip, no Python RDD (which would start a second
+    # Python worker daemon next to the Arrow UDF one)
+    jlines = getattr(lines._jdf, "as")(
+        spark._jvm.org.apache.spark.sql.Encoders.STRING()
+    )
+    jschema = spark._jsparkSession.read().json(jlines).schema()
+    return T._parse_datatype_json_string(jschema.json())
 
 
 # primitive widening lattice for drifting fields: files that disagree on a

@@ -62,19 +62,15 @@ def test_count_star_is_metadata_only(spark, state3):
 
 def test_range_count_prunes_and_proves_allmatch(spark, state3):
     # a boundary in the gap between file ranges proves file 0 all-match
-    # and prunes files 1-2 — no payload read at all. (Boundary-exact
-    # spellings like "seq <= 1199" decode the file holding the boundary
-    # value: the may-match envelopes and the 1-ulp-widened stats are
-    # both deliberately inclusive, so the proof is conservative there —
-    # the count stays exact either way.)
-    rep = fast_count(spark, state3, where="seq <= 1199.5")
-    assert rep["count"] == 1200
-    assert rep["mode"] == "metadata"
-    assert rep["files_pruned"] >= 1
-    assert rep["files_decoded"] == 0
-    rep = fast_count(spark, state3, where="seq <= 1199")
-    assert rep["count"] == 1200
-    assert rep["files_decoded"] == 1  # only the boundary-holding file
+    # and prunes files 1-2 — no payload read at all. Strict bounds on an
+    # integer column are exact (the negation of "seq <= 1199" is
+    # "seq >= 1200"), so the boundary-exact spelling proves it too.
+    for where in ("seq <= 1199.5", "seq <= 1199"):
+        rep = fast_count(spark, state3, where=where)
+        assert rep["count"] == 1200
+        assert rep["mode"] == "metadata"
+        assert rep["files_pruned"] >= 1
+        assert rep["files_decoded"] == 0
     # a range splitting a file decodes only the split file
     rep = fast_count(spark, state3, where="seq >= 600 AND seq < 2400")
     assert rep["count"] == 1800

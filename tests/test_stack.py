@@ -168,6 +168,35 @@ def test_jsonl_stacked_drift_alignment(spark, tmp_path):
     assert sel.columns == ["id", "lang", "filename"]
 
 
+def test_sniff_jsonl_stays_on_the_jvm(spark, tmp_path, monkeypatch):
+    """The schema sample goes straight from the text scan to the JVM JSON
+    reader: no Python RDD (``parallelize`` would start a second Python
+    worker daemon). Blank lines are skipped; an all-blank file sniffs to
+    the empty schema."""
+    import json as _json
+
+    from pyspark import SparkContext
+
+    from d6tstack_spark.sources.jsonl import sniff_jsonl
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("sniff_jsonl built a Python RDD")
+
+    monkeypatch.setattr(SparkContext, "parallelize", refuse)
+    a = tmp_path / "a.jsonl"
+    a.write_text(
+        "\n\n".join(_json.dumps({"id": i, "text": f"t{i}", "score": i})
+                    for i in range(5)) + "\n"
+    )
+    sa = sniff_jsonl(spark, str(a))
+    assert [(f.name, f.dataType.simpleString()) for f in sa.fields] == [
+        ("id", "bigint"), ("score", "bigint"), ("text", "string"),
+    ]
+    blank = tmp_path / "blank.jsonl"
+    blank.write_text("\n  \n")
+    assert sniff_jsonl(spark, str(blank)).fields == []
+
+
 def test_jsonl_failfast_on_corrupt_line(spark, tmp_path):
     import pytest as _p
 

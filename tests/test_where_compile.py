@@ -1,0 +1,176 @@
+"""The Catalyst WHERE compile (``operators.encode.compile_where``) as the
+read verbs use it: literals resolve in the session time zone exactly as
+the row filter reads them, compiling runs no Spark job, and one read
+verb compiles its predicate once."""
+
+from __future__ import annotations
+
+import datetime as dt
+import os
+from contextlib import contextmanager
+from zoneinfo import ZoneInfo
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+
+from d6tstack_spark.operators import encode
+from d6tstack_spark.plans.bloomidx import bloom_prune_basenames, build_bloom_index
+from d6tstack_spark.plans.checkpoint import decode_state, encode_resume, load_manifest
+from d6tstack_spark.plans.fastcount import fast_count
+
+_TZ = "America/Los_Angeles"
+_TS = pa.timestamp("us", tz="UTC")
+
+
+@contextmanager
+def _session_tz(spark, tz: str):
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+
+
+def _local(*args) -> dt.datetime:
+    return dt.datetime(*args, tzinfo=ZoneInfo(_TZ))
+
+
+def test_ts_range_prunes_in_session_time_zone(spark, tmp_path):
+    """4,000 one-minute rows in 250-row blocks. Under a non-UTC session
+    zone a TIMESTAMP literal is local wall time; a bound read as UTC
+    would prune the blocks holding the last 8 hours of matches."""
+    from d6tstack_spark.operators.sinks import write_blocks
+
+    t0 = dt.datetime(2021, 1, 1, tzinfo=dt.timezone.utc)
+    tbl = pa.table(
+        {
+            "k": pa.array(range(4000), pa.int64()),
+            "ts": pa.array(
+                [t0 + dt.timedelta(minutes=i) for i in range(4000)], _TS
+            ),
+        }
+    )
+    src = str(tmp_path / "ts.parquet")
+    pq.write_table(tbl, src, row_group_size=250)
+    blocks, man = encode.encode_parquet_files(
+        spark, src, order_cols=("k",), row_groups_per_split=1
+    )
+    bdir = str(tmp_path / "blocks")
+    write_blocks(blocks, bdir)
+    cut = pa.scalar(_local(2021, 1, 2), _TS)
+    want = tbl.filter(pc.less(tbl["ts"], cut)).column("k").to_pylist()
+    assert len(want) == 1920
+    with _session_tz(spark, _TZ):
+        got = encode.decode_where(
+            spark, bdir, man, "ts < TIMESTAMP '2021-01-02 00:00:00'"
+        )
+        assert sorted(r.k for r in got.select("k").collect()) == want
+
+
+def test_ts_bloom_probe_in_session_time_zone(spark, tmp_path):
+    """Three files with interleaved minutes (every file spans the same
+    range, each minute lives in one file), Bloom-indexed on ``ts``. The
+    equality literal is local wall time: the Bloom must probe the instant
+    the row filter compares against, so exactly the holding file
+    survives and decode_state returns the row."""
+    t0 = _local(2021, 1, 2).astimezone(dt.timezone.utc)
+    tables, paths = [], []
+    for i in range(3):
+        n = 1200
+        tbl = pa.table(
+            {
+                "conv_id": pa.array([f"{'abc'[i]}{j // 6:04d}" for j in range(n)]),
+                "turn_idx": pa.array([j % 6 for j in range(n)], pa.int32()),
+                "ts": pa.array(
+                    [t0 + dt.timedelta(minutes=3 * j + i) for j in range(n)], _TS
+                ),
+            }
+        )
+        p = str(tmp_path / f"src_{i}.parquet")
+        pq.write_table(tbl, p, row_group_size=1200)
+        tables.append(tbl)
+        paths.append(p)
+    sd = str(tmp_path / "state")
+    encode_resume(spark, paths, sd, order_cols=("conv_id", "turn_idx"))
+    build_bloom_index(spark, sd, ["ts"])
+    src = pa.concat_tables(tables)
+    hit = src.filter(pc.equal(src["ts"], pa.scalar(_local(2021, 1, 2, 3, 7), _TS)))
+    want = list(
+        zip(hit.column("conv_id").to_pylist(), hit.column("turn_idx").to_pylist())
+    )
+    assert want == [("b0010", 2)]
+    names = sorted(os.listdir(os.path.join(sd, "blocks")))
+    names = [b for b in names if b.endswith(".parquet")]
+    w = "ts = TIMESTAMP '2021-01-02 03:07:00'"
+    with _session_tz(spark, _TZ):
+        kept = bloom_prune_basenames(spark, sd, load_manifest(sd), w, names)
+        got = decode_state(spark, sd, where=w).select("conv_id", "turn_idx")
+        assert [tuple(r) for r in got.collect()] == want
+    assert len(kept) == 1
+
+
+def _jobs(spark, fn):
+    """(result of ``fn()``, number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("where-compile", "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup("where-compile"))
+
+
+def test_compile_runs_no_spark_job(spark):
+    man = {
+        "k": {"ptype": "i64", "logical": None},
+        "grp": {"ptype": "str", "logical": None},
+        "ts": {"ptype": "i64", "logical": "ts"},
+    }
+    cw, jobs = _jobs(
+        spark,
+        lambda: encode.compile_where(
+            spark,
+            "k IN (1, 2, 3) AND (grp LIKE 'g0%' OR ts < TIMESTAMP '2021-01-02')",
+            man,
+        ),
+    )
+    assert jobs == 0
+    assert cw.dnf == [
+        [("k", 1, 3), ("grp", "g0", b"g1")],
+        [("k", 1, 3), ("ts", None, dt.datetime(2021, 1, 2))],
+    ]
+
+
+def test_read_verbs_compile_once(spark, tmp_path, monkeypatch):
+    """decode_state and fast_count compile their WHERE exactly once: the
+    Bloom probe, the zone DNF, the negation and the projection all read
+    the one result."""
+    tbl = pa.table(
+        {
+            "conv_id": pa.array([f"c{j // 6:04d}" for j in range(1200)]),
+            "turn_idx": pa.array([j % 6 for j in range(1200)], pa.int32()),
+            "seq": pa.array(range(1200), pa.int64()),
+        }
+    )
+    p = str(tmp_path / "src.parquet")
+    pq.write_table(tbl, p, row_group_size=400)
+    sd = str(tmp_path / "state")
+    encode_resume(spark, [p], sd, order_cols=("conv_id", "turn_idx"))
+    build_bloom_index(spark, sd, ["conv_id"])
+    calls = []
+    real = encode.compile_where
+
+    def spy(*args, **kwargs):
+        calls.append(args[1])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(encode, "compile_where", spy)
+    w = "conv_id IN ('c0001', 'c0100') AND seq < 700"
+    got = decode_state(spark, sd, where=w, columns=["turn_idx"]).count()
+    assert (got, calls) == (12, [w])
+    calls.clear()
+    assert fast_count(spark, sd, where=w)["count"] == 12
+    assert calls == [w]

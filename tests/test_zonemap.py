@@ -340,8 +340,10 @@ def test_compound_filter_projection_and_bad_pred(spark, multi_block):
         )
 
 
-def test_zone_predicates_from_where_forms():
-    from d6tstack_spark.operators.encode import zone_predicates_from_where
+def test_zone_dnf_from_where_forms(spark):
+    import datetime as dt
+
+    from d6tstack_spark.operators.encode import compile_where
 
     man = {
         "k": {"ptype": "i64", "logical": None},
@@ -349,118 +351,100 @@ def test_zone_predicates_from_where_forms():
         "ts": {"ptype": "i64", "logical": "ts_ntz"},
         "d": {"ptype": "i32", "logical": "date"},
     }
-    import datetime as dt
 
-    assert zone_predicates_from_where("k >= 10 AND k < 20", man) == [
-        ("k", 10, None), ("k", None, 20),
-    ]
-    assert zone_predicates_from_where("k BETWEEN 5 AND 9", man) == [("k", 5, 9)]
-    assert zone_predicates_from_where("grp = 'g01'", man) == [("grp", "g01", "g01")]
-    assert zone_predicates_from_where("100 <= k", man) == [("k", 100, None)]
-    assert zone_predicates_from_where(
-        "ts >= TIMESTAMP '2020-01-02 03:04:05'", man
-    ) == [("ts", dt.datetime(2020, 1, 2, 3, 4, 5), None)]
-    assert zone_predicates_from_where("d < DATE '2021-06-01'", man) == [
-        ("d", None, dt.date(2021, 6, 1)),
-    ]
-    # conservative skips: OR, IN, functions, unknown columns, type mismatch
-    assert zone_predicates_from_where("k = 1 OR k = 2", man) == []
-    assert zone_predicates_from_where("upper(grp) = 'G'", man) == []
-    assert zone_predicates_from_where("nope = 3", man) == []
-    assert zone_predicates_from_where("grp = 3", man) == []
-    assert zone_predicates_from_where("k IN (1, 7, 2)", man) == [("k", 1, 7)]
-    assert zone_predicates_from_where("grp IN ('b', 'a')", man) == [
-        ("grp", "a", "b"),
-    ]
-    assert zone_predicates_from_where("k IS NULL", man) == [("k", "is_null")]
-    assert zone_predicates_from_where("grp IS NOT NULL", man) == [
-        ("grp", "not_null"),
-    ]
-    assert zone_predicates_from_where("k IN (1, 'x')", man) == []
-    # parenthesized conjunction recurses; OR-group contributes nothing
-    assert zone_predicates_from_where(
-        "(k >= 1 AND grp = 'a') AND (k = 2 OR k = 3)", man
-    ) == [("k", 1, None), ("grp", "a", "a")]
-    # BETWEEN's AND does not split; escaped quote stays one literal
-    assert zone_predicates_from_where(
-        "grp = 'a''nd' AND k BETWEEN 1 AND 2", man
-    ) == [("grp", "a'nd", "a'nd"), ("k", 1, 2)]
+    def dnf(where):
+        return compile_where(spark, where, man).dnf
 
-
-def test_zone_dnf_from_where_forms():
-    from d6tstack_spark.operators.encode import zone_dnf_from_where
-
-    man = {
-        "k": {"ptype": "i64", "logical": None},
-        "grp": {"ptype": "str", "logical": None},
-    }
+    # single conjunctions: comparisons either way round, BETWEEN (two
+    # inclusive bounds), typed literals, IN envelopes, null predicates
+    assert dnf("k >= 10 AND k < 20") == [[("k", 10, None), ("k", None, 19)]]
+    assert dnf("k BETWEEN 5 AND 9") == [[("k", 5, None), ("k", None, 9)]]
+    assert dnf("grp = 'g01'") == [[("grp", "g01", "g01")]]
+    assert dnf("100 <= k") == [[("k", 100, None)]]
+    assert dnf("ts >= TIMESTAMP '2020-01-02 03:04:05'") == [
+        [("ts", dt.datetime(2020, 1, 2, 3, 4, 5), None)],
+    ]
+    assert dnf("d < DATE '2021-06-01'") == [[("d", None, dt.date(2021, 6, 1))]]
+    assert dnf("k IN (1, 7, 2)") == [[("k", 1, 7)]]
+    assert dnf("grp IN ('b', 'a')") == [[("grp", "a", "b")]]
+    assert dnf("k IS NULL") == [[("k", "is_null")]]
+    assert dnf("grp IS NOT NULL") == [[("grp", "not_null")]]
+    # conservative skips: functions, unknown columns, type mismatch, and
+    # a literal ANSI cannot cast (the row filter raises that error)
+    assert dnf("upper(grp) = 'G'") == []
+    assert dnf("nope = 3") == []
+    assert dnf("grp = 3") == []
+    assert dnf("k IN (1, 'x')") == []
+    # an escaped quote stays one literal; BETWEEN's AND does not split
+    assert dnf("grp = 'a''nd' AND k BETWEEN 1 AND 2") == [
+        [("grp", "a'nd", "a'nd"), ("k", 1, None), ("k", None, 2)],
+    ]
     # plain disjunction → one branch per arm
-    assert zone_dnf_from_where("k = 1 OR k = 2", man) == [
-        [("k", 1, 1)], [("k", 2, 2)],
-    ]
+    assert dnf("k = 1 OR k = 2") == [[("k", 1, 1)], [("k", 2, 2)]]
     # AND binds tighter than OR (SQL precedence, no parens needed)
-    assert zone_dnf_from_where(
-        "k >= 1 AND grp = 'a' OR k <= -5", man
-    ) == [[("k", 1, None), ("grp", "a", "a")], [("k", None, -5)]]
+    assert dnf("k >= 1 AND grp = 'a' OR k <= -5") == [
+        [("k", 1, None), ("grp", "a", "a")], [("k", None, -5)],
+    ]
     # conjunction distributes over a parenthesized OR
-    assert zone_dnf_from_where(
-        "k >= 10 AND (grp = 'a' OR grp = 'b')", man
-    ) == [
+    assert dnf("k >= 10 AND (grp = 'a' OR grp = 'b')") == [
         [("k", 10, None), ("grp", "a", "a")],
         [("k", 10, None), ("grp", "b", "b")],
     ]
+    assert dnf("(k >= 1 AND grp = 'a') AND (k = 2 OR k = 3)") == [
+        [("k", 1, None), ("grp", "a", "a"), ("k", 2, 2)],
+        [("k", 1, None), ("grp", "a", "a"), ("k", 3, 3)],
+    ]
     # an unprunable atom inside a conjunction is a TRUE factor...
-    assert zone_dnf_from_where("k > 3 AND k % 2 = 0", man) == [
-        [("k", 3, None)],
-    ]
+    assert dnf("k > 3 AND k % 2 = 0") == [[("k", 4, None)]]
     # ...but poisons a disjunction: rows could match anywhere
-    assert zone_dnf_from_where("k > 3 OR k % 2 = 0", man) == []
-    assert zone_dnf_from_where("k = 1 OR upper(grp) = 'G'", man) == []
-    # a single conjunction matches zone_predicates_from_where's output
-    assert zone_dnf_from_where("k >= 10 AND k < 20", man) == [
-        [("k", 10, None), ("k", None, 20)],
-    ]
+    assert dnf("k > 3 OR k % 2 = 0") == []
+    assert dnf("k = 1 OR upper(grp) = 'G'") == []
     # branch-cap: a 2^7-branch cross product refuses to blow up
     expr = " AND ".join(f"(k = {i} OR grp = 'g{i}')" for i in range(7))
-    assert zone_dnf_from_where(expr, man) == []
+    assert dnf(expr) == []
     # nested parens + mixed arms
-    assert zone_dnf_from_where(
-        "((k BETWEEN 1 AND 3 AND grp IS NULL) OR (k > 100))", man
-    ) == [[("k", 1, 3), ("grp", "is_null")], [("k", 100, None)]]
-    # NOT: atom negation (inclusive-conservative bounds)
-    assert zone_dnf_from_where("NOT k <= 5", man) == [[("k", 5, None)]]
-    assert zone_dnf_from_where("NOT (k BETWEEN 10 AND 20)", man) == [
-        [("k", None, 10)], [("k", 20, None)],
+    assert dnf("((k BETWEEN 1 AND 3 AND grp IS NULL) OR (k > 100))") == [
+        [("k", 1, None), ("k", None, 3), ("grp", "is_null")],
+        [("k", 101, None)],
+    ]
+    # NOT: atom negation (strict integer bounds are the next integer)
+    assert dnf("NOT k <= 5") == [[("k", 6, None)]]
+    assert dnf("NOT (k BETWEEN 10 AND 20)") == [
+        [("k", None, 9)], [("k", 21, None)],
     ]
     # De Morgan: ¬(a OR b) = ¬a AND ¬b; ¬(a AND b) = ¬a OR ¬b
-    assert zone_dnf_from_where("NOT (k < 5 OR k > 100)", man) == [
-        [("k", 5, None), ("k", None, 100)],
-    ]
-    assert zone_dnf_from_where("NOT (NOT k > 7)", man) == [[("k", 7, None)]]
-    assert zone_dnf_from_where("NOT grp IS NULL", man) == [[("grp", "not_null")]]
+    assert dnf("NOT (k < 5 OR k > 100)") == [[("k", 5, None), ("k", None, 100)]]
+    assert dnf("NOT (NOT k > 7)") == [[("k", 8, None)]]
+    assert dnf("NOT grp IS NULL") == [[("grp", "not_null")]]
     # unprunable negations: point complement; poisoned ¬AND arm;
     # unprunable ¬arm inside ¬OR is just a TRUE factor
-    assert zone_dnf_from_where("NOT k = 3", man) == []
-    assert zone_dnf_from_where("NOT (k >= 5 AND grp = 'a')", man) == []
-    assert zone_dnf_from_where(
-        "NOT (k < 5 OR upper(grp) = 'G')", man
-    ) == [[("k", 5, None)]]
+    assert dnf("NOT k = 3") == []
+    assert dnf("NOT (k >= 5 AND grp = 'a')") == []
+    assert dnf("NOT (k < 5 OR upper(grp) = 'G')") == [[("k", 5, None)]]
     # NOT binds tighter than AND
-    assert zone_dnf_from_where("NOT k < 100 AND grp = 'a'", man) == [
+    assert dnf("NOT k < 100 AND grp = 'a'") == [
         [("k", 100, None), ("grp", "a", "a")],
     ]
     # prefix LIKE → [prefix, strict-upper-bound) range; wildcard-free
     # LIKE → equality; interior wildcards and NOT LIKE are unprunable
-    assert zone_dnf_from_where("grp LIKE 'g0%'", man) == [
-        [("grp", "g0", b"g1")],
+    assert dnf("grp LIKE 'g0%'") == [[("grp", "g0", b"g1")]]
+    assert dnf("grp LIKE 'abc'") == [[("grp", "abc", "abc")]]
+    assert dnf("grp LIKE '%x'") == []
+    assert dnf("grp LIKE 'a_c%'") == []
+    assert dnf("NOT grp LIKE 'g0%'") == []
+    assert dnf("k LIKE 'g%'") == []  # non-string col
+
+    # the rest of the compile: columns resolve case-insensitively, IN
+    # value sets survive for the Bloom prober, and the negation widens
+    # with IS NULL for the all-match proof
+    cw = compile_where(spark, "K > 5 AND grp IN ('b', 'a')", man)
+    assert cw.dnf == [[("k", 6, None), ("grp", "a", "b")]]
+    assert cw.columns == ["k", "grp"]
+    assert cw.in_sets == [("grp", ["b", "a"])]
+    assert compile_where(spark, "k > 5", man).not_dnf == [
+        [("k", None, 5)], [("k", "is_null")],
     ]
-    assert zone_dnf_from_where("grp LIKE 'abc'", man) == [
-        [("grp", "abc", "abc")],
-    ]
-    assert zone_dnf_from_where("grp LIKE '%x'", man) == []
-    assert zone_dnf_from_where("grp LIKE 'a_c%'", man) == []
-    assert zone_dnf_from_where("NOT grp LIKE 'g0%'", man) == []
-    assert zone_dnf_from_where("k LIKE 'g%'", man) == []  # non-string col
+    assert compile_where(spark, "nope = 3", man).columns == list(man)
 
 
 @pytest.mark.parametrize("path", ["bulk", "table"])
@@ -594,7 +578,8 @@ def test_null_predicate_pruning(spark, tmp_path, path):
 # --------------------------------------------------------------------------
 # The invariant that matters at 100 TB: zone pruning must NEVER lose a row.
 # Generate predicates from the whole supported grammar (comparisons,
-# BETWEEN, IN-lists, IS [NOT] NULL, AND, parenthesized OR) and compare the
+# BETWEEN, IN-lists, IS [NOT] NULL, AND, parenthesized OR; doubled-quote
+# string literals, any column-name case) and compare the
 # pruned decode's row set against DuckDB evaluating the same SQL text on
 # the original parquet — same rows or the pruning is wrong.
 
@@ -602,36 +587,51 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as hst
 
 _num_lit = hst.integers(min_value=-100, max_value=20_100)
-_grp_lit = hst.integers(min_value=-1, max_value=4).map(lambda i: f"'g{i:02d}'")
+# doubled-quote escapes ('g''01' is the value g'01); no backslashes —
+# DuckDB does not unescape them, Spark does
+_grp_lit = hst.one_of(
+    hst.integers(min_value=-1, max_value=4).map(lambda i: f"'g{i:02d}'"),
+    hst.sampled_from(["'g''01'", "'g01, '"]),
+)
 _cmp_ops = hst.sampled_from(["=", "<", "<=", ">", ">="])
 
 
+def _name(col: str) -> hst.SearchStrategy[str]:
+    """Column spellings both engines resolve case-insensitively."""
+    return hst.sampled_from([col, col.upper(), col.capitalize()])
+
+
 def _simple_pred() -> hst.SearchStrategy[str]:
-    k_cmp = hst.tuples(_cmp_ops, _num_lit).map(lambda t: f"k {t[0]} {t[1]}")
-    k_between = (
-        hst.tuples(_num_lit, _num_lit)
-        .map(sorted)
-        .map(lambda t: f"k BETWEEN {t[0]} AND {t[1]}")
+    k_cmp = hst.tuples(_name("k"), _cmp_ops, _num_lit).map(
+        lambda t: f"{t[0]} {t[1]} {t[2]}"
     )
-    k_in = hst.lists(_num_lit, min_size=1, max_size=4).map(
-        lambda v: f"k IN ({', '.join(map(str, v))})"
+    k_between = hst.tuples(
+        _name("k"), hst.tuples(_num_lit, _num_lit).map(sorted)
+    ).map(lambda t: f"{t[0]} BETWEEN {t[1][0]} AND {t[1][1]}")
+    k_in = hst.tuples(
+        _name("k"), hst.lists(_num_lit, min_size=1, max_size=4)
+    ).map(lambda t: f"{t[0]} IN ({', '.join(map(str, t[1]))})")
+    grp_cmp = hst.tuples(_name("grp"), _cmp_ops, _grp_lit).map(
+        lambda t: f"{t[0]} {t[1]} {t[2]}"
     )
-    grp_cmp = hst.tuples(_cmp_ops, _grp_lit).map(
-        lambda t: f"grp {t[0]} {t[1]}"
-    )
-    grp_in = hst.lists(_grp_lit, min_size=1, max_size=3).map(
-        lambda v: f"grp IN ({', '.join(v)})"
-    )
+    grp_in = hst.tuples(
+        _name("grp"), hst.lists(_grp_lit, min_size=1, max_size=3)
+    ).map(lambda t: f"{t[0]} IN ({', '.join(t[1])})")
     null_p = hst.tuples(
-        hst.sampled_from(["k", "grp", "val"]),
+        hst.sampled_from(["k", "grp", "val"]).flatmap(_name),
         hst.sampled_from(["IS NULL", "IS NOT NULL"]),
     ).map(lambda t: f"{t[0]} {t[1]}")
-    grp_like = hst.sampled_from(
-        ["'g%'", "'g0%'", "'g01%'", "'g01'", "'%1'", "'h%'", "''"]
-    ).map(lambda p: f"grp LIKE {p}")
+    grp_like = hst.tuples(
+        _name("grp"),
+        hst.sampled_from(
+            ["'g%'", "'g0%'", "'g01%'", "'g01'", "'%1'", "'h%'", "''"]
+        ),
+    ).map(lambda t: f"{t[0]} LIKE {t[1]}")
     val_cmp = hst.tuples(
-        _cmp_ops, hst.floats(min_value=0.0, max_value=1.0, width=16)
-    ).map(lambda t: f"val {t[0]} {t[1]!r}")
+        _name("val"),
+        _cmp_ops,
+        hst.floats(min_value=0.0, max_value=1.0, width=16),
+    ).map(lambda t: f"{t[0]} {t[1]} {t[2]!r}")
     return hst.one_of(
         k_cmp, k_between, k_in, grp_cmp, grp_in, null_p, val_cmp, grp_like
     )
@@ -674,24 +674,21 @@ def test_decode_where_matches_duckdb_any_predicate(spark, multi_block, where):
     assert got == want, f"row-set mismatch for WHERE {where}"
 
 
-def test_backslash_literal_disables_pruning():
-    """Spark's parser unescapes backslash sequences inside string literals
-    ('a\\tb' compares against a TAB) while the zone compiler reads raw
-    bytes — a mis-read bound could exclude the block holding the real
-    value. Any backslash in the expression must disable pruning."""
-    from d6tstack_spark.operators.encode import (
-        zone_dnf_from_where,
-        zone_predicates_from_where,
-    )
+def test_backslash_literal_prunes_on_unescaped_value(spark):
+    """Spark's parser unescapes backslash sequences inside string
+    literals ('a\\tb' compares against a TAB); the zone DNF carries the
+    value Catalyst resolved, so it prunes on the TAB, and an escaped
+    quote stays inside its literal instead of splitting conjuncts."""
+    from d6tstack_spark.operators.encode import compile_where
 
     man = {"grp": {"ptype": "str", "logical": None},
            "k": {"ptype": "i64", "logical": None}}
-    assert zone_dnf_from_where(r"grp = 'a\tb'", man) == []
-    assert zone_predicates_from_where(r"grp = 'a\tb'", man) == []
-    # an escaped quote could even mis-split adjacent conjuncts
-    assert zone_dnf_from_where(r"grp = 'a\' AND k > 5' OR k < 0", man) == []
-    # no backslash → pruning still works
-    assert zone_dnf_from_where("k > 5", man) == [[("k", 5, None)]]
+    assert compile_where(spark, r"grp = 'a\tb'", man).dnf == [
+        [("grp", "a\tb", "a\tb")],
+    ]
+    assert compile_where(
+        spark, r"grp = 'a\' AND k > 5' OR k < 0", man
+    ).dnf == [[("grp", "a' AND k > 5", "a' AND k > 5")], [("k", None, -1)]]
 
 
 def test_decode_where_backslash_escape_end_to_end(spark, tmp_path):
