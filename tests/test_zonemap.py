@@ -340,20 +340,25 @@ def test_compound_filter_projection_and_bad_pred(spark, multi_block):
         )
 
 
-def test_zone_dnf_from_where_forms(spark):
-    import datetime as dt
+_WHERE_MAN = {
+    "k": {"ptype": "i64", "logical": None},
+    "grp": {"ptype": "str", "logical": None},
+    "ts": {"ptype": "i64", "logical": "ts_ntz"},
+    "d": {"ptype": "i32", "logical": "date"},
+}
 
+
+def _where_dnf(spark, where):
     from d6tstack_spark.operators.encode import compile_where
 
-    man = {
-        "k": {"ptype": "i64", "logical": None},
-        "grp": {"ptype": "str", "logical": None},
-        "ts": {"ptype": "i64", "logical": "ts_ntz"},
-        "d": {"ptype": "i32", "logical": "date"},
-    }
+    return compile_where(spark, where, _WHERE_MAN).dnf
+
+
+def test_zone_predicates_from_where_forms(spark):
+    import datetime as dt
 
     def dnf(where):
-        return compile_where(spark, where, man).dnf
+        return _where_dnf(spark, where)
 
     # single conjunctions: comparisons either way round, BETWEEN (two
     # inclusive bounds), typed literals, IN envelopes, null predicates
@@ -379,6 +384,16 @@ def test_zone_dnf_from_where_forms(spark):
     assert dnf("grp = 'a''nd' AND k BETWEEN 1 AND 2") == [
         [("grp", "a'nd", "a'nd"), ("k", 1, None), ("k", None, 2)],
     ]
+
+
+def test_zone_dnf_from_where_forms(spark):
+    from d6tstack_spark.operators.encode import compile_where
+
+    man = _WHERE_MAN
+
+    def dnf(where):
+        return _where_dnf(spark, where)
+
     # plain disjunction → one branch per arm
     assert dnf("k = 1 OR k = 2") == [[("k", 1, 1)], [("k", 2, 2)]]
     # AND binds tighter than OR (SQL precedence, no parens needed)
