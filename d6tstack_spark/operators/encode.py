@@ -25,6 +25,8 @@ batches out — no per-row Python (input_hint).
 
 from __future__ import annotations
 
+import logging
+from contextlib import contextmanager
 from typing import Iterator, NamedTuple
 
 import numpy as np
@@ -217,6 +219,25 @@ def build_manifest(schema: T.StructType) -> dict:
     return manifest
 
 
+# TIMESTAMP_NTZ ↔ wall-clock µs since the epoch. Casting through
+# TIMESTAMP would read the session time zone (and shift wall times in a
+# DST gap); NTZ − NTZ and NTZ + day-time interval are zone-free. This is
+# the value pyarrow stores for a naive ``timestamp[us]`` column and the
+# one ``compile_where`` reads from a TIMESTAMP_NTZ literal.
+_NTZ_EPOCH = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
+
+
+def _ntz_micros(c):
+    """TIMESTAMP_NTZ column → wall-clock µs (exact: decimal seconds)."""
+    iv = (c - F.expr(_NTZ_EPOCH)).cast("interval second")
+    return (iv.cast("decimal(18,6)") * 1_000_000).cast("long")
+
+
+def _ntz_from_micros(c):
+    """Wall-clock µs column → TIMESTAMP_NTZ (inverse of ``_ntz_micros``)."""
+    return F.expr(_NTZ_EPOCH) + c * F.expr("INTERVAL '0.000001' SECOND")
+
+
 def _physicalize(df: DataFrame, manifest: dict) -> DataFrame:
     cols = []
     for name, m in manifest.items():
@@ -224,8 +245,7 @@ def _physicalize(df: DataFrame, manifest: dict) -> DataFrame:
         if m["logical"] == "ts":
             c = F.unix_micros(c)
         elif m["logical"] == "ts_ntz":
-            # session TZ is pinned UTC (session.py) so this cast is exact
-            c = F.unix_micros(c.cast("timestamp"))
+            c = _ntz_micros(c)
         elif m["logical"] == "date":
             c = F.unix_date(c)
         elif m["logical"] == "bool":
@@ -241,7 +261,7 @@ def _restore_logical(df: DataFrame, manifest: dict) -> DataFrame:
         if m["logical"] == "ts":
             c = F.timestamp_micros(c)
         elif m["logical"] == "ts_ntz":
-            c = F.timestamp_micros(c).cast("timestamp_ntz")
+            c = _ntz_from_micros(c)
         elif m["logical"] == "date":
             c = F.date_from_unix_date(c)
         elif m["logical"] == "bool":
@@ -1301,8 +1321,13 @@ def _normalize_zone_bound(v, ptype: str, logical: str | None):
     if v is None:
         return None
     if logical in ("ts", "ts_ntz") and isinstance(v, _dt.datetime):
-        epoch = _dt.datetime(1970, 1, 1, tzinfo=v.tzinfo)
-        return (v - epoch) // _dt.timedelta(microseconds=1)
+        # ts: the instant (naive = UTC); ts_ntz: the wall clock as
+        # written, zone dropped — what ``_ntz_micros`` stores
+        if v.tzinfo is not None:
+            if logical == "ts":
+                v = v.astimezone(_dt.timezone.utc)
+            v = v.replace(tzinfo=None)
+        return (v - _dt.datetime(1970, 1, 1)) // _dt.timedelta(microseconds=1)
     if logical == "date" and isinstance(v, _dt.date):
         return (v - _dt.date(1970, 1, 1)).days
     if logical == "bool" and isinstance(v, bool):
@@ -1612,6 +1637,28 @@ _LOGICAL_SPARK_TYPE = {
 }
 
 
+@contextmanager
+def _quiet_query_context_log():
+    """Mute PySpark's query-context loggers, which log every captured JVM
+    error at ERROR with its whole stack trace when the exception is built:
+    ``compile_where`` recovers from such errors (the row filter raises
+    them where they matter). Levels are restored on exit."""
+    from pyspark.logger import PySparkLogger
+
+    loggers = [
+        PySparkLogger.getLogger(n)
+        for n in ("SQLQueryContextLogger", "DataFrameQueryContextLogger")
+    ]
+    levels = [lg.level for lg in loggers]
+    for lg in loggers:
+        lg.setLevel(logging.CRITICAL + 1)
+    try:
+        yield
+    finally:
+        for lg, level in zip(loggers, levels):
+            lg.setLevel(level)
+
+
 def compile_where(spark, where: str, manifest: dict) -> CompiledWhere:
     """SQL boolean expression → zone-map DNF, its negation, the top-level
     IN value sets and the referenced columns, compiled by Catalyst.
@@ -1637,9 +1684,12 @@ def compile_where(spark, where: str, manifest: dict) -> CompiledWhere:
         spark._jsc.emptyRDD(),
         jss.parseDataType(_logical_struct(manifest).json()),
     )
-    try:
-        qe = rel.filter(where).queryExecution()
-    except _JVM_ERRORS:
+    with _quiet_query_context_log():
+        try:
+            qe = rel.filter(where).queryExecution()
+        except _JVM_ERRORS:
+            qe = None
+    if qe is None:
         return CompiledWhere(where, [], [], [], list(manifest))
     by_lower = {c.lower(): c for c in manifest}
 
@@ -1649,20 +1699,21 @@ def compile_where(spark, where: str, manifest: dict) -> CompiledWhere:
     refs = qe.analyzed().references().toSeq()
     used = {col_of(refs.apply(i).name()) for i in range(refs.size())}
     columns = [c for c in manifest if c in used]
-    try:
-        plan, conds = qe.optimizedPlan(), []
-        while plan.children().size() == 1:
-            if plan.nodeName() == "Filter":
-                conds.append(plan.condition())
-            plan = plan.children().head()
-        if plan.children().size() > 1:  # subquery join: prune nothing
-            conds = []
-        trees = [
-            _where_tree(c, json.loads(c.toJSON()), manifest, col_of)
-            for c in conds
-        ]
-    except _JVM_ERRORS:  # e.g. an ANSI cast error while constant folding
-        trees = []
+    with _quiet_query_context_log():
+        try:
+            plan, conds = qe.optimizedPlan(), []
+            while plan.children().size() == 1:
+                if plan.nodeName() == "Filter":
+                    conds.append(plan.condition())
+                plan = plan.children().head()
+            if plan.children().size() > 1:  # subquery join: prune nothing
+                conds = []
+            trees = [
+                _where_tree(c, json.loads(c.toJSON()), manifest, col_of)
+                for c in conds
+            ]
+        except _JVM_ERRORS:  # e.g. an ANSI cast error while constant folding
+            trees = []
     if not trees:
         return CompiledWhere(where, [], [], [], columns)
     # top-level conjuncts of every Filter (a Python UDF splits the Filter)

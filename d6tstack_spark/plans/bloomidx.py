@@ -113,7 +113,9 @@ def _to_physical(value, m: dict):
             return None
         base = value
         if base.tzinfo is not None:
-            base = base.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+            if logical == "ts":  # ts_ntz keeps the wall clock as written
+                base = base.astimezone(_dt.timezone.utc)
+            base = base.replace(tzinfo=None)
         return round(
             (base - _dt.datetime(1970, 1, 1)) / _dt.timedelta(microseconds=1)
         )

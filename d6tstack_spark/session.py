@@ -6,9 +6,9 @@ No side effects at import; safe for ``spark-submit --py-files``.
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
-
 
 def get_spark(
     app_name: str = "d6tstack_spark",
@@ -21,6 +21,28 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
     On a real cluster, pass ``master=None`` with a pre-set spark.master conf
     via spark-submit — the builder only sets master when given/defaulted.
+
+    Python workers fork from the engine's daemon (``d6tstack_spark._daemon``,
+    Spark's ``spark.python.daemon.module`` conf) whenever they can import it:
+
+    - why: every Python task calls ``importlib.invalidate_caches()``, and on
+      Python 3.11 each zip on the worker's ``sys.path`` answers by re-reading
+      its whole central directory: ~37 ms for the 5359-entry ``spark-core``
+      jar and ~28 ms more for its ``/org`` path, 6–7 ms for ``pyspark.zip``
+      and for each of its ~12 cached sub-package paths — 190–270 ms a task,
+      against ~15 ms of work for a small one. The daemon makes that re-read
+      a no-op (SCALE.md §4 has the stage timings);
+    - when: a ``local`` / ``local[N]`` master and the package in a directory
+      the worker sees at start — the working directory, ``PYTHONPATH`` or
+      site-packages. A package shipped only with ``--py-files`` reaches the
+      workers per task, after the daemon starts, so such a session keeps the
+      stock daemon. On a cluster the executors must import
+      ``d6tstack_spark`` at daemon start (installed, or on the executor
+      ``PYTHONPATH``); there pass the conf with ``extra_conf``, which
+      overrides any default here;
+    - a session started outside ``get_spark`` keeps the per-task cost, and
+      so does ``getOrCreate`` on an already-running session, which does not
+      apply the conf.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -40,8 +62,28 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     )
+    if _daemon_importable(master):
+        b = b.config("spark.python.daemon.module", "d6tstack_spark._daemon")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _daemon_importable(master: str) -> bool:
+    """Whether local-mode workers can import the engine's daemon when it
+    starts: Spark runs it as ``python -m``, so its ``sys.path`` holds the
+    working directory, ``PYTHONPATH`` and site-packages — not the
+    ``--py-files`` archives, which each task adds later."""
+    if not (master == "local" or master.startswith("local[")):
+        return False
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    seen = [
+        os.getcwd(),
+        *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+        *site.getsitepackages(),
+    ]
+    return os.path.isdir(root) and any(
+        p and os.path.abspath(p) == root for p in seen
+    )

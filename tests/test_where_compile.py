@@ -1,11 +1,13 @@
 """The Catalyst WHERE compile (``operators.encode.compile_where``) as the
 read verbs use it: literals resolve in the session time zone exactly as
-the row filter reads them, compiling runs no Spark job, and one read
-verb compiles its predicate once."""
+the row filter reads them, TIMESTAMP_NTZ stays wall-clock time under any
+session zone, compiling runs no Spark job and logs no recovered error,
+and one read verb compiles its predicate once."""
 
 from __future__ import annotations
 
 import datetime as dt
+import logging
 import os
 from contextlib import contextmanager
 from zoneinfo import ZoneInfo
@@ -13,6 +15,7 @@ from zoneinfo import ZoneInfo
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+import pytest
 
 from d6tstack_spark.operators import encode
 from d6tstack_spark.plans.bloomidx import bloom_prune_basenames, build_bloom_index
@@ -174,3 +177,104 @@ def test_read_verbs_compile_once(spark, tmp_path, monkeypatch):
     calls.clear()
     assert fast_count(spark, sd, where=w)["count"] == 12
     assert calls == [w]
+
+
+def test_ts_ntz_is_zone_free(spark, tmp_path):
+    """TIMESTAMP_NTZ is wall-clock time. 100 hourly rows plus one wall time
+    in Los Angeles' 2021 DST gap: the stored µs are the same under any
+    session zone (the ones a UTC session and pyarrow write), and blocks a
+    UTC session wrote decode, prune and filter to the same wall times
+    under Los Angeles."""
+    from d6tstack_spark.operators.sinks import write_blocks
+
+    walls = [dt.datetime(2021, 1, 1) + dt.timedelta(hours=i) for i in range(100)]
+    walls.append(dt.datetime(2021, 3, 14, 2, 30))
+    tbl = pa.table(
+        {"k": pa.array(range(101), pa.int64()), "tn": pa.array(walls, pa.timestamp("us"))}
+    )
+    src = str(tmp_path / "ntz.parquet")
+    pq.write_table(tbl, src)
+    want_us = tbl.column("tn").cast(pa.int64()).to_pylist()
+    bdir = str(tmp_path / "blocks")
+    for tz in ("UTC", _TZ):
+        with _session_tz(spark, tz):
+            df = spark.read.parquet(src)
+            man = encode.build_manifest(df.schema)
+            assert man["tn"]["logical"] == "ts_ntz"
+            phys = encode._physicalize(df, man).orderBy("k")
+            assert [r.tn for r in phys.collect()] == want_us
+            if tz == "UTC":
+                blocks, man = encode.encode_table(
+                    df, order_cols=("k",), target_block_rows=25
+                )
+                write_blocks(blocks, bdir)
+    with _session_tz(spark, _TZ):
+        dec = encode.decode_table(spark.read.parquet(bdir), man)
+        assert sorted((r.k, r.tn) for r in dec.collect()) == list(
+            zip(range(101), walls)
+        )
+        got = encode.decode_where(
+            spark, bdir, man, "tn < TIMESTAMP_NTZ '2021-01-02 00:00:00'"
+        )
+        assert sorted(r.k for r in got.select("k").collect()) == list(range(24))
+        gap = encode.decode_where(
+            spark, bdir, man, "tn = TIMESTAMP_NTZ '2021-03-14 02:30:00'"
+        )
+        assert [r.k for r in gap.select("k").collect()] == [100]
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_recovered_compile_logs_no_error(spark, tmp_path):
+    """A WHERE that fails ANSI constant folding compiles to no pruning
+    without an ERROR record from PySpark's query-context loggers, whose
+    levels are unchanged afterwards; the row filter still raises the error
+    when the decode runs."""
+    from pyspark.logger import PySparkLogger
+
+    from d6tstack_spark.operators.sinks import write_blocks
+
+    src = str(tmp_path / "k.parquet")
+    pq.write_table(pa.table({"k": pa.array(range(100), pa.int64())}), src)
+    blocks, man = encode.encode_parquet_files(spark, src, order_cols=("k",))
+    bdir = str(tmp_path / "blocks")
+    write_blocks(blocks, bdir)
+
+    records = []
+    keep = logging.Handler(logging.DEBUG)
+    keep.emit = records.append
+    loggers = [
+        PySparkLogger.getLogger(n)
+        for n in ("SQLQueryContextLogger", "DataFrameQueryContextLogger")
+    ]
+    levels = [lg.level for lg in loggers]
+    for lg in loggers:
+        lg.addHandler(keep)
+    try:
+        cw = encode.compile_where(spark, "k IN (1, 'x')", man)
+    finally:
+        for lg in loggers:
+            lg.removeHandler(keep)
+    assert (cw.dnf, cw.columns) == ([], ["k"])
+    assert [r.getMessage() for r in records if r.levelno >= logging.ERROR] == []
+    assert [lg.level for lg in loggers] == levels
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        encode.decode_where(spark, bdir, man, "k IN (1, 'x')").collect()
+
+
+def test_datetime_bounds_to_stored_micros():
+    """A datetime bound maps to the µs the encoder stores: the instant for
+    TIMESTAMP (naive = UTC), the wall clock as written for TIMESTAMP_NTZ —
+    in the zone-map bound and the Bloom probe alike."""
+    from d6tstack_spark.plans.bloomidx import _to_physical
+
+    wall = dt.datetime(2021, 1, 1)
+    wall_us = 1_609_459_200_000_000
+    local = _local(2021, 1, 1)  # 08:00 UTC
+    for to_us in (
+        lambda v, lg: encode._normalize_zone_bound(v, "i64", lg),
+        lambda v, lg: _to_physical(v, {"logical": lg}),
+    ):
+        assert to_us(wall, "ts") == wall_us
+        assert to_us(local, "ts") == wall_us + 8 * 3600 * 10**6
+        assert to_us(wall, "ts_ntz") == wall_us
+        assert to_us(local, "ts_ntz") == wall_us
