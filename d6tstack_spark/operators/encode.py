@@ -15,9 +15,10 @@ to_parquet_combine, reference combine_csv.py:459-504):
     → blocks DataFrame (binary payload + codec manifest columns)
 
 Decode is the exact inverse; every column round-trips bit-identical
-(null bitmaps, NaN payloads, µs timestamps). Timestamps are held as int64
-µs on the Spark side (F.unix_micros/F.timestamp_micros) so pandas/Arrow
-never coerces them (SURVEY.md §7 "hard parts").
+(null bitmaps, NaN payloads, µs timestamps). Encode holds timestamps as
+int64 µs on the Spark side (F.unix_micros) so pandas/Arrow never coerces
+them (SURVEY.md §7 "hard parts"); decode hands the same µs back as Arrow
+``timestamp[us]``, which Spark takes without a conversion.
 
 All heavy work is vectorized: Arrow batches in, numpy kernels inside, Arrow
 batches out — no per-row Python (input_hint).
@@ -25,7 +26,9 @@ batches out — no per-row Python (input_hint).
 
 from __future__ import annotations
 
+import functools
 import logging
+import re
 from contextlib import contextmanager
 from typing import Iterator, NamedTuple
 
@@ -219,11 +222,12 @@ def build_manifest(schema: T.StructType) -> dict:
     return manifest
 
 
-# TIMESTAMP_NTZ ↔ wall-clock µs since the epoch. Casting through
+# TIMESTAMP_NTZ → wall-clock µs since the epoch. Casting through
 # TIMESTAMP would read the session time zone (and shift wall times in a
-# DST gap); NTZ − NTZ and NTZ + day-time interval are zone-free. This is
-# the value pyarrow stores for a naive ``timestamp[us]`` column and the
-# one ``compile_where`` reads from a TIMESTAMP_NTZ literal.
+# DST gap); NTZ − NTZ is zone-free. This is the value pyarrow stores for
+# a naive ``timestamp[us]`` column, the one ``compile_where`` reads from
+# a TIMESTAMP_NTZ literal, and the one the block decoder hands back to
+# Spark as Arrow ``timestamp[us]`` (``_LOGICAL_ARROW_TYPE``).
 _NTZ_EPOCH = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
 
 
@@ -231,11 +235,6 @@ def _ntz_micros(c):
     """TIMESTAMP_NTZ column → wall-clock µs (exact: decimal seconds)."""
     iv = (c - F.expr(_NTZ_EPOCH)).cast("interval second")
     return (iv.cast("decimal(18,6)") * 1_000_000).cast("long")
-
-
-def _ntz_from_micros(c):
-    """Wall-clock µs column → TIMESTAMP_NTZ (inverse of ``_ntz_micros``)."""
-    return F.expr(_NTZ_EPOCH) + c * F.expr("INTERVAL '0.000001' SECOND")
 
 
 def _physicalize(df: DataFrame, manifest: dict) -> DataFrame:
@@ -250,22 +249,6 @@ def _physicalize(df: DataFrame, manifest: dict) -> DataFrame:
             c = F.unix_date(c)
         elif m["logical"] == "bool":
             c = c.cast("tinyint")
-        cols.append(c.alias(name))
-    return df.select(*cols)
-
-
-def _restore_logical(df: DataFrame, manifest: dict) -> DataFrame:
-    cols = []
-    for name, m in manifest.items():
-        c = F.col(name)
-        if m["logical"] == "ts":
-            c = F.timestamp_micros(c)
-        elif m["logical"] == "ts_ntz":
-            c = _ntz_from_micros(c)
-        elif m["logical"] == "date":
-            c = F.date_from_unix_date(c)
-        elif m["logical"] == "bool":
-            c = c.cast("boolean")
         cols.append(c.alias(name))
     return df.select(*cols)
 
@@ -889,8 +872,7 @@ def encode_parquet_files(
 
 def _null_arrow_type(m: dict) -> pa.DataType:
     """Arrow type for a null-padded column of manifest entry ``m`` on the
-    PHYSICAL side (logical restore happens later, so ts/date/bool pads are
-    int columns here)."""
+    PHYSICAL (encode) side: ts/date/bool pads are int columns here."""
     if m["ptype"] != "any":
         return _PHYS_ARROW_TYPE[m["ptype"]]
     from pyspark.sql.pandas.types import to_arrow_type
@@ -898,8 +880,23 @@ def _null_arrow_type(m: dict) -> pa.DataType:
     return to_arrow_type(T._parse_datatype_string(m["logical"]))
 
 
+# what the block decoder emits for the physicalized logical types: the
+# Arrow types Spark reads as TIMESTAMP, TIMESTAMP_NTZ, DATE and BOOLEAN.
+# The timestamp and date casts reinterpret the int64/int32 buffers
+# (zero-copy); bool repacks the int8 0/1 values into a bitmap. Spark
+# takes the stored µs as they are, so no session time zone is read.
+_LOGICAL_ARROW_TYPE = {
+    "ts": pa.timestamp("us", tz="UTC"),
+    "ts_ntz": pa.timestamp("us"),
+    "date": pa.date32(),
+    "bool": pa.bool_(),
+}
+
+
 def _decode_one_block(rows: list[dict], manifest: dict) -> pa.Table:
-    """Decode one block's rows into a table with the manifest's columns.
+    """Decode one block's rows into a table with the manifest's columns,
+    in manifest order and in their logical Arrow types
+    (``_LOGICAL_ARROW_TYPE``; other columns keep their physical type).
 
     Schema evolution: a column marked ``evolved`` in the manifest was added
     to the state dir after this block may have been written — if the block
@@ -928,16 +925,14 @@ def _decode_one_block(rows: list[dict], manifest: dict) -> pa.Table:
         ptype = m["ptype"]
         n = r["n_rows"]
         if ptype == "any" or r["codec"] == "arrow":
-            arrays[name] = _decode_arrow_fallback(r["payload"])
-            continue
-        if ptype in ("f32list", "f64list"):
+            arr = _decode_arrow_fallback(r["payload"])
+        elif ptype in ("f32list", "f64list"):
             from d6tstack_spark.codecs.blocks import decode_block_floatlist
 
-            arrays[name] = decode_block_floatlist(
+            arr = decode_block_floatlist(
                 r["payload"], r["params"], n, r["null_count"], ptype
             )
-            continue
-        if ptype in ("str", "bin"):
+        elif ptype in ("str", "bin"):
             # arrow-native fast path: no per-row python in string decode
             arr = decode_block_arrow(
                 r["payload"], r["params"], r["codec"], n, r["null_count"], ptype
@@ -950,7 +945,8 @@ def _decode_one_block(rows: list[dict], manifest: dict) -> pa.Table:
             )
             mask = None if valid.all() else ~valid
             arr = pa.array(values, type=_PHYS_ARROW_TYPE[ptype], mask=mask)
-        arrays[name] = arr
+        logical = _LOGICAL_ARROW_TYPE.get(m["logical"])
+        arrays[name] = arr if logical is None else arr.cast(logical)
     if pad:
         if n is None:
             raise ValueError(
@@ -958,7 +954,10 @@ def _decode_one_block(rows: list[dict], manifest: dict) -> pa.Table:
                 "column to take the row count from"
             )
         for name in pad:
-            arrays[name] = pa.nulls(n, type=_null_arrow_type(manifest[name]))
+            m = manifest[name]
+            arrays[name] = pa.nulls(
+                n, _LOGICAL_ARROW_TYPE.get(m["logical"]) or _null_arrow_type(m)
+            )
     return pa.table(arrays)
 
 
@@ -996,26 +995,56 @@ def _make_decoder(manifest: dict, chunk_rows: int = 65536):
 
 
 def _hadoop_list_files(spark, root: str, suffix: str) -> list[str]:
-    """Recursive file listing via the JVM Hadoop FileSystem API — resolves
-    any scheme the cluster's Hadoop configuration knows (file://, hdfs://,
-    s3a://, ...), unlike a driver-side glob which only sees local paths.
-    Local file:-scheme results are stripped back to plain paths so pyarrow
-    on the executors opens them without URI plumbing; other schemes pass
-    through as URIs for pyarrow's filesystem resolution."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(root)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return []
-    it = fs.listFiles(path, True)
+    """Files under ``root`` (recursively) whose names end in ``suffix``,
+    listed through the JVM Hadoop FileSystem API — it resolves any scheme
+    the cluster's Hadoop configuration knows (file://, hdfs://, s3a://,
+    ...), unlike a driver-side glob which only sees local paths. A
+    missing ``root`` lists nothing. Local file:-scheme results are
+    stripped back to plain paths so pyarrow on the executors opens them
+    without URI plumbing; other schemes pass through as URIs for
+    pyarrow's filesystem resolution.
+
+    Cost: 4 py4j calls to set up, then 3 per directory (its
+    ``listStatus``, joined on the JVM side into one string) and none per
+    file — a flat blocks dir lists in 7 calls however many files it
+    holds. Each entry's text is Hadoop's ``FileStatus`` rendering, which
+    opens with ``{path=<path>; isDirectory=<bool>``; directories are
+    descended into. (py4j cannot hand a ``Path[]`` to an ``Object[]``
+    parameter, so the array is joined through an ``ArrayIterator``.)"""
+    hadoop_path = _jclass(spark, "org.apache.hadoop.fs.Path")
+    todo = [hadoop_path(root)]
+    fs = todo[0].getFileSystem(spark._jsc.hadoopConfiguration())
+    join = _jclass(spark, "org.apache.commons.lang3.StringUtils").join
+    entries = _jclass(
+        spark, "org.apache.commons.collections4.iterators.ArrayIterator"
+    )
     out: list[str] = []
-    while it.hasNext():
-        p = it.next().getPath().toString()
-        if p.endswith(suffix):
-            if p.startswith("file:"):
-                p = p[len("file:"):]
-            out.append(p)
+    while todo:
+        try:
+            listing = join(entries(fs.listStatus(todo.pop())), "\n")
+        except Py4JJavaError as e:
+            if "java.io.FileNotFoundException" not in str(e.java_exception):
+                raise
+            continue  # missing root (or a subdirectory removed meanwhile)
+        for m in _STATUS_ENTRY.finditer(listing):
+            p, is_dir = m.group(1), m.group(2) == "true"
+            if is_dir:
+                todo.append(hadoop_path(p))
+            elif p.endswith(suffix):
+                out.append(p[len("file:"):] if p.startswith("file:") else p)
     return out
+
+
+# one entry of a joined ``FileStatus[]`` listing (``FileStatus.toString``)
+_STATUS_ENTRY = re.compile(r"\{path=(.*?); isDirectory=(true|false)")
+
+
+def _jclass(spark, fqn: str):
+    """A JVM class by its full name, with no py4j round trip (the
+    ``spark._jvm.a.b.C`` form spends one per package segment)."""
+    from py4j.java_gateway import JavaClass
+
+    return JavaClass(fqn, spark._jvm._gateway_client)
 
 
 def map_slices(
@@ -1034,10 +1063,8 @@ def map_slices(
     per task before ``fn`` runs (~0.25 s more per stage on 4 cores), and
     PySpark runs RDD workers in a second ``pyspark.daemon`` pool beside
     the Arrow-UDF one (``nproc`` more worker processes)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     n_tasks = max(1, n_tasks)
-    schema = to_arrow_schema(T._parse_datatype_string(row_schema))
+    schema = _ddl_arrow_schema(row_schema)
     cols = list(zip(*rows)) or [[] for _ in schema]
     work = pa.RecordBatch.from_arrays(
         [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
@@ -1050,6 +1077,16 @@ def map_slices(
                 yield from fn(iter([work.slice(cut[k], cut[k + 1] - cut[k])]))
 
     return spark.range(0, n_tasks, 1, n_tasks).mapInArrow(run, out_schema)
+
+
+@functools.lru_cache(maxsize=None)
+def _ddl_arrow_schema(ddl: str) -> pa.Schema:
+    """Arrow schema of a Spark DDL string. Spark's DDL parser lives in the
+    JVM (a handful of py4j calls a parse), and ``map_slices`` callers pass
+    a few fixed strings, so each is parsed once per process."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(T._parse_datatype_string(ddl))
 
 
 def decode_parquet_blocks(
@@ -1086,6 +1123,16 @@ def decode_parquet_blocks(
     transfer, the 100 TB decode path. ``columns`` prunes at the parquet
     row level (only the selected columns' payload rows are materialized).
 
+    Output: the ``columns`` (default: every manifest column), in that
+    order and in their logical Spark types (:func:`_logical_struct`) —
+    the decoder itself emits Arrow ``timestamp[us, UTC]``,
+    ``timestamp[us]``, ``date32`` and ``bool`` for ts / ts_ntz / date /
+    bool columns, so the plan is the map stage alone, with no cast
+    projection, and TIMESTAMP_NTZ never meets the session time zone.
+    Building the DataFrame takes a fixed number of py4j calls however
+    many files there are: the listing's 7 plus PySpark's ~29 for
+    ``mapInArrow`` over ``spark.range``.
+
     Listing goes through the Hadoop FileSystem API (scheme-agnostic:
     file://, hdfs://, s3a://, ... — whatever the cluster's Hadoop conf can
     resolve), and executors read via pyarrow URI resolution. The per-file
@@ -1098,7 +1145,7 @@ def decode_parquet_blocks(
         missing = [c for c in columns if c not in manifest]
         if missing:
             raise ValueError(f"columns not in manifest: {missing}")
-        manifest = {k: v for k, v in manifest.items() if k in columns}
+        manifest = {c: manifest[c] for c in columns}
         if manifest and all(m.get("evolved") for m in manifest.values()):
             # all-evolved projection: pre-evolution blocks have NO rows for
             # any projected column, so they would silently vanish — decode
@@ -1168,29 +1215,13 @@ def decode_parquet_blocks(
                     ) from e
                 yield from decoder(t.to_batches())
 
-    dec = map_slices(
-        spark, [(p,) for p in paths], len(paths), run, _phys_struct(manifest),
-        "path string",
+    out = map_slices(
+        spark, [(p,) for p in paths], len(paths), run,
+        _logical_struct(manifest), "path string",
     )
-    out = _restore_logical(dec, manifest)
     if final_columns is not None:
         out = out.select(*final_columns)  # drop the anchor column
     return out
-
-
-def _phys_struct(manifest: dict) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(
-                name,
-                _PHYS_SPARK_TYPE[m["ptype"]]
-                if m["ptype"] != "any"
-                else T._parse_datatype_string(m["logical"]),
-                True,
-            )
-            for name, m in manifest.items()
-        ]
-    )
 
 
 def _norm_file_uri(p: str) -> str:
@@ -1518,10 +1549,12 @@ def decode_table(
 ) -> DataFrame:
     """Inverse of :func:`encode_table`: blocks → original logical columns.
 
-    ``columns`` decodes a projection only: the blocks scan is filtered to
-    those column names (predicate pushdown into the blocks parquet — the
-    column-pruning payoff of the columnar block layout; never touches the
-    other columns' payload bytes).
+    ``columns`` decodes a projection only, in that column order: the
+    blocks scan is filtered to those column names (predicate pushdown
+    into the blocks parquet — the column-pruning payoff of the columnar
+    block layout; never touches the other columns' payload bytes).
+    Columns come back in their logical types, as from
+    :func:`decode_parquet_blocks`.
 
     ``block_filter=(col, lo, hi)`` prunes WHOLE BLOCKS via the zone map
     (per-block min/max recorded at encode): only blocks whose [min, max]
@@ -1568,7 +1601,7 @@ def decode_table(
         missing = [c for c in columns if c not in manifest]
         if missing:
             raise ValueError(f"columns not in manifest: {missing}")
-        proj = {k: v for k, v in manifest.items() if k in columns}
+        proj = {c: manifest[c] for c in columns}
         if proj and all(m.get("evolved") for m in proj.values()):
             # all-evolved projection: keep one original column as the row
             # anchor for pre-evolution blocks (see decode_parquet_blocks)
@@ -1579,23 +1612,9 @@ def decode_table(
             final_columns = list(columns)
         manifest = proj
         blocks = blocks.filter(F.col("column").isin(list(manifest)))
-    phys_schema = T.StructType(
-        [
-            T.StructField(
-                name,
-                _PHYS_SPARK_TYPE[m["ptype"]]
-                if m["ptype"] != "any"
-                else T._parse_datatype_string(m["logical"]),
-                True,
-            )
-            for name, m in manifest.items()
-        ]
+    out = blocks.repartition("block_id").mapInArrow(
+        _make_decoder(manifest), _logical_struct(manifest)
     )
-    dec = (
-        blocks.repartition("block_id")
-        .mapInArrow(_make_decoder(manifest), phys_schema)
-    )
-    out = _restore_logical(dec, manifest)
     if final_columns is not None:
         out = out.select(*final_columns)  # drop the anchor column
     return out
@@ -1735,15 +1754,20 @@ def compile_where(spark, where: str, manifest: dict) -> CompiledWhere:
 
 
 def _logical_struct(manifest: dict) -> T.StructType:
-    """The decoded (logical) schema a manifest describes."""
+    """The decoded (logical) schema a manifest describes — the output
+    schema of every block decoder."""
     return T.StructType(
         [
             T.StructField(
-                f.name,
-                _LOGICAL_SPARK_TYPE.get(manifest[f.name]["logical"], f.dataType),
+                name,
+                T._parse_datatype_string(m["logical"])
+                if m["ptype"] == "any"
+                else _LOGICAL_SPARK_TYPE.get(
+                    m["logical"], _PHYS_SPARK_TYPE[m["ptype"]]
+                ),
                 True,
             )
-            for f in _phys_struct(manifest).fields
+            for name, m in manifest.items()
         ]
     )
 
@@ -1938,7 +1962,8 @@ def decode_where(
     )
     need = columns
     if columns is not None:
-        need = list(columns) + [c for c in cw.columns if c not in columns]
+        columns = list(columns)
+        need = columns + [c for c in cw.columns if c not in columns]
     if isinstance(blocks, str):
         dec = decode_parquet_blocks(
             spark, blocks, manifest, columns=need,
@@ -1948,7 +1973,7 @@ def decode_where(
         dec = decode_table(
             blocks, manifest, columns=need, block_filter=cw.dnf or None
         )
-    out = dec.filter(F.expr(cw.where))
-    if columns is not None:
+    out = dec.filter(cw.where)
+    if need != columns:  # drop the columns decoded only for the filter
         out = out.select(*columns)
     return out

@@ -37,15 +37,14 @@ from typing import Iterator
 
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, types as T
+from pyspark.sql import DataFrame
 
 from d6tstack_spark.operators.encode import (
     BLOCKS_SCHEMA,
     _BLOCKS_ARROW,
-    _PHYS_SPARK_TYPE,
     _encode_one_block,
+    _logical_struct,
     _make_decoder,
-    _restore_logical,
     build_manifest_arrow,
     map_slices,
 )
@@ -252,11 +251,9 @@ def roundtrip_parquet_files_sliced(
     per-block index_in pass are pure overhead — pass True for corpora
     like transcripts where the shared table sticks."""
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    from d6tstack_spark.operators.encode import (
-        _decode_one_block,
-        build_manifest_arrow,
-    )
+    from d6tstack_spark.operators.encode import _decode_one_block
 
     if isinstance(paths, str):
         paths = [paths]
@@ -270,7 +267,10 @@ def roundtrip_parquet_files_sliced(
         target_tasks = spark.sparkContext.defaultParallelism
     slices = plan_parquet_slices(paths, target_tasks, min_rows_per_slice)
     encode_fn = _make_slice_encoder(manifest, codec_overrides, order_cols, shared)
-    out_schema = _arrow_phys_schema(manifest)
+    out_struct = _logical_struct(manifest)
+    # decode output may carry e.g. large_string chunks: the cast pins the
+    # exact Arrow types the Spark schema declares
+    out_schema = to_arrow_schema(out_struct)
 
     def fused(batches):
         for block_batch in encode_fn(batches):
@@ -283,34 +283,9 @@ def roundtrip_parquet_files_sliced(
                 for b in tbl.cast(out_schema).to_batches(max_chunksize=65536):
                     yield b
 
-    dec = map_slices(
-        spark, slices, len(slices), fused, phys_spark_schema(manifest),
+    return map_slices(
+        spark, slices, len(slices), fused, out_struct,
         "file_idx int, path string, rg int, start long, nrows long, slice int",
-    )
-    return _restore_logical(dec, manifest)
-
-
-def _arrow_phys_schema(manifest: dict) -> pa.Schema:
-    """Arrow schema matching phys_spark_schema (decode output may carry
-    e.g. large_string/large_binary chunks — cast pins the exact types the
-    Spark schema declares)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return to_arrow_schema(phys_spark_schema(manifest))
-
-
-def phys_spark_schema(manifest: dict) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(
-                name,
-                _PHYS_SPARK_TYPE[m["ptype"]]
-                if m["ptype"] != "any"
-                else T._parse_datatype_string(m["logical"]),
-                True,
-            )
-            for name, m in manifest.items()
-        ]
     )
 
 
@@ -324,5 +299,4 @@ def decode_blocks_local(blocks: DataFrame, manifest: dict) -> DataFrame:
     The completeness invariant is still enforced: a split block raises the
     same "incomplete blocks at decode" error it would on the generic
     path."""
-    dec = blocks.mapInArrow(_make_decoder(manifest), phys_spark_schema(manifest))
-    return _restore_logical(dec, manifest)
+    return blocks.mapInArrow(_make_decoder(manifest), _logical_struct(manifest))

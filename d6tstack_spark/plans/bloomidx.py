@@ -42,7 +42,7 @@ import os
 import struct
 import time
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 BLOOM_K = 6
 DEFAULT_M_BITS = 1 << 21  # 256 KiB per (file, column); fpp<1% @ ~150k NDV
@@ -378,17 +378,50 @@ def load_bloom_meta(state_dir: str) -> dict | None:
         return json.load(f)
 
 
-def _bit_hit(pos: int):
-    """Spark condition: bit ``pos`` of the array<long> bitmap is set.
-    ``shiftright`` is arithmetic, so bit 63 (sign bit of the stored
-    int64 word) reads correctly through the ``& 1``; ``try_element_at``
-    (not ``element_at``) so a malformed row yields NULL — which the
-    miss-filter treats as "not a miss" = file kept — instead of an ANSI
-    out-of-bounds error."""
-    word, bit = pos >> 6, pos & 63
-    return F.expr(
-        f"(shiftright(try_element_at(bloom, {word + 1}), {bit}) & 1) = 1"
+def _miss_sql(col: str, probe: bytes, m_bits: int) -> str:
+    """SQL condition on an index row: it is ``col``'s bitmap and the
+    bitmap rules ``probe`` out (one of its k bits is clear).
+    ``shiftright`` is arithmetic, so bit 63 (sign bit of the stored int64
+    word) reads correctly through the ``& 1``; ``try_element_at`` (not
+    ``element_at``) so a malformed row yields NULL — which reads as "not
+    a miss" = file kept — instead of an ANSI out-of-bounds error."""
+    hit = " AND ".join(
+        f"(shiftright(try_element_at(bloom, {(pos >> 6) + 1}), {pos & 63})"
+        " & 1) = 1"
+        for pos in _positions(probe, m_bits)
     )
+    lit = col.replace("\\", "\\\\").replace("'", "\\'")
+    return f"(`column` = '{lit}' AND NOT ({hit}))"
+
+
+def _probe_misses(
+    spark: SparkSession, state_dir: str, m_bits: int, probes: list[tuple]
+) -> list[set] | None:
+    """For each ``(col, probe bytes)``, the files whose (size-gated) index
+    row for ``col`` rules the probe out — all probes in ONE scan of the
+    sidecar, read under its known schema (no inference job), with every
+    miss flag in one SQL string. Only rows with some miss reach the
+    driver. A file with no row for ``col`` is never in a miss set. None
+    when the sidecar cannot be read."""
+    try:
+        idx = _read_index(spark, _bloom_data_dir(state_dir))
+    except Exception:
+        return None
+    flags = [_miss_sql(col, b, m_bits) for col, b in probes]
+    # a row whose bitmap was written under a different m_bits (a crashed
+    # rebuild left data/meta mismatched) must not testify: size-gate it,
+    # so its file counts as uncovered — conservative in the safe direction
+    rows = (
+        idx.where(f"size(bloom) = {m_bits // 64} AND ({' OR '.join(flags)})")
+        .selectExpr("file", f"array({', '.join(flags)}) AS miss")
+        .collect()
+    )
+    miss: list[set] = [set() for _ in probes]
+    for r in rows:
+        for i, flag in enumerate(r["miss"]):
+            if flag:  # NULL (malformed bitmap) is not a miss
+                miss[i].add(r["file"])
+    return miss
 
 
 _MAX_IN_PROBES = 64
@@ -429,27 +462,10 @@ def bloom_value_keep(
             # NULL or unconvertible value — the Bloom cannot speak for it
             return basenames
         probes.append(b)
-    dd = _bloom_data_dir(state_dir)
-    try:
-        idx = _read_index(spark, dd)
-    except Exception:
+    miss = _probe_misses(spark, state_dir, mb, [(col, b) for b in probes])
+    if miss is None:
         return basenames
-    idx = idx.filter(F.expr(f"size(bloom) = {mb // 64}"))
-    any_hit = None
-    for b in probes:
-        hit = None
-        for pos in _positions(b, mb):
-            c = _bit_hit(pos)
-            hit = c if hit is None else (hit & c)
-        any_hit = hit if any_hit is None else (any_hit | hit)
-    misses = (
-        idx.filter(F.col("column") == col)
-        .filter(~any_hit)
-        .select("file")
-        .distinct()
-        .collect()
-    )
-    dead = {r[0] for r in misses}
+    dead = set.intersection(*miss)  # files where every value misses
     return [b for b in basenames if b not in dead]
 
 
@@ -518,25 +534,11 @@ def bloom_prune_basenames(
     if all(not p for p in branches) and not ins:
         return basenames
 
-    dd = _bloom_data_dir(state_dir)
-    try:
-        idx = _read_index(spark, dd)
-    except Exception:
-        return basenames
-    # a row whose bitmap was written under a different m_bits (a crashed
-    # rebuild left data/meta mismatched) must not testify: size-gate it,
-    # so its file counts as uncovered — conservative in the safe direction
-    idx = idx.filter(F.expr(f"size(bloom) = {mb // 64}"))
-
-    universe = set(basenames)
-
-    # ---- batched probing: all probes evaluate in ONE scan of the
-    # sidecar, read under its known schema (no inference job). Each
-    # index row — one (file, column) bitmap — yields a miss flag per
-    # distinct (column, probe bytes); only rows with some miss reach the
-    # driver, where the DNF/IN set algebra runs. A file misses a probe
-    # iff it HAS a (size-gated) index row for that column whose bitmap
-    # rules the value out; files without a row always pass.
+    # ---- batched probing: each distinct (column, probe bytes) gets one
+    # miss set from a single scan; the DNF/IN set algebra runs on the
+    # driver. A file misses a probe iff it HAS a (size-gated) index row
+    # for that column whose bitmap rules the value out; files without a
+    # row always pass.
     probe_ix: dict[tuple, int] = {}
     for col, probes in ins:
         for b in probes:
@@ -546,30 +548,10 @@ def bloom_prune_basenames(
             probe_ix.setdefault((col, b), len(probe_ix))
     if not probe_ix:
         return basenames
-    flags = []
-    any_miss = None
-    for (col, b), i in probe_ix.items():
-        hit = None
-        for pos in _positions(b, mb):
-            c = _bit_hit(pos)
-            hit = c if hit is None else (hit & c)
-        # NULL (malformed bitmap) is not a miss: the row is dropped or
-        # its flag reads falsy below
-        m = (F.col("column") == col) & (~hit)
-        flags.append(m.alias(f"m{i}"))
-        any_miss = m if any_miss is None else (any_miss | m)
-    cols_needed = sorted({col for col, _ in probe_ix})
-    rows = (
-        idx.filter(F.col("column").isin(cols_needed))
-        .filter(any_miss)
-        .select("file", *flags)
-        .collect()
-    )
-    miss: list[set] = [set() for _ in probe_ix]
-    for r in rows:
-        for i in range(len(probe_ix)):
-            if r[f"m{i}"]:
-                miss[i].add(r["file"])
+    miss = _probe_misses(spark, state_dir, mb, list(probe_ix))
+    if miss is None:
+        return basenames
+    universe = set(basenames)
 
     # top-level IN conjuncts constrain every row: a file where ALL the
     # listed values miss leaves the universe outright

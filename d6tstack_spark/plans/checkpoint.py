@@ -1740,7 +1740,7 @@ def _decode_scoped(
                 block_filter=block_filter, paths=paths,
             )
             if gcw is not None:  # tombstone keep-filter
-                dec = dec.filter(F.expr(gcw.where))
+                dec = dec.filter(gcw.where)
         for t in gksets:  # equality deletes: exact left_anti on the keys
             dec = dec.join(
                 spark.read.parquet(_resolve_keys_path(state_dir, t)),
@@ -1751,8 +1751,8 @@ def _decode_scoped(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    if columns is not None:
-        out = out.select(*columns)
+    if columns is not None and need != list(columns):
+        out = out.select(*columns)  # drop the columns read for the filters
     return out
 
 

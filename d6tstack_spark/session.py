@@ -18,9 +18,12 @@ def get_spark(
 ) -> SparkSession:
     """Session with AQE, Arrow, UTC timezone and shuffle partitions ≈ cores.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    On a real cluster, pass ``master=None`` with a pre-set spark.master conf
-    via spark-submit — the builder only sets master when given/defaulted.
+    ``master=None`` keeps the master of a driver that spark-submit (or the
+    ``pyspark`` shell) started: its ``--master``, or spark-submit's own
+    ``local[*]`` default — so on a cluster, submit with ``--master`` and
+    pass no ``master`` here. A driver PySpark has yet to launch (plain
+    ``python``, pytest) runs on ``local[$SPARK_GRAFT_CPUS]`` (env, default
+    32). A ``master`` passed here always wins.
 
     Python workers fork from the engine's daemon (``d6tstack_spark._daemon``,
     Spark's ``spark.python.daemon.module`` conf) whenever they can import it:
@@ -46,7 +49,7 @@ def get_spark(
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
-        master = f"local[{cpus}]"
+        master = _submitted_master() or f"local[{cpus}]"
     n_shuffle = shuffle_partitions or (
         int(master[6:-1]) if master.startswith("local[") and master[6:-1].isdigit() else cpus
     )
@@ -69,6 +72,18 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _submitted_master() -> str | None:
+    """``spark.master`` of the driver JVM spark-submit (or the ``pyspark``
+    shell) started before this process, which it announces through
+    ``PYSPARK_GATEWAY_PORT``; None when there is no such JVM."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()  # connects; launches nothing
+    return SparkConf().get("spark.master", None)
 
 
 def _daemon_importable(master: str) -> bool:

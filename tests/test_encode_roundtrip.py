@@ -173,9 +173,12 @@ def test_write_blocks_rejects_max_records_per_file(spark, transcripts_path, tmp_
 def test_hadoop_list_files_matches_glob(spark, transcripts_path, tmp_path):
     """The scheme-agnostic Hadoop listing returns the same files as a local
     glob, for both plain and file:-scheme roots (the decode path must work
-    on hdfs://-style URIs a driver-side glob can't resolve)."""
+    on hdfs://-style URIs a driver-side glob can't resolve): files in
+    nested subdirectories are listed, their ``.crc`` and ``_SUCCESS``
+    siblings are not, and a missing root lists nothing."""
     import glob as _glob
     import os as _os
+    import shutil as _shutil
 
     from d6tstack_spark.operators.encode import (
         _hadoop_list_files,
@@ -186,10 +189,19 @@ def test_hadoop_list_files_matches_glob(spark, transcripts_path, tmp_path):
     blocks, _ = encode_parquet_files(spark, transcripts_path)
     out = str(tmp_path / "blocks")
     write_blocks(blocks, out)
+    nested = _os.path.join(out, "sub", "deeper")
+    _os.makedirs(nested)
+    first = sorted(_glob.glob(_os.path.join(out, "*.parquet")))[0]
+    _shutil.copy(first, _os.path.join(nested, "nested.parquet"))
+    for sibling in (".nested.parquet.crc", "_SUCCESS"):
+        open(_os.path.join(nested, sibling), "w").close()
     want = sorted(
         _glob.glob(_os.path.join(out, "**", "*.parquet"), recursive=True)
     )
-    assert sorted(_hadoop_list_files(spark, out, ".parquet")) == want
+    assert _os.path.join(nested, "nested.parquet") in want
+    listed = _hadoop_list_files(spark, out, ".parquet")
+    assert sorted(listed) == want
+    assert not [p for p in listed if p.endswith((".crc", "_SUCCESS"))]
     assert sorted(_hadoop_list_files(spark, f"file://{out}", ".parquet")) == want
     assert _hadoop_list_files(spark, str(tmp_path / "missing"), ".parquet") == []
 

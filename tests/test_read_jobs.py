@@ -124,6 +124,75 @@ def test_read_job_counts(spark, indexed_state):
     assert jobs <= 3, jobs
 
 
+def _py4j_calls(monkeypatch, fn):
+    """(result of ``fn()``, py4j round trips it made from this thread).
+    Deferred JVM-object releases run on py4j's finalizer thread, outside
+    any one call, and are not counted."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    send, me, calls = ClientServerConnection.send_command, threading.get_ident(), []
+
+    def counted(self, command):
+        if threading.get_ident() == me:
+            calls.append(command)
+        return send(self, command)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counted)
+        out = fn()
+    return out, len(calls)
+
+
+def test_read_construction_py4j_calls(spark, tmp_path, monkeypatch):
+    """Building a state-dir read's DataFrame costs a fixed number of py4j
+    round trips, whatever the file count: the blocks listing is one JVM
+    string per directory, and the decoder hands Spark logical types
+    (no per-column cast projection). Pinned on a 1-file state dir and on
+    one with 16 blocks files made by appends."""
+    from d6tstack_spark.operators.encode import _hadoop_list_files
+
+    srcs = []
+    for i in range(16):
+        p = str(tmp_path / f"part_{i}.parquet")
+        pq.write_table(
+            pa.table(
+                {
+                    "conv_id": [f"c{i:02d}{j // 4}" for j in range(40)],
+                    "turn_idx": pa.array([j % 4 for j in range(40)], pa.int32()),
+                    "ts": pa.array(
+                        [i * 10**9 + j for j in range(40)], pa.timestamp("us")
+                    ),
+                    "ok": [j % 3 == 0 for j in range(40)],
+                }
+            ),
+            p,
+        )
+        srcs.append(p)
+    few, many = str(tmp_path / "few"), str(tmp_path / "many")
+    encode_resume(spark, srcs[:1], few)
+    for i in range(len(srcs)):  # one append per source file
+        encode_resume(spark, srcs[: i + 1], many)
+
+    listed, built, n_files = {}, {}, {}
+    for sd in (few, many):
+        bd = os.path.join(sd, "blocks")
+        decode_state(spark, sd)  # warm: first-use parses, imports
+        files, listed[sd] = _py4j_calls(
+            monkeypatch, lambda: _hadoop_list_files(spark, bd, ".parquet")
+        )
+        assert sorted(files) == sorted(
+            os.path.join(bd, f) for f in os.listdir(bd) if f.endswith(".parquet")
+        )
+        n_files[sd] = len(files)
+        dec, built[sd] = _py4j_calls(monkeypatch, lambda: decode_state(spark, sd))
+        assert dec.count() == 40 * (1 if sd == few else 16)
+    assert n_files[few] < 4 and n_files[many] >= 16, n_files
+    assert listed[few] == listed[many], listed
+    assert built[few] == built[many] <= 40, built
+
+
 def test_mixed_legacy_and_zone_files(spark, tmp_path):
     """A blocks dir where one file predates zone maps (its vmin/vmax
     columns dropped) and the others carry them: zone detection is per

@@ -181,26 +181,71 @@ def test_read_verbs_compile_once(spark, tmp_path, monkeypatch):
 
 def test_ts_ntz_is_zone_free(spark, tmp_path):
     """TIMESTAMP_NTZ is wall-clock time. 100 hourly rows plus one wall time
-    in Los Angeles' 2021 DST gap: the stored µs are the same under any
-    session zone (the ones a UTC session and pyarrow write), and blocks a
-    UTC session wrote decode, prune and filter to the same wall times
-    under Los Angeles."""
+    in Los Angeles' 2021 DST gap (and a NULL): the stored µs are the same
+    under any session zone (the ones a UTC session and pyarrow write), and
+    blocks a UTC session wrote decode, prune and filter to the same wall
+    times under Los Angeles. Beside it ride a TIMESTAMP (instants across
+    the DST switch), a DATE and a BOOLEAN column with NULLs: under Los
+    Angeles all four decoders return every value exactly, in the exact
+    Spark types."""
+    from pyspark.sql import types as T
+
+    from d6tstack_spark.operators.encode_sliced import (
+        decode_blocks_local,
+        roundtrip_parquet_files_sliced,
+    )
     from d6tstack_spark.operators.sinks import write_blocks
 
     walls = [dt.datetime(2021, 1, 1) + dt.timedelta(hours=i) for i in range(100)]
-    walls.append(dt.datetime(2021, 3, 14, 2, 30))
+    walls += [dt.datetime(2021, 3, 14, 2, 30), None]
+    n = len(walls)
+    switch = dt.datetime(2021, 3, 14, 9, 30, tzinfo=dt.timezone.utc)
     tbl = pa.table(
-        {"k": pa.array(range(101), pa.int64()), "tn": pa.array(walls, pa.timestamp("us"))}
+        {
+            "k": pa.array(range(n), pa.int64()),
+            "tn": pa.array(walls, pa.timestamp("us")),
+            "ts": pa.array(
+                [None if i % 7 == 3 else switch + dt.timedelta(minutes=7 * i)
+                 for i in range(n)],
+                _TS,
+            ),
+            "d": pa.array(
+                [None if i % 5 == 1 else dt.date(2021, 3, 1) + dt.timedelta(days=i)
+                 for i in range(n)],
+                pa.date32(),
+            ),
+            "b": pa.array(
+                [None if i % 4 == 2 else i % 3 == 0 for i in range(n)], pa.bool_()
+            ),
+        }
     )
     src = str(tmp_path / "ntz.parquet")
     pq.write_table(tbl, src)
     want_us = tbl.column("tn").cast(pa.int64()).to_pylist()
+    want_types = {
+        "k": T.LongType(),
+        "tn": T.TimestampNTZType(),
+        "ts": T.TimestampType(),
+        "d": T.DateType(),
+        "b": T.BooleanType(),
+    }
+
+    def values(t: pa.Table) -> dict:
+        t = t.sort_by("k")
+        return {
+            c: (t[c].cast(pa.int64()) if c in ("tn", "ts") else t[c]).to_pylist()
+            for c in want_types
+        }
+
+    want = values(tbl)
     bdir = str(tmp_path / "blocks")
     for tz in ("UTC", _TZ):
         with _session_tz(spark, tz):
             df = spark.read.parquet(src)
             man = encode.build_manifest(df.schema)
-            assert man["tn"]["logical"] == "ts_ntz"
+            assert [man[c]["logical"] for c in ("tn", "ts", "d", "b")] == [
+                "ts_ntz", "ts", "date", "bool"
+            ]
             phys = encode._physicalize(df, man).orderBy("k")
             assert [r.tn for r in phys.collect()] == want_us
             if tz == "UTC":
@@ -211,8 +256,22 @@ def test_ts_ntz_is_zone_free(spark, tmp_path):
     with _session_tz(spark, _TZ):
         dec = encode.decode_table(spark.read.parquet(bdir), man)
         assert sorted((r.k, r.tn) for r in dec.collect()) == list(
-            zip(range(101), walls)
+            zip(range(n), walls)
         )
+        blocks, _ = encode.encode_table(
+            spark.read.parquet(src), order_cols=("k",), target_block_rows=25
+        )
+        decoders = {
+            "decode_table": dec,
+            "decode_parquet_blocks": encode.decode_parquet_blocks(spark, bdir, man),
+            "decode_blocks_local": decode_blocks_local(blocks, man),
+            "roundtrip_parquet_files_sliced": roundtrip_parquet_files_sliced(
+                spark, src, order_cols=("k",)
+            ),
+        }
+        for name, got in decoders.items():
+            assert {f.name: f.dataType for f in got.schema} == want_types, name
+            assert values(got.toArrow()) == want, name
         got = encode.decode_where(
             spark, bdir, man, "tn < TIMESTAMP_NTZ '2021-01-02 00:00:00'"
         )
