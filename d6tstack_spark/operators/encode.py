@@ -1009,7 +1009,9 @@ def _hadoop_list_files(spark, root: str, suffix: str) -> list[str]:
     file — a flat blocks dir lists in 7 calls however many files it
     holds. Each entry's text is Hadoop's ``FileStatus`` rendering, which
     opens with ``{path=<path>; isDirectory=<bool>``; directories are
-    descended into. (py4j cannot hand a ``Path[]`` to an ``Object[]``
+    descended into, except ``_``- and ``.``-prefixed ones, which hold no
+    published file (a dead writer's ``_temporary``), as in Spark's own
+    file index. (py4j cannot hand a ``Path[]`` to an ``Object[]``
     parameter, so the array is joined through an ``ArrayIterator``.)"""
     hadoop_path = _jclass(spark, "org.apache.hadoop.fs.Path")
     todo = [hadoop_path(root)]
@@ -1029,7 +1031,8 @@ def _hadoop_list_files(spark, root: str, suffix: str) -> list[str]:
         for m in _STATUS_ENTRY.finditer(listing):
             p, is_dir = m.group(1), m.group(2) == "true"
             if is_dir:
-                todo.append(hadoop_path(p))
+                if not p.rstrip("/").rsplit("/", 1)[-1].startswith(("_", ".")):
+                    todo.append(hadoop_path(p))
             elif p.endswith(suffix):
                 out.append(p[len("file:"):] if p.startswith("file:") else p)
     return out
@@ -1096,6 +1099,7 @@ def decode_parquet_blocks(
     columns: list[str] | None = None,
     block_filter: tuple | list | None = None,
     paths: list[str] | None = None,
+    bloom=None,
 ) -> DataFrame:
     """Shuffle-free bulk decode — the inverse twin of
     :func:`encode_parquet_files`.
@@ -1107,19 +1111,23 @@ def decode_parquet_blocks(
     stats rows (parquet column pruning — no payload bytes), derives the
     file's qualifying block ids with :func:`_zone_keep_ids_local`, and
     reads payload only for those blocks; a file with none reads no
-    payload at all. The driver runs no planning job and holds no block-id
-    set: the task closure carries the path list (O(files)) and the DNF,
-    however many of the ~10⁶-10⁷ blocks of a 100 TB table qualify. Whether a file carries zone stats
-    at all is decided per file: a file written before zone maps decodes
-    whole (the caller's exact row filter still applies).
+    payload at all. ``bloom`` (a :class:`~d6tstack_spark.plans.bloomidx.
+    BloomPlan`) is asked first: a file the Bloom index rules out reads
+    neither stats nor payload. The driver runs no planning job and holds
+    no block-id set: the task closure carries the path list (O(files))
+    and the DNF, however many of the ~10⁶-10⁷ blocks of a 100 TB table
+    qualify. Whether a file carries zone stats at all is decided per
+    file: a file written before zone maps decodes whole (the caller's
+    exact row filter still applies).
 
     :func:`decode_table` must repartition by block_id so each task owns
     complete blocks — a full shuffle of the PAYLOAD bytes. But the blocks
     sink (sinks.write_blocks / checkpoint state) writes whole blocks into
     single files, so a per-FILE task already owns complete blocks: the
-    plan is one task per blocks file (:func:`map_slices`, one path per
-    slice — no exchange), each task reads its file with
-    pyarrow directly and decodes — zero shuffle, no JVM↔Python payload
+    plan is one wave of ``min(len(paths), defaultParallelism)`` tasks
+    (:func:`map_files`, contiguous slices of the sorted path list — no
+    exchange), each reading its files with pyarrow directly and decoding
+    them one after another — zero shuffle, no JVM↔Python payload
     transfer, the 100 TB decode path. ``columns`` prunes at the parquet
     row level (only the selected columns' payload rows are materialized).
 
@@ -1130,8 +1138,9 @@ def decode_parquet_blocks(
     bool columns, so the plan is the map stage alone, with no cast
     projection, and TIMESTAMP_NTZ never meets the session time zone.
     Building the DataFrame takes a fixed number of py4j calls however
-    many files there are: the listing's 7 plus PySpark's ~29 for
-    ``mapInArrow`` over ``spark.range``.
+    many files there are: the listing's 7, two for
+    ``defaultParallelism`` and PySpark's ~29 for ``mapInArrow`` over
+    ``spark.range``.
 
     Listing goes through the Hadoop FileSystem API (scheme-agnostic:
     file://, hdfs://, s3a://, ... — whatever the cluster's Hadoop conf can
@@ -1140,23 +1149,7 @@ def decode_parquet_blocks(
     rejects a nonzero spark.sql.files.maxRecordsPerFile) and re-checked at
     decode (incomplete blocks raise)."""
     full_manifest = manifest  # zone filter may target a non-projected column
-    final_columns = None
-    if columns is not None:
-        missing = [c for c in columns if c not in manifest]
-        if missing:
-            raise ValueError(f"columns not in manifest: {missing}")
-        manifest = {c: manifest[c] for c in columns}
-        if manifest and all(m.get("evolved") for m in manifest.values()):
-            # all-evolved projection: pre-evolution blocks have NO rows for
-            # any projected column, so they would silently vanish — decode
-            # one original (non-evolved) anchor column too, to carry their
-            # row counts, and drop it from the final frame
-            anchor = next(
-                k for k, m in full_manifest.items() if not m.get("evolved")
-            )
-            manifest = dict(manifest)
-            manifest[anchor] = full_manifest[anchor]
-            final_columns = list(columns)
+    manifest, final_columns = _decode_projection(manifest, columns)
     if paths is None:
         paths = sorted(_hadoop_list_files(spark, blocks_dir, ".parquet"))
     else:
@@ -1177,13 +1170,13 @@ def decode_parquet_blocks(
     decoder = _make_decoder(manifest)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
         pa.set_cpu_count(1)
         pa.set_io_thread_count(1)
         for b in batches:
             for p in b.column("path").to_pylist():
-                try:
+                if bloom is not None and not bloom.keeps(p):
+                    continue  # the Bloom index rules the file out
+                with _listed_file(p):
                     keep_ids = None
                     if zf is not None:
                         keep_ids = _zone_keep_ids_file(
@@ -1191,37 +1184,77 @@ def decode_parquet_blocks(
                         )
                         if keep_ids is not None and not keep_ids:
                             continue  # no qualifying block in this file
-                    # the keep-ids ride the parquet read as a filter: row
-                    # groups whose block_id stats miss the set never load
-                    # their PAYLOAD bytes (blocks are written contiguously,
-                    # one record batch per block, so id ranges per row
-                    # group are tight) — a selective decode_where reads a
-                    # fraction of even the qualifying files
-                    flt = []
-                    if col_filter:
-                        flt.append(("column", "in", col_filter))
-                    if keep_ids is not None:
-                        flt.append(("block_id", "in", sorted(keep_ids)))
-                    t = pq.read_table(
-                        p, use_threads=False, filters=flt or None
-                    )
-                except FileNotFoundError as e:
-                    raise RuntimeError(
-                        f"blocks dir changed under the running decode: {p} "
-                        "was listed at planning time but is gone at task-read "
-                        "time — another process deleted or rewrote the sink "
-                        "directory mid-job. Each job must own a unique blocks "
-                        "dir for its lifetime."
-                    ) from e
+                    t = _read_blocks(p, col_filter, keep_ids)
                 yield from decoder(t.to_batches())
 
-    out = map_slices(
-        spark, [(p,) for p in paths], len(paths), run,
-        _logical_struct(manifest), "path string",
-    )
+    out = map_files(spark, paths, run, _logical_struct(manifest))
     if final_columns is not None:
         out = out.select(*final_columns)  # drop the anchor column
     return out
+
+
+def _decode_projection(
+    manifest: dict, columns: list[str] | None
+) -> tuple[dict, list[str] | None]:
+    """``(manifest to decode, columns to keep after)`` for a projection;
+    the second is None when the decode already has exactly ``columns``.
+    An all-evolved projection decodes one original (non-evolved) anchor
+    column too: pre-evolution blocks have NO rows for any projected
+    column, so without it they would silently vanish."""
+    if columns is None:
+        return manifest, None
+    missing = [c for c in columns if c not in manifest]
+    if missing:
+        raise ValueError(f"columns not in manifest: {missing}")
+    dec = {c: manifest[c] for c in columns}
+    if not dec or not all(m.get("evolved") for m in dec.values()):
+        return dec, None
+    anchor = next(k for k, m in manifest.items() if not m.get("evolved"))
+    dec[anchor] = manifest[anchor]
+    return dec, list(columns)
+
+
+def map_files(spark, paths: list[str], fn, out_schema) -> DataFrame:
+    """``fn`` over blocks files in one wave: :func:`map_slices` with
+    ``min(len(paths), defaultParallelism)`` tasks, each handed a
+    contiguous slice of ``paths`` as a ``path string`` batch."""
+    n_tasks = min(len(paths), spark.sparkContext.defaultParallelism)
+    return map_slices(
+        spark, [(p,) for p in paths], n_tasks, fn, out_schema, "path string"
+    )
+
+
+@contextmanager
+def _listed_file(p: str):
+    """Report a listed blocks file that vanished before its task read it
+    as what it is, not as a bare FileNotFoundError."""
+    try:
+        yield
+    except FileNotFoundError as e:
+        raise RuntimeError(
+            f"blocks dir changed under the running decode: {p} "
+            "was listed at planning time but is gone at task-read "
+            "time — another process deleted or rewrote the sink "
+            "directory mid-job. Each job must own a unique blocks "
+            "dir for its lifetime."
+        ) from e
+
+
+def _read_blocks(p: str, col_filter: list[str] | None, keep_ids):
+    """One blocks file's rows of ``col_filter`` (None = every column) in
+    blocks ``keep_ids`` (None = every block). The keep-ids ride the
+    parquet read as a filter: row groups whose block_id stats miss the
+    set never load their PAYLOAD bytes (blocks are written contiguously,
+    one record batch per block, so id ranges per row group are tight) —
+    a selective read touches a fraction of even the qualifying files."""
+    import pyarrow.parquet as pq
+
+    flt = []
+    if col_filter:
+        flt.append(("column", "in", col_filter))
+    if keep_ids is not None:
+        flt.append(("block_id", "in", sorted(keep_ids)))
+    return pq.read_table(p, use_threads=False, filters=flt or None)
 
 
 def _norm_file_uri(p: str) -> str:
@@ -1942,6 +1975,7 @@ def decode_where(
     where: "str | CompiledWhere",
     columns: list[str] | None = None,
     paths: list[str] | None = None,
+    bloom=None,
 ) -> DataFrame:
     """The 100 TB slice API: decode only the rows matching a SQL boolean
     expression. :func:`compile_where` turns it into zone-map block
@@ -1954,7 +1988,8 @@ def decode_where(
     :class:`CompiledWhere` a caller already holds for this manifest.
 
     ``blocks`` is a blocks directory (shuffle-free per-file bulk decode)
-    or a blocks DataFrame (shuffled :func:`decode_table` path)."""
+    or a blocks DataFrame (shuffled :func:`decode_table` path); ``bloom``
+    (a Bloom plan of the same predicate) applies to the former only."""
     cw = (
         where
         if isinstance(where, CompiledWhere)
@@ -1967,7 +2002,7 @@ def decode_where(
     if isinstance(blocks, str):
         dec = decode_parquet_blocks(
             spark, blocks, manifest, columns=need,
-            block_filter=cw.dnf or None, paths=paths,
+            block_filter=cw.dnf or None, paths=paths, bloom=bloom,
         )
     else:
         dec = decode_table(

@@ -6,28 +6,42 @@ Zone maps prune by [min, max]: perfect on the clustering key, useless for
 spans the alphabet. This sidecar closes that gap the way Iceberg's Puffin
 blobs do: one Bloom bitmap per (blocks file, column), built by a separate
 maintenance pass (:func:`build_bloom_index` — the encode hot path is
-untouched), stored as parquet ``array<long>`` words under
-``<state>/bloomidx/``. At read time :func:`~d6tstack_spark.plans.
-checkpoint.decode_state` consults it automatically: equality / IN atoms in
-the WHERE's zone DNF probe the bitmaps IN SPARK (``element_at`` +
-shift/mask — no driver-side index scan), and only files the index
-positively rules out are dropped.
+untouched).
+
+Layout: ``<state>/bloomidx/meta.json`` (sizing, columns and the
+``layout`` marker) plus one random-access blob per (blocks file, column)
+at ``bloomidx/<column>/<blocks basename>.bloom``: an 8-byte little-endian
+``n_distinct`` followed by the ``m_bits/64`` little-endian uint64 words of
+the bitmap. Blobs are opened through ``pyarrow.fs``, the same URI
+resolution the blocks reads use. A meta without the marker is the older
+parquet sidecar (``bloomidx/data/``): reads ignore it, and
+:func:`refresh_bloom_index` rebuilds it.
+
+At read time the probe runs inside the decode task
+(:func:`~d6tstack_spark.plans.checkpoint.decode_state`): the driver turns
+the compiled WHERE into a :class:`BloomPlan` — per DNF branch its
+equality probes as bit positions, plus the top-level IN sets — with no
+Spark job and no I/O beyond ``meta.json``, and each task asks
+:meth:`BloomPlan.keeps` about its own file before it reads any stats or
+payload. A probe costs k ``read_at`` calls of one word each per (file,
+probe); a file the plan rules out reads nothing else.
 
 Correctness never depends on the index — it is advisory in every
-direction. Files with no index row (appended after the build, or a
-rewrite's replacements) are always kept; a branch of the DNF with no
-indexed point atom keeps everything; false positives only cost I/O. A
-file a bitmap rules out truly cannot contain the value (no false
-negatives: the build hashes every distinct value of the file). Staleness
-therefore only ever WIDENS the read set; rebuild after heavy churn to
-restore selectivity.
+direction. Files with no blob of the right size (appended after the
+build, a rewrite's replacements, a crashed rebuild under another sizing)
+are always kept; a branch of the DNF with no indexed point atom keeps
+everything; false positives only cost I/O. A file a bitmap rules out truly
+cannot contain the value (no false negatives: the build hashes every
+distinct value of the file). Staleness therefore only ever WIDENS the
+read set; rebuild after heavy churn to restore selectivity.
 
-Scale: the index is ~``m_bits/8`` bytes per (file, column) — at the
-default 2 MiB-bit (256 KiB) sizing, a 100 TB dir with 10⁵ files carries a
-~25 GB sidecar per column, scanned distributedly at probe time (a
-metadata-sized job) and never collected; only the surviving file NAMES
-reach the driver. fpp at the default sizing stays <1% up to ~150k
-distinct values per file.
+Scale: a blob is ``8 + m_bits/8`` bytes — at the default 2 MiB-bit
+(256 KiB) sizing, a 100 TB dir with 10⁵ files stores ~25 GB per column,
+but a point probe reads k = 6 words (48 bytes) per file, spread over the
+decode tasks, so its cost is ~6·10⁵ small reads however large the
+bitmaps are. Refresh finds uncovered files by listing the blob
+directories. fpp at the default sizing stays <1% up to ~150k distinct
+values per file.
 
 Reference analog: d6tstack has no secondary index; this generalizes its
 "sniff once, reuse per file" metadata pattern (csv_sniff_all,
@@ -41,6 +55,8 @@ import json
 import os
 import struct
 import time
+from typing import NamedTuple
+from urllib.parse import quote
 
 from pyspark.sql import SparkSession
 
@@ -48,12 +64,9 @@ BLOOM_K = 6
 DEFAULT_M_BITS = 1 << 21  # 256 KiB per (file, column); fpp<1% @ ~150k NDV
 
 _INDEXABLE_PTYPES = ("str", "bin", "i8", "i16", "i32", "i64")
-
-# one row per (blocks file, column); readers pass it so no scan of the
-# sidecar pays a schema-inference job
-_INDEX_SCHEMA = (
-    "file string, column string, n_distinct long, bloom array<long>"
-)
+_LAYOUT = "blob"  # meta.json marker of the per-(file, column) blob layout
+_BLOB_SUFFIX = ".bloom"
+_MAX_IN_PROBES = 64
 
 
 def _bloom_dir(state_dir: str) -> str:
@@ -64,12 +77,26 @@ def _bloom_meta_path(state_dir: str) -> str:
     return os.path.join(_bloom_dir(state_dir), "meta.json")
 
 
-def _bloom_data_dir(state_dir: str) -> str:
-    return os.path.join(_bloom_dir(state_dir), "data")
+def _blob_root(state_dir: str) -> str:
+    """The bloom dir as a URI ``pyarrow.fs`` resolves (plain paths are
+    made absolute; tasks receive it in their closure)."""
+    d = _bloom_dir(state_dir)
+    return d if "://" in d else os.path.abspath(d)
 
 
-def _read_index(spark: SparkSession, dd: str):
-    return spark.read.schema(_INDEX_SCHEMA).parquet(dd)
+def _blob_fs(root: str):
+    """``(filesystem, path)`` of a bloom dir (a few µs: not cached)."""
+    from pyarrow.fs import FileSystem
+
+    return FileSystem.from_uri(root)
+
+
+def _column_dir(column: str) -> str:
+    return quote(column, safe="")
+
+
+def _blob_size(m_bits: int) -> int:
+    return 8 + m_bits // 8
 
 
 def _positions(data: bytes, m_bits: int) -> list[int]:
@@ -135,6 +162,13 @@ def _probe_bytes(value, m: dict) -> bytes | None:
     return None if phys is None else _canonical_bytes(phys, m)
 
 
+def _write_meta(state_dir: str, meta: dict) -> None:
+    mp = _bloom_meta_path(state_dir)
+    with open(mp + ".tmp", "w") as f:
+        json.dump(meta, f, indent=1)
+    os.replace(mp + ".tmp", mp)
+
+
 def build_bloom_index(
     spark: SparkSession,
     state_dir: str,
@@ -144,14 +178,17 @@ def build_bloom_index(
     """Build (or rebuild) the Bloom sidecar for ``columns`` — one task
     pass over the blocks files (:func:`_index_files`): each task decodes
     only the indexed columns' payloads of its files, hashes the DISTINCT
-    values (cardinality-bounded work), and ORs the per-block bitmaps. One
-    output row per listed (file, column); the whole sidecar is rewritten,
-    so a rebuild also forgets files a rewrite retired.
+    values (cardinality-bounded work), ORs the per-block bitmaps and
+    writes one blob per listed (file, column). A rebuild then deletes the
+    blobs of files no longer listed and of columns no longer indexed, and
+    removes an older parquet sidecar.
 
     Indexable column types: strings, binary, integers (including
     timestamp/date/bool columns, which physicalize to ints). Float and
     list columns are refused — point equality on them is not a pruning
     pattern."""
+    import shutil
+
     from d6tstack_spark.operators.encode import _hadoop_list_files
     from d6tstack_spark.plans.checkpoint import (
         _blocks_dir,
@@ -187,21 +224,28 @@ def build_bloom_index(
     if not paths:
         raise ValueError(f"no blocks parquet files under {bd}")
 
+    old = load_bloom_meta(state_dir)
+    if old is None or old.get("layout") != _LAYOUT:
+        # the parquet sidecar of the older layout (before any blob is
+        # written: a column named "data" would share the directory)
+        shutil.rmtree(os.path.join(_bloom_dir(state_dir), "data"), True)
+    os.makedirs(_bloom_dir(state_dir), exist_ok=True)
     mb = int(m_bits)
-    dd = _bloom_data_dir(state_dir)
-    work = [(p, list(columns)) for p in paths]
-    _index_files(spark, work, manifest, mb).write.mode("overwrite").parquet(dd)
-    meta = {
-        "m_bits": mb,
-        "k": BLOOM_K,
-        "columns": sorted(columns),
-        "built_ts": time.time(),
-    }
-    mp = _bloom_meta_path(state_dir)
-    with open(mp + ".tmp", "w") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(mp + ".tmp", mp)
-    # the build writes a row for every listed (file, column)
+    _index_files(
+        spark, state_dir, [(p, columns) for p in paths], manifest, mb
+    ).collect()
+    _write_meta(
+        state_dir,
+        {
+            "m_bits": mb,
+            "k": BLOOM_K,
+            "columns": sorted(columns),
+            "built_ts": time.time(),
+            "layout": _LAYOUT,
+        },
+    )
+    live = {os.path.basename(p) for p in paths}
+    _drop_stale_blobs(state_dir, columns, live)
     return {"files_indexed": len(paths), "columns": sorted(columns)}
 
 
@@ -210,8 +254,10 @@ def refresh_bloom_index(spark: SparkSession, state_dir: str) -> dict:
     build/refresh — cost scales with the NEW data, not the table (the
     maintenance cadence a streamed or resumed 100 TB dir needs; a full
     :func:`build_bloom_index` is only warranted to also FORGET files a
-    rewrite retired). Columns and sizing come from the recorded meta;
-    already-covered (file, column) rows are never rewritten."""
+    rewrite retired). Columns and sizing come from the recorded meta; the
+    uncovered (file, column) pairs come from a listing of the blob
+    directories, and covered blobs are never rewritten. A sidecar of the
+    older parquet layout is rebuilt in full."""
     from d6tstack_spark.operators.encode import _hadoop_list_files
     from d6tstack_spark.plans.checkpoint import (
         _blocks_dir,
@@ -231,15 +277,16 @@ def refresh_bloom_index(spark: SparkSession, state_dir: str) -> dict:
         )
     columns = list(meta["columns"])
     mb = int(meta["m_bits"])
+    if meta.get("layout") != _LAYOUT:
+        rep = build_bloom_index(spark, state_dir, columns, mb)
+        return {
+            "files_refreshed": rep["files_indexed"],
+            "columns": rep["columns"],
+        }
     bd = _blocks_dir(state_dir)
     paths = sorted(_hadoop_list_files(spark, bd, ".parquet"))
-    dd = _bloom_data_dir(state_dir)
-    covered = {
-        (r[0], r[1])
-        for r in _read_index(spark, dd).select("file", "column").collect()
-    }
-    # a partially-covered file indexes only its missing columns, so the
-    # sidecar stays duplicate-free
+    covered = _covered_pairs(state_dir, columns, mb)
+    # a partially-covered file indexes only its missing columns
     work = []
     for p in paths:
         b = os.path.basename(p)
@@ -248,19 +295,16 @@ def refresh_bloom_index(spark: SparkSession, state_dir: str) -> dict:
             work.append((p, todo))
     if not work:
         return {"files_refreshed": 0, "columns": sorted(columns)}
-    _index_files(spark, work, load_manifest(state_dir), mb).write.mode(
-        "append"
-    ).parquet(dd)
+    manifest = load_manifest(state_dir)
+    _index_files(spark, state_dir, work, manifest, mb).collect()
     meta["built_ts"] = time.time()
-    mp = _bloom_meta_path(state_dir)
-    with open(mp + ".tmp", "w") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(mp + ".tmp", mp)
+    _write_meta(state_dir, meta)
     return {"files_refreshed": len(work), "columns": sorted(columns)}
 
 
 def _index_files(
     spark: SparkSession,
+    state_dir: str,
     work: list[tuple[str, list[str]]],
     manifest: dict,
     mb: int,
@@ -269,15 +313,20 @@ def _index_files(
     of ``work`` (``(path, columns)`` pairs), at most one task per core and
     no exchange. Each task streams its files' column rows for ``columns``
     with pyarrow, decodes the payloads, hashes the DISTINCT values
-    (cardinality-bounded work) and ORs them into one bitmap per (file,
-    column). EVERY listed pair gets a row: an empty part file or a file
-    written before a column existed yields a zero bitmap — the sound
-    record, since no equality probe can match a file holding no value of
-    the column, and a missing row would leave it permanently
-    unprunable."""
+    (cardinality-bounded work), ORs them into one bitmap per (file,
+    column), writes it to a temporary name and renames it into place.
+    EVERY listed pair gets a blob: an empty part file or a file written
+    before a column existed yields a zero bitmap — the sound record, since
+    no equality probe can match a file holding no value of the column, and
+    a missing blob would leave it permanently unprunable. Returns the
+    DataFrame of ``(file, column, n_distinct)`` rows, one per blob; the
+    caller's ``collect`` runs the build as one job."""
     pmeta = {c: dict(manifest[c]) for _, cols in work for c in cols}
+    root = _blob_root(state_dir)
 
     def build(batches):
+        import uuid
+
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -290,6 +339,8 @@ def _index_files(
             decode_block_arrow,
         )
         from d6tstack_spark.operators.encode import _decode_arrow_fallback
+
+        fs, base = _blob_fs(root)
 
         def values(r, ptype):
             n, nc = r["n_rows"], r["null_count"]
@@ -311,6 +362,16 @@ def _index_files(
             )
             return np.unique(vals[valid]).tolist()
 
+        def publish(col, name, n_distinct, words):
+            d = f"{base}/{_column_dir(col)}"
+            fs.create_dir(d, recursive=True)
+            tmp = f"{d}/.{name}.{uuid.uuid4().hex}.tmp"
+            with fs.open_output_stream(tmp, compression=None) as out:
+                out.write(struct.pack("<q", n_distinct))
+                out.write(words.astype("<u8").tobytes())
+            fs.move(tmp, f"{d}/{name}{_BLOB_SUFFIX}")
+
+        out = {"file": [], "column": [], "n_distinct": []}
         for b in batches:
             for path, cols in zip(
                 b.column("path").to_pylist(), b.column("cols").to_pylist()
@@ -344,28 +405,26 @@ def _index_files(
                             s.add(h)
                             for pos in _positions(h, mb):
                                 w[pos >> 6] |= np.uint64(1 << (pos & 63))
-                bits = np.concatenate([words[c] for c in cols])
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([os.path.basename(path)] * len(cols)),
-                        want,
-                        pa.array([len(seen[c]) for c in cols], pa.int64()),
-                        pa.ListArray.from_arrays(
-                            pa.array(
-                                np.arange(len(cols) + 1, dtype=np.int32)
-                                * (mb // 64)
-                            ),
-                            pa.array(bits.view(np.int64)),
-                        ),
-                    ],
-                    names=["file", "column", "n_distinct", "bloom"],
-                )
+                name = os.path.basename(path)
+                for c in cols:
+                    publish(c, name, len(seen[c]), words[c])
+                    out["file"].append(name)
+                    out["column"].append(c)
+                    out["n_distinct"].append(len(seen[c]))
+        yield pa.RecordBatch.from_pydict(
+            out,
+            schema=pa.schema(
+                [("file", pa.string()), ("column", pa.string()),
+                 ("n_distinct", pa.int64())]
+            ),
+        )
 
     from d6tstack_spark.operators.encode import map_slices
 
     n_tasks = min(len(work), spark.sparkContext.defaultParallelism)
     return map_slices(
-        spark, work, n_tasks, build, _INDEX_SCHEMA,
+        spark, work, n_tasks, build,
+        "file string, column string, n_distinct long",
         "path string, cols array<string>",
     )
 
@@ -378,53 +437,199 @@ def load_bloom_meta(state_dir: str) -> dict | None:
         return json.load(f)
 
 
-def _miss_sql(col: str, probe: bytes, m_bits: int) -> str:
-    """SQL condition on an index row: it is ``col``'s bitmap and the
-    bitmap rules ``probe`` out (one of its k bits is clear).
-    ``shiftright`` is arithmetic, so bit 63 (sign bit of the stored int64
-    word) reads correctly through the ``& 1``; ``try_element_at`` (not
-    ``element_at``) so a malformed row yields NULL — which reads as "not
-    a miss" = file kept — instead of an ANSI out-of-bounds error."""
-    hit = " AND ".join(
-        f"(shiftright(try_element_at(bloom, {(pos >> 6) + 1}), {pos & 63})"
-        " & 1) = 1"
-        for pos in _positions(probe, m_bits)
-    )
-    lit = col.replace("\\", "\\\\").replace("'", "\\'")
-    return f"(`column` = '{lit}' AND NOT ({hit}))"
-
-
-def _probe_misses(
-    spark: SparkSession, state_dir: str, m_bits: int, probes: list[tuple]
-) -> list[set] | None:
-    """For each ``(col, probe bytes)``, the files whose (size-gated) index
-    row for ``col`` rules the probe out — all probes in ONE scan of the
-    sidecar, read under its known schema (no inference job), with every
-    miss flag in one SQL string. Only rows with some miss reach the
-    driver. A file with no row for ``col`` is never in a miss set. None
-    when the sidecar cannot be read."""
-    try:
-        idx = _read_index(spark, _bloom_data_dir(state_dir))
-    except Exception:
+def _usable_meta(state_dir: str) -> dict | None:
+    """The meta when reads may probe the sidecar: the blob layout under
+    this module's construction; None otherwise (no pruning)."""
+    meta = load_bloom_meta(state_dir)
+    if meta is None or meta.get("layout") != _LAYOUT:
         return None
-    flags = [_miss_sql(col, b, m_bits) for col, b in probes]
-    # a row whose bitmap was written under a different m_bits (a crashed
-    # rebuild left data/meta mismatched) must not testify: size-gate it,
-    # so its file counts as uncovered — conservative in the safe direction
-    rows = (
-        idx.where(f"size(bloom) = {m_bits // 64} AND ({' OR '.join(flags)})")
-        .selectExpr("file", f"array({', '.join(flags)}) AS miss")
-        .collect()
-    )
-    miss: list[set] = [set() for _ in probes]
-    for r in rows:
-        for i, flag in enumerate(r["miss"]):
-            if flag:  # NULL (malformed bitmap) is not a miss
-                miss[i].add(r["file"])
-    return miss
+    return meta if meta.get("k") == BLOOM_K else None
 
 
-_MAX_IN_PROBES = 64
+def _covered_pairs(state_dir: str, columns, m_bits: int) -> set[tuple]:
+    """``(file basename, column)`` pairs with a blob of the right size —
+    one directory listing per column, no Spark job. A blob of any other
+    size (written under another ``m_bits`` by a crashed rebuild) counts as
+    uncovered, the safe direction."""
+    from pyarrow.fs import FileSelector, FileType
+
+    fs, base = _blob_fs(_blob_root(state_dir))
+    size, n = _blob_size(m_bits), len(_BLOB_SUFFIX)
+    out = set()
+    for c in columns:
+        sel = FileSelector(f"{base}/{_column_dir(c)}", allow_not_found=True)
+        for info in fs.get_file_info(sel):
+            if (
+                info.type == FileType.File
+                and info.base_name.endswith(_BLOB_SUFFIX)
+                and info.size == size
+            ):
+                out.add((info.base_name[:-n], c))
+    return out
+
+
+def bloom_covered_files(state_dir: str, basenames) -> set[str]:
+    """The ``basenames`` whose every indexed column has a usable blob
+    (empty without a usable index) — from the blob listing alone."""
+    meta = _usable_meta(state_dir)
+    if meta is None:
+        return set()
+    cols = meta["columns"]
+    pairs = _covered_pairs(state_dir, cols, int(meta["m_bits"]))
+    return {b for b in basenames if all((b, c) in pairs for c in cols)}
+
+
+def _drop_stale_blobs(state_dir: str, columns, live: set[str]) -> None:
+    """After a rebuild: delete the blob dirs of columns no longer indexed
+    and the blobs (and stray temporaries) of files no longer listed."""
+    from pyarrow.fs import FileSelector, FileType
+
+    fs, base = _blob_fs(_blob_root(state_dir))
+    keep_dirs = {_column_dir(c) for c in columns}
+    keep = {b + _BLOB_SUFFIX for b in live}
+    for d in fs.get_file_info(FileSelector(base)):
+        if d.type != FileType.Directory:
+            continue
+        if d.base_name not in keep_dirs:
+            fs.delete_dir(d.path)
+            continue
+        for info in fs.get_file_info(FileSelector(d.path)):
+            if info.base_name not in keep:
+                fs.delete_file(info.path)
+
+
+class BloomPlan(NamedTuple):
+    """A WHERE's Bloom probes, evaluated per file by :meth:`keeps` in the
+    task that owns the file: bit positions are hashed on the driver, so a
+    task only reads words."""
+
+    root: str  # the bloom dir URI
+    m_bits: int
+    # per DNF branch, its ((column, positions), ...) equality probes;
+    # () when some branch has none (the DNF then rules nothing out)
+    branches: tuple
+    # per top-level IN conjunct: (column, (positions, ...))
+    ins: tuple
+
+    def keeps(self, path: str) -> bool:
+        """Whether blocks file ``path`` (or its basename) may hold a
+        matching row — the one probe: k ``read_at`` calls of one word per
+        probe, the DNF/IN set algebra as a per-file boolean. A (file,
+        column) without a blob of the right size always passes."""
+        fs, base = _blob_fs(self.root)
+        name = path.rstrip("/").rsplit("/", 1)[-1] + _BLOB_SUFFIX
+        blobs: dict = {}
+
+        def may_hold(col, positions) -> bool:
+            if col not in blobs:
+                try:
+                    f = fs.open_input_file(
+                        f"{base}/{_column_dir(col)}/{name}"
+                    )
+                except OSError:
+                    f = None
+                if f is not None and f.size() != _blob_size(self.m_bits):
+                    f.close()
+                    f = None
+                blobs[col] = f
+            f = blobs[col]
+            if f is None:
+                return True
+            for pos in positions:
+                at = 8 + (pos >> 6) * 8
+                word = int.from_bytes(f.read_at(8, at), "little")
+                if not (word >> (pos & 63)) & 1:
+                    return False
+            return True
+
+        try:
+            for col, probes in self.ins:
+                if not any(may_hold(col, p) for p in probes):
+                    return False
+            return not self.branches or any(
+                all(may_hold(c, p) for c, p in br) for br in self.branches
+            )
+        finally:
+            for f in blobs.values():
+                if f is not None:
+                    f.close()
+
+
+def bloom_plan(state_dir: str, manifest: dict, cw) -> BloomPlan | None:
+    """The Bloom plan of a :class:`~d6tstack_spark.operators.encode.
+    CompiledWhere`, or None when the index cannot prune it — no Spark
+    job, no I/O beyond ``meta.json``. Sound under the DNF reading of the
+    predicate: a branch is ruled out for a file only when one of its
+    equality atoms on an indexed column misses; top-level ``IN``
+    conjuncts (a conjunct constrains every matching row) rule a file out
+    when every listed value misses. Range atoms, un-indexed columns,
+    untranslatable values and IN lists longer than ``_MAX_IN_PROBES``
+    contribute no probe. The plan reads the user's predicate only, so
+    every tombstone generation of a read can use it."""
+    meta = _usable_meta(state_dir)
+    if meta is None:
+        return None
+    indexed = set(meta["columns"])
+    mb = int(meta["m_bits"])
+
+    def probe(col, v):
+        b = _probe_bytes(v, manifest[col])
+        return None if b is None else tuple(_positions(b, mb))
+
+    ins = []
+    for col, vals in cw.in_sets:
+        if col not in indexed or len(vals) > _MAX_IN_PROBES:
+            continue
+        ps = [probe(col, v) for v in vals]
+        if all(p is not None for p in ps):
+            ins.append((col, tuple(ps)))
+    # Schema evolution needs no special case: a pre-evolution file carries
+    # a zero bitmap for an evolved column (it decodes the column as
+    # all-null, so no equality atom can match it)
+    branches = []
+    for branch in cw.dnf:
+        probes = []
+        for atom in branch:
+            if len(atom) != 3 or atom[0] not in indexed:
+                continue
+            col, lo, hi = atom
+            if lo is None or lo != hi:
+                continue  # range atom — zone maps handle those
+            p = probe(col, lo)
+            if p is not None:
+                probes.append((col, p))
+        branches.append(tuple(probes))
+    if not all(branches):
+        branches = []  # a branch with no probe keeps every file
+    if not branches and not ins:
+        return None
+    return BloomPlan(_blob_root(state_dir), mb, tuple(branches), tuple(ins))
+
+
+def _keep_job(spark: SparkSession, plan: BloomPlan, basenames: list[str]):
+    """:meth:`BloomPlan.keeps` over ``basenames`` in one ``map_slices`` job;
+    returns the kept ones, order preserved."""
+    import pyarrow as pa
+
+    from d6tstack_spark.operators.encode import map_slices
+
+    def run(batches):
+        for b in batches:
+            names = b.column("file").to_pylist()
+            kept = [n for n in names if plan.keeps(n)]
+            yield pa.RecordBatch.from_pydict(
+                {"file": pa.array(kept, pa.string())}
+            )
+
+    n_tasks = min(len(basenames), spark.sparkContext.defaultParallelism)
+    keep = {
+        r[0]
+        for r in map_slices(
+            spark, [(b,) for b in basenames], n_tasks, run, "file string",
+            "file string",
+        ).collect()
+    }
+    return [b for b in basenames if b in keep]
 
 
 def bloom_value_keep(
@@ -442,31 +647,26 @@ def bloom_value_keep(
     uncovered files and unconvertible values keep everything, and lists
     longer than ``_MAX_IN_PROBES`` skip the probe — same advisory
     contract as everywhere else."""
-    meta = load_bloom_meta(state_dir)
+    meta = _usable_meta(state_dir)
     if (
         meta is None
         or not basenames
-        or meta.get("k") != BLOOM_K
         or col not in set(meta["columns"])
         or col not in manifest
         or not values
         or len(values) > _MAX_IN_PROBES
     ):
         return basenames
-    m = manifest[col]
     mb = int(meta["m_bits"])
     probes = []
     for v in values:
-        b = _probe_bytes(v, m)
+        b = _probe_bytes(v, manifest[col])
         if b is None:
             # NULL or unconvertible value — the Bloom cannot speak for it
             return basenames
-        probes.append(b)
-    miss = _probe_misses(spark, state_dir, mb, [(col, b) for b in probes])
-    if miss is None:
-        return basenames
-    dead = set.intersection(*miss)  # files where every value misses
-    return [b for b in basenames if b not in dead]
+        probes.append(tuple(_positions(b, mb)))
+    plan = BloomPlan(_blob_root(state_dir), mb, (), ((col, tuple(probes)),))
+    return _keep_job(spark, plan, basenames)
 
 
 def bloom_prune_basenames(
@@ -479,21 +679,12 @@ def bloom_prune_basenames(
     """Advisory file pruning for a WHERE clause (a SQL string or the
     :class:`~d6tstack_spark.operators.encode.CompiledWhere` the caller
     already holds): drop basenames the Bloom sidecar proves cannot
-    contain a matching row. Sound under the DNF reading of the
-    predicate — a file survives iff SOME branch remains possible; a
-    branch is ruled out for a file only when one of its equality atoms
-    on an indexed column Bloom-misses in that file's bitmap; top-level
-    ``IN`` conjuncts (a conjunct constrains every matching row)
-    additionally rule a file out when every listed value misses.
-    Everything un-indexed, untranslatable, uncovered or non-equality
-    passes through untouched, and so do IN lists longer than
-    ``_MAX_IN_PROBES``. Returns a subset of ``basenames`` (order
-    preserved); with no index or no usable atom, returns it unchanged."""
-    meta = load_bloom_meta(state_dir)
-    if meta is None or not basenames:
+    contain a matching row (:func:`bloom_plan` semantics), probed by
+    :meth:`BloomPlan.keeps` in one ``map_slices`` job. Returns a subset of
+    ``basenames`` (order preserved); with no index or no usable atom,
+    returns it unchanged with no job."""
+    if not basenames or _usable_meta(state_dir) is None:
         return basenames
-    if meta.get("k") != BLOOM_K:
-        return basenames  # built by a different construction — ignore
     from d6tstack_spark.operators.encode import CompiledWhere, compile_where
 
     cw = (
@@ -501,82 +692,5 @@ def bloom_prune_basenames(
         if isinstance(where, CompiledWhere)
         else compile_where(spark, where, manifest)
     )
-    indexed = set(meta["columns"])
-    ins: list[tuple] = []
-    for col, vals in cw.in_sets:
-        if col not in indexed or len(vals) > _MAX_IN_PROBES:
-            continue
-        probes = [_probe_bytes(v, manifest[col]) for v in vals]
-        if all(b is not None for b in probes):
-            ins.append((col, probes))
-    if not cw.dnf and not ins:
-        return basenames
-    mb = int(meta["m_bits"])
-
-    # per branch: (col, probe bytes) for its usable equality atoms.
-    # Schema evolution needs no special case here: a pre-evolution file
-    # carries a zero bitmap for an evolved column (it decodes the column
-    # as all-null, so no equality atom can match it), and uncovered
-    # (file, column) pairs always pass.
-    branches: list[list[tuple]] = []
-    for branch in cw.dnf:
-        probes: list[tuple] = []
-        for atom in branch:
-            if len(atom) != 3 or atom[0] not in indexed:
-                continue
-            col, lo, hi = atom
-            if lo is None or lo != hi:
-                continue  # range atom — zone maps handle those
-            b = _probe_bytes(lo, manifest[col])
-            if b is not None:
-                probes.append((col, b))
-        branches.append(probes)
-    if all(not p for p in branches) and not ins:
-        return basenames
-
-    # ---- batched probing: each distinct (column, probe bytes) gets one
-    # miss set from a single scan; the DNF/IN set algebra runs on the
-    # driver. A file misses a probe iff it HAS a (size-gated) index row
-    # for that column whose bitmap rules the value out; files without a
-    # row always pass.
-    probe_ix: dict[tuple, int] = {}
-    for col, probes in ins:
-        for b in probes:
-            probe_ix.setdefault((col, b), len(probe_ix))
-    for probes in branches:
-        for col, b in probes:
-            probe_ix.setdefault((col, b), len(probe_ix))
-    if not probe_ix:
-        return basenames
-    miss = _probe_misses(spark, state_dir, mb, list(probe_ix))
-    if miss is None:
-        return basenames
-    universe = set(basenames)
-
-    # top-level IN conjuncts constrain every row: a file where ALL the
-    # listed values miss leaves the universe outright
-    for col, probes in ins:
-        all_miss = None
-        for b in probes:
-            m = miss[probe_ix[(col, b)]]
-            all_miss = set(m) if all_miss is None else (all_miss & m)
-        universe -= all_miss or set()
-    if not universe:
-        return []
-
-    # a file is ruled out of a branch iff ANY of the branch's probes
-    # MISSES in an existing index row; files without a row always pass.
-    # (Stale rows for retired files may land in the miss sets — harmless,
-    # the subtraction below only ever touches the live universe.)
-    alive: set[str] | None = None
-    for probes in branches:
-        ruled_out: set[str] = set()
-        for col, b in probes:
-            ruled_out |= miss[probe_ix[(col, b)]]
-        branch_alive = universe - ruled_out
-        alive = branch_alive if alive is None else (alive | branch_alive)
-        if alive == universe:
-            break  # nothing more prunable — stop probing
-    if alive is None:  # IN constraints only (no usable DNF branch)
-        alive = universe
-    return [b for b in basenames if b in alive]
+    plan = bloom_plan(state_dir, manifest, cw)
+    return basenames if plan is None else _keep_job(spark, plan, basenames)

@@ -1650,20 +1650,19 @@ def decode_state(
         )
         vis, seen = _live_visibility(recs, deletes)
 
-    # one compile serves the Bloom probe, the zone DNF and the projection
+    # one compile serves the Bloom plan, the zone DNF and the projection
     cw = compile_where(spark, where, manifest) if where is not None else None
-    if cw is not None and basenames:
-        # advisory point-lookup pruning: if a Bloom sidecar exists
-        # (plans.bloomidx.build_bloom_index), equality atoms in the WHERE
-        # drop files that provably cannot contain the value — the pruning
-        # zone maps cannot do on non-clustered keys. Uncovered files and
-        # untranslatable predicates pass through; correctness never
-        # depends on the index.
-        from d6tstack_spark.plans.bloomidx import bloom_prune_basenames
+    # advisory point-lookup pruning: if a Bloom sidecar exists
+    # (plans.bloomidx.build_bloom_index), equality atoms in the WHERE let
+    # each decode task skip a file that provably cannot contain the value
+    # — the pruning zone maps cannot do on non-clustered keys. Uncovered
+    # files and untranslatable predicates pass; correctness never
+    # depends on the index.
+    bloom = None
+    if cw is not None:
+        from d6tstack_spark.plans.bloomidx import bloom_plan
 
-        basenames = bloom_prune_basenames(
-            spark, state_dir, manifest, cw, basenames
-        )
+        bloom = bloom_plan(state_dir, manifest, cw)
 
     if not basenames:
         # empty table version (all blocks deleted+purged, or an empty
@@ -1673,18 +1672,17 @@ def decode_state(
             missing = [c for c in columns if c not in manifest]
             if missing:
                 raise ValueError(f"columns not in manifest: {missing}")
-            m = {k: v for k, v in manifest.items() if k in columns}
+            m = {c: manifest[c] for c in columns}
         return spark.createDataFrame([], _logical_struct(m))
 
-    dec = _decode_scoped(
+    return _decode_scoped(
         spark, state_dir, manifest, basenames, vis, seen,
-        columns=columns, block_filter=block_filter, where=cw,
+        columns=columns, block_filter=block_filter, where=cw, bloom=bloom,
         # live reads just listed the blocks dir — skip the per-file
         # exists() fallback probe (10^5 stats on big dirs); snapshot
         # reads keep the live-then-retired resolution
         live_basenames=None if snapshot is not None else set(basenames),
     )
-    return dec
 
 
 def _decode_scoped(
@@ -1698,13 +1696,16 @@ def _decode_scoped(
     block_filter: tuple | list | None = None,
     where=None,
     live_basenames: set | None = None,
+    bloom=None,
 ) -> DataFrame:
     """Decode ``basenames`` (resolved live-first-then-retired) applying
     each visible tombstone only to the files it is sequence-scoped to:
     files group by their applicable-tombstone set
     (:func:`_tombstone_generations`), each group decodes with exactly
     its keep-filter and key anti-joins, and the groups union. ``where``
-    is the caller's predicate as a ``CompiledWhere`` (or None)."""
+    is the caller's predicate as a ``CompiledWhere`` (or None) and
+    ``bloom`` its Bloom plan, which every generation's tasks apply (a
+    generation's predicate is ``where`` AND its keep-filter)."""
     from d6tstack_spark.operators.encode import (
         decode_parquet_blocks,
         decode_where,
@@ -1732,7 +1733,8 @@ def _decode_scoped(
             paths = _resolve_block_paths(state_dir, bs)
         if gcw is not None and block_filter is None:
             dec = decode_where(
-                spark, bd, manifest, gcw, columns=need, paths=paths
+                spark, bd, manifest, gcw, columns=need, paths=paths,
+                bloom=bloom,
             )
         else:
             dec = decode_parquet_blocks(

@@ -101,9 +101,9 @@ def explain_decode(
           "files_after_bloom":  after Bloom point-lookup pruning,
           "files_after_zone":   files with at least one qualifying block
                                 — the files whose payload the decode
-                                reads (every Bloom survivor still gets a
-                                decode task, which finds no qualifying
-                                block in the others and skips them),
+                                reads (the decode tasks visit every file,
+                                and skip the others after the Bloom probe
+                                or the zone check),
           "zone_dnf":           the compiled OR-of-ANDs, or None when the
                                 predicate is unprunable,
           "bloom_columns":      indexed columns consulted (None = no
@@ -153,7 +153,8 @@ def explain_decode(
     # one compile serves both pruning layers and the projection
     cw = compile_where(spark, where, manifest) if where is not None else None
 
-    # layer 2: Bloom sidecar
+    # layer 2: Bloom sidecar — the decode tasks' per-file probe, run here
+    # in one job that returns the surviving names
     meta = load_bloom_meta(state_dir)
     report["bloom_columns"] = meta["columns"] if meta else None
     if cw is not None and basenames:

@@ -10,15 +10,18 @@ Iceberg/Snowflake "metadata-only scan" analog for the block format:
 
 - ``count(*)`` with no predicate and no pending tombstones is a pure
   stats aggregation — O(metadata), zero payload I/O.
-- With a predicate, files are classified three ways:
+- With a predicate, blocks are classified three ways, inside the
+  decode task that owns their file (one Spark job in all):
     * **no-match** — the existing may-match zone DNF prunes them (no
-      block can contain a matching row): contribute 0;
+      block can contain a matching row), or the Bloom index rules out
+      their whole file: contribute 0;
     * **all-match** — the DNF of the predicate's NEGATION, taken from
       the same Catalyst compile (``compile_where``'s ``not_dnf``),
       proves NO row can fail the predicate: contribute their stats row
       count, payload untouched;
-    * **undecided** — decoded through the zone-pruned bulk decode plus
-      the exact row filter, the only payload actually read.
+    * **undecided** — decoded (their referenced columns only) and
+      counted under the exact row filter, the only payload actually
+      read.
   The all-match proof must respect SQL three-valued logic: a row where
   the predicate evaluates NULL matches neither the predicate nor its
   negation, and a translated atom (column vs literal) evaluates NULL
@@ -40,76 +43,139 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from d6tstack_spark.plans.explain import resolve_read_state
 
 
-def _classify_files(
+_TALLY = ("meta_rows", "nblocks", "kept", "undec")
+
+
+def _fused_count(
     spark: SparkSession,
     paths: list[str],
     manifest: dict,
-    may_dnf: list[list[tuple]] | None,
-    neg_dnf: list[list[tuple]] | None,
-) -> list:
-    """One ``mapInArrow`` task per blocks file: classify the file's
-    blocks as pruned (fail the may-match DNF), undecided (also pass the
-    may-fail DNF ``neg_dnf``) or all-match (the rest), and return one
-    tally row per non-empty file — ``i`` (index into ``paths``),
-    ``nblocks``, ``rows``, ``kept``, ``undec`` and ``meta_rows`` (rows
-    of the all-match blocks). A missing DNF keeps every block, and so
-    does a file written before zone maps: such blocks stay kept and
-    undecided, decoded exactly."""
+    cw,
+    bloom,
+) -> dict:
+    """The whole count in one Spark job. Its decode tasks
+    (:func:`~d6tstack_spark.operators.encode.map_files`, one wave) take
+    each file's stats and classify every block in one pass: pruned (it
+    fails the zone may-DNF, or the Bloom plan rules the file out),
+    all-match (the negation ``not_dnf`` cannot hold in it) or undecided.
+    Only the undecided blocks' referenced columns are decoded; beside
+    those rows the task emits one tally row per non-empty file
+    (all-match rows, ``nblocks``, ``kept``, ``undec``). With no
+    predicate (``cw`` None) every block is all-match. A file written
+    before zone maps keeps every block, undecided.
+
+    The sums are observed on a no-op write — an aggregate with an
+    exchange would run as two jobs under AQE — as ``CASE WHEN <tally>
+    THEN <all-match rows> WHEN <where> THEN 1 ELSE 0 END`` (CASE takes
+    its branches lazily, so ``<where>`` never sees a tally row) plus the
+    tally columns' sums."""
+    from pyspark.sql import Observation, types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from d6tstack_spark.operators.encode import (
+        _decode_projection,
+        _listed_file,
+        _logical_struct,
+        _make_decoder,
+        _read_blocks,
         _read_file_stats,
+        _strip_evolved_unprunable,
         _zone_keep_ids_file,
         _zone_task_dnf,
-        map_slices,
+        map_files,
     )
 
-    may_zf = _zone_task_dnf(manifest, may_dnf)
-    neg_zf = _zone_task_dnf(manifest, neg_dnf)
+    may_zf = neg_zf = None
+    dec_manifest: dict = {}  # the referenced columns (all, for none)
+    if cw is not None:
+        may_zf = _zone_task_dnf(
+            manifest, _strip_evolved_unprunable(cw.dnf or None, manifest)
+        )
+        neg_zf = _zone_task_dnf(
+            manifest, _strip_evolved_unprunable(cw.not_dnf or None, manifest)
+        )
+        dec_manifest = _decode_projection(manifest, cw.columns or None)[0]
+    decoder = _make_decoder(dec_manifest)
+    schema = T.StructType(
+        _logical_struct(dec_manifest).fields
+        + [T.StructField(f"__fc_{k}", T.LongType()) for k in _TALLY]
+    )
+    names = schema.names
+    null_types = [f.type for f in to_arrow_schema(schema)][: len(dec_manifest)]
 
     def run(batches):
         import pyarrow as pa
 
         pa.set_cpu_count(1)
         pa.set_io_thread_count(1)
-        out = {
-            k: [] for k in ("i", "nblocks", "rows", "kept", "undec", "meta_rows")
-        }
         for b in batches:
-            for i, p in zip(*(b.column(c).to_pylist() for c in ("i", "path"))):
-                st = _read_file_stats(p)
-                if st.num_rows == 0:
-                    continue  # empty part file: no blocks to classify
-                g = st.group_by("block_id").aggregate([("n_rows", "max")])
-                rows = dict(
-                    zip(
-                        g.column("block_id").to_pylist(),
-                        g.column("n_rows_max").to_pylist(),
+            for p in b.column("path").to_pylist():
+                with _listed_file(p):
+                    st = _read_file_stats(p)
+                    if st.num_rows == 0:
+                        continue  # empty part file: no blocks to classify
+                    g = st.group_by("block_id").aggregate([("n_rows", "max")])
+                    rows = dict(
+                        zip(
+                            g.column("block_id").to_pylist(),
+                            g.column("n_rows_max").to_pylist(),
+                        )
                     )
+
+                    def keep(zf):  # all blocks without a DNF or zone stats
+                        if zf is None:
+                            return set(rows)
+                        ids = _zone_keep_ids_file(st, zf)
+                        return set(rows) if ids is None else ids
+
+                    if bloom is not None and not bloom.keeps(p):
+                        may = set()
+                    else:
+                        may = keep(may_zf)
+                    undec = set() if cw is None else may & keep(neg_zf)
+                    blocks = None
+                    if undec:
+                        blocks = _read_blocks(p, list(dec_manifest), undec)
+                tally = [sum(rows[k] for k in may - undec), len(rows),
+                         len(may), len(undec)]
+                yield pa.RecordBatch.from_arrays(
+                    [pa.nulls(1, ty) for ty in null_types]
+                    + [pa.array([v], pa.int64()) for v in tally],
+                    names=names,
                 )
+                if blocks is None:
+                    continue
+                for db in decoder(blocks.to_batches()):
+                    yield pa.RecordBatch.from_arrays(
+                        db.columns
+                        + [pa.nulls(db.num_rows, pa.int64())] * len(_TALLY),
+                        names=names,
+                    )
 
-                def keep(zf):  # every block without a DNF or zone stats
-                    ids = None if zf is None else _zone_keep_ids_file(st, zf)
-                    return set(rows) if ids is None else ids
-
-                may = keep(may_zf)
-                undec = may & keep(neg_zf)
-                out["i"].append(i)
-                out["nblocks"].append(len(rows))
-                out["rows"].append(sum(rows.values()))
-                out["kept"].append(len(may))
-                out["undec"].append(len(undec))
-                out["meta_rows"].append(sum(rows[k] for k in may - undec))
-        yield pa.RecordBatch.from_pydict(
-            out, schema=pa.schema([(k, pa.int64()) for k in out])
-        )
-
-    return map_slices(
-        spark,
-        list(enumerate(paths)),
-        len(paths),
-        run,
-        "i long, nblocks long, rows long, kept long, undec long, meta_rows long",
-        "i long, path string",
-    ).collect()
+    df = map_files(spark, paths, run, schema)
+    where = "TRUE" if cw is None else f"({cw.where})"
+    obs = Observation()
+    # SQL strings, not Column calls: each pyspark function call costs
+    # about ten py4j round trips, the strings one each
+    df.selectExpr(
+        "*",
+        "CASE WHEN __fc_nblocks IS NOT NULL THEN __fc_meta_rows "
+        f"WHEN {where} THEN 1 ELSE 0 END AS __fc_n",
+    ).observe(
+        obs,
+        F.expr(
+            "named_struct("
+            "'count', sum(__fc_n), "
+            "'blocks_total', sum(__fc_nblocks), "
+            "'blocks_kept', sum(__fc_kept), "
+            "'blocks_decoded', sum(__fc_undec), "
+            "'files_pruned', count_if(__fc_kept = 0), "
+            "'files_metadata_only', "
+            "count_if(__fc_kept > 0 AND __fc_undec = 0), "
+            "'files_decoded', count_if(__fc_undec > 0)) AS fc"
+        ),
+    ).write.format("noop").mode("overwrite").save()
+    return {k: int(v or 0) for k, v in obs.get["fc"].asDict().items()}
 
 
 def fast_count(
@@ -126,7 +192,8 @@ def fast_count(
           "count":               exact count (always equals the decode),
           "mode":                "metadata" | "hybrid" | "fallback",
           "files_total":         resolved blocks files,
-          "files_pruned":        proven to contain no matching row,
+          "files_pruned":        proven to contain no matching row (zone
+                                 maps or the Bloom index),
           "files_metadata_only": proven all-match, counted from stats,
           "files_decoded":       undecided, decoded + exactly filtered,
           "blocks_kept":         blocks surviving may-match pruning,
@@ -136,11 +203,13 @@ def fast_count(
                                  the blocks the proof cannot settle,
         }
 
-    Pending tombstones force ``mode="fallback"`` (the count is still
-    exact — it routes through :func:`decode_state`'s merge-on-read);
-    purge them and the metadata path returns."""
+    The count is ONE Spark job (:func:`_fused_count`): the decode tasks
+    classify, decode the undecided blocks and tally, one wave of at most
+    ``defaultParallelism`` tasks. Pending tombstones force
+    ``mode="fallback"`` (the count is still exact — it routes through
+    :func:`decode_state`'s merge-on-read); purge them and the metadata
+    path returns."""
     from d6tstack_spark.plans.checkpoint import (
-        _blocks_dir,
         _resolve_block_paths,
         decode_state,
     )
@@ -168,64 +237,21 @@ def fast_count(
         return {"count": dec.count(), "mode": "fallback", **report}
 
     paths = _resolve_block_paths(state_dir, basenames)
-    may_dnf = neg_dnf = combined = ref_cols = None
+    cw = bloom = None
     if where is not None:
-        from d6tstack_spark.operators.encode import (
-            _strip_evolved_unprunable,
-            compile_where,
-        )
+        from d6tstack_spark.operators.encode import compile_where
+        from d6tstack_spark.plans.bloomidx import bloom_plan
 
         cw = compile_where(spark, where, manifest)
-        may_dnf = _strip_evolved_unprunable(cw.dnf or None, manifest)
-        ref_cols = cw.columns
-        # all-match proof: no row of a block may fail the predicate
-        neg_dnf = _strip_evolved_unprunable(cw.not_dnf or None, manifest)
-
-        # the undecided blocks decode under may AND may-fail — expressible
-        # as a DNF only via branch products, so cap the blowup (past the
-        # cap the proof is skipped, never wrong)
-        if may_dnf and neg_dnf and len(may_dnf) * len(neg_dnf) <= 64:
-            combined = [mb + nb for mb in may_dnf for nb in neg_dnf]
-        else:
-            neg_dnf = neg_dnf if may_dnf is None else None
-            combined = may_dnf or neg_dnf
-
-    # one job: per-file kept/undecided/all-match block tallies and the
-    # metadata-counted rows, classified in the task from the file's own
-    # stats by the same _zone_keep_ids_file the decode task runs — so the
-    # undecided blocks counted here are exactly the ones decoded below
-    tallies = _classify_files(spark, paths, manifest, may_dnf, neg_dnf)
+        bloom = bloom_plan(state_dir, manifest, cw)
+    got = _fused_count(spark, paths, manifest, cw, bloom)
     if where is None:
         report["files_metadata_only"] = len(basenames)
-        count = sum(t["rows"] for t in tallies)
-        return {"count": count, "mode": "metadata", **report}
-    count = sum(t["meta_rows"] for t in tallies)
-    undec_files = [paths[t["i"]] for t in tallies if t["undec"]]
-    report["files_pruned"] = sum(1 for t in tallies if not t["kept"])
-    report["files_metadata_only"] = sum(
-        1 for t in tallies if t["kept"] and not t["undec"]
-    )
-    report["files_decoded"] = len(undec_files)
-    # block-granular tallies: classification is per BLOCK, so even a
-    # single-file state dir decodes only its undecided blocks
-    report["blocks_total"] = sum(t["nblocks"] for t in tallies)
-    report["blocks_kept"] = sum(t["kept"] for t in tallies)
-    report["blocks_decoded"] = sum(t["undec"] for t in tallies)
-
-    if undec_files:
-        from d6tstack_spark.operators.encode import decode_parquet_blocks
-
-        dec = decode_parquet_blocks(
-            spark,
-            _blocks_dir(state_dir),
-            manifest,
-            columns=ref_cols or None,
-            block_filter=combined,
-            paths=undec_files,
-        )
-        count += dec.filter(F.expr(where)).count()
-    mode = "metadata" if not undec_files else "hybrid"
-    return {"count": count, "mode": mode, **report}
+        return {"count": got["count"], "mode": "metadata", **report}
+    for k in report:
+        report[k] = got.get(k, report[k])
+    mode = "hybrid" if got["files_decoded"] else "metadata"
+    return {"count": got["count"], "mode": mode, **report}
 
 
 def fast_profile(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -97,22 +97,18 @@ def state_info(spark, state_dir: str, with_ndv: bool = False) -> dict:
                 _expired_before(state_dir), snaps[0]["id"]
             ),
         }
-    from d6tstack_spark.plans.bloomidx import load_bloom_meta
+    from d6tstack_spark.plans.bloomidx import (
+        bloom_covered_files,
+        load_bloom_meta,
+    )
 
     bmeta = load_bloom_meta(state_dir)
     paths = _hadoop_list_files(spark, _blocks_dir(state_dir), ".parquet")
     info["n_files"] = len(paths)
     if bmeta is not None:
-        covered = {
-            r[0]
-            for r in spark.read.parquet(
-                os.path.join(state_dir, "bloomidx", "data")
-            )
-            .select("file")
-            .distinct()
-            .collect()
-        }
+        # from the blob listing, no Spark job
         live = {os.path.basename(p) for p in paths}
+        covered = bloom_covered_files(state_dir, live)
         info["bloom_index"] = {
             "columns": bmeta["columns"],
             "m_bits": bmeta["m_bits"],

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 import site
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -46,6 +47,14 @@ def get_spark(
     - a session started outside ``get_spark`` keeps the per-task cost, and
       so does ``getOrCreate`` on an already-running session, which does not
       apply the conf.
+
+    On a ``local`` / ``local[N]`` master the JVM and its Python workers
+    talk over Unix-domain sockets (``spark.python.unix.domain.socket.
+    enabled``): over loopback TCP the first Arrow batch of a task waits
+    out a delayed-ACK stall. On a 4-core host a warm 4-task no-op
+    ``mapInArrow`` collect took 165–171 ms over TCP and 130–147 ms over
+    Unix-domain sockets (medians of 15, two sessions each). See
+    :func:`_unix_socket_dir` for when.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -67,6 +76,10 @@ def get_spark(
     )
     if _daemon_importable(master):
         b = b.config("spark.python.daemon.module", "d6tstack_spark._daemon")
+    sock_dir = _unix_socket_dir(master, extra_conf or {})
+    if sock_dir is not None:
+        b = b.config("spark.python.unix.domain.socket.enabled", "true")
+        b = b.config("spark.python.unix.domain.socket.dir", sock_dir)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
@@ -102,3 +115,24 @@ def _daemon_importable(master: str) -> bool:
     return os.path.isdir(root) and any(
         p and os.path.abspath(p) == root for p in seen
     )
+
+
+# Spark names each worker socket ``<dir>/.<uuid4>.sock``; an AF_UNIX path
+# holds at most 107 bytes before its terminating NUL
+_SOCK_NAME_BYTES = len("/.00000000-0000-0000-0000-000000000000.sock")
+_AF_UNIX_PATH_MAX = 107
+
+
+def _unix_socket_dir(master: str, conf: dict) -> str | None:
+    """The directory local-mode Python workers' Unix-domain sockets go in,
+    or None to keep TCP: any non-local master (executors on other hosts),
+    or a directory too long for Spark's socket names. The directory is
+    the caller's ``spark.python.unix.domain.socket.dir``, else
+    ``tempfile.gettempdir()``."""
+    if not (master == "local" or master.startswith("local[")):
+        return None
+    d = conf.get("spark.python.unix.domain.socket.dir")
+    d = d or tempfile.gettempdir()
+    if len(os.fsencode(d)) + _SOCK_NAME_BYTES > _AF_UNIX_PATH_MAX:
+        return None
+    return d

@@ -83,7 +83,7 @@ def main() -> None:
     build_s = time.time() - t0
     idx_bytes = sum(
         os.path.getsize(p)
-        for p in glob.glob(os.path.join(sd, "bloomidx", "data", "*"))
+        for p in glob.glob(os.path.join(sd, "bloomidx", "*", "*.bloom"))
     )
 
     plan = explain_decode(spark, sd, where=where)

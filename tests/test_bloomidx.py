@@ -215,11 +215,9 @@ def test_refresh_indexes_only_new_files(spark, state, tmp_path):
             spark, sd, manifest, f"conv_id = '{probe}'", names
         )
         assert len(kept) == 1
-    idx = spark.read.parquet(os.path.join(sd, "bloomidx", "data"))
-    assert (
-        idx.groupBy("file", "column").count().filter("count > 1").count()
-        == 0
-    )
+    # one blob per (file, column) and no stray temporaries
+    blobs = os.listdir(os.path.join(sd, "bloomidx", "conv_id"))
+    assert sorted(blobs) == sorted(f"{b}.bloom" for b in names)
     assert refresh_bloom_index(spark, sd)["files_refreshed"] == 0
 
 
@@ -458,3 +456,77 @@ def test_in_list_probes_run_one_job(spark, state, monkeypatch):
     # the 20 values live in one source file's seq range — the index must
     # still prune to a single block file through the batched path
     assert len(kept) == 1
+
+
+def test_truncated_blob_counts_as_uncovered(spark, state):
+    """A blob whose size is not ``8 + m_bits/8`` (a torn or foreign
+    write) testifies for nothing: its file is kept, reported uncovered,
+    and the next refresh rewrites it."""
+    from d6tstack_spark.plans.bloomidx import refresh_bloom_index
+    from d6tstack_spark.plans.metrics import state_info
+
+    paths, sd, src = state
+    build_bloom_index(spark, sd, ["conv_id"])
+    manifest = load_manifest(sd)
+    names = _basenames(sd)
+    w = "conv_id = 'b0007'"
+    kept = bloom_prune_basenames(spark, sd, manifest, w, names)
+    assert len(kept) == 1
+    other = next(b for b in names if b not in kept)
+    blob = os.path.join(sd, "bloomidx", "conv_id", other + ".bloom")
+    with open(blob, "r+b") as f:
+        f.truncate(os.path.getsize(blob) - 8)
+    got = bloom_prune_basenames(spark, sd, manifest, w, names)
+    assert sorted(got) == sorted(kept + [other])
+    assert decode_state(spark, sd, where=w).count() == 6
+    assert state_info(spark, sd)["bloom_index"]["files_uncovered"] == 1
+    assert refresh_bloom_index(spark, sd)["files_refreshed"] == 1
+    assert bloom_prune_basenames(spark, sd, manifest, w, names) == kept
+
+
+def test_old_layout_sidecar_is_ignored_then_rebuilt(spark, state):
+    """A sidecar of the older parquet layout (a ``meta.json`` without the
+    layout marker beside ``bloomidx/data/``) prunes nothing — its bitmaps
+    here are all zero, so a reader that trusted them would drop every
+    file — and ``refresh_bloom_index`` rebuilds it as blobs, after which
+    pruning works again."""
+    import json
+
+    from d6tstack_spark.plans.bloomidx import refresh_bloom_index
+    from d6tstack_spark.plans.metrics import state_info
+
+    paths, sd, src = state
+    names = _basenames(sd)
+    bd = os.path.join(sd, "bloomidx")
+    os.makedirs(os.path.join(bd, "data"))
+    pq.write_table(
+        pa.table(
+            {
+                "file": names,
+                "column": ["conv_id"] * len(names),
+                "n_distinct": pa.array([0] * len(names), pa.int64()),
+                "bloom": pa.array(
+                    [[0] * 64] * len(names), pa.list_(pa.int64())
+                ),
+            }
+        ),
+        os.path.join(bd, "data", "part-0.parquet"),
+    )
+    with open(os.path.join(bd, "meta.json"), "w") as f:
+        json.dump(
+            {"m_bits": 4096, "k": 6, "columns": ["conv_id"], "built_ts": 0.0},
+            f,
+        )
+    manifest = load_manifest(sd)
+    w = "conv_id = 'b0007'"
+    assert bloom_prune_basenames(spark, sd, manifest, w, names) == names
+    assert decode_state(spark, sd, where=w).count() == 6
+    assert state_info(spark, sd)["bloom_index"]["files_covered"] == 0
+
+    assert refresh_bloom_index(spark, sd)["files_refreshed"] == len(names)
+    meta = load_bloom_meta(sd)
+    assert (meta["layout"], meta["m_bits"]) == ("blob", 4096)
+    assert not os.path.exists(os.path.join(bd, "data"))
+    assert len(bloom_prune_basenames(spark, sd, manifest, w, names)) == 1
+    assert decode_state(spark, sd, where=w).count() == 6
+    assert refresh_bloom_index(spark, sd)["files_refreshed"] == 0

@@ -277,3 +277,20 @@ def test_snapshot_count(spark, state3):
     rep = fast_count(spark, state3, snapshot=first)
     assert rep["count"] == 1200
     assert rep["mode"] == "metadata"
+
+
+def test_bloom_prunes_fast_count(spark, state3):
+    """``tag`` zone ranges overlap in every file, so only a Bloom index
+    prunes a point count on it: the count still equals the decode, and
+    every file but the one holding the value is pruned."""
+    from d6tstack_spark.plans.bloomidx import build_bloom_index
+
+    where = "tag = '07_1'"
+    before = fast_count(spark, state3, where=where)
+    build_bloom_index(spark, state3, ["tag"])
+    rep = fast_count(spark, state3, where=where)
+    exact = decode_state(spark, state3, where=where).count()
+    assert rep["count"] == before["count"] == exact > 0
+    assert rep["files_decoded"] == 1
+    assert rep["files_pruned"] > before["files_pruned"]
+    assert rep["files_pruned"] + rep["files_decoded"] == rep["files_total"]

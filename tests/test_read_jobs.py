@@ -98,7 +98,7 @@ def test_read_job_counts(spark, indexed_state):
     assert _sorted_rows(got, cols) == _sorted_rows(want, cols)
     assert jobs == 1, jobs
 
-    # Bloom equality read: the sidecar probe plus the decode
+    # Bloom equality read: the decode tasks probe their own files' blobs
     got, jobs = _jobs(
         spark,
         lambda: decode_state(spark, sd, where="conv_id = 'c0007'").toArrow(),
@@ -106,14 +106,15 @@ def test_read_job_counts(spark, indexed_state):
     want = src.filter(pc.equal(src["conv_id"], "c0007"))
     assert want.num_rows == 6
     assert _sorted_rows(got, cols) == _sorted_rows(want, cols)
-    assert jobs == 2, jobs
+    assert jobs == 1, jobs
 
     # full decode
     got, jobs = _jobs(spark, lambda: decode_state(spark, sd).toArrow())
     assert _sorted_rows(got, cols) == _sorted_rows(src, cols)
     assert jobs == 1, jobs
 
-    # fast_count: one classification job plus the undecided-block decode
+    # fast_count: classification, undecided-block decode and count in
+    # one job
     where = "seq >= 600 AND seq < 2000"
     rep, jobs = _jobs(spark, lambda: fast_count(spark, sd, where=where))
     want = src.filter(
@@ -121,7 +122,139 @@ def test_read_job_counts(spark, indexed_state):
     )
     assert rep["count"] == want.num_rows
     assert rep["mode"] == "hybrid"
-    assert jobs <= 3, jobs
+    assert jobs == 1, jobs
+
+    # a Bloom-prunable count: the same one job
+    rep, jobs = _jobs(
+        spark, lambda: fast_count(spark, sd, where="conv_id = 'c0007'")
+    )
+    assert rep["count"] == 6
+    assert rep["files_pruned"] == rep["files_total"] - 1
+    assert jobs == 1, jobs
+
+    # state_info's Bloom coverage comes from the blob listing: no job
+    # beyond those of the same call on an unindexed copy of the dir
+    import shutil
+
+    from d6tstack_spark.plans.metrics import state_info
+
+    bare = sd + "_bare"
+    shutil.copytree(sd, bare, ignore=shutil.ignore_patterns("bloomidx"))
+    info, jobs = _jobs(spark, lambda: state_info(spark, sd))
+    assert info["bloom_index"]["files_covered"] == info["n_files"]
+    assert info["bloom_index"]["files_uncovered"] == 0
+    bare_info, bare_jobs = _jobs(spark, lambda: state_info(spark, bare))
+    assert "bloom_index" not in bare_info
+    assert jobs == bare_jobs, (jobs, bare_jobs)
+
+
+def _tasks(spark, fn):
+    """(result of ``fn()``, tasks of every stage of the jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"read-tasks-{next(_GROUPS)}"
+    sc.setJobGroup(group, "task count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    stages = [
+        s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds
+    ]
+    return out, [st.getStageInfo(s).numTasks for s in stages]
+
+
+def test_decode_runs_one_wave(spark, tmp_path):
+    """A decode of more blocks files than cores runs one stage of at most
+    ``defaultParallelism`` tasks, each decoding a contiguous run of
+    files; so do a point read and a fast_count."""
+    srcs = []
+    sd = str(tmp_path / "state")
+    n_files = max(8, spark.sparkContext.defaultParallelism + 2)
+    for i in range(n_files):
+        p = str(tmp_path / f"part_{i}.parquet")
+        pq.write_table(
+            pa.table(
+                {
+                    "conv_id": [f"c{i:02d}{j // 4}" for j in range(40)],
+                    "turn_idx": pa.array([j % 4 for j in range(40)], pa.int32()),
+                }
+            ),
+            p,
+        )
+        srcs.append(p)
+        encode_resume(spark, srcs, sd)  # one append per source file
+    n_blocks_files = len(
+        [f for f in os.listdir(os.path.join(sd, "blocks")) if f.endswith(".parquet")]
+    )
+    assert n_blocks_files >= n_files, n_blocks_files
+    build_bloom_index(spark, sd, ["conv_id"])
+    dp = spark.sparkContext.defaultParallelism
+    for call, want in [
+        (lambda: decode_state(spark, sd).count(), 40 * n_files),
+        (lambda: decode_state(spark, sd, where="conv_id = 'c031'").count(), 4),
+        (lambda: fast_count(spark, sd, where="conv_id = 'c031'")["count"], 4),
+    ]:
+        got, tasks = _tasks(spark, call)
+        assert got == want
+        assert tasks and tasks[0] <= dp, tasks
+
+
+def test_stale_temporary_dir_is_not_read(spark, tmp_path):
+    """A writer that died mid-commit leaves ``blocks/_temporary/...``
+    behind: reads list only the published files, so a decode with no
+    ``encode_resume`` in between returns the source rows."""
+    import shutil
+
+    p = str(tmp_path / "src.parquet")
+    src = pa.table(
+        {
+            "conv_id": [f"c{j // 4:03d}" for j in range(400)],
+            "turn_idx": pa.array([j % 4 for j in range(400)], pa.int32()),
+        }
+    )
+    pq.write_table(src, p)
+    sd = str(tmp_path / "state")
+    encode_resume(spark, [p], sd)
+    bdir = os.path.join(sd, "blocks")
+    orphan = os.path.join(bdir, "_temporary", "0", "part-x.parquet")
+    os.makedirs(os.path.dirname(orphan))
+    shutil.copy(
+        sorted(os.path.join(bdir, f) for f in os.listdir(bdir)
+               if f.endswith(".parquet"))[0],
+        orphan,
+    )
+    got = decode_state(spark, sd).toArrow()
+    assert _sorted_rows(got, src.column_names) == _sorted_rows(
+        src, src.column_names
+    )
+
+
+def test_projection_order_of_empty_reads(spark, indexed_state, tmp_path):
+    """``columns`` sets the column order of every read: a point read whose
+    value every file's Bloom blob rules out, and an empty table version
+    (every row deleted and purged, no blocks file left)."""
+    from d6tstack_spark.plans.checkpoint import delete_where
+    from d6tstack_spark.plans.maintenance import purge_deletes
+
+    sd, _src = indexed_state
+    cols = ["turn_idx", "conv_id"]
+    for where in ("conv_id = 'c0007'", "conv_id = 'zzz'"):
+        assert decode_state(spark, sd, columns=cols, where=where).columns == cols
+
+    delete_where(spark, sd, "seq >= 0")
+    purge_deletes(spark, sd)
+    # the purge leaves zero-row part files; without them the blocks dir
+    # lists no file at all, the empty table version
+    bdir = os.path.join(sd, "blocks")
+    for f in os.listdir(bdir):
+        if f.endswith(".parquet"):
+            assert pq.read_metadata(os.path.join(bdir, f)).num_rows == 0
+            os.remove(os.path.join(bdir, f))
+    empty = decode_state(spark, sd, columns=cols)
+    assert empty.columns == cols
+    assert empty.count() == 0
 
 
 def _py4j_calls(monkeypatch, fn):

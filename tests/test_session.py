@@ -39,3 +39,37 @@ def test_submitted_master_is_kept(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "MASTER=local[2]" in out.stdout.splitlines(), out.stdout
+
+
+def test_unix_socket_dir_decision(tmp_path):
+    """Local masters get Unix-domain worker sockets in the caller's socket
+    dir or the temp dir; other masters, and a dir too long for Spark's
+    ``.<uuid>.sock`` names within the AF_UNIX path limit, keep TCP."""
+    import tempfile
+
+    from d6tstack_spark.session import _unix_socket_dir
+
+    key = "spark.python.unix.domain.socket.dir"
+    assert _unix_socket_dir("local[4]", {}) == tempfile.gettempdir()
+    assert _unix_socket_dir("local", {}) == tempfile.gettempdir()
+    assert _unix_socket_dir("local[*]", {key: "/tmp/s"}) == "/tmp/s"
+    for master in ("spark://host:7077", "yarn", "local-cluster[2,1,1024]"):
+        assert _unix_socket_dir(master, {}) is None, master
+    long_dir = "/tmp/" + "d" * 60  # 65 bytes: the socket path needs 108
+    assert _unix_socket_dir("local[2]", {key: long_dir}) is None
+    assert _unix_socket_dir("local[2]", {key: long_dir[:-1]}) == long_dir[:-1]
+
+
+def test_local_workers_use_unix_sockets(spark):
+    """The shared local session's Python workers were started in
+    Unix-domain socket mode."""
+    import pyarrow as pa
+
+    def env(batches):
+        for _ in batches:
+            yield pa.RecordBatch.from_pydict(
+                {"v": [os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "")]}
+            )
+
+    got = spark.range(0, 2, 1, 2).mapInArrow(env, "v string").collect()
+    assert {r.v.lower() for r in got} == {"true"}
