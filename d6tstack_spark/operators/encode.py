@@ -961,9 +961,26 @@ def _decode_one_block(rows: list[dict], manifest: dict) -> pa.Table:
     return pa.table(arrays)
 
 
-def _make_decoder(manifest: dict, chunk_rows: int = 65536):
-    ncols = len(manifest)
-    has_evolved = any(m.get("evolved") for m in manifest.values())
+def _make_decoder(
+    manifest: dict,
+    zf: list[list[tuple]] | None = None,
+    extra: dict | None = None,
+    chunk_rows: int = 65536,
+):
+    """Decoder of complete blocks. ``zf`` (a task DNF,
+    :func:`_zone_task_dnf`) skips each block that fails it, classified
+    from the block's own stats rows when its last row arrives; ``extra``
+    holds the manifest entries of zone columns outside ``manifest``,
+    whose rows ride along for that classification and are not decoded."""
+    cols = {**manifest, **(extra or {})}
+    ncols = len(cols)
+    has_evolved = any(m.get("evolved") for m in cols.values())
+
+    def decode(bid: int, rows: list[dict]) -> Iterator[pa.RecordBatch]:
+        if zf is not None and bid not in _zone_keep_ids_rows(rows, zf):
+            return  # the zone map rules the block out
+        tbl = _decode_one_block(rows, manifest)
+        yield from tbl.to_batches(max_chunksize=chunk_rows)
 
     def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         pa.set_cpu_count(1)  # workers are the parallelism
@@ -973,9 +990,7 @@ def _make_decoder(manifest: dict, chunk_rows: int = 65536):
                 bid = row["block_id"]
                 pending.setdefault(bid, []).append(row)
                 if len(pending[bid]) == ncols:
-                    tbl = _decode_one_block(pending.pop(bid), manifest)
-                    for b in tbl.to_batches(max_chunksize=chunk_rows):
-                        yield b
+                    yield from decode(bid, pending.pop(bid))
         if pending and not has_evolved:
             missing = {k: len(v) for k, v in pending.items()}
             raise ValueError(f"incomplete blocks at decode: {missing}")
@@ -987,9 +1002,7 @@ def _make_decoder(manifest: dict, chunk_rows: int = 65536):
         # holds the whole file); on the shuffle path pre-evolution blocks
         # buffer to partition end.
         for bid in sorted(pending):
-            tbl = _decode_one_block(pending[bid], manifest)
-            for b in tbl.to_batches(max_chunksize=chunk_rows):
-                yield b
+            yield from decode(bid, pending[bid])
 
     return decode_fn
 
@@ -1107,13 +1120,13 @@ def decode_parquet_blocks(
     ``block_filter=(col, lo, hi)`` — or a LIST of such tuples (ANDed),
     or a LIST OF LISTS (DNF: OR of ANDs, see :func:`compile_where`)
     — prunes whole blocks via the zone map (see :func:`decode_table`) at
-    ONE level, inside the decode task: each task reads its own file's
-    stats rows (parquet column pruning — no payload bytes), derives the
-    file's qualifying block ids with :func:`_zone_keep_ids_local`, and
-    reads payload only for those blocks; a file with none reads no
-    payload at all. ``bloom`` (a :class:`~d6tstack_spark.plans.bloomidx.
-    BloomPlan`) is asked first: a file the Bloom index rules out reads
-    neither stats nor payload. The driver runs no planning job and holds
+    ONE level, inside the decode task: each task classifies its own files
+    with :func:`_classify_file` — the file's stats rows (parquet column
+    pruning — no payload bytes) give its qualifying block ids — and reads
+    payload only for those blocks; a file with none reads no payload at
+    all. ``bloom`` (a :class:`~d6tstack_spark.plans.bloomidx.BloomPlan`)
+    is asked first: a file the Bloom index rules out reads neither stats
+    nor payload. The driver runs no planning job and holds
     no block-id set: the task closure carries the path list (O(files))
     and the DNF, however many of the ~10⁶-10⁷ blocks of a 100 TB table
     qualify. Whether a file carries zone stats at all is decided per
@@ -1174,16 +1187,10 @@ def decode_parquet_blocks(
         pa.set_io_thread_count(1)
         for b in batches:
             for p in b.column("path").to_pylist():
-                if bloom is not None and not bloom.keeps(p):
-                    continue  # the Bloom index rules the file out
                 with _listed_file(p):
-                    keep_ids = None
-                    if zf is not None:
-                        keep_ids = _zone_keep_ids_file(
-                            _read_file_stats(p, zf), zf
-                        )
-                        if keep_ids is not None and not keep_ids:
-                            continue  # no qualifying block in this file
+                    keep_ids = _classify_file(p, zf, bloom).kept
+                    if keep_ids is not None and not keep_ids:
+                        continue  # no block of this file may match
                     t = _read_blocks(p, col_filter, keep_ids)
                 yield from decoder(t.to_batches())
 
@@ -1257,17 +1264,6 @@ def _read_blocks(p: str, col_filter: list[str] | None, keep_ids):
     return pq.read_table(p, use_threads=False, filters=flt or None)
 
 
-def _norm_file_uri(p: str) -> str:
-    """Normalize a file path/URI for equality tests across APIs that
-    disagree on scheme spelling (Hadoop ``file:/a``, Spark
-    ``file:///a``, plain ``/a``)."""
-    if p.startswith("file:"):
-        p = p[len("file:"):]
-        while p.startswith("//"):
-            p = p[1:]
-    return p
-
-
 _ZONE_STATS_COLS = ("vmin_num", "vmax_num", "vmin_str", "vmax_str")
 
 
@@ -1321,35 +1317,47 @@ def _read_file_stats(path: str, zf: list[list[tuple]] | None = None):
 
 
 def _zone_keep_ids_file(stats: "pa.Table", zf: list[list[tuple]]):
-    """Block ids of one file that may satisfy the task DNF ``zf``: a
-    block qualifies iff it passes SOME branch's EVERY atom. None when the
-    file predates zone maps (no stats columns — every block qualifies)."""
+    """Block ids of one file that may satisfy the task DNF ``zf``
+    (:func:`_zone_keep_ids_rows`). None when the file predates zone maps
+    (no stats columns — every block qualifies)."""
     import pyarrow.compute as pc
 
     if "vmin_num" not in stats.column_names:
         return None
+    zcols = pa.array(sorted({a[0] for br in zf for a in br}), pa.string())
+    rows = stats.filter(pc.is_in(stats.column("column"), zcols)).to_pylist()
+    return _zone_keep_ids_rows(rows, zf)
+
+
+def _zone_keep_ids_rows(rows: list[dict], zf: list[list[tuple]]) -> set[int]:
+    """Block ids among stats ``rows`` that may satisfy the task DNF
+    ``zf``: a block qualifies iff it passes SOME branch's EVERY atom, and
+    a block with no stats row for an atom's column fails that atom."""
+    by_col: dict[str, list[dict]] = {}
+    for r in rows:
+        by_col.setdefault(r["column"], []).append(r)
     keep: set[int] = set()
     for branch in zf:
         bids = None
         for zcol, kind, lo, hi, is_str in branch:
-            sub = stats.filter(pc.equal(stats.column("column"), zcol))
-            ids = _zone_keep_ids_local(sub, kind, lo, hi, is_str)
+            ids = _zone_keep_ids_local(
+                by_col.get(zcol, []), kind, lo, hi, is_str
+            )
             bids = ids if bids is None else bids & ids
         keep |= bids
     return keep
 
 
 def _zone_keep_ids_local(
-    stats: "pa.Table", kind: str, lo, hi, is_str: bool
+    rows: list[dict], kind: str, lo, hi, is_str: bool
 ) -> set[int]:
-    """Task-side twin of :func:`_zone_keep_condition`: evaluate the
-    conservative zone predicate on ONE file's stats rows (already
-    filtered to the zone column) and return its qualifying block ids.
-    Semantics match the Column version exactly — blocks without stats
-    always qualify; a null vmax_str with vmin_str set means unbounded
-    above (0xFF truncation cut); numeric bounds compare as float64."""
+    """The one zone classifier: evaluate one conservative zone predicate
+    on stats rows of ONE column and return the qualifying block ids.
+    Blocks without stats always qualify; a null vmax_str with vmin_str
+    set means unbounded above (0xFF truncation cut); numeric bounds
+    compare as float64; null predicates use the per-block
+    ``null_count`` / ``n_rows`` (always recorded)."""
     ids: set[int] = set()
-    rows = stats.to_pylist()
     if kind == "is_null":
         return {r["block_id"] for r in rows if r["null_count"] > 0}
     if kind == "not_null":
@@ -1375,6 +1383,88 @@ def _zone_keep_ids_local(
         if ok:
             ids.add(r["block_id"])
     return ids
+
+
+class FileClass(NamedTuple):
+    """How one blocks file meets a read plan (:func:`_classify_file`)."""
+
+    bloom: bool  # the Bloom plan keeps the file
+    stats: "pa.Table | None"  # its stats rows, when they were read
+    rows: dict | None  # block id → row count (when a tally was asked)
+    kept: set | None  # block ids that may match; None = every block
+
+
+def _classify_file(p: str, zf=None, bloom=None, tally: bool = False):
+    """The per-file classifier every read and stats planner runs, in the
+    task that owns the file: the Bloom plan first, then the zone DNF
+    ``zf`` on the file's own stats rows. A file the Bloom plan rules out
+    keeps no block; with no DNF, or in a file written before zone maps,
+    every block is kept (``kept`` None). Stats are read only when a zone
+    decision or the row tally (``tally``: every block's row count, read
+    from all columns' stats rows) needs them."""
+    keeps = bloom is None or bloom.keeps(p)
+    if not tally and (zf is None or not keeps):
+        return FileClass(keeps, None, None, None if keeps else set())
+    st = _read_file_stats(p, None if tally else zf)
+    rows = None
+    if tally:
+        g = st.group_by("block_id").aggregate([("n_rows", "max")])
+        rows = dict(
+            zip(
+                g.column("block_id").to_pylist(),
+                g.column("n_rows_max").to_pylist(),
+            )
+        )
+    kept = None if zf is None else _zone_keep_ids_file(st, zf)
+    return FileClass(keeps, st, rows, kept if keeps else set())
+
+
+_CENSUS_SCHEMA = (
+    "path string, bloom boolean, blocks long, rows long, "
+    "kept_blocks long, kept_rows long"
+)
+
+
+def file_census(
+    spark, paths: list[str], zf=None, bloom=None, tally: bool = True
+) -> list:
+    """:func:`_classify_file` over ``paths`` in one :func:`map_files`
+    job: one tally row per file, in ``paths`` order — ``(path, bloom,
+    blocks, rows, kept_blocks, kept_rows)``, ``bloom`` whether the Bloom
+    plan keeps the file (one that it rules out keeps 0 blocks). With
+    ``tally`` off, ``blocks``, ``rows`` and ``kept_rows`` are None, and
+    so is ``kept_blocks`` where the whole file is kept without a zone
+    decision. The planners (``explain_decode``, purge/update targeting,
+    the rewrite parity count, the changelog scan, the Bloom list APIs)
+    run this one pass, so their answers are the decode tasks' answers."""
+    if not paths:
+        return []
+    schema = _ddl_arrow_schema(_CENSUS_SCHEMA)
+
+    def run(batches):
+        pa.set_cpu_count(1)
+        pa.set_io_thread_count(1)
+        for b in batches:
+            out = []
+            for p in b.column("path").to_pylist():
+                with _listed_file(p):
+                    c = _classify_file(p, zf, bloom, tally)
+                if c.rows is None:
+                    k = None if c.kept is None else len(c.kept)
+                    out.append((p, c.bloom, None, None, k, None))
+                    continue
+                kept = c.rows.keys() if c.kept is None else c.kept
+                out.append((
+                    p, c.bloom, len(c.rows), sum(c.rows.values()),
+                    len(kept), sum(c.rows[i] for i in kept),
+                ))
+            yield pa.RecordBatch.from_pylist(
+                [dict(zip(schema.names, r)) for r in out], schema=schema
+            )
+
+    got = map_files(spark, paths, run, _CENSUS_SCHEMA).collect()
+    by_path = {r.path: r for r in got}
+    return [by_path[p] for p in paths]
 
 
 def _normalize_zone_bound(v, ptype: str, logical: str | None):
@@ -1502,78 +1592,6 @@ def _strip_evolved_unprunable(
     return out
 
 
-def _zone_keep_condition(manifest: dict, block_filter: tuple):
-    """Predicate → (col_name, Column condition over the stats row).
-    Conservative: blocks without stats always qualify; bounds are
-    inclusive; lo/hi may be None for open ranges. Null predicates use the
-    per-block ``null_count`` / ``n_rows`` (always recorded): a block whose
-    every row is non-null cannot satisfy IS NULL, and vice versa."""
-    col = block_filter[0]
-    if col not in manifest:
-        raise ValueError(f"block_filter column {col!r} not in manifest")
-    if len(block_filter) == 2:
-        if block_filter[1] == "is_null":
-            return col, F.col("null_count") > 0
-        return col, F.col("null_count") < F.col("n_rows")
-    _, lo, hi = block_filter
-    m = manifest[col]
-    lo = _normalize_zone_bound(lo, m["ptype"], m["logical"])
-    hi = _normalize_zone_bound(hi, m["ptype"], m["logical"])
-    if m["ptype"] in ("str", "bin"):
-        keep = F.col("vmin_str").isNull()
-        inside = F.lit(True)
-        if hi is not None:
-            inside = inside & (F.col("vmin_str") <= F.lit(hi))
-        if lo is not None:
-            # vmax_str null with vmin_str set = unbounded above (0xFF cut)
-            inside = inside & F.coalesce(
-                F.col("vmax_str") >= F.lit(lo), F.lit(True)
-            )
-        return col, keep | inside
-    keep = F.col("vmin_num").isNull()
-    inside = F.lit(True)
-    if hi is not None:
-        inside = inside & (F.col("vmin_num") <= F.lit(float(hi)))
-    if lo is not None:
-        inside = inside & (F.col("vmax_num") >= F.lit(float(lo)))
-    return col, keep | inside
-
-
-def _zone_qualifying_blocks(stats: DataFrame, manifest: dict, dnf) -> DataFrame:
-    """``(f, block_id)`` of the blocks in ``stats`` (a scan of blocks
-    files) that may satisfy the zone DNF: per-predicate pairs intersect
-    within a branch, branches union. Stats columns only — the payload
-    column is never read."""
-    qual = None
-    for branch in dnf:
-        pairs = None
-        for bf in branch:
-            col, keep = _zone_keep_condition(manifest, bf)
-            s = (
-                stats.filter(F.col("column") == col)
-                .filter(keep)
-                .select(F.input_file_name().alias("f"), "block_id")
-                .distinct()
-            )
-            pairs = s if pairs is None else pairs.join(s, ["f", "block_id"])
-        qual = pairs if qual is None else qual.unionByName(pairs)
-    return qual
-
-
-def _zone_qualifying_paths(spark, paths: list[str], manifest: dict, dnf):
-    """The blocks files of ``paths`` holding at least one block that may
-    satisfy the zone DNF (every file, when written before zone maps)."""
-    stats = spark.read.parquet(*paths)
-    if "vmin_num" not in stats.columns:
-        return list(paths)
-    qual = {
-        _norm_file_uri(r[0])
-        for r in _zone_qualifying_blocks(stats, manifest, dnf)
-        .select("f").distinct().collect()
-    }
-    return [p for p in paths if _norm_file_uri(p) in qual]
-
-
 def decode_table(
     blocks: DataFrame,
     manifest: dict,
@@ -1595,58 +1613,44 @@ def decode_table(
     open end). A LIST of such tuples is a conjunction — the block must
     overlap every range (multi-column WHERE pruning); a LIST OF LISTS is
     a disjunction of conjunctions (OR pruning — see
-    :func:`compile_where`). Within a branch the per-predicate
-    qualifying-id sets are intersected in-plan (inner joins on block_id,
-    each side a distinct over the tiny stats projection — no payload
-    touched until the final semi join); branches are unioned. Pruning is
-    conservative — callers still apply the exact row-level filter to the
-    result; blocks written before zone maps (or with unsupported stats)
-    always qualify, so results are never wrong.
+    :func:`compile_where`). After the ``repartition("block_id")`` a
+    decode task holds every row of each block it owns, the zone columns'
+    stats rows included, so it classifies each block from those rows
+    (:func:`_zone_keep_ids_rows`, the classifier of every read) and
+    skips the ones that fail: the plan is the one exchange and the map
+    stage, with no join. The exchange still carries the payload rows of
+    pruned blocks, which are never decoded. Pruning is conservative —
+    callers still apply the exact row-level filter to the result; blocks
+    written before zone maps (or with unsupported stats) always qualify,
+    so results are never wrong.
 
     Row order is unspecified (Spark semantics); the round-trip invariant is
     asserted under stable (conv_id, turn_idx) ordering by callers."""
-    dnf = _strip_evolved_unprunable(
-        _normalize_block_filters(block_filter), manifest
+    zf = _zone_task_dnf(
+        manifest,
+        _strip_evolved_unprunable(
+            _normalize_block_filters(block_filter), manifest
+        ),
     )
-    if dnf is not None and "vmin_num" in blocks.columns:
-        union_ids = None
-        for branch in dnf:
-            ids = None
-            for bf in branch:
-                col, keep = _zone_keep_condition(manifest, bf)
-                s = (
-                    blocks.filter(F.col("column") == col)
-                    .filter(keep)
-                    .select("block_id")
-                    .distinct()
-                )
-                ids = s if ids is None else ids.join(s, "block_id", "inner")
-            union_ids = (
-                ids if union_ids is None else union_ids.unionByName(ids)
-            )
-        blocks = blocks.join(
-            union_ids.distinct(), "block_id", "leftsemi"
-        )
-    final_columns = None
+    if zf is not None and "vmin_num" not in blocks.columns:
+        zf = None  # blocks written before zone maps: nothing to prune by
+    full, final_columns = manifest, None
     if columns is not None:
         if not columns:
             raise ValueError("columns must be non-empty (or None for all)")
-        missing = [c for c in columns if c not in manifest]
-        if missing:
-            raise ValueError(f"columns not in manifest: {missing}")
-        proj = {c: manifest[c] for c in columns}
-        if proj and all(m.get("evolved") for m in proj.values()):
-            # all-evolved projection: keep one original column as the row
-            # anchor for pre-evolution blocks (see decode_parquet_blocks)
-            anchor = next(
-                k for k, m in manifest.items() if not m.get("evolved")
-            )
-            proj[anchor] = manifest[anchor]
-            final_columns = list(columns)
-        manifest = proj
-        blocks = blocks.filter(F.col("column").isin(list(manifest)))
+        manifest, final_columns = _decode_projection(manifest, columns)
+    extra = {}
+    if zf is not None:
+        extra = {
+            a[0]: full[a[0]]
+            for br in zf
+            for a in br
+            if a[0] not in manifest
+        }
+    if columns is not None:
+        blocks = blocks.filter(F.col("column").isin([*manifest, *extra]))
     out = blocks.repartition("block_id").mapInArrow(
-        _make_decoder(manifest), _logical_struct(manifest)
+        _make_decoder(manifest, zf, extra), _logical_struct(manifest)
     )
     if final_columns is not None:
         out = out.select(*final_columns)  # drop the anchor column

@@ -606,30 +606,42 @@ def bloom_plan(state_dir: str, manifest: dict, cw) -> BloomPlan | None:
     return BloomPlan(_blob_root(state_dir), mb, tuple(branches), tuple(ins))
 
 
-def _keep_job(spark: SparkSession, plan: BloomPlan, basenames: list[str]):
-    """:meth:`BloomPlan.keeps` over ``basenames`` in one ``map_slices`` job;
-    returns the kept ones, order preserved."""
-    import pyarrow as pa
+def bloom_value_plan(
+    state_dir: str, manifest: dict, col: str, values: list
+) -> BloomPlan | None:
+    """The Bloom plan of "``col`` holds one of ``values``", or None when
+    the index cannot prune it — for callers that hold the values
+    directly (equality-delete key sets) rather than a WHERE string.
+    ``values`` are LOGICAL (what a decode returns); a NULL or
+    unconvertible value, or a list longer than ``_MAX_IN_PROBES``, gives
+    no plan — same advisory contract as everywhere else."""
+    meta = _usable_meta(state_dir)
+    if (
+        meta is None
+        or col not in set(meta["columns"])
+        or col not in manifest
+        or not values
+        or len(values) > _MAX_IN_PROBES
+    ):
+        return None
+    mb = int(meta["m_bits"])
+    probes = []
+    for v in values:
+        b = _probe_bytes(v, manifest[col])
+        if b is None:
+            return None
+        probes.append(tuple(_positions(b, mb)))
+    return BloomPlan(_blob_root(state_dir), mb, (), ((col, tuple(probes)),))
 
-    from d6tstack_spark.operators.encode import map_slices
 
-    def run(batches):
-        for b in batches:
-            names = b.column("file").to_pylist()
-            kept = [n for n in names if plan.keeps(n)]
-            yield pa.RecordBatch.from_pydict(
-                {"file": pa.array(kept, pa.string())}
-            )
+class AnyBloomPlan(NamedTuple):
+    """Keeps a file when any of ``plans`` keeps it: the Bloom verdict of
+    a rewrite that any of several tombstones may target."""
 
-    n_tasks = min(len(basenames), spark.sparkContext.defaultParallelism)
-    keep = {
-        r[0]
-        for r in map_slices(
-            spark, [(b,) for b in basenames], n_tasks, run, "file string",
-            "file string",
-        ).collect()
-    }
-    return [b for b in basenames if b in keep]
+    plans: tuple
+
+    def keeps(self, path: str) -> bool:
+        return any(p.keeps(path) for p in self.plans)
 
 
 def bloom_value_keep(
@@ -641,32 +653,17 @@ def bloom_value_keep(
     basenames: list[str],
 ) -> list[str]:
     """Files that may contain ANY of ``values`` in ``col`` — the
-    value-set twin of :func:`bloom_prune_basenames`, for callers that
-    hold the values directly (equality-delete key sets) rather than a
-    WHERE string. ``values`` are LOGICAL (what a decode returns);
-    uncovered files and unconvertible values keep everything, and lists
-    longer than ``_MAX_IN_PROBES`` skip the probe — same advisory
-    contract as everywhere else."""
-    meta = _usable_meta(state_dir)
-    if (
-        meta is None
-        or not basenames
-        or col not in set(meta["columns"])
-        or col not in manifest
-        or not values
-        or len(values) > _MAX_IN_PROBES
-    ):
+    value-set twin of :func:`bloom_prune_basenames`
+    (:func:`bloom_value_plan` semantics): uncovered files keep
+    everything, and with no plan ``basenames`` return unchanged with no
+    job."""
+    from d6tstack_spark.operators.encode import file_census
+
+    plan = bloom_value_plan(state_dir, manifest, col, values)
+    if plan is None or not basenames:
         return basenames
-    mb = int(meta["m_bits"])
-    probes = []
-    for v in values:
-        b = _probe_bytes(v, manifest[col])
-        if b is None:
-            # NULL or unconvertible value — the Bloom cannot speak for it
-            return basenames
-        probes.append(tuple(_positions(b, mb)))
-    plan = BloomPlan(_blob_root(state_dir), mb, (), ((col, tuple(probes)),))
-    return _keep_job(spark, plan, basenames)
+    census = file_census(spark, basenames, bloom=plan, tally=False)
+    return [c.path for c in census if c.bloom]
 
 
 def bloom_prune_basenames(
@@ -680,12 +677,16 @@ def bloom_prune_basenames(
     :class:`~d6tstack_spark.operators.encode.CompiledWhere` the caller
     already holds): drop basenames the Bloom sidecar proves cannot
     contain a matching row (:func:`bloom_plan` semantics), probed by
-    :meth:`BloomPlan.keeps` in one ``map_slices`` job. Returns a subset of
+    :meth:`BloomPlan.keeps` in one census job. Returns a subset of
     ``basenames`` (order preserved); with no index or no usable atom,
     returns it unchanged with no job."""
     if not basenames or _usable_meta(state_dir) is None:
         return basenames
-    from d6tstack_spark.operators.encode import CompiledWhere, compile_where
+    from d6tstack_spark.operators.encode import (
+        CompiledWhere,
+        compile_where,
+        file_census,
+    )
 
     cw = (
         where
@@ -693,4 +694,7 @@ def bloom_prune_basenames(
         else compile_where(spark, where, manifest)
     )
     plan = bloom_plan(state_dir, manifest, cw)
-    return basenames if plan is None else _keep_job(spark, plan, basenames)
+    if plan is None:
+        return basenames
+    census = file_census(spark, basenames, bloom=plan, tally=False)
+    return [c.path for c in census if c.bloom]

@@ -675,24 +675,22 @@ def _tombstone_affected_basenames(
 ) -> list[str]:
     """Zone targeting for the changelog scan: the subset of ``basenames``
     whose stats say some row COULD match one of ``tombs`` (exactly the
-    purge planner's rules, :func:`_tombstone_zone_dnf`); unprunable →
-    all of them (conservative)."""
-    from d6tstack_spark.operators.encode import (
-        _norm_file_uri,
-        _zone_qualifying_paths,
-    )
+    purge planner's rules, :func:`_tombstone_zone_dnf`, run by the census
+    job); unprunable → all of them (conservative)."""
+    from d6tstack_spark.operators.encode import _zone_task_dnf, file_census
 
     if not tombs or not basenames:
         return []
     dnf, _ = _tombstone_zone_dnf(spark, state_dir, manifest, tombs)
     if not dnf:
         return list(basenames)
-    paths = _resolve_block_paths(state_dir, basenames)
-    qual = {
-        os.path.basename(_norm_file_uri(p))
-        for p in _zone_qualifying_paths(spark, paths, manifest, dnf)
-    }
-    return [b for b in basenames if b in qual]
+    census = file_census(
+        spark,
+        _resolve_block_paths(state_dir, basenames),
+        _zone_task_dnf(manifest, dnf),
+        tally=False,
+    )
+    return [b for b, c in zip(basenames, census) if c.kept_blocks != 0]
 
 
 def _changelog_diff(

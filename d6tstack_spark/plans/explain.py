@@ -5,10 +5,11 @@ At 100 TB the difference between a healthy and a pathological read is
 *which files the plan keeps*, and that decision happens across three
 layers (snapshot resolution → Bloom sidecar → zone-map DNF) plus the
 tombstone generations that will be applied merge-on-read. This module
-runs exactly those planning steps — the same compilers and the same
-stats-only scans, no payload I/O — and returns the counts and the
-compiled predicate so a user can see WHY a query reads what it reads
-(the `EXPLAIN` / `DESCRIBE DETAIL` of the block format).
+runs exactly those planning steps — the same compilers, and the decode
+tasks' own per-file classifier run as one census job over the files'
+stats rows, no payload I/O — and returns the counts and the compiled
+predicate so a user can see WHY a query reads what it reads (the
+`EXPLAIN` / `DESCRIBE DETAIL` of the block format).
 
 Reference analog: d6tstack prints per-file sniff reports before
 combining (combine_csv.py preview mode); this is the same
@@ -19,7 +20,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 
 def resolve_read_state(
@@ -119,18 +120,19 @@ def explain_decode(
                                 columns decoded-then-dropped,
         }
 
-    Planning only — the numbers come from the metadata/stats scans the
-    real read performs, so they are exact for the plan, not estimates of
-    the result (the exact row filter still runs on decode)."""
+    Planning only, in one Spark job: the Bloom and zone layers and the
+    row estimate come from one census of the files
+    (:func:`~d6tstack_spark.operators.encode.file_census`), each file
+    classified by the function its decode task runs, so the numbers are
+    exact for the plan, not estimates of the result (the exact row
+    filter still runs on decode)."""
     from d6tstack_spark.operators.encode import (
         _strip_evolved_unprunable,
-        _zone_qualifying_blocks,
+        _zone_task_dnf,
         compile_where,
+        file_census,
     )
-    from d6tstack_spark.plans.bloomidx import (
-        bloom_prune_basenames,
-        load_bloom_meta,
-    )
+    from d6tstack_spark.plans.bloomidx import bloom_plan, load_bloom_meta
     from d6tstack_spark.plans.checkpoint import (
         _compile_generations,
         _decode_columns,
@@ -152,53 +154,28 @@ def explain_decode(
 
     # one compile serves both pruning layers and the projection
     cw = compile_where(spark, where, manifest) if where is not None else None
-
-    # layer 2: Bloom sidecar — the decode tasks' per-file probe, run here
-    # in one job that returns the surviving names
     meta = load_bloom_meta(state_dir)
     report["bloom_columns"] = meta["columns"] if meta else None
-    if cw is not None and basenames:
-        basenames = bloom_prune_basenames(
-            spark, state_dir, manifest, cw, basenames
-        )
-    report["files_after_bloom"] = len(basenames)
-
-    # layer 3: zone-map DNF — the decode tasks evaluate it on each file's
-    # own stats; here the same qualification runs as one stats-only scan
-    dnf = None
+    dnf = bloom = None
     if cw is not None:
         dnf = _strip_evolved_unprunable(cw.dnf or None, manifest)
+        bloom = bloom_plan(state_dir, manifest, cw)
     report["zone_dnf"] = dnf
-    paths = _resolve_block_paths(state_dir, basenames)
-    est_rows = 0
-    if paths:
-        stats = spark.read.parquet(*paths)
-        if dnf and "vmin_num" in stats.columns:
-            kept = _zone_qualifying_blocks(stats, manifest, dnf).join(
-                stats.groupBy(
-                    F.input_file_name().alias("f"), "block_id"
-                ).agg(F.max("n_rows").alias("r")),
-                ["f", "block_id"],
-            )
-            agg = kept.agg(
-                F.countDistinct("f").alias("nf"), F.sum("r").alias("rows")
-            ).collect()[0]
-            report["files_after_zone"] = int(agg["nf"] or 0)
-            est_rows = int(agg["rows"] or 0)
-        else:
-            agg = (
-                stats.groupBy(
-                    F.input_file_name().alias("f"), "block_id"
-                )
-                .agg(F.max("n_rows").alias("r"))
-                .agg(F.sum("r").alias("rows"))
-                .collect()[0]
-            )
-            report["files_after_zone"] = len(paths)
-            est_rows = int(agg["rows"] or 0)
-    else:
-        report["files_after_zone"] = 0
-    report["est_rows_scanned"] = est_rows
+
+    # the Bloom probe and the zone DNF, evaluated per file by the decode
+    # tasks' own classifier in one census job
+    census = file_census(
+        spark,
+        _resolve_block_paths(state_dir, basenames),
+        _zone_task_dnf(manifest, dnf or None),
+        bloom,
+    )
+    kept = [c for c in census if c.bloom]
+    report["files_after_bloom"] = len(kept)
+    report["files_after_zone"] = (
+        sum(c.kept_blocks > 0 for c in kept) if dnf else len(kept)
+    )
+    report["est_rows_scanned"] = sum(c.kept_rows for c in kept)
 
     # projection incl. decode-then-drop columns (predicate + tombstones)
     compiled = _compile_generations(spark, manifest, cw, vis, gens)

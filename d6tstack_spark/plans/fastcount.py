@@ -54,10 +54,12 @@ def _fused_count(
     bloom,
 ) -> dict:
     """The whole count in one Spark job. Its decode tasks
-    (:func:`~d6tstack_spark.operators.encode.map_files`, one wave) take
-    each file's stats and classify every block in one pass: pruned (it
-    fails the zone may-DNF, or the Bloom plan rules the file out),
-    all-match (the negation ``not_dnf`` cannot hold in it) or undecided.
+    (:func:`~d6tstack_spark.operators.encode.map_files`, one wave) run
+    the per-file classifier every read runs
+    (:func:`~d6tstack_spark.operators.encode._classify_file`) and sort
+    every block three ways: pruned (it fails the zone may-DNF, or the
+    Bloom plan rules the file out), all-match (the negation ``not_dnf``
+    cannot hold in it) or undecided.
     Only the undecided blocks' referenced columns are decoded; beside
     those rows the task emits one tally row per non-empty file
     (all-match rows, ``nblocks``, ``kept``, ``undec``). With no
@@ -73,12 +75,12 @@ def _fused_count(
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from d6tstack_spark.operators.encode import (
+        _classify_file,
         _decode_projection,
         _listed_file,
         _logical_struct,
         _make_decoder,
         _read_blocks,
-        _read_file_stats,
         _strip_evolved_unprunable,
         _zone_keep_ids_file,
         _zone_task_dnf,
@@ -111,28 +113,17 @@ def _fused_count(
         for b in batches:
             for p in b.column("path").to_pylist():
                 with _listed_file(p):
-                    st = _read_file_stats(p)
-                    if st.num_rows == 0:
+                    c = _classify_file(p, may_zf, bloom, tally=True)
+                    if not c.rows:
                         continue  # empty part file: no blocks to classify
-                    g = st.group_by("block_id").aggregate([("n_rows", "max")])
-                    rows = dict(
-                        zip(
-                            g.column("block_id").to_pylist(),
-                            g.column("n_rows_max").to_pylist(),
-                        )
-                    )
-
-                    def keep(zf):  # all blocks without a DNF or zone stats
-                        if zf is None:
-                            return set(rows)
-                        ids = _zone_keep_ids_file(st, zf)
-                        return set(rows) if ids is None else ids
-
-                    if bloom is not None and not bloom.keeps(p):
-                        may = set()
-                    else:
-                        may = keep(may_zf)
-                    undec = set() if cw is None else may & keep(neg_zf)
+                    rows = c.rows
+                    may = set(rows) if c.kept is None else c.kept
+                    undec = set()
+                    if cw is not None and may:
+                        neg = None
+                        if neg_zf is not None:
+                            neg = _zone_keep_ids_file(c.stats, neg_zf)
+                        undec = may if neg is None else may & neg
                     blocks = None
                     if undec:
                         blocks = _read_blocks(p, list(dec_manifest), undec)
@@ -262,7 +253,10 @@ def fast_profile(spark: SparkSession, state_dir: str) -> DataFrame:
     decode surfaces those rows as null — the profile reports what a
     decode would see, so nulls include the evolution backfill). Refuses
     pending tombstones (stats predate deletes; purge first) rather than
-    silently overcounting."""
+    silently overcounting. The table row count comes from one census job
+    (:func:`~d6tstack_spark.operators.encode.file_census`); the per-column
+    sums are one aggregate over the stats columns, read under their
+    known schema."""
     from d6tstack_spark.plans.checkpoint import _resolve_block_paths
 
     _manifest, basenames, vis, _seen = resolve_read_state(
@@ -281,23 +275,19 @@ def fast_profile(spark: SparkSession, state_dir: str) -> DataFrame:
             "column string, n_rows long, null_count long, "
             "non_null long, n_blocks long",
         )
-    raw = spark.read.parquet(*paths).select(
-        F.input_file_name().alias("f"), "block_id", "column",
-        "n_rows", "null_count",
-    )
-    total = (
-        raw.groupBy("f", "block_id")
-        .agg(F.max("n_rows").alias("r"))
-        .agg(F.sum("r"))
-        .collect()[0][0]
-        or 0
-    )
-    return raw.groupBy("column").agg(
-        F.lit(int(total)).alias("n_rows"),
-        (F.lit(int(total)) - F.sum(F.col("n_rows") - F.col("null_count")))
-        .alias("null_count"),
-        F.sum(F.col("n_rows") - F.col("null_count")).alias("non_null"),
-        F.count(F.lit(1)).alias("n_blocks"),
+    from d6tstack_spark.operators.encode import file_census
+
+    total = sum(c.rows for c in file_census(spark, paths))
+    return (
+        spark.read.schema("column string, n_rows long, null_count long")
+        .parquet(*paths)
+        .groupBy("column")
+        .agg(
+            F.expr(f"CAST({total} AS BIGINT) AS n_rows"),
+            F.expr(f"{total} - sum(n_rows - null_count) AS null_count"),
+            F.expr("sum(n_rows - null_count) AS non_null"),
+            F.expr("count(1) AS n_blocks"),
+        )
     )
 
 
@@ -388,17 +378,23 @@ def fast_min_max(
     if vis:
         return _exact_fallback()
     paths = _resolve_block_paths(state_dir, basenames)
-    raw = spark.read.parquet(*paths)
-    if "vmin_num" not in raw.columns:
-        return _exact_fallback()
     is_str = manifest[col]["ptype"] in ("str", "bin")
     lo_c, hi_c = ("vmin_str", "vmax_str") if is_str else (
         "vmin_num", "vmax_num")
+    # known-schema stats read: a file written before zone maps reads null
+    # bounds, i.e. stat-less blocks (below: the exact fallback)
+    quoted = col.replace("\\", "\\\\").replace("'", "\\'")
     stats = (
-        raw.filter(F.col("column") == col)
-        .select(
-            F.input_file_name().alias("f"), "block_id",
-            "n_rows", "null_count", lo_c, hi_c,
+        spark.read.schema(
+            f"column string, block_id long, n_rows long, null_count long, "
+            f"{lo_c} {'binary' if is_str else 'double'}, "
+            f"{hi_c} {'binary' if is_str else 'double'}"
+        )
+        .parquet(*paths)
+        .where(f"`column` = '{quoted}'")
+        .selectExpr(
+            "input_file_name() AS f", "block_id", "n_rows", "null_count",
+            lo_c, hi_c,
         )
         .collect()
     )

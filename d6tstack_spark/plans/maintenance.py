@@ -42,9 +42,10 @@ import time
 
 from pyspark.sql import SparkSession, Window, functions as F
 
-# deterministic test hook: raise after N adoption renames during a purge
-# apply, to drill the journal-replay recovery path (a real kill lands in a
-# metadata-ops window too narrow to hit reliably from outside)
+# deterministic test hook: raise once N adoption renames of a purge apply
+# are done (none left to do counts as done), to drill the journal-replay
+# recovery path (a real kill lands in a metadata-ops window too narrow to
+# hit reliably from outside)
 _TEST_CRASH_AFTER_ADOPTS: int | None = None
 
 # purge-rewritten block ids live above this bit; file-derived ids stay
@@ -66,7 +67,10 @@ def compact_blocks(
     of the old listing fail with the decoder's explicit "blocks dir
     changed under the running decode" error rather than silently missing
     data — schedule compaction like any other table maintenance."""
-    from d6tstack_spark.operators.encode import _hadoop_list_files
+    from d6tstack_spark.operators.encode import (
+        BLOCKS_SCHEMA,
+        _hadoop_list_files,
+    )
     from d6tstack_spark.operators.sinks import write_blocks
     from d6tstack_spark.plans.checkpoint import (
         _LeaseHeartbeat,
@@ -154,11 +158,11 @@ def compact_blocks(
             report["compacted"] = False if dry_run else report["compacted"]
             return report
 
-        blocks = spark.read.parquet(live)
+        blocks = spark.read.schema(BLOCKS_SCHEMA).parquet(live)
         rows_before = blocks.count()
         compacted = blocks.repartitionByRange(int(n_out), "block_id")
         write_blocks(compacted, tmp)
-        rows_after = spark.read.parquet(tmp).count()
+        rows_after = spark.read.schema(BLOCKS_SCHEMA).parquet(tmp).count()
         if rows_after != rows_before:
             fs.delete(_hpath(tmp), True)
             raise RuntimeError(
@@ -316,10 +320,10 @@ def cluster_blocks(
 
     Returns ``{rows, files_before, files_after, blocks_written}``."""
     from d6tstack_spark.operators.encode import (
-        SUB_BLOCK_BITS,
         _hadoop_list_files,
         decode_table,
         encode_table,
+        file_census,
     )
     from d6tstack_spark.plans.checkpoint import (
         _LeaseHeartbeat,
@@ -355,13 +359,7 @@ def cluster_blocks(
         paths = sorted(_hadoop_list_files(spark, bd, ".parquet"))
         if not paths:
             raise ValueError(f"no blocks parquet files under {bd}")
-        ablocks = spark.read.parquet(*paths)
-        n_before = (
-            ablocks.groupBy("block_id")
-            .agg(F.max("n_rows").alias("r"))
-            .agg(F.sum("r"))
-            .collect()[0][0]
-        ) or 0
+        n_before = sum(c.rows for c in file_census(spark, paths))
         report = {"rows": int(n_before), "files_before": len(paths)}
         if n_before == 0:
             report.update({"files_after": len(paths), "blocks_written": 0})
@@ -374,7 +372,7 @@ def cluster_blocks(
         )
         if method not in ("linear", "zorder"):
             raise ValueError(f"unknown cluster method {method!r}")
-        decoded = decode_table(ablocks, manifest)
+        decoded = decode_table(_blocks_frame(spark, paths), manifest)
         if method == "zorder" and len(cluster_by) > 1:
             # Morton layout: every file AND every block spans a narrow
             # range of EVERY cluster key (the per-block sort below only
@@ -411,9 +409,7 @@ def cluster_blocks(
             state_dir,
             affected=paths,
             new_blocks=new_blocks,
-            base_ids=ablocks.select(
-                F.shiftright("block_id", SUB_BLOCK_BITS).alias("block_id")
-            ).distinct(),
+            base_ids=_base_ids(spark, paths),
             n_expected=int(n_before),
             tomb_ids=[],
             parity_label=f"expected all {n_before} rows",
@@ -453,10 +449,12 @@ def purge_deletes(
     rewriting ONLY the block files that can contain matching rows.
 
     Targeting: the union-of-tombstones predicate compiles to zone-filter
-    DNF (``compile_where``); a stats-only scan keeps just the files
-    with ≥1 overlapping block (the same two-level pruning the bulk decode
-    plans with). Every other file is untouched — never read, never
-    rewritten — so I/O scales with the delete's footprint, not the table:
+    DNF (``compile_where``), and one census job — the decode tasks' own
+    per-file classifier (:func:`~d6tstack_spark.operators.encode.
+    file_census`) — keeps just the files the Bloom sidecar cannot rule
+    out and that hold ≥1 overlapping block. Every other file is
+    untouched — never read, never rewritten — so I/O scales with the
+    delete's footprint, not the table:
     a point delete on a 100 TB state dir rewrites a handful of files. An
     unprunable predicate degrades to a full rewrite, honestly reported
     via ``files_rewritten``/``files_scanned``.
@@ -479,12 +477,11 @@ def purge_deletes(
     a half-applied listing. Same maintenance contract as
     :func:`compact_blocks`: schedule it, don't race readers."""
     from d6tstack_spark.operators.encode import (
-        SUB_BLOCK_BITS,
         _hadoop_list_files,
-        _norm_file_uri,
-        _zone_qualifying_paths,
+        _zone_task_dnf,
         decode_table,
         encode_table,
+        file_census,
     )
     from d6tstack_spark.plans.checkpoint import (
         _LeaseHeartbeat,
@@ -536,67 +533,58 @@ def purge_deletes(
 
         # ---- plan: which files can contain a matching row — zone DNF of
         # the OR of all predicate tombstones, plus each key set's
-        # per-column [min, max] envelope branch, qualified by a
-        # stats-only scan (intersect per-predicate (file, block) pairs
-        # within a branch, union branches, collect only the distinct file
-        # list). Any unprunable part degrades to a full rewrite, reported
-        # honestly.
-        affected = paths
-        dnf, pred_cw = _tombstone_zone_dnf(spark, state_dir, manifest, deletes)
-        if dnf:
-            affected = _zone_qualifying_paths(spark, paths, manifest, dnf)
-        if affected:
-            # Bloom sidecar: equality atoms in predicate tombstones and
-            # SMALL single-column key sets (the GDPR "forget this
-            # conversation" shape) can rule out files zone ranges keep.
-            # A file needs rewriting if ANY tombstone can match it, so
-            # the keep set is the UNION of per-tombstone keeps; any
-            # tombstone the prober cannot speak for keeps everything.
-            from d6tstack_spark.plans.bloomidx import (
-                _MAX_IN_PROBES,
-                bloom_prune_basenames,
-                bloom_value_keep,
-            )
+        # per-column [min, max] envelope branch, and the Bloom sidecar:
+        # equality atoms in predicate tombstones and SMALL single-column
+        # key sets (the GDPR "forget this conversation" shape) can rule
+        # out files zone ranges keep. A file needs rewriting if ANY
+        # tombstone can match it, so the Bloom verdict is the union of
+        # per-tombstone plans; a tombstone the index cannot speak for
+        # keeps everything. Both run in one census job, which also
+        # tallies each file's rows. Any unprunable part degrades to a
+        # full rewrite, reported honestly.
+        from d6tstack_spark.plans.bloomidx import (
+            _MAX_IN_PROBES,
+            AnyBloomPlan,
+            bloom_plan,
+            bloom_value_plan,
+        )
 
-            base_of = {
-                os.path.basename(_norm_file_uri(p)): p for p in affected
-            }
-            names = sorted(base_of)
-            keep: set = set()
-            if pred_cw is not None:
-                keep |= set(
-                    bloom_prune_basenames(
-                        spark, state_dir, manifest, pred_cw, names
-                    )
+        dnf, pred_cw = _tombstone_zone_dnf(spark, state_dir, manifest, deletes)
+        plans = []
+        if pred_cw is not None:
+            plans.append(bloom_plan(state_dir, manifest, pred_cw))
+        for d in ksets:
+            cols = list(d["cols"])
+            vals = None
+            if len(cols) == 1:
+                rows = (
+                    spark.read.parquet(os.path.join(state_dir, d["path"]))
+                    .select(cols[0])
+                    .distinct()
+                    .limit(_MAX_IN_PROBES + 1)
+                    .collect()
                 )
-            for d in ksets:
-                cols = list(d["cols"])
-                vals = None
-                if len(cols) == 1:
-                    rows = (
-                        spark.read.parquet(
-                            os.path.join(state_dir, d["path"])
-                        )
-                        .select(cols[0])
-                        .distinct()
-                        .limit(_MAX_IN_PROBES + 1)
-                        .collect()
-                    )
-                    if len(rows) <= _MAX_IN_PROBES:
-                        vals = [r[0] for r in rows]
-                if vals is None:  # multi-column or large key set
-                    keep |= set(names)
-                else:
-                    keep |= set(
-                        bloom_value_keep(
-                            spark, state_dir, manifest, cols[0], vals, names
-                        )
-                    )
-            affected = [
-                p
-                for p in affected
-                if os.path.basename(_norm_file_uri(p)) in keep
-            ]
+                if len(rows) <= _MAX_IN_PROBES:
+                    vals = [r[0] for r in rows]
+            plans.append(
+                None
+                if vals is None  # multi-column or large key set
+                else bloom_value_plan(state_dir, manifest, cols[0], vals)
+            )
+        census = file_census(
+            spark,
+            paths,
+            _zone_task_dnf(manifest, dnf or None),
+            None
+            if any(p is None for p in plans)
+            else AnyBloomPlan(tuple(plans)),
+        )
+        n_rows = {c.path: c.rows for c in census}
+        affected = [
+            c.path
+            for c in census
+            if c.bloom and (not dnf or c.kept_blocks)
+        ]
         # ---- sequence scoping (Iceberg semantics): a tombstone applies
         # only to files first seen BEFORE its delete record, so rows
         # appended after the delete are never purged by it. Files in no
@@ -621,7 +609,7 @@ def purge_deletes(
                     rec_of[t["id"]] = t.get("seq", r["id"])
         fgroups: dict[frozenset, list[str]] = {}
         for p in affected:
-            add = seen.get(os.path.basename(_norm_file_uri(p)), math.inf)
+            add = seen.get(os.path.basename(p), math.inf)
             s = frozenset(
                 d["id"]
                 for d in deletes
@@ -640,17 +628,11 @@ def purge_deletes(
         # keep-rows apply exactly its tombstones (NOT its predicates,
         # anti-joined against its key sets) and the matched count falls
         # out as n_before - n_kept
-        ablocks = spark.read.parquet(*affected)
-        n_before = (
-            ablocks.groupBy("block_id")
-            .agg(F.max("n_rows").alias("r"))
-            .agg(F.sum("r"))
-            .collect()[0][0]
-        )
+        n_before = sum(n_rows[p] for p in affected)
         dmap = {d["id"]: d for d in deletes}
         kept = None
         for s, ps in fgroups.items():
-            gdec = decode_table(spark.read.parquet(*ps), manifest)
+            gdec = decode_table(_blocks_frame(spark, ps), manifest)
             gpreds = [dmap[i] for i in s if dmap[i].get("kind") != "keys"]
             gksets = [dmap[i] for i in s if dmap[i].get("kind") == "keys"]
             if gpreds:
@@ -698,9 +680,7 @@ def purge_deletes(
             state_dir,
             affected=affected,
             new_blocks=new_blocks,
-            base_ids=ablocks.select(
-                F.shiftright("block_id", SUB_BLOCK_BITS).alias("block_id")
-            ).distinct(),
+            base_ids=_base_ids(spark, affected),
             n_expected=n_before - n_matched,
             tomb_ids=tomb_ids,
             parity_label=(
@@ -737,11 +717,12 @@ def update_where(
     the schema never changes.
 
     Targeting mirrors :func:`purge_deletes`: the predicate compiles to
-    zone-filter DNF and a stats-only scan keeps just the files with ≥1
-    overlapping block, so I/O scales with the update's footprint, not
-    the table — a point update on a 100 TB dir rewrites a handful of
-    files. An unprunable predicate (or one over a schema-evolved column,
-    where pre-evolution blocks have no stats row to prune by) degrades
+    zone-filter DNF and a Bloom plan, and one census job keeps just the
+    files with ≥1 overlapping block, so I/O scales with the update's
+    footprint, not the table — a point update on a 100 TB dir rewrites
+    a handful of files. An unprunable predicate (or one over a
+    schema-evolved column, where pre-evolution blocks have no stats row
+    to prune by) degrades
     to a full rewrite, honestly reported. Commit rides the same
     journaled roll-forward as purge/cluster (replacements parity-checked
     next to the live dir before the journal lands; readers refuse
@@ -757,16 +738,16 @@ def update_where(
     whole-file re-ingest (``combine_csv.py`` re-runs the pipeline); this
     is the targeted-rewrite version of that at block granularity."""
     from d6tstack_spark.operators.encode import (
-        SUB_BLOCK_BITS,
         _hadoop_list_files,
         _logical_struct,
-        _norm_file_uri,
         _strip_evolved_unprunable,
-        _zone_qualifying_paths,
+        _zone_task_dnf,
         compile_where,
         decode_table,
         encode_table,
+        file_census,
     )
+    from d6tstack_spark.plans.bloomidx import bloom_plan
     from d6tstack_spark.plans.checkpoint import (
         _LeaseHeartbeat,
         _acquire_lease,
@@ -825,37 +806,27 @@ def update_where(
         if not paths:
             return report
 
-        # ---- plan: which files can contain a matching row (same
-        # two-level zone pruning as purge_deletes, same schema-evolution
-        # degradation: stats-less pre-evolution blocks must not be
-        # silently excluded when the predicate can match their null rows)
-        affected = paths
+        # ---- plan: which files can contain a matching row — the same
+        # census as purge_deletes (zone DNF and Bloom plan in one job),
+        # with the same schema-evolution degradation: stats-less
+        # pre-evolution blocks must not be silently excluded when the
+        # predicate can match their null rows
         cw = compile_where(spark, where, manifest)
         dnf = _strip_evolved_unprunable(cw.dnf or None, manifest)
-        if dnf:
-            affected = _zone_qualifying_paths(spark, paths, manifest, dnf)
-        if affected:
-            # same advisory Bloom-sidecar narrowing as purge targeting
-            from d6tstack_spark.plans.bloomidx import bloom_prune_basenames
-
-            base_of = {
-                os.path.basename(_norm_file_uri(p)): p for p in affected
-            }
-            kept_names = bloom_prune_basenames(
-                spark, state_dir, manifest, cw, sorted(base_of)
-            )
-            affected = [base_of[b] for b in kept_names]
+        census = file_census(
+            spark,
+            paths,
+            _zone_task_dnf(manifest, dnf),
+            bloom_plan(state_dir, manifest, cw),
+        )
+        affected = [
+            c for c in census if c.bloom and (not dnf or c.kept_blocks)
+        ]
         if not affected:
             return report
-
-        ablocks = spark.read.parquet(*affected)
-        n_before = (
-            ablocks.groupBy("block_id")
-            .agg(F.max("n_rows").alias("r"))
-            .agg(F.sum("r"))
-            .collect()[0][0]
-        ) or 0
-        decoded = decode_table(ablocks, manifest)
+        n_before = sum(c.rows for c in affected)
+        affected = [c.path for c in affected]
+        decoded = decode_table(_blocks_frame(spark, affected), manifest)
         cond = F.coalesce(F.expr(where).cast("boolean"), F.lit(False))
         n_matched = decoded.filter(cond).count()
         report["matched"] = int(n_matched)
@@ -898,9 +869,7 @@ def update_where(
             state_dir,
             affected=affected,
             new_blocks=new_blocks,
-            base_ids=ablocks.select(
-                F.shiftright("block_id", SUB_BLOCK_BITS).alias("block_id")
-            ).distinct(),
+            base_ids=_base_ids(spark, affected),
             n_expected=int(n_before),
             tomb_ids=[],
             parity_label=f"expected all {n_before} rows of the slice",
@@ -910,6 +879,28 @@ def update_where(
         return report
     finally:
         hb.release()
+
+
+def _blocks_frame(spark: SparkSession, paths: list[str]):
+    """The blocks files ``paths`` as a DataFrame under the blocks schema,
+    with no schema inference (a file written before zone maps reads null
+    stats, which prune nothing)."""
+    from d6tstack_spark.operators.encode import BLOCKS_SCHEMA
+
+    return spark.read.schema(BLOCKS_SCHEMA).parquet(*paths)
+
+
+def _base_ids(spark: SparkSession, paths: list[str]):
+    """The distinct base ids (``block_id >> SUB_BLOCK_BITS``) of the
+    blocks in ``paths``: the source splits a rewrite replaces."""
+    from d6tstack_spark.operators.encode import SUB_BLOCK_BITS
+
+    return (
+        spark.read.schema("block_id long")
+        .parquet(*paths)
+        .selectExpr(f"shiftright(block_id, {SUB_BLOCK_BITS}) AS block_id")
+        .distinct()
+    )
 
 
 def _record_tombstone_clear(
@@ -959,6 +950,7 @@ def _commit_rewritten_blocks(
         SUB_BLOCK_BITS,
         BLOCKS_SCHEMA,
         _hadoop_list_files,
+        file_census,
     )
     from d6tstack_spark.operators.sinks import write_blocks
     from d6tstack_spark.plans.checkpoint import (
@@ -1008,24 +1000,20 @@ def _commit_rewritten_blocks(
         fs.delete(_p(tmp), True)
     write_blocks(remapped, tmp)
 
-    # ---- verify row parity BEFORE anything becomes visible
-    tmp_files = sorted(_hadoop_list_files(spark, tmp, ".parquet"))
-    n_tmp = 0
-    if tmp_files:
-        n_tmp = (
-            spark.read.parquet(*tmp_files)
-            .groupBy("block_id")
-            .agg(F.max("n_rows").alias("r"))
-            .agg(F.sum("r"))
-            .collect()[0][0]
-        ) or 0
+    # ---- verify row parity BEFORE anything becomes visible; only the
+    # replacement files that hold rows are adopted (an empty rewrite
+    # writes a zero-row part file, which would outlive every row)
+    census = file_census(
+        spark, sorted(_hadoop_list_files(spark, tmp, ".parquet"))
+    )
+    n_tmp = sum(c.rows for c in census)
     if n_tmp != n_expected:
         fs.delete(_p(tmp), True)
         raise RuntimeError(
             f"rewrite parity check failed: replacement holds {n_tmp} "
             f"rows, {parity_label}; original dir untouched"
         )
-    n_new_blocks = mapping.count()
+    n_new_blocks = sum(c.blocks for c in census)
 
     base_ids.write.mode("append").parquet(_rewritten_dir(state_dir))
     sp = _purge_seq_path(state_dir)
@@ -1034,7 +1022,7 @@ def _commit_rewritten_blocks(
     os.replace(sp + ".tmp", sp)
     journal = {
         "remove": [os.path.basename(p) for p in affected],
-        "adopt": [os.path.basename(p) for p in tmp_files],
+        "adopt": [os.path.basename(c.path) for c in census if c.rows],
         "tombstones": tomb_ids,
     }
     jp = _purge_journal_path(state_dir)
@@ -1045,13 +1033,11 @@ def _commit_rewritten_blocks(
 
     rd = _retired_blocks_dir(state_dir)
     fs.mkdirs(_p(rd))
-    for i, b in enumerate(journal["adopt"]):
-        if (
-            _TEST_CRASH_AFTER_ADOPTS is not None
-            and i >= _TEST_CRASH_AFTER_ADOPTS
-        ):
-            raise RuntimeError("purge crash drill: died mid-apply")
+    adopt, drill = journal["adopt"], _TEST_CRASH_AFTER_ADOPTS
+    for b in adopt[:drill]:
         fs.rename(_p(tmp + "/" + b), _p(bd + "/" + b))
+    if drill is not None and drill <= len(adopt):
+        raise RuntimeError("purge crash drill: died mid-apply")
     for b in journal["remove"]:
         # RETIRE the replaced files (snapshot retention: older snapshots
         # stay readable until expire_snapshots); fall back to delete if a

@@ -132,15 +132,19 @@ def state_info(spark, state_dir: str, with_ndv: bool = False) -> dict:
                 for r in ndv_estimates(spark, state_dir).collect()
             }
     if paths:
-        t = table_totals(
-            spark.read.parquet(*paths).select(
-                "block_id", "n_rows", "raw_bytes", "enc_bytes"
+        # the stats columns under their known schema, one SQL aggregate
+        t = (
+            spark.read.schema("block_id long, raw_bytes long, enc_bytes long")
+            .parquet(*paths)
+            .selectExpr(
+                "count(DISTINCT block_id)", "sum(raw_bytes)", "sum(enc_bytes)"
             )
-        ).first()
-        info["n_blocks"] = int(t["n_blocks"])
-        info["raw_bytes"] = int(t["raw_bytes"])
-        info["enc_bytes"] = int(t["enc_bytes"])
-        info["ratio"] = round(float(t["ratio"]), 3)
+            .first()
+        )
+        info["n_blocks"] = int(t[0])
+        info["raw_bytes"] = int(t[1] or 0)
+        info["enc_bytes"] = int(t[2] or 0)
+        info["ratio"] = round(info["raw_bytes"] / max(info["enc_bytes"], 1), 3)
     else:
         info.update(n_blocks=0, raw_bytes=0, enc_bytes=0, ratio=None)
     info["pending_tombstones"] = load_deletes(state_dir)

@@ -1,10 +1,28 @@
 from __future__ import annotations
 
+import itertools
 import os
 
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")  # keep test JVM light
+
+_JOB_GROUPS = itertools.count()
+
+
+def spark_jobs(spark, fn):
+    """(result of ``fn()``, number of Spark jobs it ran), counted through
+    a job group of its own (import it: ``from conftest import
+    spark_jobs``)."""
+    sc = spark.sparkContext
+    group = f"counted-jobs-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

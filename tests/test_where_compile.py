@@ -17,6 +17,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
+from conftest import spark_jobs
 from d6tstack_spark.operators import encode
 from d6tstack_spark.plans.bloomidx import bloom_prune_basenames, build_bloom_index
 from d6tstack_spark.plans.checkpoint import decode_state, encode_resume, load_manifest
@@ -114,25 +115,13 @@ def test_ts_bloom_probe_in_session_time_zone(spark, tmp_path):
     assert len(kept) == 1
 
 
-def _jobs(spark, fn):
-    """(result of ``fn()``, number of Spark jobs it ran)."""
-    sc = spark.sparkContext
-    sc.setJobGroup("where-compile", "job count")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup("where-compile"))
-
-
 def test_compile_runs_no_spark_job(spark):
     man = {
         "k": {"ptype": "i64", "logical": None},
         "grp": {"ptype": "str", "logical": None},
         "ts": {"ptype": "i64", "logical": "ts"},
     }
-    cw, jobs = _jobs(
+    cw, jobs = spark_jobs(
         spark,
         lambda: encode.compile_where(
             spark,

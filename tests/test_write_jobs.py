@@ -10,7 +10,6 @@ Bloom pass writes for files that hold no value of an indexed column."""
 
 from __future__ import annotations
 
-import itertools
 import os
 import re
 
@@ -18,6 +17,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from conftest import spark_jobs
 from d6tstack_spark.operators.encode import SUB_BLOCK_BITS
 from d6tstack_spark.plans.bloomidx import (
     _canonical_bytes,
@@ -33,7 +33,6 @@ from d6tstack_spark.plans.checkpoint import (
 )
 
 _N = 1200  # rows per source file
-_GROUPS = itertools.count()
 
 
 def _source(i: int, extra: bool = False) -> pa.Table:
@@ -57,19 +56,6 @@ def _write_source(tmp_path, i: int, row_group_size: int = 400, **kw) -> str:
     return p
 
 
-def _jobs(spark, fn):
-    """(result of ``fn()``, number of Spark jobs it ran)."""
-    sc = spark.sparkContext
-    group = f"write-jobs-{next(_GROUPS)}"
-    sc.setJobGroup(group, "job count")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _sorted_rows(tbl: pa.Table, cols) -> list[tuple]:
     cols = list(cols)
     return sorted(zip(*(tbl.column(c).to_pylist() for c in cols)))
@@ -86,24 +72,24 @@ def test_write_job_counts(spark, tmp_path):
     paths = [_write_source(tmp_path, i) for i in range(2)]
     sd = str(tmp_path / "state")
 
-    s, jobs = _jobs(spark, lambda: encode_resume(spark, paths, sd))
+    s, jobs = spark_jobs(spark, lambda: encode_resume(spark, paths, sd))
     assert s["encoded"] == s["planned"] == 4
     assert jobs <= 3, jobs  # the encode write plus the lineage write
 
-    _, jobs = _jobs(spark, lambda: build_bloom_index(spark, sd, ["conv_id"]))
+    _, jobs = spark_jobs(spark, lambda: build_bloom_index(spark, sd, ["conv_id"]))
     assert jobs == 1, jobs  # the build tasks write the blobs, one collect
 
     indexed = set(_block_files(sd))
     paths.append(_write_source(tmp_path, 2))
-    s, jobs = _jobs(spark, lambda: encode_resume(spark, paths, sd))
+    s, jobs = spark_jobs(spark, lambda: encode_resume(spark, paths, sd))
     assert (s["skipped"], s["encoded"]) == (4, 2)
     assert jobs <= 6, jobs  # census, encode write, lineage write
 
-    s, jobs = _jobs(spark, lambda: encode_resume(spark, paths, sd))
+    s, jobs = spark_jobs(spark, lambda: encode_resume(spark, paths, sd))
     assert s["already_complete"]
     assert jobs <= 2, jobs  # the census alone
 
-    r, jobs = _jobs(spark, lambda: refresh_bloom_index(spark, sd))
+    r, jobs = spark_jobs(spark, lambda: refresh_bloom_index(spark, sd))
     assert r["files_refreshed"] == len(set(_block_files(sd)) - indexed) > 0
     assert jobs == 1, jobs  # coverage comes from the blob listing
 
