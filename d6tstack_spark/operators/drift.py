@@ -3,10 +3,10 @@
 multi-file consensus) re-expressed at the codec layer for parquet inputs.
 
 The scan-fused :func:`~d6tstack_spark.operators.encode.encode_parquet_files`
-requires every input file to share one physical schema (its workers read
-manifest columns by name straight out of each file). Real ingest corpora
-drift: a column appears in newer files, disappears from older ones, or
-files arrive with columns reordered. This module
+encodes under the union of its input files' schemas, null-padding a
+column a file lacks and refusing a column typed differently across files.
+Real ingest corpora drift: a column appears in newer files, disappears
+from older ones, or files arrive with columns reordered. This module
 
 - sniffs per-file schemas from parquet FOOTERS only (no data read;
   driver-side for small file lists, a ``map_slices`` Spark job above a

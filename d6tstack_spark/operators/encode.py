@@ -38,6 +38,7 @@ from py4j.protocol import Py4JJavaError
 
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from d6tstack_spark.codecs.blocks import Block, decode_block, encode_block
 
@@ -66,24 +67,8 @@ BLOCKS_SCHEMA = T.StructType(
     ]
 )
 
-_BLOCKS_ARROW = pa.schema(
-    [
-        ("block_id", pa.int64()),
-        ("column", pa.string()),
-        ("codec", pa.string()),
-        ("params", pa.string()),
-        ("payload", pa.binary()),
-        ("n_rows", pa.int64()),
-        ("null_count", pa.int64()),
-        ("raw_bytes", pa.int64()),
-        ("enc_bytes", pa.int64()),
-        ("crc", pa.int64()),
-        ("vmin_num", pa.float64()),
-        ("vmax_num", pa.float64()),
-        ("vmin_str", pa.binary()),
-        ("vmax_str", pa.binary()),
-    ]
-)
+# the same schema on the Arrow side: what every encoder's batches carry
+_BLOCKS_ARROW = to_arrow_schema(BLOCKS_SCHEMA)
 
 # zone-map string bounds are capped (long text values would bloat the
 # metadata table); the upper bound uses truncate-then-increment so it
@@ -369,72 +354,57 @@ def _encode_one_block(
     codec_overrides: dict,
     budget: int | None = None,
     shared_tables: dict | None = None,
-) -> list[dict]:
-    """Encode one logical block; oversized blocks are auto-split into
+) -> pa.RecordBatch:
+    """Encode one logical block into its blocks rows, one per column (one
+    batch under ``_BLOCKS_ARROW``); oversized blocks are auto-split into
     sub-blocks with ids (block_id << SUB_BLOCK_BITS) | sub — every caller's
     id scheme reserves the low byte for this. ``budget`` is captured into
     encoder closures at plan time (executor workers re-import this module,
     so a module-global override would never reach them)."""
-    parts = _split_oversized(tbl, manifest, budget)
-    rows: list[dict] = []
-    for sub, part in enumerate(parts):
-        rows.extend(
-            _encode_single(
-                part, (block_id << SUB_BLOCK_BITS) | sub, manifest,
-                codec_overrides, shared_tables,
+    cols: dict[str, list] = {k: [] for k in _BLOCKS_ARROW.names}
+    for sub, part in enumerate(_split_oversized(tbl, manifest, budget)):
+        for name, m in manifest.items():
+            arr = part.column(name).combine_chunks()
+            blk = _encode_column(
+                arr, m["ptype"], codec_overrides.get(name),
+                (shared_tables or {}).get(name),
             )
-        )
-    return rows
-
-
-def _encode_single(
-    tbl: pa.Table, block_id: int, manifest: dict, codec_overrides: dict,
-    shared_tables: dict | None = None,
-) -> list[dict]:
-    from d6tstack_spark.codecs.blocks import encode_block_arrow
-
-    rows = []
-    for name, m in manifest.items():
-        arr = tbl.column(name).combine_chunks()
-        ptype = m["ptype"]
-        if ptype == "any":
-            blk = _encode_arrow_fallback(arr)
-        elif ptype in ("f32list", "f64list"):
-            from d6tstack_spark.codecs.blocks import encode_block_floatlist
-
-            # null ELEMENTS inside lists are rare enough that the arrow
-            # container carries them; null lists ride the validity bitmap
-            if len(arr) and arr.flatten().null_count:
-                blk = _encode_arrow_fallback(arr)
-            else:
-                blk = encode_block_floatlist(
-                    arr.cast(_PHYS_ARROW_TYPE[ptype]), ptype
-                )
-        elif ptype in ("str", "bin"):
-            # arrow-native fast path: the column never becomes python objects
-            blk = encode_block_arrow(
-                arr.cast(pa.binary()), ptype, codec_overrides.get(name),
-                fsst_table=(shared_tables or {}).get(name),
-            )
-        else:
-            values, valid = _extract_values(arr, ptype)
-            blk = encode_block(values, valid, ptype, codec_overrides.get(name))
-        rows.append(
-            {
-                "block_id": block_id,
+            row = {
+                "block_id": (block_id << SUB_BLOCK_BITS) | sub,
                 "column": name,
-                "codec": blk.codec,
-                "params": blk.params,
-                "payload": blk.payload,
-                "n_rows": blk.n_rows,
-                "null_count": blk.null_count,
-                "raw_bytes": blk.raw_bytes,
-                "enc_bytes": blk.enc_bytes,
-                "crc": blk.crc,
-                **_block_stats(arr, ptype),
+                **vars(blk),
+                **_block_stats(arr, m["ptype"]),
             }
+            for k, v in cols.items():
+                v.append(row[k])
+    return pa.RecordBatch.from_pydict(cols, schema=_BLOCKS_ARROW)
+
+
+def _encode_column(
+    arr: pa.Array, ptype: str, override: str | None, fsst_table=None
+) -> Block:
+    """One block column → its :class:`Block`: the kernel dispatch every
+    encoder runs (inverse of :func:`_decode_column`)."""
+    from d6tstack_spark.codecs.blocks import (
+        encode_block_arrow,
+        encode_block_floatlist,
+    )
+
+    if ptype == "any":
+        return _encode_arrow_fallback(arr)
+    if ptype in ("f32list", "f64list"):
+        # null ELEMENTS inside lists are rare enough that the arrow
+        # container carries them; null lists ride the validity bitmap
+        if len(arr) and arr.flatten().null_count:
+            return _encode_arrow_fallback(arr)
+        return encode_block_floatlist(arr.cast(_PHYS_ARROW_TYPE[ptype]), ptype)
+    if ptype in ("str", "bin"):
+        # arrow-native fast path: the column never becomes python objects
+        return encode_block_arrow(
+            arr.cast(pa.binary()), ptype, override, fsst_table=fsst_table
         )
-    return rows
+    values, valid = _extract_values(arr, ptype)
+    return encode_block(values, valid, ptype, override)
 
 
 def _encode_arrow_fallback(arr: pa.Array) -> Block:
@@ -460,10 +430,8 @@ def _encode_arrow_fallback(arr: pa.Array) -> Block:
     )
 
 
-def _decode_arrow_fallback(payload: bytes) -> pa.Array:
-    import io
-
-    with pa.ipc.open_stream(io.BytesIO(payload)) as r:
+def _decode_arrow_fallback(payload: bytes | memoryview) -> pa.Array:
+    with pa.ipc.open_stream(pa.py_buffer(payload)) as r:
         t = r.read_all()
     return t.column("v").combine_chunks()
 
@@ -475,38 +443,25 @@ def _make_encoder(
 
     def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         pa.set_cpu_count(1)  # workers are the parallelism
-        out_rows: list[dict] = []
         buf: list[pa.RecordBatch] = []
         cur_id: int | None = None
 
-        def flush():
-            nonlocal buf, cur_id
-            if cur_id is None or not buf:
-                return
-            tbl = pa.Table.from_batches(buf)
-            out_rows.extend(
-                _encode_one_block(tbl, cur_id, manifest, codec_overrides, budget)
+        def flush() -> pa.RecordBatch:
+            return _encode_one_block(
+                pa.Table.from_batches(buf), cur_id, manifest,
+                codec_overrides, budget,
             )
-            buf = []
 
         for batch in batches:
-            ids = batch.column("__block_id").to_numpy(zero_copy_only=False)
-            if len(ids) == 0:
-                continue
-            # boundaries inside the (block-sorted) batch
-            starts = np.flatnonzero(np.diff(ids) != 0) + 1
-            bounds = np.concatenate(([0], starts, [len(ids)]))
-            for i in range(len(bounds) - 1):
-                lo, hi = int(bounds[i]), int(bounds[i + 1])
-                bid = int(ids[lo])
-                if cur_id is not None and bid != cur_id:
-                    flush()
+            # runs of the (block-sorted) batch
+            for bid, rows in _block_runs(batch, "__block_id"):
+                if buf and bid != cur_id:
+                    yield flush()
+                    buf = []
                 cur_id = bid
-                buf.append(batch.slice(lo, hi - lo))
-        flush()
-        if out_rows:
-            cols = {k: [r[k] for r in out_rows] for k in _BLOCKS_ARROW.names}
-            yield pa.RecordBatch.from_pydict(cols, schema=_BLOCKS_ARROW)
+                buf.append(rows)
+        if buf:
+            yield flush()
 
     return encode_fn
 
@@ -534,33 +489,21 @@ def _make_local_encoder(
         pid = TaskContext.get().partitionId()
         seq = 0
         buf: list[pa.RecordBatch] = []
-        buffered = 0
 
-        def flush():
-            nonlocal buf, buffered, seq
-            if not buf:
-                return None
+        def flush() -> pa.RecordBatch:
             tbl = pa.Table.from_batches(buf).sort_by(sort_keys)
-            rows = _encode_one_block(
+            return _encode_one_block(
                 tbl, (pid << 32) | seq, manifest, codec_overrides, budget,
                 shared_tables,
             )
-            seq += 1
-            buf = []
-            buffered = 0
-            cols = {k: [r[k] for r in rows] for k in _BLOCKS_ARROW.names}
-            return pa.RecordBatch.from_pydict(cols, schema=_BLOCKS_ARROW)
 
         for batch in batches:
             buf.append(batch)
-            buffered += batch.num_rows
-            if buffered >= target_rows:
-                out = flush()
-                if out is not None:
-                    yield out
-        out = flush()
-        if out is not None:
-            yield out
+            if sum(b.num_rows for b in buf) >= target_rows:
+                yield flush()
+                buf, seq = [], seq + 1
+        if buf:
+            yield flush()
 
     return encode_fn
 
@@ -582,8 +525,9 @@ def encode_table(
     ``shared_fsst_tables`` ({column: code-ordered token list}) lets a
     caller reuse the two-pass shared-table FSST scheme on the DataFrame
     path — e.g. pass ``build_shared_fsst_tables(paths, manifest)`` when
-    the DataFrame is a parquet scan. The scan-fused
-    :func:`encode_parquet_files` builds them automatically; here the
+    the DataFrame is a parquet scan; every scan encode
+    (:func:`encode_parquet_files`, the sliced entry points,
+    ``encode_resume``) builds them with that one builder. Here the
     engine cannot sample the input deterministically (an unordered
     ``limit`` varies run to run, which would break bitwise-deterministic
     blocks), so the sample stays in the caller's hands.
@@ -689,28 +633,96 @@ def _spark_type_str(t: pa.DataType) -> str:
     raise ValueError(f"unsupported arrow type for fused encode: {t}")
 
 
+def _union_input_manifest(paths: list[str]) -> dict:
+    """The one scan manifest: the UNION of the input files' schemas
+    (footer-only — the split planner opens every footer anyway). A
+    file missing a union column gets explicit all-null blocks from the
+    scan encoder (:func:`_physicalize_arrow`), so every block written in
+    one run is complete on disk. A column typed differently across files
+    is a hard error, raised before any job runs (the drift-stacker's
+    policy: widening silently would corrupt the decode contract)."""
+    import pyarrow.parquet as pq
+
+    out: dict[str, dict] = {}
+    for p in sorted(paths):
+        m = build_manifest_arrow(pq.read_schema(p))
+        for k, v in m.items():
+            have = out.get(k)
+            if have is None:
+                out[k] = v
+            elif (have["ptype"], have["logical"]) != (v["ptype"], v["logical"]):
+                raise ValueError(
+                    f"type conflict for column {k!r} across input files: "
+                    f"{have['ptype']}/{have['logical']} vs "
+                    f"{v['ptype']}/{v['logical']} ({p})"
+                )
+    return out
+
+
+# A split's base block id is ``file_idx << 32 | slice << _RG_BITS | rg``.
+# Slice 0 — every split of a plan without ``target_tasks`` — keeps
+# ``file_idx << 32 | rg``, the scheme state dirs are stamped with (resume
+# finds a split's blocks by it); sub-row-group slices are never persisted.
+_RG_BITS = 22
+
+# a plan row as :func:`map_slices` hands it to :func:`_make_scan_encoder`
+_SPLIT_DDL = (
+    "file_idx int, path string, rg int, start long, nrows long, slice int, "
+    "nrg int"
+)
+
+
 def plan_parquet_splits(
     paths: list[str],
     row_groups_per_split: int = 2,
     file_indices: dict[str, int] | None = None,
+    target_tasks: int | None = None,
+    min_rows_per_slice: int = 4096,
 ) -> list[tuple]:
-    """Driver-side split planning from parquet footers: deterministic
-    (sorted paths — the d6tstack np.sort(fname_list) discipline,
-    reference combine_csv.py:62), one split = N row groups. On Iceberg this
-    is the snapshot's file+split list instead.
+    """The scan planner: driver-side splits from parquet footers,
+    deterministic (sorted paths — the d6tstack np.sort(fname_list)
+    discipline, reference combine_csv.py:62). A split is the row range
+    ``[start, start + nrows)`` of ``nrg`` row groups from ``rg`` on,
+    emitted as ``(file_idx, path, rg, start, nrows, slice, nrg)``. On
+    Iceberg this is the snapshot's file+split list instead.
 
     ``file_indices`` pins each path's file_idx (checkpoint/resume persists
     this map so block ids stay stable when files are added between runs);
-    default = position in the sorted path list."""
+    default = position in the sorted path list.
+
+    With ``target_tasks`` each split is cut into up to ``target_tasks //
+    splits`` row slices of at least ``min_rows_per_slice`` rows (floor: N
+    slices ≤ target_tasks is one task wave — a ceil made 6 row groups × 6
+    slices = 36 tasks on 32 cores, and the second wave cost a full task
+    latency), at most 16 per split: each slice re-reads its row groups,
+    and past ~16× the redundant decompress outweighs the parallelism
+    (a 1-row-group table was fastest at 16 slices, slower at 32 and 64).
+    With enough row groups this is one slice per split."""
     import pyarrow.parquet as pq
 
-    splits = []
+    groups = []
     for fi, p in enumerate(sorted(paths)):
         if file_indices is not None:
             fi = file_indices[p]
-        nrg = pq.ParquetFile(p).metadata.num_row_groups
-        for rg in range(0, nrg, row_groups_per_split):
-            splits.append((fi, p, rg, min(row_groups_per_split, nrg - rg)))
+        md = pq.ParquetFile(p).metadata
+        if md.num_row_groups > 1 << _RG_BITS:
+            raise ValueError(
+                f"{p} has {md.num_row_groups} row groups; block ids hold "
+                f"at most {1 << _RG_BITS}"
+            )
+        for rg in range(0, md.num_row_groups, row_groups_per_split):
+            nrg = min(row_groups_per_split, md.num_row_groups - rg)
+            n = sum(md.row_group(rg + i).num_rows for i in range(nrg))
+            groups.append((fi, p, rg, nrg, n))
+    per = 1
+    if target_tasks is not None and groups:
+        per = min(max(1, target_tasks // len(groups)), 16)
+    splits = []
+    for fi, p, rg, nrg, n in groups:
+        k = min(per, max(1, n // min_rows_per_slice))
+        step = max(-(-n // k), 1)
+        for si, start in enumerate(range(0, max(n, 1), step)):
+            splits.append((fi, p, rg, start, min(step, n - start), si, nrg))
     return splits
 
 
@@ -718,11 +730,14 @@ def build_shared_fsst_tables(
     paths: list[str], manifest: dict, sample_rows: int = 16384
 ) -> dict[str, list[bytes]]:
     """Driver-side pass 0 of the two-pass shared-table FSST scheme: one
-    symbol table per string column, built from the first row group of the
-    first (sorted) path. Deterministic for a given input set, and stable
-    under resume as long as no new file sorts before the original first
-    file — and even then only COMPRESSION varies, never correctness:
-    blocks embed whichever table encoded them."""
+    symbol table per string column, built from its first ``sample_rows``
+    non-null values in the first row group of the first (sorted) path.
+    That row group is read in bounded batches, stopping once every column
+    has its sample, so driver time does not grow with row-group size.
+    Deterministic for a given input set, and stable under resume as long
+    as no new file sorts before the original first file — and even then
+    only COMPRESSION varies, never correctness: blocks embed whichever
+    table encoded them."""
     import pyarrow.parquet as pq
 
     from d6tstack_spark.codecs.kernels import build_fsst_table
@@ -734,26 +749,66 @@ def build_shared_fsst_tables(
     present = [c for c in str_cols if c in f.schema_arrow.names]
     if f.metadata.num_row_groups == 0 or not present:
         return {}
-    t = f.read_row_group(0, columns=present, use_threads=False)
+    batches, have = [], dict.fromkeys(present, 0)
+    for b in f.iter_batches(
+        batch_size=sample_rows, row_groups=[0], columns=present,
+        use_threads=False,
+    ):
+        batches.append(b)
+        for c in present:
+            have[c] += b.num_rows - b.column(c).null_count
+        if min(have.values()) >= sample_rows:
+            break
+    if not batches:
+        return {}
+    t = pa.Table.from_batches(batches)
     out: dict[str, list[bytes]] = {}
     for c in present:
-        arr = (
-            t.column(c).combine_chunks().drop_null().cast(pa.binary())
-        )
+        arr = t.column(c).combine_chunks().drop_null().cast(pa.binary())
         tbl = build_fsst_table(arr.slice(0, sample_rows))
         if tbl:
             out[c] = tbl
     return out
 
 
-def _make_fused_encoder(manifest: dict, codec_overrides: dict | None,
-                        order_cols: tuple[str, ...],
-                        budget: int | None = None,
-                        shared_tables: dict | None = None):
+def _physicalize_arrow(t: pa.Table, manifest: dict) -> pa.Table:
+    """Arrow twin of :func:`_physicalize` for a scan split: the
+    manifest's columns in its order, ts → int64 µs, date → int32 days,
+    bool → int8. A manifest column the file lacks (schema evolution)
+    becomes an explicit all-null column, so the block stays complete on
+    disk and the per-file decode invariant holds."""
+    cols = {}
+    for name, m in manifest.items():
+        if name not in t.column_names:
+            cols[name] = pa.nulls(len(t), type=_null_arrow_type(m))
+            continue
+        arr = t.column(name)
+        if m["logical"] in ("ts", "ts_ntz"):
+            # normalize the source unit first: parquet files may carry ns
+            # (pandas default) or ms timestamps, and a bare int64 cast
+            # would keep that unit while decode restores µs — 1000x off
+            tz = arr.type.tz if hasattr(arr.type, "tz") else None
+            arr = arr.cast(pa.timestamp("us", tz=tz)).cast(pa.int64())
+        elif m["logical"] == "date":
+            arr = arr.cast(pa.date32()).cast(pa.int32())
+        elif m["logical"] == "bool":
+            arr = arr.cast(pa.int8())
+        cols[name] = arr
+    return pa.table(cols)
+
+
+def _make_scan_encoder(manifest: dict, codec_overrides: dict | None,
+                       order_cols: tuple[str, ...],
+                       budget: int | None = None,
+                       shared_tables: dict | None = None):
+    """Encoder of :func:`plan_parquet_splits` rows: each split reads its
+    row groups with pyarrow, keeps its row range, sorts it by
+    ``order_cols`` and becomes one block (plus oversize sub-blocks) under
+    the split's id."""
     codec_overrides = codec_overrides or {}
     sort_keys = [(c, "ascending") for c in order_cols if c in manifest]
 
-    def fused(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
         # the workers ARE the parallelism: one arrow thread each, or 32
@@ -762,48 +817,23 @@ def _make_fused_encoder(manifest: dict, codec_overrides: dict | None,
         pa.set_io_thread_count(1)
         files: dict[str, pq.ParquetFile] = {}
         for b in batches:
-            for row in b.to_pylist():
-                f = files.get(row["path"])
+            for s in b.to_pylist():
+                f = files.get(s["path"])
                 if f is None:
-                    f = files.setdefault(row["path"], pq.ParquetFile(row["path"]))
+                    f = files[s["path"]] = pq.ParquetFile(s["path"])
                 t = f.read_row_groups(
-                    range(row["rg"], row["rg"] + row["nrg"]), use_threads=False
+                    range(s["rg"], s["rg"] + s["nrg"]), use_threads=False
+                ).slice(s["start"], s["nrows"])
+                sk = [k for k in sort_keys if k[0] in t.column_names]
+                if sk:
+                    t = t.sort_by(sk)
+                bid = s["file_idx"] << 32 | s["slice"] << _RG_BITS | s["rg"]
+                yield _encode_one_block(
+                    _physicalize_arrow(t, manifest), bid, manifest,
+                    codec_overrides, budget, shared_tables,
                 )
-                if sort_keys:
-                    sk = [s for s in sort_keys if s[0] in t.column_names]
-                    if sk:
-                        t = t.sort_by(sk)
-                cols = {}
-                for name, m in manifest.items():
-                    if name not in t.column_names:
-                        # schema evolution: this source file predates (or
-                        # never had) the column — write an explicit all-null
-                        # block so the block stays complete on disk and the
-                        # per-file decode invariant holds
-                        cols[name] = pa.nulls(len(t), type=_null_arrow_type(m))
-                        continue
-                    arr = t.column(name)
-                    if m["logical"] in ("ts", "ts_ntz"):
-                        # normalize the source unit first: parquet files may
-                        # carry ns (pandas default) or ms timestamps, and a
-                        # bare int64 cast would keep that unit while decode
-                        # restores with timestamp_micros — silently 1000x off
-                        tz = arr.type.tz if hasattr(arr.type, "tz") else None
-                        arr = arr.cast(pa.timestamp("us", tz=tz)).cast(pa.int64())
-                    elif m["logical"] == "date":
-                        arr = arr.cast(pa.date32()).cast(pa.int32())
-                    elif m["logical"] == "bool":
-                        arr = arr.cast(pa.int8())
-                    cols[name] = arr
-                block_id = (int(row["file_idx"]) << 32) | int(row["rg"])
-                rows = _encode_one_block(
-                    pa.table(cols), block_id, manifest, codec_overrides,
-                    budget, shared_tables,
-                )
-                out = {k: [r[k] for r in rows] for k in _BLOCKS_ARROW.names}
-                yield pa.RecordBatch.from_pydict(out, schema=_BLOCKS_ARROW)
 
-    return fused
+    return encode_fn
 
 
 def encode_parquet_files(
@@ -822,46 +852,39 @@ def encode_parquet_files(
     (bench.py uses it); :func:`encode_table` is the DataFrame-native path
     for encoding arbitrary query results.
 
+    The manifest is the union of the files' schemas
+    (:func:`_union_input_manifest`): a column only some files have comes
+    back null for the others' rows, and a column typed differently across
+    files raises before any job runs.
+
     Block id = (file_idx<<32 | first_row_group) << SUB_BLOCK_BITS | sub —
     deterministic under retries (sub > 0 only when a block exceeds the
-    per-column byte budget and auto-splits).
+    per-column byte budget and auto-splits). The tasks come from
+    :func:`map_slices`: ``output_partitions`` (default ~2 per core) tasks,
+    each encoding a contiguous run of splits into one output file — fewer
+    per-task overheads and files (the driver-side commit of thousands of
+    tiny files is a serial cost).
 
     At plan time the driver also builds a shared FSST symbol table per
-    string column from a bounded sample (first row group of the first
-    sorted path — deterministic), so every fsst block maps tokens to
-    codes in one hash pass instead of re-deriving a table per block; a
-    block whose content drifted from the sample silently falls back to
-    the local build (kernels._enc_fsst_shared).
+    string column (:func:`build_shared_fsst_tables`), so every fsst block
+    maps tokens to codes in one hash pass instead of re-deriving a table
+    per block; a block whose content drifted from the sample silently
+    falls back to the local build (kernels._enc_fsst_shared).
     """
-    import pyarrow.parquet as pq
-
     if isinstance(paths, str):
         paths = [paths]
-    manifest = build_manifest_arrow(pq.read_schema(paths[0]))
+    manifest = _union_input_manifest(paths)
     shared_tables = build_shared_fsst_tables(paths, manifest)
     splits = plan_parquet_splits(paths, row_groups_per_split)
-    sdf = spark.createDataFrame(
-        [(fi, p, rg, n) for fi, p, rg, n in splits],
-        "file_idx int, path string, rg int, nrg int",
+    n_tasks = min(
+        len(splits),
+        output_partitions or spark.sparkContext.defaultParallelism * 2,
     )
-    # repartition to 1 split/partition for balance, then coalesce the narrow
-    # pipeline to ~2 tasks/core: each task encodes several splits
-    # sequentially, cutting per-task overhead and output-file count (the
-    # driver-side commit of thousands of tiny files is a serial cost)
-    n_tasks = output_partitions or min(
-        len(splits), max(spark.sparkContext.defaultParallelism * 2, 1)
+    enc = _make_scan_encoder(
+        manifest, codec_overrides, order_cols, max_block_col_bytes,
+        shared_tables,
     )
-    blocks = (
-        sdf.repartition(len(splits))
-        .mapInArrow(
-            _make_fused_encoder(
-                manifest, codec_overrides, order_cols, max_block_col_bytes,
-                shared_tables,
-            ),
-            BLOCKS_SCHEMA,
-        )
-        .coalesce(n_tasks)
-    )
+    blocks = map_slices(spark, splits, n_tasks, enc, BLOCKS_SCHEMA, _SPLIT_DDL)
     return blocks, manifest
 
 
@@ -893,72 +916,130 @@ _LOGICAL_ARROW_TYPE = {
 }
 
 
-def _decode_one_block(rows: list[dict], manifest: dict) -> pa.Table:
-    """Decode one block's rows into a table with the manifest's columns,
-    in manifest order and in their logical Arrow types
-    (``_LOGICAL_ARROW_TYPE``; other columns keep their physical type).
+def _payload_views(col) -> list[memoryview]:
+    """Each value of a binary column (an Array or a ChunkedArray) as a
+    zero-copy view into its Arrow data buffer — the codec kernels read
+    payloads through memoryviews, so no payload becomes a Python
+    ``bytes``."""
+    out = []
+    for ch in getattr(col, "chunks", [col]):
+        _, offsets, data = ch.buffers()
+        width = 8 if pa.types.is_large_binary(ch.type) else 4
+        o = np.frombuffer(
+            offsets, f"<i{width}", len(ch) + 1, ch.offset * width
+        ).tolist()
+        mv = memoryview(b"" if data is None else data)
+        out.extend(mv[o[i] : o[i + 1]] for i in range(len(ch)))
+    return out
+
+
+def _block_rows(rows) -> Iterator[tuple]:
+    """``(column, codec, params, n_rows, null_count, payload)`` for each
+    blocks row of an Arrow table or batch: the metadata as Python values,
+    the payload as a view of its Arrow buffer (:func:`_payload_views`)."""
+    meta = [
+        rows.column(c).to_pylist()
+        for c in ("column", "codec", "params", "n_rows", "null_count")
+    ]
+    return zip(*meta, _payload_views(rows.column("payload")))
+
+
+def _decode_column(
+    ptype: str, codec: str, params: str, n: int, nulls: int, payload
+) -> pa.Array:
+    """One block column's payload → Arrow array of its physical type
+    (``str`` as ``string``): the kernel dispatch every decoder runs."""
+    from d6tstack_spark.codecs.blocks import (
+        decode_block_arrow,
+        decode_block_floatlist,
+    )
+
+    if ptype == "any" or codec == "arrow":
+        return _decode_arrow_fallback(payload)
+    if ptype in ("f32list", "f64list"):
+        return decode_block_floatlist(payload, params, n, nulls, ptype)
+    if ptype in ("str", "bin"):
+        # arrow-native fast path: no per-row python in string decode
+        arr = decode_block_arrow(payload, params, codec, n, nulls, ptype)
+        return arr.cast(pa.string()) if ptype == "str" else arr
+    values, valid = decode_block(payload, params, codec, n, nulls, ptype)
+    mask = None if valid.all() else ~valid
+    return pa.array(values, type=_PHYS_ARROW_TYPE[ptype], mask=mask)
+
+
+def _block_distinct_values(
+    ptype: str, codec: str, params: str, n: int, nulls: int, payload
+) -> list:
+    """The distinct non-null values of one block column as Python values
+    in the physical type — what the Bloom and NDV builds hash. An
+    all-null block decodes nothing."""
+    if nulls >= n:
+        return []
+    arr = _decode_column(ptype, codec, params, n, nulls, payload).drop_null()
+    if pa.types.is_integer(arr.type) or pa.types.is_floating(arr.type):
+        return np.unique(arr.to_numpy()).tolist()
+    return arr.unique().to_pylist()
+
+
+def _decode_one_block(tbl: pa.Table, manifest: dict) -> pa.Table:
+    """Decode one block — its blocks rows, as an Arrow table — into a
+    table with the manifest's columns, in manifest order and in their
+    logical Arrow types (``_LOGICAL_ARROW_TYPE``; other columns keep
+    their physical type). Payloads go to the kernels as views of the
+    Arrow buffers; only the metadata columns become Python values.
 
     Schema evolution: a column marked ``evolved`` in the manifest was added
     to the state dir after this block may have been written — if the block
     has no row for it, the column decodes as all-null (the value every
     pre-evolution row logically has). A missing NON-evolved column is
     corruption and raises."""
-    from d6tstack_spark.codecs.blocks import decode_block_arrow
-
-    by_col = {r["column"]: r for r in rows}
+    by_col = {r[0]: r[1:] for r in _block_rows(tbl)}
+    # the pad length: n_rows of any column the block has
+    n = next((by_col[k][2] for k in manifest if k in by_col), None)
     arrays = {}
-    pad: list[str] = []
-    n = None
     for name, m in manifest.items():
-        r = by_col.get(name)
-        if r is None:
-            if not m.get("evolved"):
-                bid = rows[0]["block_id"] if rows else "?"
-                raise ValueError(
-                    f"incomplete block {bid}: column {name!r} missing and "
-                    "not marked evolved in the manifest — the blocks data "
-                    "is corrupt or the manifest belongs to another dir"
-                )
-            pad.append(name)
-            arrays[name] = None  # placeholder keeps manifest column order
-            continue
-        ptype = m["ptype"]
-        n = r["n_rows"]
-        if ptype == "any" or r["codec"] == "arrow":
-            arr = _decode_arrow_fallback(r["payload"])
-        elif ptype in ("f32list", "f64list"):
-            from d6tstack_spark.codecs.blocks import decode_block_floatlist
-
-            arr = decode_block_floatlist(
-                r["payload"], r["params"], n, r["null_count"], ptype
-            )
-        elif ptype in ("str", "bin"):
-            # arrow-native fast path: no per-row python in string decode
-            arr = decode_block_arrow(
-                r["payload"], r["params"], r["codec"], n, r["null_count"], ptype
-            )
-            if ptype == "str":
-                arr = arr.cast(pa.string())
-        else:
-            values, valid = decode_block(
-                r["payload"], r["params"], r["codec"], n, r["null_count"], ptype
-            )
-            mask = None if valid.all() else ~valid
-            arr = pa.array(values, type=_PHYS_ARROW_TYPE[ptype], mask=mask)
         logical = _LOGICAL_ARROW_TYPE.get(m["logical"])
-        arrays[name] = arr if logical is None else arr.cast(logical)
-    if pad:
-        if n is None:
+        blk = by_col.get(name)
+        if blk is not None:
+            arr = _decode_column(m["ptype"], *blk)
+            arrays[name] = arr if logical is None else arr.cast(logical)
+        elif not m.get("evolved"):
+            bid = tbl.column("block_id")[0].as_py() if len(tbl) else "?"
+            raise ValueError(
+                f"incomplete block {bid}: column {name!r} missing and "
+                "not marked evolved in the manifest — the blocks data "
+                "is corrupt or the manifest belongs to another dir"
+            )
+        elif n is None:
             raise ValueError(
                 "block has only evolved columns missing and no decoded "
                 "column to take the row count from"
             )
-        for name in pad:
-            m = manifest[name]
-            arrays[name] = pa.nulls(
-                n, _LOGICAL_ARROW_TYPE.get(m["logical"]) or _null_arrow_type(m)
-            )
+        else:
+            arrays[name] = pa.nulls(n, logical or _null_arrow_type(m))
     return pa.table(arrays)
+
+
+def _block_runs(
+    batch: pa.RecordBatch, key: str = "block_id"
+) -> Iterator[tuple[int, pa.RecordBatch]]:
+    """``(id, rows)`` for each block in ``batch``, by its ``key`` column.
+    Encoder output holds each block's rows contiguously, and those runs
+    are zero-copy slices; a batch whose blocks interleave (a shuffle's
+    output) is first stably sorted by ``key``."""
+    import pyarrow.compute as pc
+
+    ids = batch.column(key).to_numpy()
+    if not len(ids):
+        return
+    cut = np.flatnonzero(ids[1:] != ids[:-1]) + 1
+    if len(np.unique(ids[np.r_[0, cut]])) <= len(cut):  # an id recurs
+        batch = batch.take(pc.sort_indices(batch, [(key, "ascending")]))
+        ids = batch.column(key).to_numpy()
+        cut = np.flatnonzero(ids[1:] != ids[:-1]) + 1
+    bounds = [0, *cut.tolist(), len(ids)]
+    for lo, hi in zip(bounds[:-1], bounds[1:]):
+        yield int(ids[lo]), batch.slice(lo, hi - lo)
 
 
 def _make_decoder(
@@ -967,32 +1048,42 @@ def _make_decoder(
     extra: dict | None = None,
     chunk_rows: int = 65536,
 ):
-    """Decoder of complete blocks. ``zf`` (a task DNF,
-    :func:`_zone_task_dnf`) skips each block that fails it, classified
-    from the block's own stats rows when its last row arrives; ``extra``
+    """The block decoder: blocks batches in, decoded batches out. Rows
+    are grouped by block_id (:func:`_block_runs`) and buffered as Arrow
+    slices until a block has a row per column, then the block decodes
+    (:func:`_decode_one_block`). ``zf`` (a task DNF,
+    :func:`_zone_task_dnf`) skips each complete block that fails it,
+    classified from the block's own stats rows
+    (:func:`_zone_keep_ids_file`) before any payload is read; ``extra``
     holds the manifest entries of zone columns outside ``manifest``,
     whose rows ride along for that classification and are not decoded."""
     cols = {**manifest, **(extra or {})}
     ncols = len(cols)
     has_evolved = any(m.get("evolved") for m in cols.values())
 
-    def decode(bid: int, rows: list[dict]) -> Iterator[pa.RecordBatch]:
-        if zf is not None and bid not in _zone_keep_ids_rows(rows, zf):
-            return  # the zone map rules the block out
-        tbl = _decode_one_block(rows, manifest)
-        yield from tbl.to_batches(max_chunksize=chunk_rows)
+    def decode(pieces: list[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        tbl = pa.Table.from_batches(pieces)
+        if zf is not None:
+            keep = _zone_keep_ids_file(tbl.drop_columns(["payload"]), zf)
+            if keep is not None and tbl["block_id"][0].as_py() not in keep:
+                return  # the zone map rules the block out
+        yield from _decode_one_block(tbl, manifest).to_batches(
+            max_chunksize=chunk_rows
+        )
 
     def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         pa.set_cpu_count(1)  # workers are the parallelism
-        pending: dict[int, list[dict]] = {}
+        pending: dict[int, list[pa.RecordBatch]] = {}
         for batch in batches:
-            for row in batch.to_pylist():
-                bid = row["block_id"]
-                pending.setdefault(bid, []).append(row)
-                if len(pending[bid]) == ncols:
-                    yield from decode(bid, pending.pop(bid))
+            for bid, rows in _block_runs(batch):
+                pieces = pending.setdefault(bid, [])
+                pieces.append(rows)
+                if sum(p.num_rows for p in pieces) >= ncols:
+                    yield from decode(pending.pop(bid))
         if pending and not has_evolved:
-            missing = {k: len(v) for k, v in pending.items()}
+            missing = {
+                k: sum(p.num_rows for p in v) for k, v in pending.items()
+            }
             raise ValueError(f"incomplete blocks at decode: {missing}")
         # evolved manifest: blocks written before a column was added can
         # never reach ncols rows — they flush here, null-padded by
@@ -1002,7 +1093,7 @@ def _make_decoder(
         # holds the whole file); on the shuffle path pre-evolution blocks
         # buffer to partition end.
         for bid in sorted(pending):
-            yield from decode(bid, pending[bid])
+            yield from decode(pending[bid])
 
     return decode_fn
 
@@ -1100,8 +1191,6 @@ def _ddl_arrow_schema(ddl: str) -> pa.Schema:
     """Arrow schema of a Spark DDL string. Spark's DDL parser lives in the
     JVM (a handful of py4j calls a parse), and ``map_slices`` callers pass
     a few fixed strings, so each is parsed once per process."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     return to_arrow_schema(T._parse_datatype_string(ddl))
 
 
@@ -1117,43 +1206,37 @@ def decode_parquet_blocks(
     """Shuffle-free bulk decode — the inverse twin of
     :func:`encode_parquet_files`.
 
+    The blocks sink (sinks.write_blocks / checkpoint state) writes whole
+    blocks into single files, so a per-FILE task owns complete blocks:
+    the plan is one wave of ``min(len(paths), defaultParallelism)`` tasks
+    (:func:`map_files`, contiguous slices of the sorted path list, no
+    exchange). Each task reads its files with pyarrow and hands their
+    blocks rows, as Arrow batches, to the block decoder
+    (:func:`_make_decoder`) — zero shuffle and no JVM↔Python payload
+    transfer, the 100 TB decode path, where :func:`decode_table` must
+    repartition by block_id. ``columns`` prunes at the parquet row level
+    (only the selected columns' payload rows are read).
+
     ``block_filter=(col, lo, hi)`` — or a LIST of such tuples (ANDed),
     or a LIST OF LISTS (DNF: OR of ANDs, see :func:`compile_where`)
-    — prunes whole blocks via the zone map (see :func:`decode_table`) at
-    ONE level, inside the decode task: each task classifies its own files
-    with :func:`_classify_file` — the file's stats rows (parquet column
-    pruning — no payload bytes) give its qualifying block ids — and reads
-    payload only for those blocks; a file with none reads no payload at
-    all. ``bloom`` (a :class:`~d6tstack_spark.plans.bloomidx.BloomPlan`)
-    is asked first: a file the Bloom index rules out reads neither stats
-    nor payload. The driver runs no planning job and holds
-    no block-id set: the task closure carries the path list (O(files))
-    and the DNF, however many of the ~10⁶-10⁷ blocks of a 100 TB table
-    qualify. Whether a file carries zone stats at all is decided per
-    file: a file written before zone maps decodes whole (the caller's
-    exact row filter still applies).
-
-    :func:`decode_table` must repartition by block_id so each task owns
-    complete blocks — a full shuffle of the PAYLOAD bytes. But the blocks
-    sink (sinks.write_blocks / checkpoint state) writes whole blocks into
-    single files, so a per-FILE task already owns complete blocks: the
-    plan is one wave of ``min(len(paths), defaultParallelism)`` tasks
-    (:func:`map_files`, contiguous slices of the sorted path list — no
-    exchange), each reading its files with pyarrow directly and decoding
-    them one after another — zero shuffle, no JVM↔Python payload
-    transfer, the 100 TB decode path. ``columns`` prunes at the parquet
-    row level (only the selected columns' payload rows are materialized).
+    — prunes whole blocks via the zone map inside the decode task: each
+    task classifies its own files with :func:`_classify_file` (the
+    file's stats rows, no payload bytes) and reads payload only for the
+    qualifying blocks; a file with none reads no payload at all.
+    ``bloom`` (a :class:`~d6tstack_spark.plans.bloomidx.BloomPlan`) is
+    asked first: a file the Bloom index rules out reads neither stats nor
+    payload. The driver runs no planning job and holds no block-id set:
+    the task closure carries the path list (O(files)) and the DNF,
+    however many blocks qualify. A file written before zone maps decodes
+    whole (the caller's exact row filter still applies).
 
     Output: the ``columns`` (default: every manifest column), in that
-    order and in their logical Spark types (:func:`_logical_struct`) —
-    the decoder itself emits Arrow ``timestamp[us, UTC]``,
-    ``timestamp[us]``, ``date32`` and ``bool`` for ts / ts_ntz / date /
-    bool columns, so the plan is the map stage alone, with no cast
-    projection, and TIMESTAMP_NTZ never meets the session time zone.
-    Building the DataFrame takes a fixed number of py4j calls however
-    many files there are: the listing's 7, two for
-    ``defaultParallelism`` and PySpark's ~29 for ``mapInArrow`` over
-    ``spark.range``.
+    order and in their logical Spark types (:func:`_logical_struct`), so
+    the plan is the map stage alone, with no cast projection, and
+    TIMESTAMP_NTZ never meets the session time zone. Building the
+    DataFrame takes a fixed number of py4j calls however many files
+    there are: the listing's 7, two for ``defaultParallelism`` and
+    PySpark's ~29 for ``mapInArrow`` over ``spark.range``.
 
     Listing goes through the Hadoop FileSystem API (scheme-agnostic:
     file://, hdfs://, s3a://, ... — whatever the cluster's Hadoop conf can
@@ -1182,17 +1265,13 @@ def decode_parquet_blocks(
     col_filter = list(manifest) if columns is not None else None
     decoder = _make_decoder(manifest)
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pa.set_cpu_count(1)
-        pa.set_io_thread_count(1)
-        for b in batches:
-            for p in b.column("path").to_pylist():
-                with _listed_file(p):
-                    keep_ids = _classify_file(p, zf, bloom).kept
-                    if keep_ids is not None and not keep_ids:
-                        continue  # no block of this file may match
-                    t = _read_blocks(p, col_filter, keep_ids)
-                yield from decoder(t.to_batches())
+    def run(p: str) -> Iterator[pa.RecordBatch]:
+        with _listed_file(p):
+            keep_ids = _classify_file(p, zf, bloom).kept
+            if keep_ids is not None and not keep_ids:
+                return  # no block of this file may match
+            t = _read_blocks(p, col_filter, keep_ids)
+        yield from decoder(t.to_batches())
 
     out = map_files(spark, paths, run, _logical_struct(manifest))
     if final_columns is not None:
@@ -1222,12 +1301,22 @@ def _decode_projection(
 
 
 def map_files(spark, paths: list[str], fn, out_schema) -> DataFrame:
-    """``fn`` over blocks files in one wave: :func:`map_slices` with
-    ``min(len(paths), defaultParallelism)`` tasks, each handed a
-    contiguous slice of ``paths`` as a ``path string`` batch."""
+    """``fn(path)`` (an iterator of batches) over blocks files in one
+    wave: :func:`map_slices` with ``min(len(paths), defaultParallelism)``
+    tasks, each running ``fn`` on the files of its contiguous slice of
+    ``paths`` in turn, with one Arrow thread (the tasks are the
+    parallelism)."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pa.set_cpu_count(1)
+        pa.set_io_thread_count(1)
+        for b in batches:
+            for p in b.column("path").to_pylist():
+                yield from fn(p)
+
     n_tasks = min(len(paths), spark.sparkContext.defaultParallelism)
     return map_slices(
-        spark, [(p,) for p in paths], n_tasks, fn, out_schema, "path string"
+        spark, [(p,) for p in paths], n_tasks, run, out_schema, "path string"
     )
 
 
@@ -1441,26 +1530,21 @@ def file_census(
         return []
     schema = _ddl_arrow_schema(_CENSUS_SCHEMA)
 
-    def run(batches):
-        pa.set_cpu_count(1)
-        pa.set_io_thread_count(1)
-        for b in batches:
-            out = []
-            for p in b.column("path").to_pylist():
-                with _listed_file(p):
-                    c = _classify_file(p, zf, bloom, tally)
-                if c.rows is None:
-                    k = None if c.kept is None else len(c.kept)
-                    out.append((p, c.bloom, None, None, k, None))
-                    continue
-                kept = c.rows.keys() if c.kept is None else c.kept
-                out.append((
-                    p, c.bloom, len(c.rows), sum(c.rows.values()),
-                    len(kept), sum(c.rows[i] for i in kept),
-                ))
-            yield pa.RecordBatch.from_pylist(
-                [dict(zip(schema.names, r)) for r in out], schema=schema
+    def run(p: str):
+        with _listed_file(p):
+            c = _classify_file(p, zf, bloom, tally)
+        if c.rows is None:
+            k = None if c.kept is None else len(c.kept)
+            row = (p, c.bloom, None, None, k, None)
+        else:
+            kept = c.rows.keys() if c.kept is None else c.kept
+            row = (
+                p, c.bloom, len(c.rows), sum(c.rows.values()),
+                len(kept), sum(c.rows[i] for i in kept),
             )
+        yield pa.RecordBatch.from_pylist(
+            [dict(zip(schema.names, row))], schema=schema
+        )
 
     got = map_files(spark, paths, run, _CENSUS_SCHEMA).collect()
     by_path = {r.path: r for r in got}
@@ -1615,11 +1699,13 @@ def decode_table(
     a disjunction of conjunctions (OR pruning — see
     :func:`compile_where`). After the ``repartition("block_id")`` a
     decode task holds every row of each block it owns, the zone columns'
-    stats rows included, so it classifies each block from those rows
-    (:func:`_zone_keep_ids_rows`, the classifier of every read) and
-    skips the ones that fail: the plan is the one exchange and the map
-    stage, with no join. The exchange still carries the payload rows of
-    pruned blocks, which are never decoded. Pruning is conservative —
+    stats rows included. The block decoder (:func:`_make_decoder`)
+    buffers each block's rows as Arrow slices and, once the block is
+    complete, classifies it from its own stats rows
+    (:func:`_zone_keep_ids_file`, the classifier of every read) before
+    any payload is read, skipping the ones that fail: the plan is the one
+    exchange and the map stage, with no join. The exchange still carries
+    the payload rows of pruned blocks. Pruning is conservative —
     callers still apply the exact row-level filter to the result; blocks
     written before zone maps (or with unsupported stats) always qualify,
     so results are never wrong.

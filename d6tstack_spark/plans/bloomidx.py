@@ -334,33 +334,12 @@ def _index_files(
 
         pa.set_cpu_count(1)
         pa.set_io_thread_count(1)
-        from d6tstack_spark.codecs.blocks import (
-            decode_block,
-            decode_block_arrow,
+        from d6tstack_spark.operators.encode import (
+            _block_distinct_values,
+            _block_rows,
         )
-        from d6tstack_spark.operators.encode import _decode_arrow_fallback
 
         fs, base = _blob_fs(root)
-
-        def values(r, ptype):
-            n, nc = r["n_rows"], r["null_count"]
-            if ptype == "any" or r["codec"] == "arrow":
-                arr = _decode_arrow_fallback(r["payload"])
-                return arr.drop_null().unique().to_pylist()
-            if ptype in ("str", "bin"):
-                arr = decode_block_arrow(
-                    r["payload"], r["params"], r["codec"], n, nc, ptype
-                )
-                vals = arr.drop_null().unique().to_pylist()
-                if ptype == "str":
-                    vals = [
-                        v if isinstance(v, str) else v.decode() for v in vals
-                    ]
-                return vals
-            vals, valid = decode_block(
-                r["payload"], r["params"], r["codec"], n, nc, ptype
-            )
-            return np.unique(vals[valid]).tolist()
 
         def publish(col, name, n_distinct, words):
             d = f"{base}/{_column_dir(col)}"
@@ -392,13 +371,10 @@ def _index_files(
                     rb = rb.filter(
                         pc.is_in(rb.column("column"), value_set=want)
                     )
-                    for r in rb.to_pylist():
-                        if r["null_count"] >= r["n_rows"]:
-                            continue
-                        col = r["column"]
+                    for col, *blk in _block_rows(rb):
                         m = pmeta[col]
                         w, s = words[col], seen[col]
-                        for v in values(r, m["ptype"]):
+                        for v in _block_distinct_values(m["ptype"], *blk):
                             h = _canonical_bytes(v, m)
                             if h is None or h in s:
                                 continue

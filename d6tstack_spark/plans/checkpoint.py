@@ -35,8 +35,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from d6tstack_spark.operators.encode import (
     BLOCKS_SCHEMA,
-    _make_fused_encoder,
-    build_manifest_arrow,
+    _SPLIT_DDL,
+    _make_scan_encoder,
+    _union_input_manifest,
     build_shared_fsst_tables,
     map_slices,
     plan_parquet_splits,
@@ -1359,38 +1360,13 @@ def _sweep_snapshot_appends(spark: SparkSession, state_dir: str) -> int | None:
     return _record_snapshot(state_dir, "append", sorted(added))
 
 
-def _union_input_manifest(paths: list[str]) -> dict:
-    """Manifest over the UNION of the input files' schemas (footer-only
-    scan — the split planner opens every footer anyway). Files missing a
-    union column get explicit all-null blocks from the fused encoder, so
-    every block written in one run is complete on disk. A column typed
-    differently across files is a hard error (the drift-stacker's policy:
-    widening silently would corrupt the decode contract)."""
-    import pyarrow.parquet as pq
-
-    out: dict[str, dict] = {}
-    for p in sorted(paths):
-        m = build_manifest_arrow(pq.read_schema(p))
-        for k, v in m.items():
-            have = out.get(k)
-            if have is None:
-                out[k] = v
-            elif (have["ptype"], have["logical"]) != (v["ptype"], v["logical"]):
-                raise ValueError(
-                    f"type conflict for column {k!r} across input files: "
-                    f"{have['ptype']}/{have['logical']} vs "
-                    f"{v['ptype']}/{v['logical']} ({p})"
-                )
-    return out
-
-
 def _evolve_manifest(prior: dict, new: dict) -> dict:
     """Schema evolution on append: columns the state dir already has keep
     their stored entry (type drift raises); columns the inputs add are
     appended with ``evolved: true`` — already-written blocks have no data
     for them, and the decoder null-pads exactly those (see
     operators.encode._decode_one_block). Columns the inputs DROPPED stay in
-    the manifest; the fused encoder writes explicit all-null blocks for
+    the manifest; the scan encoder writes explicit all-null blocks for
     them, so no marker is needed in that direction."""
     merged = {k: dict(v) for k, v in prior.items()}
     for k, v in new.items():
@@ -1490,7 +1466,7 @@ def _encode_resume_locked(
         return summary
 
     t0 = time.time()
-    enc = _make_fused_encoder(
+    enc = _make_scan_encoder(
         manifest, codec_overrides, order_cols,
         shared_tables=build_shared_fsst_tables(paths, manifest),
     )
@@ -1513,8 +1489,7 @@ def _encode_resume_locked(
         )
         write_blocks(
             map_slices(
-                spark, batch, n_tasks, enc, BLOCKS_SCHEMA,
-                "file_idx int, path string, rg int, nrg int",
+                spark, batch, n_tasks, enc, BLOCKS_SCHEMA, _SPLIT_DDL
             ),
             _blocks_dir(state_dir),
             mode="append",

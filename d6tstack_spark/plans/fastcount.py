@@ -105,43 +105,38 @@ def _fused_count(
     names = schema.names
     null_types = [f.type for f in to_arrow_schema(schema)][: len(dec_manifest)]
 
-    def run(batches):
+    def run(p):
         import pyarrow as pa
 
-        pa.set_cpu_count(1)
-        pa.set_io_thread_count(1)
-        for b in batches:
-            for p in b.column("path").to_pylist():
-                with _listed_file(p):
-                    c = _classify_file(p, may_zf, bloom, tally=True)
-                    if not c.rows:
-                        continue  # empty part file: no blocks to classify
-                    rows = c.rows
-                    may = set(rows) if c.kept is None else c.kept
-                    undec = set()
-                    if cw is not None and may:
-                        neg = None
-                        if neg_zf is not None:
-                            neg = _zone_keep_ids_file(c.stats, neg_zf)
-                        undec = may if neg is None else may & neg
-                    blocks = None
-                    if undec:
-                        blocks = _read_blocks(p, list(dec_manifest), undec)
-                tally = [sum(rows[k] for k in may - undec), len(rows),
-                         len(may), len(undec)]
-                yield pa.RecordBatch.from_arrays(
-                    [pa.nulls(1, ty) for ty in null_types]
-                    + [pa.array([v], pa.int64()) for v in tally],
-                    names=names,
-                )
-                if blocks is None:
-                    continue
-                for db in decoder(blocks.to_batches()):
-                    yield pa.RecordBatch.from_arrays(
-                        db.columns
-                        + [pa.nulls(db.num_rows, pa.int64())] * len(_TALLY),
-                        names=names,
-                    )
+        with _listed_file(p):
+            c = _classify_file(p, may_zf, bloom, tally=True)
+            if not c.rows:
+                return  # empty part file: no blocks to classify
+            rows = c.rows
+            may = set(rows) if c.kept is None else c.kept
+            undec = set()
+            if cw is not None and may:
+                neg = None
+                if neg_zf is not None:
+                    neg = _zone_keep_ids_file(c.stats, neg_zf)
+                undec = may if neg is None else may & neg
+            blocks = None
+            if undec:
+                blocks = _read_blocks(p, list(dec_manifest), undec)
+        tally = [sum(rows[k] for k in may - undec), len(rows),
+                 len(may), len(undec)]
+        yield pa.RecordBatch.from_arrays(
+            [pa.nulls(1, ty) for ty in null_types]
+            + [pa.array([v], pa.int64()) for v in tally],
+            names=names,
+        )
+        if blocks is None:
+            return
+        for db in decoder(blocks.to_batches()):
+            yield pa.RecordBatch.from_arrays(
+                db.columns + [pa.nulls(db.num_rows, pa.int64())] * len(_TALLY),
+                names=names,
+            )
 
     df = map_files(spark, paths, run, schema)
     where = "TRUE" if cw is None else f"({cw.where})"

@@ -114,39 +114,16 @@ def _sketch_df(
         import pyarrow as pa
 
         pa.set_cpu_count(1)
-        from d6tstack_spark.codecs.blocks import (
-            decode_block,
-            decode_block_arrow,
-        )
-        from d6tstack_spark.operators.encode import _decode_arrow_fallback
+        from d6tstack_spark.operators.encode import _block_distinct_values
 
         fpath, col = key
         m = pmeta[col]
-        ptype = m["ptype"]
         seen: set = set()
         for r in pdf.itertuples(index=False):
-            n = int(r.n_rows)
-            nc = int(r.null_count)
-            if nc >= n:
-                continue
-            if ptype == "any" or r.codec == "arrow":
-                arr = _decode_arrow_fallback(r.payload)
-                vals = arr.drop_null().unique().to_pylist()
-            elif ptype in ("str", "bin"):
-                arr = decode_block_arrow(
-                    r.payload, r.params, r.codec, n, nc, ptype
-                )
-                vals = arr.drop_null().unique().to_pylist()
-                if ptype == "str":
-                    vals = [
-                        v if isinstance(v, str) else v.decode()
-                        for v in vals
-                    ]
-            else:
-                values, valid = decode_block(
-                    r.payload, r.params, r.codec, n, nc, ptype
-                )
-                vals = np.unique(values[valid]).tolist()
+            vals = _block_distinct_values(
+                m["ptype"], r.codec, r.params, int(r.n_rows),
+                int(r.null_count), r.payload,
+            )
             for v in vals:
                 b = _canonical_bytes(v, m)
                 if b is not None:
