@@ -13,10 +13,10 @@ from older ones, or files arrive with columns reordered. This module
   threshold so a 10^6-file listing never serializes through one loop),
 - reports drift per file against the consensus (the reference's
   sniff_columns_perfile shape: added / missing columns),
-- and routes: uniform inputs → the scan-fused fast path unchanged;
-  drifted inputs → a mergeSchema-unified scan (missing columns
-  null-padded by Spark) through
-  :func:`~d6tstack_spark.operators.encode.encode_table`.
+- and encodes every unified input through that scan-fused path: a
+  drifted file set gets the union manifest, with all-null blocks for
+  the columns a file lacks; ``on_drift="error"`` refuses drift with
+  the report instead.
 
 Decode needs nothing special: the union manifest describes every column,
 and null runs RLE-compress to almost nothing.
@@ -114,16 +114,14 @@ def encode_parquet_files_drift(
     codec_overrides: dict | None = None,
     **kwargs,
 ) -> tuple[DataFrame, dict]:
-    """Drift-tolerant encode entry point.
+    """Drift-tolerant encode entry point: checks the files' footers, then
+    runs the scan-fused :func:`encode_parquet_files` (footer-planned
+    splits, no shuffle, no JVM↔Python payload copy).
 
-    - Every file shares one schema → the scan-fused
-      :func:`encode_parquet_files` runs unchanged (the throughput path:
-      footer-planned splits, no shuffle, no JVM↔Python payload copy).
-    - Schemas drift and ``on_drift="unify"`` → the files are read as ONE
-      Spark scan with ``mergeSchema`` (union schema, missing columns
-      null-padded per file) and encoded via :func:`encode_table`; the
-      union manifest decodes every row with nulls where a file lacked
-      the column — d6tstack's align-and-stack semantics
+    - Every file shares one schema → the files encode as they are.
+    - Schemas drift and ``on_drift="unify"`` → the same encode, under
+      the union manifest: a column a file lacks decodes as nulls for that
+      file's rows — d6tstack's align-and-stack semantics
       (combine_csv.py `combine_preview`/`run` alignment), bit-exact.
     - ``on_drift="error"`` → raise with the per-file drift report (the
       reference's strict consensus mode, sniffer hard error).
@@ -131,12 +129,9 @@ def encode_parquet_files_drift(
     Type CONFLICTS (same column name, different parquet type) always
     raise — null-padding cannot unify them; cast or rename upstream.
 
-    ``kwargs`` pass through to whichever encoder runs (unknown keys for
-    that encoder raise TypeError, same as calling it directly)."""
-    from d6tstack_spark.operators.encode import (
-        encode_parquet_files,
-        encode_table,
-    )
+    ``kwargs`` pass through to :func:`encode_parquet_files` (unknown keys
+    raise TypeError, same as calling it directly)."""
+    from d6tstack_spark.operators.encode import encode_parquet_files
 
     if on_drift not in ("unify", "error"):  # validated even when inputs
         # happen to be uniform today — a typo'd mode must not lie dormant
@@ -151,18 +146,11 @@ def encode_parquet_files_drift(
             f"null-padding: {report['conflicts']} — cast or rename "
             "upstream (d6tstack columns_select/rename equivalent)"
         )
-    if report["uniform"]:
-        return encode_parquet_files(
-            spark, paths, order_cols=order_cols,
-            codec_overrides=codec_overrides, **kwargs,
-        )
-    if on_drift == "error":
+    if not report["uniform"] and on_drift == "error":
         raise ValueError(
             f"input schemas drift across files: {report['per_file']}"
         )
-    df = (
-        spark.read.option("mergeSchema", "true").parquet(*paths)
-    )
-    return encode_table(
-        df, order_cols=order_cols, codec_overrides=codec_overrides, **kwargs
+    return encode_parquet_files(
+        spark, paths, order_cols=order_cols,
+        codec_overrides=codec_overrides, **kwargs,
     )

@@ -3,22 +3,23 @@
 Pipeline (SURVEY.md §3.2 "Spark lifecycle equivalent" of d6tstack's
 to_parquet_combine, reference combine_csv.py:459-504):
 
-    physicalize (ts→µs int64, date→days, bool→i8; Catalyst Cast nodes)
-    → assign block_id = pmod(xxhash64(bucket_col), B)·SALT_SPAN + salt
+    assign block_id = pmod(xxhash64(bucket_col), B)·SALT_SPAN + salt
       (salt splits skewed bucket keys by order_col range — explicit skew
        handling; AQE skew-join does not cover mapInArrow stages)
     → repartition(B, block_id) · sortWithinPartitions(block_id, *order_cols)
       (the reference's deterministic np.sort file ordering, combine_csv.py:62,
        re-expressed as a stable per-block sort)
-    → mapInArrow(encode): one pass, streaming per-block flush; per column:
-      sniff → auto-select codec → encode → block row
+    → mapInArrow(encode): one pass, streaming per-block flush; per block:
+      physicalize (ts→µs int64, date→days, bool→i8; Arrow casts in the
+      task) → per column: sniff → auto-select codec → encode → block row
     → blocks DataFrame (binary payload + codec manifest columns)
 
 Decode is the exact inverse; every column round-trips bit-identical
-(null bitmaps, NaN payloads, µs timestamps). Encode holds timestamps as
-int64 µs on the Spark side (F.unix_micros) so pandas/Arrow never coerces
-them (SURVEY.md §7 "hard parts"); decode hands the same µs back as Arrow
-``timestamp[us]``, which Spark takes without a conversion.
+(null bitmaps, NaN payloads, µs timestamps). Encode stores timestamps as
+int64 µs, cast from the Arrow batches Spark hands the task, so
+pandas/Arrow never coerces them (SURVEY.md §7 "hard parts"); decode
+hands the same µs back as Arrow ``timestamp[us]``, which Spark takes
+without a conversion.
 
 All heavy work is vectorized: Arrow batches in, numpy kernels inside, Arrow
 batches out — no per-row Python (input_hint).
@@ -207,37 +208,6 @@ def build_manifest(schema: T.StructType) -> dict:
     return manifest
 
 
-# TIMESTAMP_NTZ → wall-clock µs since the epoch. Casting through
-# TIMESTAMP would read the session time zone (and shift wall times in a
-# DST gap); NTZ − NTZ is zone-free. This is the value pyarrow stores for
-# a naive ``timestamp[us]`` column, the one ``compile_where`` reads from
-# a TIMESTAMP_NTZ literal, and the one the block decoder hands back to
-# Spark as Arrow ``timestamp[us]`` (``_LOGICAL_ARROW_TYPE``).
-_NTZ_EPOCH = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
-
-
-def _ntz_micros(c):
-    """TIMESTAMP_NTZ column → wall-clock µs (exact: decimal seconds)."""
-    iv = (c - F.expr(_NTZ_EPOCH)).cast("interval second")
-    return (iv.cast("decimal(18,6)") * 1_000_000).cast("long")
-
-
-def _physicalize(df: DataFrame, manifest: dict) -> DataFrame:
-    cols = []
-    for name, m in manifest.items():
-        c = F.col(name)
-        if m["logical"] == "ts":
-            c = F.unix_micros(c)
-        elif m["logical"] == "ts_ntz":
-            c = _ntz_micros(c)
-        elif m["logical"] == "date":
-            c = F.unix_date(c)
-        elif m["logical"] == "bool":
-            c = c.cast("tinyint")
-        cols.append(c.alias(name))
-    return df.select(*cols)
-
-
 # ---------------------------------------------------------------------------
 # block assignment (bucketing + skew salting)
 # ---------------------------------------------------------------------------
@@ -251,8 +221,9 @@ def assign_block_ids(
     skew_max_rows: int | None = None,
 ) -> DataFrame:
     """Add ``__block_id``. Hot bucket keys (> skew_max_rows rows) are salted
-    by ``floor(order_col / skew_max_rows)`` so one conversation never pins a
-    single task — the explicit skew discipline the north rule requires.
+    by ``floor(order_col / skew_max_rows)`` (an integer ``order_col``) so
+    one conversation never pins a single task — the explicit skew
+    discipline the north rule requires.
 
     The hot-key detection is a map-side-combinable count (cheap at any
     scale); the hot list is tiny by construction and ships as an isin()
@@ -436,72 +407,83 @@ def _decode_arrow_fallback(payload: bytes | memoryview) -> pa.Array:
     return t.column("v").combine_chunks()
 
 
-def _make_encoder(
-    manifest: dict, codec_overrides: dict | None, budget: int | None = None
-):
-    codec_overrides = codec_overrides or {}
-
-    def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pa.set_cpu_count(1)  # workers are the parallelism
-        buf: list[pa.RecordBatch] = []
-        cur_id: int | None = None
-
-        def flush() -> pa.RecordBatch:
-            return _encode_one_block(
-                pa.Table.from_batches(buf), cur_id, manifest,
-                codec_overrides, budget,
-            )
-
-        for batch in batches:
-            # runs of the (block-sorted) batch
-            for bid, rows in _block_runs(batch, "__block_id"):
-                if buf and bid != cur_id:
-                    yield flush()
-                    buf = []
-                cur_id = bid
-                buf.append(rows)
-        if buf:
-            yield flush()
-
-    return encode_fn
+def _encode_rows(
+    t: pa.Table,
+    block_id: int,
+    manifest: dict,
+    sort_keys: list[tuple[str, str]],
+    codec_overrides: dict,
+    budget: int | None = None,
+    shared_tables: dict | None = None,
+) -> pa.RecordBatch:
+    """The last step of every encoder: sort ``t`` by the ``sort_keys``
+    columns it has, physicalize it (:func:`_physicalize_arrow`) and
+    encode it as one block (:func:`_encode_one_block`)."""
+    sk = [k for k in sort_keys if k[0] in t.column_names]
+    if sk:
+        t = t.sort_by(sk)
+    return _encode_one_block(
+        _physicalize_arrow(t, manifest), block_id, manifest,
+        codec_overrides, budget, shared_tables,
+    )
 
 
-def _make_local_encoder(
+def _make_frame_encoder(
     manifest: dict,
     codec_overrides: dict | None,
     order_cols: tuple[str, ...],
-    target_rows: int,
+    target_rows: int | None = None,
     budget: int | None = None,
     shared_tables: dict | None = None,
 ):
-    """Shuffle-free encoder: blocks are carved from the task's own scan
-    stream (~target_rows each), sorted by order_cols in-memory, block_id =
-    partitionId · 2^32 + seq. This is the 100 TB path: a pure map job over
-    Iceberg/parquet splits — no shuffle of the raw data, no skew (a hot
-    conversation simply spans consecutive blocks), linear scaling."""
-    codec_overrides = codec_overrides or {}
-    sort_keys = [(c, "ascending") for c in order_cols]
+    """The DataFrame encoder: ``mapInArrow``'s logical batches in (ts as
+    ``timestamp[us, <session zone>]``, ts_ntz as ``timestamp[us]``, date
+    as ``date32``, bool as ``bool``), blocks out. Rows buffer until their
+    block id changes, then encode through :func:`_encode_rows`. The id:
 
-    def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    - cluster mode (``target_rows=None``): runs of ``__block_id``; the
+      shuffle already sorted rows by it and ``order_cols``;
+    - local mode: ``partitionId << 32 | seq``, a new ``seq`` once a block
+      holds ``target_rows`` rows, each block sorted by ``order_cols`` in
+      the task — a pure map job, no shuffle, no skew (a hot conversation
+      spans consecutive blocks)."""
+    codec_overrides = codec_overrides or {}
+    sort_keys = [] if target_rows is None else [
+        (c, "ascending") for c in order_cols
+    ]
+
+    def seq_runs(batches: Iterator[pa.RecordBatch]):
         from pyspark import TaskContext
 
-        pa.set_cpu_count(1)  # workers are the parallelism
         pid = TaskContext.get().partitionId()
-        seq = 0
+        seq = n = 0
+        for b in batches:
+            yield pid << 32 | seq, b
+            n += b.num_rows
+            if n >= target_rows:
+                seq, n = seq + 1, 0
+
+    def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pa.set_cpu_count(1)  # workers are the parallelism
+        if target_rows is None:
+            runs = (r for b in batches for r in _block_runs(b, "__block_id"))
+        else:
+            runs = seq_runs(batches)
         buf: list[pa.RecordBatch] = []
+        cur: int | None = None
 
         def flush() -> pa.RecordBatch:
-            tbl = pa.Table.from_batches(buf).sort_by(sort_keys)
-            return _encode_one_block(
-                tbl, (pid << 32) | seq, manifest, codec_overrides, budget,
-                shared_tables,
+            return _encode_rows(
+                pa.Table.from_batches(buf), cur, manifest, sort_keys,
+                codec_overrides, budget, shared_tables,
             )
 
-        for batch in batches:
-            buf.append(batch)
-            if sum(b.num_rows for b in buf) >= target_rows:
+        for bid, rows in runs:
+            if buf and bid != cur:
                 yield flush()
-                buf, seq = [], seq + 1
+                buf = []
+            cur = bid
+            buf.append(rows)
         if buf:
             yield flush()
 
@@ -535,42 +517,57 @@ def encode_table(
     Returns ``(blocks_df, manifest)``; ``manifest`` is required by
     :func:`decode_table`. Lazy: nothing executes until an action.
 
+    Both modes run one ``mapInArrow`` encoder over ``df`` as it is
+    (:func:`_make_frame_encoder`); ts / ts_ntz / date / bool become their
+    stored ints in the task, as in every scan encoder.
+
     mode="local" (default): shuffle-free — each scan split encodes its own
-    blocks (sorted by order_cols within the block). The raw table never
-    shuffles; this is the only strategy that survives 100 TB, and skew is a
-    non-issue because blocks are size-bounded by construction.
+    blocks of ~``target_block_rows`` rows, sorted by order_cols within the
+    block. The raw table never shuffles; this is the only strategy that
+    survives 100 TB, and skew is a non-issue because blocks are
+    size-bounded by construction.
 
     mode="cluster": repartition by hashed+salted bucket_col so each
     conversation's turns co-locate (maximal run lengths on the bucket
-    column), with explicit skew salting. Costs a full shuffle of the raw
-    data — use when block/bucket alignment matters more than the shuffle.
+    column), with explicit skew salting (:func:`assign_block_ids`). Costs
+    a full shuffle of the raw data — use when block/bucket alignment
+    matters more than the shuffle. The salt counts rows by the last order
+    column, so with ``skew_max_rows`` set that column must be an integer
+    (a dense row position such as ``turn_idx``); any other type raises
+    ``ValueError`` before a job runs.
     """
     manifest = build_manifest(df.schema)
-    phys = _physicalize(df, manifest)
+    missing = [c for c in order_cols if c not in manifest]
+    if missing:
+        raise ValueError(f"order_cols {missing} are not columns of df")
     if mode == "local":
-        blocks = phys.mapInArrow(
-            _make_local_encoder(
-                manifest, codec_overrides, order_cols, target_block_rows,
-                max_block_col_bytes, shared_fsst_tables,
-            ),
-            BLOCKS_SCHEMA,
+        enc = _make_frame_encoder(
+            manifest, codec_overrides, order_cols, target_block_rows,
+            max_block_col_bytes, shared_fsst_tables,
         )
-        return blocks, manifest
+        return df.mapInArrow(enc, BLOCKS_SCHEMA), manifest
     if mode != "cluster":
         raise ValueError(f"unknown mode {mode!r}; valid: 'local', 'cluster'")
+    salt_col = order_cols[-1]
+    kind = dict(df.dtypes)[salt_col]
+    if skew_max_rows and kind not in ("tinyint", "smallint", "int", "bigint"):
+        raise ValueError(
+            f"skew_max_rows salts by floor({salt_col} / skew_max_rows): "
+            f"{salt_col!r} must be an integer row position, not {kind}; "
+            "pass skew_max_rows=None to encode without salting"
+        )
     bucket_col = bucket_col or order_cols[0]
     if num_blocks is None:
         num_blocks = max(df.sparkSession.sparkContext.defaultParallelism * 2, 8)
-    withid = assign_block_ids(
-        phys, bucket_col, order_cols[-1], num_blocks, skew_max_rows
+    withid = assign_block_ids(df, bucket_col, salt_col, num_blocks, skew_max_rows)
+    enc = _make_frame_encoder(
+        manifest, codec_overrides, order_cols, None, max_block_col_bytes,
+        shared_fsst_tables,
     )
     blocks = (
         withid.repartition(num_blocks, "__block_id")
         .sortWithinPartitions("__block_id", *order_cols)
-        .mapInArrow(
-            _make_encoder(manifest, codec_overrides, max_block_col_bytes),
-            BLOCKS_SCHEMA,
-        )
+        .mapInArrow(enc, BLOCKS_SCHEMA)
     )
     return blocks, manifest
 
@@ -772,11 +769,12 @@ def build_shared_fsst_tables(
 
 
 def _physicalize_arrow(t: pa.Table, manifest: dict) -> pa.Table:
-    """Arrow twin of :func:`_physicalize` for a scan split: the
-    manifest's columns in its order, ts → int64 µs, date → int32 days,
-    bool → int8. A manifest column the file lacks (schema evolution)
-    becomes an explicit all-null column, so the block stays complete on
-    disk and the per-file decode invariant holds."""
+    """A block's rows → what every encoder stores: the manifest's columns
+    in its order, ts → int64 µs (UTC µs from a zone-tagged timestamp,
+    whatever its zone; wall-clock µs from a naive one), date → int32
+    days, bool → int8. A manifest column the rows lack (a scan split of
+    a file without it) becomes an explicit all-null column, so the block
+    stays complete on disk and the per-file decode invariant holds."""
     cols = {}
     for name, m in manifest.items():
         if name not in t.column_names:
@@ -821,16 +819,15 @@ def _make_scan_encoder(manifest: dict, codec_overrides: dict | None,
                 f = files.get(s["path"])
                 if f is None:
                     f = files[s["path"]] = pq.ParquetFile(s["path"])
-                t = f.read_row_groups(
-                    range(s["rg"], s["rg"] + s["nrg"]), use_threads=False
-                ).slice(s["start"], s["nrows"])
-                sk = [k for k in sort_keys if k[0] in t.column_names]
-                if sk:
-                    t = t.sort_by(sk)
                 bid = s["file_idx"] << 32 | s["slice"] << _RG_BITS | s["rg"]
-                yield _encode_one_block(
-                    _physicalize_arrow(t, manifest), bid, manifest,
-                    codec_overrides, budget, shared_tables,
+                # the read goes straight into the call, unnamed: the sort
+                # then frees the row groups the slice views
+                yield _encode_rows(
+                    f.read_row_groups(
+                        range(s["rg"], s["rg"] + s["nrg"]), use_threads=False
+                    ).slice(s["start"], s["nrows"]),
+                    bid, manifest, sort_keys, codec_overrides, budget,
+                    shared_tables,
                 )
 
     return encode_fn
@@ -1560,7 +1557,7 @@ def _normalize_zone_bound(v, ptype: str, logical: str | None):
         return None
     if logical in ("ts", "ts_ntz") and isinstance(v, _dt.datetime):
         # ts: the instant (naive = UTC); ts_ntz: the wall clock as
-        # written, zone dropped — what ``_ntz_micros`` stores
+        # written, zone dropped — what ``_physicalize_arrow`` stores
         if v.tzinfo is not None:
             if logical == "ts":
                 v = v.astimezone(_dt.timezone.utc)

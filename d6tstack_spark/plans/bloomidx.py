@@ -130,7 +130,7 @@ def _canonical_bytes(value, m: dict) -> bytes | None:
 def _to_physical(value, m: dict):
     """Logical query literal (what ``compile_where`` yields: naive UTC
     datetimes from Catalyst's resolved µs, dates from its days) →
-    physical stored value, mirroring ``operators.encode._physicalize``:
+    physical stored value, mirroring ``operators.encode._physicalize_arrow``:
     ts/ts_ntz → µs since epoch, date → days since epoch, bool → int."""
     import datetime as _dt
 

@@ -326,6 +326,42 @@ def test_skew_salting_splits_hot_conversations(spark, transcripts_path):
     )
 
 
+def test_encode_table_checks_order_columns_before_any_job(spark):
+    """The cluster-mode salt divides the last order column, so with
+    ``skew_max_rows`` set a timestamp, date, boolean or double there
+    raises a ValueError naming it before any Spark job; the same frame
+    encodes and round-trips with ``skew_max_rows=None``. An order column
+    the frame lacks raises before any job in either mode."""
+    import datetime as dt
+
+    from conftest import spark_jobs
+
+    rows = [
+        (i % 3, dt.datetime(2021, 3, 14, 1) + dt.timedelta(minutes=17 * i),
+         dt.datetime(2021, 3, 14, 1) + dt.timedelta(minutes=13 * i),
+         dt.date(2021, 1, 1) + dt.timedelta(days=i), i % 2 == 0, i / 4)
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(
+        rows, "k bigint, t timestamp, tn timestamp_ntz, d date, b boolean, "
+        "x double",
+    )
+    for col in ("t", "tn", "d", "b", "x"):
+        def encode(col=col):
+            with pytest.raises(ValueError, match=f"'{col}' must be an integer"):
+                encode_table(df, order_cols=("k", col), mode="cluster",
+                             skew_max_rows=10)
+
+        assert spark_jobs(spark, encode)[1] == 0, col
+    for mode in ("local", "cluster"):
+        def encode(mode=mode):
+            with pytest.raises(ValueError, match=r"\['nope'\] are not"):
+                encode_table(df, order_cols=("k", "nope"), mode=mode)
+
+        assert spark_jobs(spark, encode)[1] == 0, mode
+    assert_roundtrip(df, ("k", "t"), mode="cluster", skew_max_rows=None)
+
+
 def test_fused_parquet_roundtrip(spark, transcripts_path):
     """Scan-fused encode (encode_parquet_files) round-trips bit-identically
     and produces one block per row-group split with deterministic ids."""

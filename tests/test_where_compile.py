@@ -228,6 +228,7 @@ def test_ts_ntz_is_zone_free(spark, tmp_path):
 
     want = values(tbl)
     bdir = str(tmp_path / "blocks")
+    stored = {}
     for tz in ("UTC", _TZ):
         with _session_tz(spark, tz):
             df = spark.read.parquet(src)
@@ -235,13 +236,26 @@ def test_ts_ntz_is_zone_free(spark, tmp_path):
             assert [man[c]["logical"] for c in ("tn", "ts", "d", "b")] == [
                 "ts_ntz", "ts", "date", "bool"
             ]
-            phys = encode._physicalize(df, man).orderBy("k")
-            assert [r.tn for r in phys.collect()] == want_us
-            if tz == "UTC":
+            for mode in ("local", "cluster"):
                 blocks, man = encode.encode_table(
-                    df, order_cols=("k",), target_block_rows=25
+                    df, order_cols=("k",), target_block_rows=25, mode=mode
                 )
-                write_blocks(blocks, bdir)
+                stored[tz, mode] = blocks.toArrow().sort_by(
+                    [("block_id", "ascending"), ("column", "ascending")]
+                )
+                if (tz, mode) == ("UTC", "local"):
+                    write_blocks(blocks, bdir)
+    phys = {"k": man["k"], "tn": {**man["tn"], "logical": None}}
+    for mode in ("local", "cluster"):
+        # every blocks row is the same under either zone ...
+        assert stored["UTC", mode].equals(stored[_TZ, mode]), mode
+        # ... and the stored tn µs are the wall clock as written
+        pairs = []
+        rows = stored["UTC", mode].combine_chunks().to_batches()[0]
+        for _, blk in encode._block_runs(rows):
+            got = encode._decode_one_block(pa.Table.from_batches([blk]), phys)
+            pairs += zip(got["k"].to_pylist(), got["tn"].to_pylist())
+        assert sorted(pairs) == list(zip(range(n), want_us)), mode
     with _session_tz(spark, _TZ):
         dec = encode.decode_table(spark.read.parquet(bdir), man)
         assert sorted((r.k, r.tn) for r in dec.collect()) == list(
