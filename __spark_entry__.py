@@ -686,9 +686,9 @@ def q_clone_state(spark, sf_dir):
 
 def q_ndv_stats(spark, sf_dir):
     """Approximate-NDV sketch sidecar (round 5): per-(file, column) HLL
-    registers built by a maintenance pass (plans/ndvstats.py — the
-    Iceberg-Puffin table-statistics analog), merged DISTRIBUTEDLY by
-    per-position max into the estimator's two sufficient statistics.
+    register blobs built by the Bloom build's task pass
+    (plans/ndvstats.py — the Iceberg-Puffin table-statistics analog),
+    max-merged per column in one shuffle-free job.
     Graded with the recall-pinning pattern the ANN queries use: the row
     carries the EXACT Spark-side COUNT(DISTINCT) plus a boolean pinning
     the estimate within the sketch's error bound; the oracle recomputes

@@ -1,5 +1,6 @@
-"""Bloom-filter file index over encoded state dirs — point-lookup pruning
-on columns the zone maps cannot help with.
+"""Per-(blocks file, column) blob sidecars over encoded state dirs, and
+the Bloom-filter file index built on them — point-lookup pruning on
+columns the zone maps cannot help with.
 
 Zone maps prune by [min, max]: perfect on the clustering key, useless for
 ``conv_id = 'x'`` on a time-ordered table where every file's conv range
@@ -8,14 +9,22 @@ blobs do: one Bloom bitmap per (blocks file, column), built by a separate
 maintenance pass (:func:`build_bloom_index` — the encode hot path is
 untouched).
 
-Layout: ``<state>/bloomidx/meta.json`` (sizing, columns and the
-``layout`` marker) plus one random-access blob per (blocks file, column)
-at ``bloomidx/<column>/<blocks basename>.bloom``: an 8-byte little-endian
-``n_distinct`` followed by the ``m_bits/64`` little-endian uint64 words of
-the bitmap. Blobs are opened through ``pyarrow.fs``, the same URI
-resolution the blocks reads use. A meta without the marker is the older
-parquet sidecar (``bloomidx/data/``): reads ignore it, and
-:func:`refresh_bloom_index` rebuilds it.
+One pass serves every sidecar. :func:`_index_files` reads each blocks
+file once per build, collects the distinct canonical bytes of each
+(file, column), hashes each one md5, and hands the hashes to the
+sidecar's fold: Bloom words here, HLL registers for the NDV sketches of
+``plans/ndvstats.py``. The layout is shared too:
+``<state>/<sidecar>/meta.json`` (sizing, columns and the ``layout``
+marker) plus one random-access blob per (blocks file, column) at
+``<sidecar>/<quoted column>/<blocks basename><suffix>``: an 8-byte
+little-endian ``n_distinct`` followed by the fold's body (for Bloom, the
+``m_bits/64`` little-endian uint64 words of the bitmap under
+``bloomidx/<column>/<basename>.bloom``). Blobs are published under a
+temporary name and renamed into place, opened through ``pyarrow.fs``
+(the same URI resolution the blocks reads use), and counted as covering
+their pair only at the size the meta's sizing gives. A meta without the
+marker is the older parquet sidecar (``<sidecar>/data/``): reads ignore
+it, and a refresh rebuilds it.
 
 At read time the probe runs inside the decode task
 (:func:`~d6tstack_spark.plans.checkpoint.decode_state`): the driver turns
@@ -55,9 +64,10 @@ import json
 import os
 import struct
 import time
-from typing import NamedTuple
+from typing import Callable, NamedTuple
 from urllib.parse import quote
 
+import numpy as np
 from pyspark.sql import SparkSession
 
 BLOOM_K = 6
@@ -65,27 +75,77 @@ DEFAULT_M_BITS = 1 << 21  # 256 KiB per (file, column); fpp<1% @ ~150k NDV
 
 _INDEXABLE_PTYPES = ("str", "bin", "i8", "i16", "i32", "i64")
 _LAYOUT = "blob"  # meta.json marker of the per-(file, column) blob layout
-_BLOB_SUFFIX = ".bloom"
 _MAX_IN_PROBES = 64
 
 
-def _bloom_dir(state_dir: str) -> str:
-    return os.path.join(state_dir, "bloomidx")
+class _Side(NamedTuple):
+    """A blob sidecar: its directory under the state dir, its blob
+    suffix, its fold — ``(md5 halves of a (file, column)'s distinct
+    values as an (n, 2) uint64 array, body bits)`` → the blob body, an
+    array of ``bits/8`` bytes — and the verb its messages use."""
+
+    dir: str
+    suffix: str
+    fold: Callable
+    verb: str
 
 
-def _bloom_meta_path(state_dir: str) -> str:
-    return os.path.join(_bloom_dir(state_dir), "meta.json")
+def _md5_halves(data) -> np.ndarray:
+    """``(h1, h2)`` per bytes value: the little-endian uint64 halves of
+    its md5, the one hash every sidecar folds (one md5 per value)."""
+    return np.frombuffer(
+        b"".join(hashlib.md5(b).digest() for b in data), "<u8"
+    ).reshape(-1, 2)
 
 
-def _blob_root(state_dir: str) -> str:
-    """The bloom dir as a URI ``pyarrow.fs`` resolves (plain paths are
+def _bit_positions(h: np.ndarray, m_bits: int) -> np.ndarray:
+    """k Bloom bit positions per hash by double hashing, ``(h1 + i·h2)
+    mod m_bits`` with h2 forced odd (full-period stride) — the same
+    stdlib-md5 construction the dedup operators use. Both halves are
+    reduced mod ``m_bits`` first, so the uint64 sum cannot wrap."""
+    m = np.uint64(m_bits)
+    h1 = h[:, :1] % m
+    h2 = (h[:, 1:] | np.uint64(1)) % m
+    return (h1 + np.arange(BLOOM_K, dtype=np.uint64) * h2) % m
+
+
+def _positions(data: bytes, m_bits: int) -> list[int]:
+    """The k bit positions of one value — what a probe reads, computed
+    by the build's own construction so build and probe cannot drift."""
+    return _bit_positions(_md5_halves([data]), m_bits)[0].tolist()
+
+
+def _bloom_words(h: np.ndarray, m_bits: int) -> np.ndarray:
+    """The Bloom fold: the bitmap of the hashes as little-endian uint64
+    words."""
+    words = np.zeros(m_bits // 64, dtype="<u8")
+    pos = _bit_positions(h, m_bits).ravel()
+    np.bitwise_or.at(
+        words, pos >> np.uint64(6), np.uint64(1) << (pos & np.uint64(63))
+    )
+    return words
+
+
+_BLOOM = _Side("bloomidx", ".bloom", _bloom_words, "index")
+
+
+def _side_dir(state_dir: str, side: _Side) -> str:
+    return os.path.join(state_dir, side.dir)
+
+
+def _meta_path(state_dir: str, side: _Side) -> str:
+    return os.path.join(_side_dir(state_dir, side), "meta.json")
+
+
+def _blob_root(state_dir: str, side: _Side) -> str:
+    """A sidecar's dir as a URI ``pyarrow.fs`` resolves (plain paths are
     made absolute; tasks receive it in their closure)."""
-    d = _bloom_dir(state_dir)
+    d = _side_dir(state_dir, side)
     return d if "://" in d else os.path.abspath(d)
 
 
 def _blob_fs(root: str):
-    """``(filesystem, path)`` of a bloom dir (a few µs: not cached)."""
+    """``(filesystem, path)`` of a sidecar dir (a few µs: not cached)."""
     from pyarrow.fs import FileSystem
 
     return FileSystem.from_uri(root)
@@ -95,18 +155,13 @@ def _column_dir(column: str) -> str:
     return quote(column, safe="")
 
 
-def _blob_size(m_bits: int) -> int:
-    return 8 + m_bits // 8
+def _blob_path(base: str, column: str, name: str, side: _Side) -> str:
+    """The blob of blocks file ``name`` (a basename) and ``column``."""
+    return f"{base}/{_column_dir(column)}/{name}{side.suffix}"
 
 
-def _positions(data: bytes, m_bits: int) -> list[int]:
-    """k Bloom bit positions via double hashing over one md5 — the same
-    stdlib-only construction the dedup operators use, so build and probe
-    cannot drift."""
-    d = hashlib.md5(data).digest()
-    h1 = int.from_bytes(d[:8], "little")
-    h2 = int.from_bytes(d[8:16], "little") | 1  # odd → full-period stride
-    return [(h1 + i * h2) % m_bits for i in range(BLOOM_K)]
+def _blob_size(bits: int) -> int:
+    return 8 + bits // 8
 
 
 def _canonical_bytes(value, m: dict) -> bytes | None:
@@ -162,11 +217,125 @@ def _probe_bytes(value, m: dict) -> bytes | None:
     return None if phys is None else _canonical_bytes(phys, m)
 
 
-def _write_meta(state_dir: str, meta: dict) -> None:
-    mp = _bloom_meta_path(state_dir)
+def _read_meta(state_dir: str, side: _Side) -> dict | None:
+    mp = _meta_path(state_dir, side)
+    if not os.path.exists(mp):
+        return None
+    with open(mp) as f:
+        return json.load(f)
+
+
+def _write_meta(state_dir: str, side: _Side, meta: dict) -> None:
+    mp = _meta_path(state_dir, side)
     with open(mp + ".tmp", "w") as f:
         json.dump(meta, f, indent=1)
     os.replace(mp + ".tmp", mp)
+
+
+def _check_no_purge(state_dir: str, side: _Side) -> None:
+    from d6tstack_spark.plans.checkpoint import _purge_journal_path
+
+    if os.path.exists(_purge_journal_path(state_dir)):
+        raise RuntimeError(
+            f"state dir {state_dir} has an in-flight purge commit journal; "
+            f"run plans.maintenance.purge_deletes() first, then {side.verb}"
+        )
+
+
+def _build(
+    spark: SparkSession,
+    state_dir: str,
+    side: _Side,
+    columns,
+    bits: int,
+    sizing: dict,
+) -> int:
+    """Build (or rebuild) a sidecar over every listed (file, column)
+    pair in one :func:`_index_files` job, then publish its meta
+    (``sizing`` plus the columns and the layout marker) and delete what
+    the rebuild no longer covers: an older parquet sidecar, the blobs of
+    unlisted files and of dropped columns. Checks first what every build
+    checks: no in-flight purge, known columns of a hashable type, a
+    non-empty blocks dir. Returns the number of files listed."""
+    import shutil
+
+    from d6tstack_spark.operators.encode import _hadoop_list_files
+    from d6tstack_spark.plans.checkpoint import _blocks_dir, load_manifest
+
+    _check_no_purge(state_dir, side)
+    manifest = load_manifest(state_dir)
+    columns = list(columns)
+    if not columns:
+        raise ValueError(f"columns is empty — nothing to {side.verb}")
+    missing = [c for c in columns if c not in manifest]
+    if missing:
+        raise ValueError(f"columns not in manifest: {missing}")
+    bad = [
+        c for c in columns if manifest[c]["ptype"] not in _INDEXABLE_PTYPES
+    ]
+    if bad:
+        raise ValueError(
+            f"columns {bad} have un-{side.verb}able types "
+            f"({[manifest[c]['ptype'] for c in bad]}); only strings, "
+            f"binary and integer-physicalized columns can be {side.verb}ed"
+        )
+    bd = _blocks_dir(state_dir)
+    paths = sorted(_hadoop_list_files(spark, bd, ".parquet"))
+    if not paths:
+        raise ValueError(f"no blocks parquet files under {bd}")
+
+    old = _read_meta(state_dir, side)
+    if old is None or old.get("layout") != _LAYOUT:
+        # the parquet sidecar of the older layout (before any blob is
+        # written: a column named "data" would share the directory)
+        shutil.rmtree(os.path.join(_side_dir(state_dir, side), "data"), True)
+    os.makedirs(_side_dir(state_dir, side), exist_ok=True)
+    _index_files(
+        spark, state_dir, [(p, columns) for p in paths], manifest, bits, side
+    ).collect()
+    _write_meta(
+        state_dir,
+        side,
+        {
+            **sizing,
+            "columns": sorted(columns),
+            "built_ts": time.time(),
+            "layout": _LAYOUT,
+        },
+    )
+    live = {os.path.basename(p) for p in paths}
+    _drop_stale_blobs(state_dir, columns, live, side)
+    return len(paths)
+
+
+def _extend(
+    spark: SparkSession, state_dir: str, side: _Side, meta: dict, bits: int
+) -> int:
+    """Write the blobs of the listed (file, column) pairs a blob-layout
+    sidecar does not cover yet — coverage from a listing of its blob
+    directories, covered blobs never rewritten, no job when nothing is
+    new. Returns the number of files that gained a blob."""
+    from d6tstack_spark.operators.encode import _hadoop_list_files
+    from d6tstack_spark.plans.checkpoint import _blocks_dir, load_manifest
+
+    _check_no_purge(state_dir, side)
+    columns = list(meta["columns"])
+    paths = sorted(
+        _hadoop_list_files(spark, _blocks_dir(state_dir), ".parquet")
+    )
+    covered = _covered_pairs(state_dir, columns, bits, side)
+    # a partially-covered file indexes only its missing columns
+    work = []
+    for p in paths:
+        b = os.path.basename(p)
+        todo = [c for c in columns if (b, c) not in covered]
+        if todo:
+            work.append((p, todo))
+    if work:
+        manifest = load_manifest(state_dir)
+        _index_files(spark, state_dir, work, manifest, bits, side).collect()
+        _write_meta(state_dir, side, {**meta, "built_ts": time.time()})
+    return len(work)
 
 
 def build_bloom_index(
@@ -178,75 +347,22 @@ def build_bloom_index(
     """Build (or rebuild) the Bloom sidecar for ``columns`` — one task
     pass over the blocks files (:func:`_index_files`): each task decodes
     only the indexed columns' payloads of its files, hashes the DISTINCT
-    values (cardinality-bounded work), ORs the per-block bitmaps and
-    writes one blob per listed (file, column). A rebuild then deletes the
-    blobs of files no longer listed and of columns no longer indexed, and
-    removes an older parquet sidecar.
+    values (cardinality-bounded work), folds them into one bitmap per
+    listed (file, column) and writes it as a blob. A rebuild then deletes
+    the blobs of files no longer listed and of columns no longer indexed,
+    and removes an older parquet sidecar.
 
     Indexable column types: strings, binary, integers (including
     timestamp/date/bool columns, which physicalize to ints). Float and
     list columns are refused — point equality on them is not a pruning
     pattern."""
-    import shutil
-
-    from d6tstack_spark.operators.encode import _hadoop_list_files
-    from d6tstack_spark.plans.checkpoint import (
-        _blocks_dir,
-        _purge_journal_path,
-        load_manifest,
-    )
-
-    if os.path.exists(_purge_journal_path(state_dir)):
-        raise RuntimeError(
-            f"state dir {state_dir} has an in-flight purge commit journal; "
-            "run plans.maintenance.purge_deletes() first, then index"
-        )
-    manifest = load_manifest(state_dir)
-    columns = list(columns)
-    if not columns:
-        raise ValueError("columns is empty — nothing to index")
-    missing = [c for c in columns if c not in manifest]
-    if missing:
-        raise ValueError(f"columns not in manifest: {missing}")
-    bad = [
-        c for c in columns if manifest[c]["ptype"] not in _INDEXABLE_PTYPES
-    ]
-    if bad:
-        raise ValueError(
-            f"columns {bad} have un-indexable types "
-            f"({[manifest[c]['ptype'] for c in bad]}); Bloom point lookup "
-            "covers strings, binary and integer-physicalized columns"
-        )
     if m_bits % 64 or m_bits < 64:
         raise ValueError(f"m_bits must be a positive multiple of 64: {m_bits}")
-    bd = _blocks_dir(state_dir)
-    paths = sorted(_hadoop_list_files(spark, bd, ".parquet"))
-    if not paths:
-        raise ValueError(f"no blocks parquet files under {bd}")
-
-    old = load_bloom_meta(state_dir)
-    if old is None or old.get("layout") != _LAYOUT:
-        # the parquet sidecar of the older layout (before any blob is
-        # written: a column named "data" would share the directory)
-        shutil.rmtree(os.path.join(_bloom_dir(state_dir), "data"), True)
-    os.makedirs(_bloom_dir(state_dir), exist_ok=True)
     mb = int(m_bits)
-    _index_files(
-        spark, state_dir, [(p, columns) for p in paths], manifest, mb
-    ).collect()
-    _write_meta(
-        state_dir,
-        {
-            "m_bits": mb,
-            "k": BLOOM_K,
-            "columns": sorted(columns),
-            "built_ts": time.time(),
-            "layout": _LAYOUT,
-        },
+    n = _build(
+        spark, state_dir, _BLOOM, columns, mb, {"m_bits": mb, "k": BLOOM_K}
     )
-    live = {os.path.basename(p) for p in paths}
-    _drop_stale_blobs(state_dir, columns, live)
-    return {"files_indexed": len(paths), "columns": sorted(columns)}
+    return {"files_indexed": n, "columns": sorted(columns)}
 
 
 def refresh_bloom_index(spark: SparkSession, state_dir: str) -> dict:
@@ -258,48 +374,20 @@ def refresh_bloom_index(spark: SparkSession, state_dir: str) -> dict:
     uncovered (file, column) pairs come from a listing of the blob
     directories, and covered blobs are never rewritten. A sidecar of the
     older parquet layout is rebuilt in full."""
-    from d6tstack_spark.operators.encode import _hadoop_list_files
-    from d6tstack_spark.plans.checkpoint import (
-        _blocks_dir,
-        _purge_journal_path,
-        load_manifest,
-    )
-
     meta = load_bloom_meta(state_dir)
     if meta is None:
         raise ValueError(
             f"no Bloom index under {state_dir}; run build_bloom_index first"
         )
-    if os.path.exists(_purge_journal_path(state_dir)):
-        raise RuntimeError(
-            f"state dir {state_dir} has an in-flight purge commit journal; "
-            "run plans.maintenance.purge_deletes() first, then index"
-        )
-    columns = list(meta["columns"])
-    mb = int(meta["m_bits"])
+    columns, mb = list(meta["columns"]), int(meta["m_bits"])
     if meta.get("layout") != _LAYOUT:
         rep = build_bloom_index(spark, state_dir, columns, mb)
         return {
             "files_refreshed": rep["files_indexed"],
             "columns": rep["columns"],
         }
-    bd = _blocks_dir(state_dir)
-    paths = sorted(_hadoop_list_files(spark, bd, ".parquet"))
-    covered = _covered_pairs(state_dir, columns, mb)
-    # a partially-covered file indexes only its missing columns
-    work = []
-    for p in paths:
-        b = os.path.basename(p)
-        todo = [c for c in columns if (b, c) not in covered]
-        if todo:
-            work.append((p, todo))
-    if not work:
-        return {"files_refreshed": 0, "columns": sorted(columns)}
-    manifest = load_manifest(state_dir)
-    _index_files(spark, state_dir, work, manifest, mb).collect()
-    meta["built_ts"] = time.time()
-    _write_meta(state_dir, meta)
-    return {"files_refreshed": len(work), "columns": sorted(columns)}
+    n = _extend(spark, state_dir, _BLOOM, meta, mb)
+    return {"files_refreshed": n, "columns": sorted(columns)}
 
 
 def _index_files(
@@ -307,27 +395,28 @@ def _index_files(
     state_dir: str,
     work: list[tuple[str, list[str]]],
     manifest: dict,
-    mb: int,
+    bits: int,
+    side: _Side = _BLOOM,
 ):
-    """The distributed index build: one task pass over the blocks files
+    """The distributed sidecar build: one task pass over the blocks files
     of ``work`` (``(path, columns)`` pairs), at most one task per core and
     no exchange. Each task streams its files' column rows for ``columns``
-    with pyarrow, decodes the payloads, hashes the DISTINCT values
-    (cardinality-bounded work), ORs them into one bitmap per (file,
-    column), writes it to a temporary name and renames it into place.
+    with pyarrow, decodes the payloads and collects the DISTINCT canonical
+    bytes of each (file, column) (cardinality-bounded work), hashes each
+    one md5 and folds the hashes into the blob body (``side.fold``, sized
+    by ``bits``), writes it to a temporary name and renames it into place.
     EVERY listed pair gets a blob: an empty part file or a file written
-    before a column existed yields a zero bitmap — the sound record, since
-    no equality probe can match a file holding no value of the column, and
-    a missing blob would leave it permanently unprunable. Returns the
-    DataFrame of ``(file, column, n_distinct)`` rows, one per blob; the
-    caller's ``collect`` runs the build as one job."""
+    before a column existed folds the empty set (a zero bitmap, zero
+    registers) — the sound record, since the file holds no value of the
+    column, and a missing blob would leave it permanently uncovered.
+    Returns the DataFrame of ``(file, column, n_distinct)`` rows, one per
+    blob; the caller's ``collect`` runs the build as one job."""
     pmeta = {c: dict(manifest[c]) for _, cols in work for c in cols}
-    root = _blob_root(state_dir)
+    root = _blob_root(state_dir, side)
 
     def build(batches):
         import uuid
 
-        import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
@@ -341,21 +430,21 @@ def _index_files(
 
         fs, base = _blob_fs(root)
 
-        def publish(col, name, n_distinct, words):
-            d = f"{base}/{_column_dir(col)}"
+        def publish(col, name, n_distinct, body):
+            blob = _blob_path(base, col, name, side)
+            d = blob.rsplit("/", 1)[0]
             fs.create_dir(d, recursive=True)
             tmp = f"{d}/.{name}.{uuid.uuid4().hex}.tmp"
             with fs.open_output_stream(tmp, compression=None) as out:
                 out.write(struct.pack("<q", n_distinct))
-                out.write(words.astype("<u8").tobytes())
-            fs.move(tmp, f"{d}/{name}{_BLOB_SUFFIX}")
+                out.write(body.tobytes())
+            fs.move(tmp, blob)
 
         out = {"file": [], "column": [], "n_distinct": []}
         for b in batches:
             for path, cols in zip(
                 b.column("path").to_pylist(), b.column("cols").to_pylist()
             ):
-                words = {c: np.zeros(mb // 64, dtype=np.uint64) for c in cols}
                 seen: dict[str, set] = {c: set() for c in cols}
                 want = pa.array(cols, pa.string())
                 # small batches: payloads are multi-MB, so peak memory is
@@ -372,18 +461,15 @@ def _index_files(
                         pc.is_in(rb.column("column"), value_set=want)
                     )
                     for col, *blk in _block_rows(rb):
-                        m = pmeta[col]
-                        w, s = words[col], seen[col]
+                        m, s = pmeta[col], seen[col]
                         for v in _block_distinct_values(m["ptype"], *blk):
                             h = _canonical_bytes(v, m)
-                            if h is None or h in s:
-                                continue
-                            s.add(h)
-                            for pos in _positions(h, mb):
-                                w[pos >> 6] |= np.uint64(1 << (pos & 63))
+                            if h is not None:
+                                s.add(h)
                 name = os.path.basename(path)
                 for c in cols:
-                    publish(c, name, len(seen[c]), words[c])
+                    body = side.fold(_md5_halves(seen[c]), bits)
+                    publish(c, name, len(seen[c]), body)
                     out["file"].append(name)
                     out["column"].append(c)
                     out["n_distinct"].append(len(seen[c]))
@@ -406,11 +492,7 @@ def _index_files(
 
 
 def load_bloom_meta(state_dir: str) -> dict | None:
-    mp = _bloom_meta_path(state_dir)
-    if not os.path.exists(mp):
-        return None
-    with open(mp) as f:
-        return json.load(f)
+    return _read_meta(state_dir, _BLOOM)
 
 
 def _usable_meta(state_dir: str) -> dict | None:
@@ -422,22 +504,24 @@ def _usable_meta(state_dir: str) -> dict | None:
     return meta if meta.get("k") == BLOOM_K else None
 
 
-def _covered_pairs(state_dir: str, columns, m_bits: int) -> set[tuple]:
+def _covered_pairs(
+    state_dir: str, columns, bits: int, side: _Side
+) -> set[tuple]:
     """``(file basename, column)`` pairs with a blob of the right size —
     one directory listing per column, no Spark job. A blob of any other
-    size (written under another ``m_bits`` by a crashed rebuild) counts as
+    size (written under another sizing by a crashed rebuild) counts as
     uncovered, the safe direction."""
     from pyarrow.fs import FileSelector, FileType
 
-    fs, base = _blob_fs(_blob_root(state_dir))
-    size, n = _blob_size(m_bits), len(_BLOB_SUFFIX)
+    fs, base = _blob_fs(_blob_root(state_dir, side))
+    size, n = _blob_size(bits), len(side.suffix)
     out = set()
     for c in columns:
         sel = FileSelector(f"{base}/{_column_dir(c)}", allow_not_found=True)
         for info in fs.get_file_info(sel):
             if (
                 info.type == FileType.File
-                and info.base_name.endswith(_BLOB_SUFFIX)
+                and info.base_name.endswith(side.suffix)
                 and info.size == size
             ):
                 out.add((info.base_name[:-n], c))
@@ -451,18 +535,20 @@ def bloom_covered_files(state_dir: str, basenames) -> set[str]:
     if meta is None:
         return set()
     cols = meta["columns"]
-    pairs = _covered_pairs(state_dir, cols, int(meta["m_bits"]))
+    pairs = _covered_pairs(state_dir, cols, int(meta["m_bits"]), _BLOOM)
     return {b for b in basenames if all((b, c) in pairs for c in cols)}
 
 
-def _drop_stale_blobs(state_dir: str, columns, live: set[str]) -> None:
-    """After a rebuild: delete the blob dirs of columns no longer indexed
+def _drop_stale_blobs(
+    state_dir: str, columns, live: set[str], side: _Side
+) -> None:
+    """After a rebuild: delete the blob dirs of columns no longer covered
     and the blobs (and stray temporaries) of files no longer listed."""
     from pyarrow.fs import FileSelector, FileType
 
-    fs, base = _blob_fs(_blob_root(state_dir))
+    fs, base = _blob_fs(_blob_root(state_dir, side))
     keep_dirs = {_column_dir(c) for c in columns}
-    keep = {b + _BLOB_SUFFIX for b in live}
+    keep = {b + side.suffix for b in live}
     for d in fs.get_file_info(FileSelector(base)):
         if d.type != FileType.Directory:
             continue
@@ -493,15 +579,13 @@ class BloomPlan(NamedTuple):
         probe, the DNF/IN set algebra as a per-file boolean. A (file,
         column) without a blob of the right size always passes."""
         fs, base = _blob_fs(self.root)
-        name = path.rstrip("/").rsplit("/", 1)[-1] + _BLOB_SUFFIX
+        name = path.rstrip("/").rsplit("/", 1)[-1]
         blobs: dict = {}
 
         def may_hold(col, positions) -> bool:
             if col not in blobs:
                 try:
-                    f = fs.open_input_file(
-                        f"{base}/{_column_dir(col)}/{name}"
-                    )
+                    f = fs.open_input_file(_blob_path(base, col, name, _BLOOM))
                 except OSError:
                     f = None
                 if f is not None and f.size() != _blob_size(self.m_bits):
@@ -579,7 +663,8 @@ def bloom_plan(state_dir: str, manifest: dict, cw) -> BloomPlan | None:
         branches = []  # a branch with no probe keeps every file
     if not branches and not ins:
         return None
-    return BloomPlan(_blob_root(state_dir), mb, tuple(branches), tuple(ins))
+    root = _blob_root(state_dir, _BLOOM)
+    return BloomPlan(root, mb, tuple(branches), tuple(ins))
 
 
 def bloom_value_plan(
@@ -607,7 +692,8 @@ def bloom_value_plan(
         if b is None:
             return None
         probes.append(tuple(_positions(b, mb)))
-    return BloomPlan(_blob_root(state_dir), mb, (), ((col, tuple(probes)),))
+    root = _blob_root(state_dir, _BLOOM)
+    return BloomPlan(root, mb, (), ((col, tuple(probes)),))
 
 
 class AnyBloomPlan(NamedTuple):

@@ -125,7 +125,7 @@ def state_info(spark, state_dir: str, with_ndv: bool = False) -> dict:
         }
         if with_ndv:
             # the register merge is a real (if metadata-sized) Spark job
-            # — 2^lg_k rows per sketched file through a shuffle — so the
+            # — one shuffle-free pass reading every sketched blob — so the
             # default inspection call reports only the sidecar's presence
             info["ndv_stats"]["estimates"] = {
                 r["column"]: r["ndv_estimate"]

@@ -4,19 +4,23 @@ HyperLogLog sketch sidecar, the Iceberg-Puffin table-statistics analog
 planners; this stores stdlib-built HLL registers per (blocks file,
 column) under ``<state>/ndvstats/``).
 
-Same lifecycle as the Bloom sidecar (``plans/bloomidx.py``): built by a
-separate maintenance pass (:func:`build_ndv_stats` — the encode hot path
-is untouched), extended incrementally (:func:`refresh_ndv_stats`, cost
-scales with NEW files only), advisory in every direction (staleness only
-makes the estimate stale, never a read wrong).
+Same lifecycle and layout as the Bloom sidecar (``plans/bloomidx.py``),
+and built by the same per-file task (:func:`bloomidx._index_files`):
+:func:`build_ndv_stats` is a separate maintenance pass (the encode hot
+path is untouched), :func:`refresh_ndv_stats` extends it to new files
+only, and staleness only makes the estimate stale, never a read wrong.
+The task folds the md5 of each distinct value of a (file, column) into
+``2^lg_k`` uint8 registers and writes them as the blob
+``ndvstats/<column>/<basename>.hll`` (an 8-byte ``n_distinct`` header,
+then the registers); empty and column-less files get zero registers.
 
 Why per FILE: HLL registers merge by elementwise max, so per-file
-sketches give (a) a table-level NDV from one distributed merge, (b)
-NDV-per-file for skew diagnosis, and (c) append-only refresh — exactly
-the property Iceberg exploits with per-snapshot sketch blobs. The merge
-itself stays distributed: the estimator only needs ``sum(2^-reg)`` and
-the zero-register count, both computed by groupBy over the exploded
-(column, position, register) rows — registers are never collected.
+sketches give (a) a table-level NDV from one merge, (b) NDV-per-file for
+skew diagnosis, and (c) append-only refresh — exactly the property
+Iceberg exploits with per-snapshot sketch blobs. :func:`ndv_estimates`
+merges in one shuffle-free job: each task max-merges its slice of the
+listed blobs into one register array per column, and the driver merges
+those (at most one per task and column) and applies the estimator.
 
 Estimator: standard HLL (Flajolet et al. 2007) with the small-range
 linear-counting correction; 64-bit md5 hashes (the package's stdlib hash
@@ -30,32 +34,26 @@ statistics the same shape — sniff once per file, merge table-wide.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
-import time
+from collections import Counter
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 
 from d6tstack_spark.plans.bloomidx import (
-    _INDEXABLE_PTYPES,
-    _canonical_bytes,
+    _LAYOUT,
+    _blob_fs,
+    _blob_path,
+    _blob_root,
+    _build,
+    _covered_pairs,
+    _extend,
+    _read_meta,
+    _Side,
 )
 
-LG_K_DEFAULT = 12  # 4096 registers: ~1.6% standard error, 4 KiB/row
-
-
-def _ndv_dir(state_dir: str) -> str:
-    return os.path.join(state_dir, "ndvstats")
-
-
-def _ndv_meta_path(state_dir: str) -> str:
-    return os.path.join(_ndv_dir(state_dir), "meta.json")
-
-
-def _ndv_data_dir(state_dir: str) -> str:
-    return os.path.join(_ndv_dir(state_dir), "data")
+LG_K_DEFAULT = 12  # 4096 registers: ~1.6% standard error, 4 KiB/blob
 
 
 def _bit_length_u64(w: np.ndarray) -> np.ndarray:
@@ -87,6 +85,15 @@ def _hll_registers(hashes: np.ndarray, lg_k: int) -> np.ndarray:
     return regs
 
 
+def _hll_fold(h: np.ndarray, bits: int) -> np.ndarray:
+    """The NDV sidecar's fold: registers of the md5 low halves (the
+    64-bit hash is ``md5[:8]`` little-endian), ``bits/8`` of them."""
+    return _hll_registers(h[:, 0], (bits // 8).bit_length() - 1)
+
+
+_NDV = _Side("ndvstats", ".hll", _hll_fold, "sketch")
+
+
 def _hll_estimate(m: int, sum_pow: float, n_zero: int) -> float:
     """NDV from the merged registers' sufficient statistics: register
     count m, sum(2^-reg), and the zero-register count (linear counting
@@ -100,228 +107,69 @@ def _hll_estimate(m: int, sum_pow: float, n_zero: int) -> float:
     return float(e)
 
 
-def _sketch_df(
-    spark: SparkSession, paths: list[str], columns: list[str],
-    pmeta: dict, lg_k: int,
-):
-    """One applyInPandas group per (blocks file, column): decode only
-    that column's payloads, hash the DISTINCT values (the same
-    md5-derived 64-bit hash the Bloom index uses), fill HLL registers.
-    Work is cardinality-bounded per block, exactly like the Bloom build."""
-
-    def _build(key, pdf):
-        import pandas as pd
-        import pyarrow as pa
-
-        pa.set_cpu_count(1)
-        from d6tstack_spark.operators.encode import _block_distinct_values
-
-        fpath, col = key
-        m = pmeta[col]
-        seen: set = set()
-        for r in pdf.itertuples(index=False):
-            vals = _block_distinct_values(
-                m["ptype"], r.codec, r.params, int(r.n_rows),
-                int(r.null_count), r.payload,
-            )
-            for v in vals:
-                b = _canonical_bytes(v, m)
-                if b is not None:
-                    seen.add(b)
-        hashes = np.fromiter(
-            (
-                int.from_bytes(hashlib.md5(b).digest()[:8], "little")
-                for b in seen
-            ),
-            dtype=np.uint64,
-            count=len(seen),
-        )
-        regs = _hll_registers(hashes, lg_k)
-        return pd.DataFrame(
-            {
-                "file": [os.path.basename(fpath)],
-                "column": [col],
-                "n_distinct_file": [len(seen)],
-                "regs": [regs.astype(np.int32).tolist()],
-            }
-        )
-
-    rows = (
-        spark.read.parquet(*paths)
-        .filter(F.col("column").isin(columns))
-        .select(
-            F.input_file_name().alias("f"),
-            "column",
-            "codec",
-            "params",
-            "payload",
-            "n_rows",
-            "null_count",
-        )
-    )
-    return rows.groupBy("f", "column").applyInPandas(
-        _build,
-        schema="file string, column string, n_distinct_file long, "
-        "regs array<int>",
-    )
-
-
 def build_ndv_stats(
     spark: SparkSession,
     state_dir: str,
     columns: list[str] | tuple[str, ...],
     lg_k: int = LG_K_DEFAULT,
 ) -> dict:
-    """Build (or rebuild) the NDV sketch sidecar for ``columns``. The
-    whole sidecar is rewritten, so a rebuild also forgets files a rewrite
-    retired. Sketchable types = the Bloom-indexable set (strings, binary,
-    integer-physicalized — timestamps/dates/bools included)."""
-    from d6tstack_spark.operators.encode import _hadoop_list_files
-    from d6tstack_spark.plans.checkpoint import (
-        _blocks_dir,
-        _purge_journal_path,
-        load_manifest,
-    )
-
-    if os.path.exists(_purge_journal_path(state_dir)):
-        raise RuntimeError(
-            f"state dir {state_dir} has an in-flight purge commit journal; "
-            "run plans.maintenance.purge_deletes() first, then sketch"
-        )
+    """Build (or rebuild) the NDV sketch sidecar for ``columns`` in one
+    task pass over the blocks files. The whole sidecar is rewritten, so
+    a rebuild also forgets files a rewrite retired. Sketchable types =
+    the Bloom-indexable set (strings, binary, integer-physicalized —
+    timestamps/dates/bools included)."""
     if not (12 <= int(lg_k) <= 18):
         raise ValueError(f"lg_k must be in [12, 18]: {lg_k}")
-    manifest = load_manifest(state_dir)
-    columns = list(columns)
-    if not columns:
-        raise ValueError("columns is empty — nothing to sketch")
-    missing = [c for c in columns if c not in manifest]
-    if missing:
-        raise ValueError(f"columns not in manifest: {missing}")
-    bad = [
-        c for c in columns if manifest[c]["ptype"] not in _INDEXABLE_PTYPES
-    ]
-    if bad:
-        raise ValueError(
-            f"columns {bad} have un-sketchable types "
-            f"({[manifest[c]['ptype'] for c in bad]}); NDV sketches cover "
-            "strings, binary and integer-physicalized columns"
-        )
-    bd = _blocks_dir(state_dir)
-    paths = sorted(_hadoop_list_files(spark, bd, ".parquet"))
-    if not paths:
-        raise ValueError(f"no blocks parquet files under {bd}")
-    pmeta = {c: dict(manifest[c]) for c in columns}
-    df = _sketch_df(spark, paths, columns, pmeta, int(lg_k))
-    dd = _ndv_data_dir(state_dir)
-    df.write.mode("overwrite").parquet(dd)
-    _fill_gaps(spark, dd, paths, columns, int(lg_k))
-    meta = {
-        "lg_k": int(lg_k),
-        "columns": sorted(columns),
-        "built_ts": time.time(),
-    }
-    mp = _ndv_meta_path(state_dir)
-    with open(mp + ".tmp", "w") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(mp + ".tmp", mp)
-    n_files = spark.read.parquet(dd).select("file").distinct().count()
-    return {"files_sketched": int(n_files), "columns": sorted(columns)}
+    lg_k = int(lg_k)
+    n = _build(spark, state_dir, _NDV, columns, 8 << lg_k, {"lg_k": lg_k})
+    return {"files_sketched": n, "columns": sorted(columns)}
 
 
 def refresh_ndv_stats(spark: SparkSession, state_dir: str) -> dict:
     """Extend the sidecar to files added since the last build — O(new
-    files), the append cadence; a full rebuild is only warranted to
-    forget retired files (a stale extra sketch only overestimates)."""
-    from d6tstack_spark.operators.encode import _hadoop_list_files
-    from d6tstack_spark.plans.checkpoint import (
-        _blocks_dir,
-        _purge_journal_path,
-        load_manifest,
-    )
-
-    meta = load_ndv_meta(state_dir)
+    files), the append cadence, and no job when nothing is new; a full
+    rebuild is only warranted to forget retired files (a stale extra
+    sketch only overestimates). A sidecar of the older parquet layout is
+    rebuilt in full."""
+    meta = _read_meta(state_dir, _NDV)
     if meta is None:
         raise ValueError(
             f"no NDV sidecar under {state_dir}; run build_ndv_stats first"
         )
-    if os.path.exists(_purge_journal_path(state_dir)):
-        raise RuntimeError(
-            f"state dir {state_dir} has an in-flight purge commit journal; "
-            "run plans.maintenance.purge_deletes() first, then sketch"
-        )
-    columns = list(meta["columns"])
-    lg_k = int(meta["lg_k"])
-    manifest = load_manifest(state_dir)
-    pmeta = {c: dict(manifest[c]) for c in columns}
-    bd = _blocks_dir(state_dir)
-    paths = sorted(_hadoop_list_files(spark, bd, ".parquet"))
-    dd = _ndv_data_dir(state_dir)
-    covered = {
-        r[0]
-        for r in spark.read.parquet(dd).select("file").distinct().collect()
-    }
-    new_paths = [p for p in paths if os.path.basename(p) not in covered]
-    if not new_paths:
-        return {"files_refreshed": 0, "columns": sorted(columns)}
-    df = _sketch_df(spark, new_paths, columns, pmeta, lg_k)
-    df.write.mode("append").parquet(dd)
-    _fill_gaps(spark, dd, new_paths, columns, lg_k)
-    meta["built_ts"] = time.time()
-    mp = _ndv_meta_path(state_dir)
-    with open(mp + ".tmp", "w") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(mp + ".tmp", mp)
-    return {"files_refreshed": len(new_paths), "columns": sorted(columns)}
-
-
-def _fill_gaps(
-    spark: SparkSession, dd: str, paths: list[str], columns: list[str],
-    lg_k: int,
-) -> None:
-    """Cover EVERY listed file: zero-row part files and files lacking a
-    column entirely (pre-evolution) produce no sketch group; all-zero
-    registers are the sound record (the file contributes no values), and
-    leaving them out would make refresh re-sketch them forever."""
-    covered = {
-        (r[0], r[1])
-        for r in spark.read.parquet(dd).select("file", "column").collect()
-    }
-    gaps = [
-        (os.path.basename(p), c)
-        for p in paths
-        for c in columns
-        if (os.path.basename(p), c) not in covered
-    ]
-    if gaps:
-        zero = [0] * (1 << lg_k)
-        spark.createDataFrame(
-            [(f, c, 0, zero) for f, c in gaps],
-            schema="file string, column string, n_distinct_file long, "
-            "regs array<int>",
-        ).coalesce(1).write.mode("append").parquet(dd)
+    columns, lg_k = list(meta["columns"]), int(meta["lg_k"])
+    if meta.get("layout") != _LAYOUT:
+        rep = build_ndv_stats(spark, state_dir, columns, lg_k)
+        return {
+            "files_refreshed": rep["files_sketched"],
+            "columns": rep["columns"],
+        }
+    n = _extend(spark, state_dir, _NDV, meta, 8 << lg_k)
+    return {"files_refreshed": n, "columns": sorted(columns)}
 
 
 def load_ndv_meta(state_dir: str) -> dict | None:
-    mp = _ndv_meta_path(state_dir)
-    if not os.path.exists(mp):
+    """The sidecar's meta when reads may use it (the blob layout); None
+    without one or for an older parquet sidecar."""
+    meta = _read_meta(state_dir, _NDV)
+    if meta is None or meta.get("layout") != _LAYOUT:
         return None
-    with open(mp) as f:
-        return json.load(f)
+    return meta
 
 
 def ndv_estimates(
     spark: SparkSession, state_dir: str, live_only: bool = True
 ) -> DataFrame:
     """Table-level NDV per sketched column as a DataFrame ``(column,
-    files, ndv_estimate)``. The register merge is DISTRIBUTED: explode
-    (position, register), take the per-position max across files, then
-    reduce to the estimator's two sufficient statistics — the registers
-    never reach the driver. ``live_only`` drops sketch rows of files no
-    longer in the blocks dir (retired by a rewrite), so estimates track
-    the live table without a rebuild; a rewrite that SPLITS values across
-    new un-sketched files simply leaves those files uncounted until
-    :func:`refresh_ndv_stats` — advisory, like every sidecar here."""
-    from d6tstack_spark.operators.encode import _hadoop_list_files
+    files, ndv_estimate)``, from the blobs a listing finds at the
+    sidecar's size. The register merge is one shuffle-free job: each
+    task max-merges its slice of the blobs per column, and the driver
+    merges the per-task arrays. ``live_only`` keeps only the blobs of
+    files in the blocks dir (retired ones drop out), so estimates track
+    the live table without a rebuild; a rewrite that SPLITS values
+    across new un-sketched files simply leaves those files uncounted
+    until :func:`refresh_ndv_stats` — advisory, like every sidecar
+    here."""
+    from d6tstack_spark.operators.encode import _hadoop_list_files, map_slices
     from d6tstack_spark.plans.checkpoint import _blocks_dir
 
     meta = load_ndv_meta(state_dir)
@@ -329,47 +177,58 @@ def ndv_estimates(
         raise ValueError(
             f"no NDV sidecar under {state_dir}; run build_ndv_stats first"
         )
-    lg_k = int(meta["lg_k"])
-    m = 1 << lg_k
-    df = spark.read.parquet(_ndv_data_dir(state_dir))
+    m = 1 << int(meta["lg_k"])
+    pairs = _covered_pairs(state_dir, meta["columns"], 8 * m, _NDV)
     if live_only:
-        live = [
+        live = {
             os.path.basename(p)
             for p in _hadoop_list_files(
                 spark, _blocks_dir(state_dir), ".parquet"
             )
-        ]
-        # broadcast semi join, not isin: an In expression with 10^5+
-        # literals (one per live file) blows up plan construction — same
-        # fix as bloomidx's left_anti on retired files
-        live_df = spark.createDataFrame(
-            [(b,) for b in live], schema="file string"
+        }
+        pairs = {(f, c) for f, c in pairs if f in live}
+    root = _blob_root(state_dir, _NDV)
+
+    def merge(batches):
+        fs, base = _blob_fs(root)
+        acc: dict[str, np.ndarray] = {}
+        for b in batches:
+            for name, col in zip(
+                b.column("file").to_pylist(), b.column("column").to_pylist()
+            ):
+                path = _blob_path(base, col, name, _NDV)
+                with fs.open_input_file(path) as f:
+                    regs = np.frombuffer(f.read_at(m, 8), np.uint8)
+                r = acc.setdefault(col, np.zeros(m, np.uint8))
+                np.maximum(r, regs, out=r)
+        yield pa.RecordBatch.from_pydict(
+            {"column": list(acc), "regs": [r.tobytes() for r in acc.values()]},
+            schema=pa.schema([("column", pa.string()), ("regs", pa.binary())]),
         )
-        df = df.join(F.broadcast(live_df), "file", "leftsemi")
-    merged = (
-        df.select(
-            "column", F.posexplode("regs").alias("pos", "r")
-        )
-        .groupBy("column", "pos")
-        .agg(F.max("r").alias("r"))
-        .groupBy("column")
-        .agg(
-            F.sum(F.pow(F.lit(2.0), -F.col("r"))).alias("s"),
-            F.sum(F.when(F.col("r") == 0, 1).otherwise(0)).alias("v"),
-        )
-    )
-    files = df.groupBy("column").agg(
-        F.countDistinct("file").alias("files")
-    )
-    rows = merged.join(files, "column").collect()  # one row per column
-    out = [
-        (
-            r["column"],
-            int(r["files"]),
-            round(_hll_estimate(m, float(r["s"]), int(r["v"])), 1),
-        )
-        for r in rows
-    ]
+
+    n_tasks = min(len(pairs), spark.sparkContext.defaultParallelism)
+    merged: dict[str, np.ndarray] = {}
+    for r in map_slices(
+        spark, sorted(pairs), n_tasks, merge,
+        "column string, regs binary", "file string, column string",
+    ).collect():
+        regs = np.frombuffer(r["regs"], np.uint8)
+        merged[r["column"]] = np.maximum(merged.get(r["column"], regs), regs)
+    files = Counter(c for _, c in pairs)
+    cols = sorted(merged)
+    est = []
+    for c in cols:
+        regs = merged[c]
+        sum_pow = float(np.ldexp(1.0, -regs.astype(np.int64)).sum())
+        e = _hll_estimate(m, sum_pow, int((regs == 0).sum()))
+        est.append(round(e, 1))
+    # from an Arrow table, so collecting the result runs no Spark job
     return spark.createDataFrame(
-        out, schema="column string, files long, ndv_estimate double"
+        pa.table(
+            [cols, [files[c] for c in cols], est],
+            schema=pa.schema(
+                [("column", pa.string()), ("files", pa.int64()),
+                 ("ndv_estimate", pa.float64())]
+            ),
+        )
     )

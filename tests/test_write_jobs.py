@@ -3,13 +3,15 @@
 ``encode_resume`` plans a resume on the driver from one census of the
 blocks dir, and encodes each commit batch with one task per core (more
 when a file would exceed a few splits), each writing one file of whole
-blocks. The Bloom build and refresh are one task
-pass over the listed files. These tests pin the Spark job counts of those
-calls, the file layout of the commit batches, and the sidecar blobs the
-Bloom pass writes for files that hold no value of an indexed column."""
+blocks. The Bloom and NDV sidecar builds and refreshes are one task
+pass over the listed files, and the NDV merge is one more. These tests
+pin the Spark job counts of those calls, the file layout of the commit
+batches, and the sidecar blobs the pass writes for files that hold no
+value of an indexed column."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 
@@ -30,6 +32,12 @@ from d6tstack_spark.plans.checkpoint import (
     decode_state,
     encode_resume,
     load_manifest,
+)
+from d6tstack_spark.plans.ndvstats import (
+    _hll_registers,
+    build_ndv_stats,
+    ndv_estimates,
+    refresh_ndv_stats,
 )
 
 _N = 1200  # rows per source file
@@ -101,6 +109,55 @@ def test_write_job_counts(spark, tmp_path):
     lineage = spark.read.parquet(os.path.join(sd, "lineage"))
     assert lineage.count() == 6
     assert lineage.agg({"rows": "sum"}).first()[0] == 3 * _N
+
+
+def _jobs_stages(spark, fn):
+    """(result of ``fn()``, its Spark jobs, their stages)."""
+    sc = spark.sparkContext
+    group = []
+
+    def run():
+        group.append(sc.getLocalProperty("spark.jobGroup.id"))
+        return fn()
+
+    out, jobs = spark_jobs(spark, run)
+    st = sc.statusTracker()
+    ids = st.getJobIdsForGroup(group[0])
+    return out, jobs, sum(len(st.getJobInfo(j).stageIds) for j in ids)
+
+
+def test_ndv_job_counts(spark, tmp_path):
+    """The NDV build is the Bloom build's one task pass, a refresh
+    runs it over the new files only (no job when nothing is new), and
+    the estimate merge is one more shuffle-free pass."""
+    paths = [_write_source(tmp_path, i) for i in range(2)]
+    sd = str(tmp_path / "state")
+    encode_resume(spark, paths, sd)
+    cols = ["conv_id", "seq"]
+
+    rep, jobs, stages = _jobs_stages(
+        spark, lambda: build_ndv_stats(spark, sd, cols)
+    )
+    assert rep["files_sketched"] == len(_block_files(sd))
+    assert (jobs, stages) == (1, 1)
+    r, jobs = spark_jobs(spark, lambda: refresh_ndv_stats(spark, sd))
+    assert (r["files_refreshed"], jobs) == (0, 0)
+
+    sketched = set(_block_files(sd))
+    paths.append(_write_source(tmp_path, 2))
+    encode_resume(spark, paths, sd)
+    r, jobs = spark_jobs(spark, lambda: refresh_ndv_stats(spark, sd))
+    assert r["files_refreshed"] == len(set(_block_files(sd)) - sketched) > 0
+    assert jobs == 1, jobs
+
+    rows, jobs = spark_jobs(spark, lambda: ndv_estimates(spark, sd).collect())
+    assert jobs == 1, jobs
+    n_files = len(_block_files(sd))
+    got = {r["column"]: (r["files"], r["ndv_estimate"]) for r in rows}
+    assert set(got) == set(cols)
+    for c, exact in (("conv_id", 3 * _N // 6), ("seq", 3 * _N)):
+        assert got[c][0] == n_files
+        assert abs(got[c][1] - exact) <= 0.05 * exact, (c, got[c], exact)
 
 
 def _plan(df) -> str:
@@ -243,11 +300,50 @@ def _check_sidecar(spark, sd: str, columns: list[str], zero: set, mb: int):
             assert n > 0, (f, c)
 
 
+def _decoded_hashes(spark, sd: str, f: str, col: str) -> np.ndarray:
+    """The 64-bit HLL hashes (``md5[:8]``, little-endian) of the file's
+    decoded distinct values."""
+    from d6tstack_spark.operators.encode import decode_parquet_blocks
+
+    manifest = load_manifest(sd)
+    vals = decode_parquet_blocks(
+        spark, os.path.join(sd, "blocks"), manifest, columns=[col], paths=[f]
+    ).toArrow().column(col).to_pylist()
+    hashed = {_canonical_bytes(v, manifest[col]) for v in vals if v is not None}
+    return np.array(
+        [int.from_bytes(hashlib.md5(b).digest()[:8], "little") for b in hashed],
+        dtype=np.uint64,
+    )
+
+
+def _check_ndv_sidecar(spark, sd: str, columns: list[str], zero: set, lg_k):
+    """One ``.hll`` blob per listed (file, column), no stray temporary:
+    an ``n_distinct`` header and the registers recomputed from the file's
+    decoded values, all zero for the ``zero`` pairs."""
+    from urllib.parse import quote
+
+    files = [os.path.basename(f) for f in _block_files(sd)]
+    root = os.path.join(sd, "ndvstats")
+    for c in columns:
+        d = os.path.join(root, quote(c, safe=""))
+        assert sorted(os.listdir(d)) == sorted(f + ".hll" for f in files)
+        for f in files:
+            with open(os.path.join(d, f + ".hll"), "rb") as fh:
+                raw = fh.read()
+            hashes = _decoded_hashes(spark, sd, os.path.join(sd, "blocks", f), c)
+            assert int.from_bytes(raw[:8], "little") == len(hashes), (f, c)
+            regs = np.frombuffer(raw[8:], np.uint8)
+            assert regs.tolist() == _hll_registers(hashes, lg_k).tolist(), (f, c)
+            assert (not regs.any()) == ((f, c) in zero), (f, c)
+
+
 def test_bloom_rows_cover_empty_and_columnless_files(spark, tmp_path):
     """Every listed (file, column) gets exactly one sidecar blob, after a
     build and after a refresh: the pre-evolution files (no ``tag`` rows)
     and an empty part file carry zero bitmaps, and every bitmap equals
-    one recomputed from the file's decoded values."""
+    one recomputed from the file's decoded values. An NDV sidecar on the
+    same columns, built by the same pass, holds the same pairs as HLL
+    registers, zero for the same files."""
     from d6tstack_spark.operators.encode import BLOCKS_SCHEMA
     from d6tstack_spark.operators.sinks import write_blocks
 
@@ -283,3 +379,8 @@ def test_bloom_rows_cover_empty_and_columnless_files(spark, tmp_path):
     assert r["files_refreshed"] == len(set(_block_files(sd)) - before) > 0
     _check_sidecar(spark, sd, cols, zero, mb)
     assert refresh_bloom_index(spark, sd)["files_refreshed"] == 0
+
+    # the NDV sidecar comes from the same pass: registers, not bitmaps
+    rep = build_ndv_stats(spark, sd, cols)
+    assert rep["files_sketched"] == len(_block_files(sd))
+    _check_ndv_sidecar(spark, sd, cols, zero, 12)
